@@ -1,6 +1,7 @@
 package graft.tiles
 
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 import graft.core.{WebMercator, ZRange}
 
@@ -22,6 +23,13 @@ import graft.core.{WebMercator, ZRange}
   * Capacity is bounded (`maxEntries`, FIFO eviction) — the reference's
   * memcached is size-bounded too; an unbounded map would let a tile crawler
   * OOM the server.
+  *
+  * Concurrent readers use the GENERATION guard: every invalidation bumps
+  * [[generation]] before it walks the entries, and a miss takes the
+  * generation BEFORE it resolves its snapshot and hands it to [[put]],
+  * which drops the bytes if any invalidation ran since. A render of
+  * snapshot n that finishes after a write committed n+1 and invalidated
+  * therefore never puts a stale tile back.
   */
 final class TileCache(hashLevel: Int = 13,
                       cacheZoomMin: Int = 2, cacheZoomMax: Int = 15,
@@ -32,6 +40,12 @@ final class TileCache(hashLevel: Int = 13,
 
   private val store = new ConcurrentHashMap[(String, Int, Int, Int), Entry]()
   private val fifo = new ConcurrentLinkedQueue[(String, Int, Int, Int)]()
+  private val gen = new AtomicLong()
+
+  /** Invalidations run so far; take it before resolving the snapshot a
+    * cached render reads, and hand it to [[put]].
+    */
+  def generation: Long = gen.get()
 
   /** Drop queue entries for keys no longer cached. Called by every bulk
     * invalidation: without it, invalidate/re-put churn on a long-lived
@@ -53,19 +67,31 @@ final class TileCache(hashLevel: Int = 13,
 
   /** Store only inside the cached zoom window (application.conf:14-17);
     * the entry carries its buffered Morton cover (lo0,hi0,lo1,hi1,…) so
-    * writes never recompute it.
+    * writes never recompute it. `asOf` is the [[generation]] taken before
+    * the bytes' snapshot was resolved: the put is dropped when an
+    * invalidation ran since. The re-check after the insert closes the
+    * window where an invalidation bumps between the first check and the
+    * insert, and its walk misses the new entry. Returns whether the bytes
+    * are cached.
     */
-  def put(kind: String, z: Int, x: Int, y: Int, bytes: Array[Byte]): Unit =
-    if (z >= cacheZoomMin && z <= cacheZoomMax) {
+  def put(kind: String, z: Int, x: Int, y: Int, bytes: Array[Byte],
+          asOf: Long = generation): Boolean =
+    if (z < cacheZoomMin || z > cacheZoomMax || gen.get() != asOf) false
+    else {
       val ranges = ZRange.coverWithBuffer(z, x, y, hashLevel, bufferFrac)
         .flatMap { case (lo, hi) => Seq(lo, hi) }.toArray
       val k = key(kind, z, x, y)
-      if (store.put(k, Entry(bytes, ranges)) == null) fifo.add(k)
-      while (store.size() > maxEntries) {
-        val victim = fifo.poll()
-        if (victim == null) return
-        store.remove(victim)
-      }
+      val e = Entry(bytes, ranges)
+      if (store.put(k, e) == null) fifo.add(k)
+      evictOverflow()
+      gen.get() == asOf || { store.remove(k, e); false }
+    }
+
+  private def evictOverflow(): Unit =
+    while (store.size() > maxEntries) {
+      val victim = fifo.poll()
+      if (victim == null) return
+      store.remove(victim)
     }
 
   def size: Int = store.size()
@@ -90,6 +116,7 @@ final class TileCache(hashLevel: Int = 13,
                        lonMax: Double, latMax: Double): Int = {
     val rx0 = WebMercator.projX(lonMin); val rx1 = WebMercator.projX(lonMax)
     val ry0 = WebMercator.projY(latMax); val ry1 = WebMercator.projY(latMin)
+    gen.incrementAndGet()
     var removed = 0
     store.keySet().asScala.toSeq.foreach { case k @ (_, z, x, y) =>
       val n = (1L << z).toDouble
@@ -112,6 +139,7 @@ final class TileCache(hashLevel: Int = 13,
   def invalidateTouched(touchedHashes: Iterable[Int]): Int = {
     if (touchedHashes.isEmpty) return 0
     val sorted = touchedHashes.toArray.sorted
+    gen.incrementAndGet()
     var removed = 0
     store.entrySet().asScala.toSeq.foreach { e =>
       val r = e.getValue.ranges

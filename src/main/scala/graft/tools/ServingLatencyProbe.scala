@@ -10,17 +10,20 @@ import org.apache.spark.sql.SparkSession
   * churn micro-benches (TileCacheSpec) but no measured p50/p99 under N
   * parallel HTTP readers against a warm store.
   *
-  * Drives one live server (the spec's single-threaded-executor design —
-  * request handling is Spark-job bound, scale-out is more servers over
-  * the same store) through three phases over a K-tile panel:
+  * Drives one live server through three phases over a K-tile panel. The
+  * server handles requests on one thread per driver core: a cold tile is
+  * a one-task Spark job, so one handler thread kept all but one core idle
+  * (on a 4-core box, four map viewers read a viewport p50 of 2.1 s served
+  * one request at a time, 0.67 s with the pool and per-snapshot relation
+  * reuse; TankServer's doc has the setup).
   *
   *  1. COLD: first touch of every panel tile with an empty cache — the
   *     Spark-job-bound latency (scan + clip + MVT encode per tile).
   *  2. WARM sequential: the same tiles again — the cache+HTTP path.
   *  3. WARM concurrent: T ∈ {1, 4, 16} reader threads sampling the warm
-  *     panel — queueing under the single-threaded executor is the
-  *     DESIGNED trade and this row quantifies it (requests serialize, so
-  *     p99 ≈ readers × service time at saturation).
+  *     panel — up to the driver's core count they are served in parallel;
+  *     beyond it they queue for a handler thread, and this row
+  *     quantifies that queueing.
   *
   * Store: `nFeatures` point features bulk-ingested over a lon/lat box
   * spanning ~`panel` zoom-13 tiles, through the production `/_bulk`

@@ -3,6 +3,7 @@ package graft.server
 import java.net.{HttpURLConnection, URI}
 import graft.SparkSpec
 import graft.core.WebMercator
+import graft.sources.FeatureStore
 import graft.sources.FeatureStore.{AttrField, StoreConfig}
 import graft.tiles.{Mvt, TileService}
 
@@ -24,16 +25,16 @@ class TankServerSpec extends SparkSpec {
   override def afterAll(): Unit = { server.stop(); super.afterAll() }
 
   private def http(method: String, path: String, body: Option[String] = None,
-                   headers: Map[String, String] = Map.empty)
+                   headers: Map[String, String] = Map.empty, at: => Int = port)
       : (Int, Array[Byte]) = {
-    val (code, bytes, _) = httpFull(method, path, body, headers)
+    val (code, bytes, _) = httpFull(method, path, body, headers, at)
     (code, bytes)
   }
 
   private def httpFull(method: String, path: String, body: Option[String] = None,
-                       headers: Map[String, String] = Map.empty)
+                       headers: Map[String, String] = Map.empty, at: => Int = port)
       : (Int, Array[Byte], Map[String, String]) = {
-    val conn = new URI(s"http://localhost:$port$path").toURL
+    val conn = new URI(s"http://localhost:$at$path").toURL
       .openConnection().asInstanceOf[HttpURLConnection]
     conn.setRequestMethod(method)
     headers.foreach { case (k, v) => conn.setRequestProperty(k, v) }
@@ -344,5 +345,120 @@ class TankServerSpec extends SparkSpec {
       assert(conn.getResponseCode == 400)
       conn.disconnect()
     } finally srv2.stop()
+  }
+
+  test("concurrent tile reads racing a bulk insert never leave a stale tile cached") {
+    import spark.implicits._
+    val rcfg = StoreConfig(
+      path = java.nio.file.Files.createTempDirectory("graft-srv-race").toString + "/store",
+      attrs = Seq(AttrField("class", "text"), AttrField("value", "double")))
+    // a 4x2 block of z14 tiles and their 32 z15 children: enough cold
+    // renders that many are in flight across the insert's commit
+    val (x14, y14) = (WebMercator.tileX(30.0, 14), WebMercator.tileY(40.0, 14))
+    val parents = for (dx <- 0 until 4; dy <- 0 until 2) yield (14, x14 + dx, y14 + dy)
+    val children = for ((_, x, y) <- parents; cx <- 0 until 2; cy <- 0 until 2)
+      yield (15, 2 * x + cx, 2 * y + cy)
+    val tiles = parents ++ children
+    def center(z: Int, x: Int, y: Int): (Double, Double) =
+      ((WebMercator.tileLon(x, z) + WebMercator.tileLon(x + 1, z)) / 2,
+        (WebMercator.tileLat(y, z) + WebMercator.tileLat(y + 1, z)) / 2)
+    // one feature per z15 tile before the server starts; the insert adds
+    // one more per z15 tile, in the middle of the readers' cold round
+    val points = children.map { case (z, x, y) => center(z, x, y) }
+    val base = points.zipWithIndex.map { case ((lon, lat), j) =>
+      feature(s"base$j", lon - 0.003, lat, "base")
+    }
+    FeatureStore.write(FeatureStore.ingest(base.toDF("raw"), rcfg).good, rcfg)
+    val inserted = points.zipWithIndex.map { case ((lon, lat), j) =>
+      feature(s"ins$j", lon, lat, s"ins$j")
+    }
+    def path(i: Int) = { val (z, x, y) = tiles(i); s"/tile/$z/$x/$y" }
+    def hasInserted(i: Int, bytes: Array[Byte]): Boolean = {
+      val (z, x, y) = tiles(i)
+      val classes = Mvt.decode(bytes).headOption.toSeq.flatMap(_.features)
+        .flatMap(_.props.get("class")).toSet
+      points.zipWithIndex.forall { case ((lon, lat), j) =>
+        WebMercator.tileX(lon, z) != x || WebMercator.tileY(lat, z) != y ||
+          classes.contains(s"ins$j")
+      }
+    }
+
+    final case class Got(tile: Int, startNs: Long, code: Int, bytes: Array[Byte])
+    val srv = new TankServer(spark, rcfg, tileCfg)
+    val p = srv.start()
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[Got]()
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val firstResponses = new java.util.concurrent.CountDownLatch(4)
+    @volatile var insertedAt = Long.MaxValue
+    try {
+      // each reader walks every tile, in its own order, until it has
+      // finished a whole round that began after the insert returned
+      val readers = (0 until 4).map { r =>
+        new Thread(() => {
+          try {
+            var done = false
+            while (!done) {
+              val roundStart = System.nanoTime()
+              tiles.indices.foreach { k =>
+                val i = (k + r * tiles.size / 4) % tiles.size
+                val t0 = System.nanoTime()
+                val (code, bytes) = http("GET", path(i), at = p)
+                got.add(Got(i, t0, code, bytes))
+                firstResponses.countDown()
+              }
+              done = roundStart > insertedAt
+            }
+          } catch { case e: Throwable => errors.add(e) }
+        })
+      }
+      readers.foreach(_.start())
+      assert(firstResponses.await(120, java.util.concurrent.TimeUnit.SECONDS))
+      val (code, body) = http("POST", "/_bulk", Some(inserted.mkString("\n")), at = p)
+      assert(code == 200 && new String(body) == s"""{"ingested":${points.size}}""")
+      insertedAt = System.nanoTime()
+      readers.foreach(_.join(300000))
+      assert(errors.isEmpty, s"reader failed: ${errors.peek()}")
+      assert(readers.forall(!_.isAlive), "a reader did not finish")
+
+      val all = got.toArray(Array.empty[Got]).toSeq
+      assert(all.forall(_.code == 200))
+      val after = all.filter(_.startNs > insertedAt)
+      assert(after.size >= 4 * tiles.size)
+      after.foreach(g => assert(hasInserted(g.tile, g.bytes),
+        s"${path(g.tile)} fetched after the insert returned lacks an inserted feature"))
+      // what the server serves now (from its cache where it cached) is the
+      // final snapshot's tile, byte for byte
+      val fin = FeatureStore.read(spark, rcfg)
+      tiles.indices.foreach { i =>
+        val (z, x, y) = tiles(i)
+        val fresh = TileService.tile(fin, z, x, y, None, tileCfg)
+        assert(hasInserted(i, fresh))
+        val (c, served) = http("GET", path(i), at = p)
+        assert(c == 200 && served.sameElements(fresh), s"stale tile cached: ${path(i)}")
+      }
+    } finally srv.stop()
+  }
+
+  test("each request's Spark jobs carry its route as the job description") {
+    // a z12 tile no other case fetches: a cold render runs Spark jobs
+    val (x12, y12) = (WebMercator.tileX(lon, 12), WebMercator.tileY(lat, 12))
+    val (code, descs) = jobProperties("spark.job.description") {
+      http("GET", s"/tile/12/$x12/$y12")._1
+    }
+    assert(code == 200)
+    assert(descs.contains(s"GET /tile/12/$x12/$y12"),
+      s"no job described by the route: ${descs.mkString(", ")}")
+  }
+
+  test("stop() leaves no handler thread alive") {
+    import scala.jdk.CollectionConverters._
+    val srv = new TankServer(spark, cfg, tileCfg)
+    val p = srv.start()
+    def handlers = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName.startsWith(srv.threadPrefix) && t.isAlive)
+    (0 until 8).foreach(_ => assert(http("GET", "/", at = p)._1 == 200))
+    assert(handlers.nonEmpty, "fixture broken: no handler thread ran a request")
+    srv.stop()
+    assert(handlers.isEmpty, s"alive after stop(): ${handlers.map(_.getName)}")
   }
 }

@@ -764,4 +764,69 @@ class FeatureStoreSpec extends SparkSpec {
       "a hash-pruned delete must remove EVERY row of the uid")
     assert(FeatureStore.read(spark, cfg).count() == 10)
   }
+
+  test("read resolves a committed snapshot once: a second read starts no schema-inference job") {
+    import spark.implicits._
+    val cfg = StoreConfig(path = s"${tmpDir()}/store", attrs = Seq(AttrField("v", "int")))
+    FeatureStore.write(FeatureStore.ingest(
+      Seq(featureJson("u0", 1.0, 2.0, """{"v":0}""")).toDF("raw"), cfg).good, cfg)
+    // jobs are attributed by the job group of the submitting thread, so
+    // jobs of other suites sharing the session never count
+    val sc = spark.sparkContext
+    val group = s"read-${java.util.UUID.randomUUID()}"
+    def read(): (org.apache.spark.sql.DataFrame, Int) = {
+      val (df, groups) = jobProperties("spark.jobGroup.id") {
+        sc.setJobGroup(group, "read")
+        try FeatureStore.read(spark, cfg) finally sc.clearJobGroup()
+      }
+      (df, groups.count(_ == group))
+    }
+    val (first, firstJobs) = read()
+    val (second, secondJobs) = read()
+    assert(firstJobs >= 1, "fixture broken: resolving a fresh snapshot started no job")
+    assert(secondJobs == 0, s"second read started $secondJobs job(s)")
+    assert(second eq first)
+    assert(second.count() == 1)
+  }
+
+  test("read picks up every kind of commit, including a full overwrite that reuses m_1") {
+    import spark.implicits._
+    val cfg = StoreConfig(path = s"${tmpDir()}/store", attrs = Seq(AttrField("v", "int")))
+    def ingested(ids: Range) = FeatureStore.ingest(ids.map(i =>
+      featureJson(s"u$i", -170.0 + i * 8.4, -80.0 + i * 4.0, s"""{"v":$i}""")).toDF("raw"),
+      cfg).good
+    def rows(): Map[String, Int] = FeatureStore.read(spark, cfg)
+      .select("uid", "v").as[(String, Int)].collect().toMap
+    def expect(ids: Range) = ids.map(i => s"u$i" -> i).toMap
+
+    FeatureStore.write(ingested(20 until 23), cfg)
+    assert(rows() == expect(20 until 23))
+    // a full overwrite restarts the history: the new snapshot is m_1 again
+    FeatureStore.write(ingested(0 until 10), cfg, partitions = 2)
+    assert(FeatureStore.snapshots(spark, cfg) == Seq(1L))
+    assert(rows() == expect(0 until 10), "overwrite not visible")
+
+    FeatureStore.append(ingested(10 until 12), cfg)
+    assert(rows() == expect(0 until 12), "append not visible")
+
+    FeatureStore.update(spark, cfg, "u3", None, Map("v" -> 999))
+    assert(rows() == expect(0 until 12) + ("u3" -> 999), "update not visible")
+
+    FeatureStore.delete(spark, cfg, "u4")
+    val afterDelete = expect(0 until 12) + ("u3" -> 999) - "u4"
+    assert(rows() == afterDelete, "delete not visible")
+
+    val (lon5, lat5) = (-170.0 + 5 * 8.4, -80.0 + 5 * 4.0)
+    FeatureStore.deleteTile(spark, cfg, 9,
+      graft.core.WebMercator.tileX(lon5, 9), graft.core.WebMercator.tileY(lat5, 9))
+    val afterTile = afterDelete - "u5"
+    assert(rows() == afterTile, "tile delete not visible")
+
+    val filesBefore = FeatureStore.read(spark, cfg).inputFiles.toSet
+    val (_, filesAfter) = FeatureStore.compact(spark, cfg, partitions = 1)
+    val compacted = FeatureStore.read(spark, cfg).inputFiles.toSet
+    assert(filesAfter == 1 && compacted.size == 1 && !compacted.subsetOf(filesBefore),
+      s"compaction not visible: $compacted")
+    assert(rows() == afterTile)
+  }
 }

@@ -190,4 +190,24 @@ class TileCacheSpec extends AnyFunSuite {
     assert(c.invalidateRegion(0.0, lat, 0.0, lat) == 2,
       "degenerate region on the boundary must hit BOTH adjacent tiles")
   }
+
+  test("a put whose generation predates an invalidation is dropped (stale-put guard)") {
+    val c = new TileCache()
+    val h = ZCurve.interleave(100, 200)
+    // a miss takes the generation, then a write commits and invalidates
+    // while it renders — the tile is not cached yet, so the walk finds
+    // nothing to remove, and only the generation can stop the stale put
+    val asOf = c.generation
+    assert(c.invalidateTouched(Seq(h)) == 0)
+    assert(!c.put("tile", 13, 100, 200, Array(1), asOf))
+    assert(c.get("tile", 13, 100, 200).isEmpty, "stale render was cached")
+    // a render started after the invalidation caches normally
+    assert(c.put("tile", 13, 100, 200, Array(2), c.generation))
+    assert(c.get("tile", 13, 100, 200).exists(_.sameElements(Array[Byte](2))))
+    // region invalidation guards the same way, for every key
+    val asOf2 = c.generation
+    c.invalidateRegion(-180.0, -85.0, -179.0, -84.0) // far from the tile
+    assert(!c.put("heatmap", 13, 100, 200, Array(3), asOf2))
+    assert(c.get("heatmap", 13, 100, 200).isEmpty)
+  }
 }
