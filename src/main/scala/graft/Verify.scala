@@ -35,71 +35,11 @@ object Verify {
       }
       rm(new java.io.File(path))
     }
-    // x86's persisted history store (the production probe path): built once
-    // up front so the registry entry — and the correctness compare against
-    // the oracle's derived history — exercises the bucketed-store probe,
-    // not the in-query fallback. On failure the entry falls back to the
-    // derived plan (scanOrCompute registers only on success).
-    // This run owns its warehouse: clear any mutation marker a previous
-    // KILLED run left, or the rebuild stalls a full acquire wait.
-    for (t <- Seq(graft.sources.HashHistory.tableFor(sfDir),
-        graft.sources.GramHistory.tableFor(sfDir),
-        graft.sources.PhashHistory.tableFor(sfDir),
-        graft.sources.LandmarkHistory.tableFor(sfDir),
-        graft.sources.FrameHistory.tableFor(sfDir),
-        graft.sources.MinHashHistory.tableFor(sfDir))) {
-      graft.sources.MutationGuard.clear(
-        spark, graft.sources.Bucketing.guardBase(spark, t))
-      // ...and any streaming replay watermark a previous run persisted —
-      // the stores are recreated below, which starts a fresh lineage
-      graft.sources.StreamMark.clear(spark, t)
-    }
-    try graft.sources.HashHistory.create(spark, sfDir,
-      graft.queries.TextOps.x86HistoryHashes(spark, sfDir))
-    catch { case e: Throwable =>
-      System.err.println(s"[verify] history store build failed " +
-        s"(x86 falls back to derived history): ${e.getMessage}")
-    }
-    // x102's persisted gram store — same contract as x86's hash store
-    try graft.sources.GramHistory.create(spark, sfDir,
-      graft.queries.TextOps.x86Split(spark, sfDir)._1,
-      graft.queries.TextOps.DupGramK)
-    catch { case e: Throwable =>
-      System.err.println(s"[verify] gram store build failed " +
-        s"(x102 falls back to derived history): ${e.getMessage}")
-    }
-    // x109's persisted payload-fingerprint store — the payload member of
-    // the incremental family, same contract
-    try graft.sources.PhashHistory.create(spark, sfDir,
-      graft.queries.VectorOps.x109HistoryFps(spark, sfDir))
-    catch { case e: Throwable =>
-      System.err.println(s"[verify] phash store build failed " +
-        s"(x109 falls back to derived history): ${e.getMessage}")
-    }
-    // x113's persisted landmark index — same contract; building it here
-    // puts the STORE-SERVED probe path (the plan-gated production shape)
-    // inside the oracle surface instead of only the derived fallback
-    try graft.sources.LandmarkHistory.create(spark, sfDir,
-      graft.queries.VectorOps.x113HistoryLms(spark, sfDir))
-    catch { case e: Throwable =>
-      System.err.println(s"[verify] landmark store build failed " +
-        s"(x113 falls back to derived history): ${e.getMessage}")
-    }
-    // x116's persisted frame store — same producer contract
-    try graft.sources.FrameHistory.create(spark, sfDir,
-      graft.queries.VectorOps.x116HistoryFrames(spark, sfDir))
-    catch { case e: Throwable =>
-      System.err.println(s"[verify] frame store build failed " +
-        s"(x116 falls back to derived history): ${e.getMessage}")
-    }
-    // x123's persisted MinHash-LSH index — same producer contract
-    try graft.sources.MinHashHistory.create(spark, sfDir,
-      graft.queries.TextOps.x123HistoryBands(spark, sfDir),
-      graft.queries.TextOps.x123HistoryShingles(spark, sfDir))
-    catch { case e: Throwable =>
-      System.err.println(s"[verify] minhash store build failed " +
-        s"(x123 falls back to derived history): ${e.getMessage}")
-    }
+    // the persisted history stores (the production probe paths): built
+    // once up front so the registry entries — and the correctness compare
+    // against the oracles' derived history — exercise the store-served
+    // probes, not the in-query fallback
+    graft.queries.HistoryStores.buildAll(spark, sfDir, "verify")
     // x94b's BM25 index store — same producer contract (store answers are
     // bit-identical to the transient chain, so the fallback is silent-safe)
     graft.sources.MutationGuard.clear(spark,

@@ -88,10 +88,10 @@ object Bucketing {
     new org.apache.hadoop.fs.Path(
       org.apache.spark.sql.GraftBridge.tableLocation(spark, table)).toString
 
-  /** Sibling-table-then-rename compaction for a single-key-column bucketed
-    * history table — the ONE definition of the choreography
-    * [[HashHistory.compact]] and [[GramHistory.compact]] share: rewrite the
-    * table to its DISTINCT keys as one bucketed segment in a `_compact`
+  /** Sibling-table-then-rename compaction for a bucketed history table —
+    * the ONE definition of the choreography every history store's
+    * compaction runs ([[BucketedStore.compact]]): rewrite the table to its
+    * DISTINCT keys (or rows) as one bucketed segment in a `_compact`
     * sibling (the store table stays readable until the distinct result is
     * fully materialized), then drop the original — location included; a
     * plain DROP can orphan files under a custom location — and rename the

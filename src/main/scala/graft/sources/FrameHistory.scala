@@ -1,7 +1,6 @@
 package graft.sources
 
-import java.util.concurrent.ConcurrentHashMap
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted video FRAME-fingerprint history — the video member of the
@@ -25,33 +24,18 @@ import org.apache.spark.sql.functions._
   *    batch-sized at any corpus size (FrameHistorySpec gates both scans
   *    exchange-free).
   *
-  * Contracts shared with the sibling stores: session registry keyed by
-  * (application, dir); [[create]]/[[append]]/[[compact]] under ONE
-  * [[MutationGuard]] marker (the frames table's base — both relations
-  * mutate together); [[create]] clears the [[StreamMark]] replay
-  * watermark (new lineage). Append semantics: one video's frames arrive
-  * in ONE batch (the ingest unit is a video); re-appending a video
-  * duplicates its frame rows AND its sizes row, inflating n_match and
-  * fanning out the sizes join until [[compact]] — the multiset caveat of
-  * the [[LandmarkHistory]] replay contract, stated here because a
+  * Lifecycle and registry: [[BucketedStore]] (both relations mutate
+  * under ONE marker). Append semantics: one video's frames arrive in ONE
+  * batch (the ingest unit is a video); re-appending a video duplicates
+  * its frame rows AND its sizes row, inflating n_match and fanning out
+  * the sizes join until [[compact]] — the multiset caveat of the
+  * [[LandmarkHistory]] replay contract, stated here because a
   * crashed-epoch replay can hit it.
   */
-object FrameHistory {
+object FrameHistory extends BucketedStore[(DataFrame, DataFrame)](
+    "frame", "phash", sideTables = Seq("_sizes" -> "id"), dedupeRows = true) {
 
   val KeyCol = "phash"
-
-  private val stores = new ConcurrentHashMap[String, (String, Int)]()
-
-  private def key(spark: SparkSession, dir: String): String =
-    spark.sparkContext.applicationId + "|" + new java.io.File(dir).getAbsolutePath
-
-  /** Deterministic table name for a source dir. */
-  def tableFor(dir: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(new java.io.File(dir).getAbsolutePath.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    s"graft_frame_history_$hex"
-  }
 
   def sizesTableFor(dir: String): String = tableFor(dir) + "_sizes"
 
@@ -71,95 +55,28 @@ object FrameHistory {
     * bucketed history tables for `dir` and register them.
     */
   def create(spark: SparkSession, dir: String, frames: DataFrame,
-             buckets: Int = 8): Unit = {
-    val table = tableFor(dir)
-    MutationGuard.withGuard(spark, Bucketing.guardBase(spark, table)) {
-      Bucketing.writeBucketed(storeRows(frames), table, KeyCol, buckets)
-      Bucketing.writeBucketed(sizeRows(frames), sizesTableFor(dir), "id", buckets)
-    }
-    // a recreated store is a NEW streaming lineage: drop any replay
-    // watermark a previous stream left or its appends are silently skipped
-    StreamMark.clear(spark, table)
-    stores.put(key(spark, dir), (table, buckets)): Unit
-  }
-
-
-  /** Re-attach to an already-created store (new application, shared
-    * metastore) — the restart path: at store scale a rebuild is exactly
-    * what the persisted table exists to avoid. `buckets` must match the
-    * created layout (appends write bucket-compatible segments). Fails
-    * loudly if the table does not exist.
-    */
-  def attach(spark: SparkSession, dir: String, buckets: Int = 8): Unit = {
-    val table = tableFor(dir)
-    require(spark.catalog.tableExists(table),
-      s"FrameHistory.attach: table $table does not exist - run create() first")
-    require(spark.catalog.tableExists(sizesTableFor(dir)),
-      s"FrameHistory.attach: sizes table missing - run create() first")
-    Bucketing.requireBuckets(spark, table, buckets, "FrameHistory.attach")
-    Bucketing.requireBuckets(spark, sizesTableFor(dir), buckets, "FrameHistory.attach")
-    stores.put(key(spark, dir), (table, buckets)): Unit
-  }
+             buckets: Int = 8): Unit =
+    createRows(spark, dir, buckets, KeyBloom.DefaultFpp,
+      storeRows(frames), sizeRows(frames))
 
   /** Append an increment's frames (+ their sizes rows) as
     * bucket-compatible files. One-batch-per-video contract: see the
     * object scaladoc.
     */
-  def append(spark: SparkSession, dir: String, frames: DataFrame): Unit = {
-    val (table, buckets) = Option(stores.get(key(spark, dir))).getOrElse(
-      throw new IllegalStateException(
-        s"FrameHistory.append: no store registered for $dir — create() first"))
-    MutationGuard.withGuard(spark, Bucketing.guardBase(spark, table)) {
-      storeRows(frames)
-        .write.mode(SaveMode.Append)
-        .bucketBy(buckets, KeyCol)
-        .sortBy(KeyCol)
-        .format("parquet")
-        .saveAsTable(table)
-      sizeRows(frames)
-        .write.mode(SaveMode.Append)
-        .bucketBy(buckets, "id")
-        .sortBy("id")
-        .format("parquet")
-        .saveAsTable(sizesTableFor(dir))
-    }
-  }
+  def append(spark: SparkSession, dir: String, frames: DataFrame): Unit =
+    appendRows(spark, dir, storeRows(frames), sizeRows(frames))
 
-  /** STORE-SIZED compaction: frames to DISTINCT (phash, id) rows, sizes
-    * REBUILT from the compacted frames (restoring exact denominators after
-    * any replay double-append) — probes answer identically before and
-    * after on a clean store, bucket layouts preserved (spec-gated).
+  /** Compaction's sizes step: REBUILT from the compacted frames, which
+    * restores exact denominators after any replay double-append.
     */
-  def compact(spark: SparkSession, dir: String): Unit = {
-    val (table, buckets) = Option(stores.get(key(spark, dir))).getOrElse(
-      throw new IllegalStateException(
-        s"FrameHistory.compact: no store registered for $dir — create() first"))
-    MutationGuard.withGuard(spark, Bucketing.guardBase(spark, table)) {
-      Bucketing.compactDistinct(spark, table, KeyCol, buckets,
-        allColumns = true)
-      Bucketing.writeBucketed(
-        spark.table(table).groupBy(col("id")).agg(count(lit(1)).as("n")),
-        sizesTableFor(dir), "id", buckets)
-    }
-  }
+  override protected def compactSides(spark: SparkSession, table: String,
+                                      buckets: Int): Unit =
+    Bucketing.writeBucketed(
+      spark.table(table).groupBy(col("id")).agg(count(lit(1)).as("n")),
+      table + "_sizes", "id", buckets)
 
-  /** LAZY consumer entry: (frames, sizes) bucketed scans when a producer
-    * step ran for this (application, dir), else the caller's derived
-    * plans.
-    */
-  def scanOrCompute(spark: SparkSession, dir: String)
-                   (compute: => (DataFrame, DataFrame)): (DataFrame, DataFrame) =
-    Option(stores.get(key(spark, dir))) match {
-      case Some((table, _)) =>
-        (spark.table(table).select(col(KeyCol), col("id")),
-          spark.table(sizesTableFor(dir)).select(col("id"), col("n")))
-      case None => compute
-    }
-
-  private[graft] def registeredTable(spark: SparkSession,
-                                     dir: String): Option[String] =
-    Option(stores.get(key(spark, dir))).map(_._1)
-
-  private[graft] def invalidate(spark: SparkSession, dir: String): Unit =
-    stores.remove(key(spark, dir)): Unit
+  protected def scan(spark: SparkSession,
+                     table: String): (DataFrame, DataFrame) =
+    (spark.table(table).select(col(KeyCol), col("id")),
+      spark.table(table + "_sizes").select(col("id"), col("n")))
 }

@@ -1,8 +1,7 @@
 package graft.sources
 
-import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -22,25 +21,14 @@ import org.apache.spark.util.sketch.BloomFilter
   * ~10^11 distinct 40-grams ≈ 1 TB of store at 8 B+overhead/gram —
   * 2^10–2^14 buckets; testdata uses 8.
   *
-  * Same session-registry contract as [[HashHistory]]: building a
-  * consumer frame is side-effect-free; [[create]] is the explicit
-  * producer step; appends are bucket-compatible files whose cross-append
-  * repeats the probe's semantics absorb (membership, not counts).
+  * Appends are bucket-compatible files whose cross-append repeats the
+  * probe's semantics absorb (membership, not counts). Lifecycle, registry
+  * and sidecar contracts: [[BucketedStore]].
   */
-object GramHistory {
+object GramHistory extends BucketedStore[DataFrame]("gram", "gh",
+    bloomKeys = Some(_.select(col("gh"))), dedupeRows = false) {
 
   val GramCol = "gh"
-
-  private val stores = new ConcurrentHashMap[String, (String, Int)]()
-
-  // memoized sidecar-bloom broadcasts, validated by the sidecar's
-  // GENERATION counter (monotonic, bumped by every committed write — NOT
-  // mtime, whose 1 s/1 ms granularity can alias a rewrite by another
-  // application sharing the store and silently serve a stale bloom with
-  // FALSE NEGATIVES) so the (possibly large) bloom array ships to
-  // executors once per store version, not once per probe; mutating verbs
-  // also invalidate in-process
-  private val blooms: ProbeReduce.BloomMemo = new ConcurrentHashMap()
 
   /** Broadcast-budget conf for the probe-reduce build side — the shared
     * incremental-family knob ([[graft.util.ProbeBudget]]): when a probe's
@@ -51,17 +39,6 @@ object GramHistory {
     * sort-merge shape, never to a driver OOM / 8 GB broadcast error.
     */
   val ProbeBudgetConf: String = graft.util.ProbeBudget.Conf
-
-  private def key(spark: SparkSession, dir: String): String =
-    spark.sparkContext.applicationId + "|" + new java.io.File(dir).getAbsolutePath
-
-  /** Deterministic table name for a source dir. */
-  def tableFor(dir: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(new java.io.File(dir).getAbsolutePath.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    s"graft_gram_history_$hex"
-  }
 
   /** Distinct gram hashes of a corpus — the store's content and the
     * shape [[append]] expects for an increment.
@@ -78,135 +55,29 @@ object GramHistory {
     */
   def create(spark: SparkSession, dir: String, corpus: DataFrame, k: Int,
              buckets: Int = 8,
-             bloomFpp: Double = KeyBloom.DefaultFpp): Unit = {
-    val table = tableFor(dir)
-    MutationGuard.withGuard(spark, Bucketing.guardBase(spark, table)) {
-      Bucketing.writeBucketed(gramHashes(corpus, k), table, GramCol, buckets)
-      rebuildBloom(spark, table, buckets, bloomFpp)
-    }
-    // a recreated store is a NEW streaming lineage: drop any replay
-    // watermark a previous stream left or its appends are silently skipped
-    StreamMark.clear(spark, table)
-    stores.put(key(spark, dir), (table, buckets)): Unit
-  }
+             bloomFpp: Double = KeyBloom.DefaultFpp): Unit =
+    createRows(spark, dir, buckets, bloomFpp, gramHashes(corpus, k))
 
-  /** (Re)build the [[KeyBloom]] sidecar from the table's current keys —
-    * one extra store pass at producer time, per-bucket task-local
-    * ([[KeyBloom.build]]: each task writes ONE bucket's bloom; no
-    * driver-side bloom bytes). Sized with [[KeyBloom.Headroom]] so
-    * appends have capacity; failures only lose the accelerator (probes
-    * fall back to the plain scan), never the store, so they degrade
-    * loudly-but-nonfatally.
+  /** Append an increment's gram hashes as bucket-compatible files. The
+    * sidecar fold is per-bucket task-local ([[KeyBloom.fold]]): only
+    * touched buckets' blooms are read, updated and rewritten, in ONE
+    * distributed job that also returns the folded count. Past-capacity
+    * growth only raises the fpp (probe selectivity degrades, answers stay
+    * exact); [[compact]] re-sizes. A legacy store without a sidecar stays
+    * legacy — a rebuild here would cost a full store scan per append.
     */
-  private def rebuildBloom(spark: SparkSession, table: String,
-                           buckets: Int,
-                           fpp: Double = KeyBloom.DefaultFpp): Unit =
-    try {
-      KeyBloom.build(spark, Bucketing.guardBase(spark, table),
-        spark.table(table).select(col(GramCol)), GramCol, buckets, fpp)
-      blooms.remove(table): Unit
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        KeyBloom.delete(spark, Bucketing.guardBase(spark, table))
-        blooms.remove(table): Unit
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"GramHistory: bloom sidecar build failed for $table — probes " +
-            s"fall back to the plain store scan: ${e.getMessage}")
-    }
+  def append(spark: SparkSession, dir: String, increment: DataFrame): Unit =
+    appendRows(spark, dir, increment.select(col(GramCol)))
 
-
-  /** Re-attach to an already-created store (new application, shared
-    * metastore) — the restart path: at store scale a rebuild is exactly
-    * what the persisted table exists to avoid. `buckets` must match the
-    * created layout (appends write bucket-compatible segments). Fails
-    * loudly if the table does not exist.
-    */
-  def attach(spark: SparkSession, dir: String, buckets: Int = 8): Unit = {
-    val table = tableFor(dir)
-    require(spark.catalog.tableExists(table),
-      s"GramHistory.attach: table $table does not exist - run create() first")
-    Bucketing.requireBuckets(spark, table, buckets, "GramHistory.attach")
-    stores.put(key(spark, dir), (table, buckets)): Unit
-  }
-
-  /** Append an increment's gram hashes as bucket-compatible files. */
-  def append(spark: SparkSession, dir: String, increment: DataFrame): Unit = {
-    val (table, buckets) = Option(stores.get(key(spark, dir))).getOrElse(
-      throw new IllegalStateException(
-        s"GramHistory.append: no store registered for $dir — create() first"))
-    MutationGuard.withGuard(spark, Bucketing.guardBase(spark, table)) {
-      // fold the increment into the bloom sidecar BEFORE the table
-      // append: a crash between the two steps then leaves the bloom with
-      // phantom keys (false positives — verified away, harmless), never
-      // the table with keys the bloom misses (false negatives — silently
-      // wrong probes). The fold is per-bucket task-local
-      // ([[KeyBloom.fold]]): only touched buckets' blooms are read,
-      // updated and rewritten, in ONE distributed job that also returns
-      // the folded count — no driver-side bloom bytes, no separate
-      // count() job (the round-17 monolith paid both per micro-batch).
-      // Past-capacity growth only raises the fpp (probe selectivity
-      // degrades, answers stay exact); compact() re-sizes. A legacy
-      // store without a sidecar stays legacy — a rebuild here would
-      // cost a full store scan per append.
-      val base = Bucketing.guardBase(spark, table)
-      try {
-        if (KeyBloom.fold(spark, base,
-            increment.select(col(GramCol)), GramCol).exists(_ > 0L))
-          blooms.remove(table): Unit
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          // a sidecar that may be missing the increment's keys would
-          // give FALSE NEGATIVES — delete it rather than risk that
-          KeyBloom.delete(spark, base)
-          blooms.remove(table): Unit
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"GramHistory: bloom sidecar update failed for $table — " +
-              s"sidecar dropped, probes fall back to the plain scan: " +
-              s"${e.getMessage}")
-      }
-      increment.select(col(GramCol))
-        .write.mode(SaveMode.Append)
-        .bucketBy(buckets, GramCol)
-        .sortBy(GramCol)
-        .format("parquet")
-        .saveAsTable(table)
-    }
-  }
-
-  /** STORE-SIZED compaction: appends accumulate cross-append repeats of
-    * the same gram (membership semantics absorb them, but bytes and file
-    * counts grow with every batch) — compaction rewrites the table to its
-    * DISTINCT grams, one bucketed segment, via
-    * [[Bucketing.compactDistinct]] (sibling-table-then-rename;
-    * single-mutating-writer contract there) — probes before and after
-    * answer identically and the bucket layout (and therefore the
-    * no-history-exchange probe plan) is preserved (spec-gated).
+  /** [[BucketedStore.compact]] with the sidecar re-sized at `bloomFpp`
+    * (re-tunes the zero-read batch ceiling — see [[create]]).
     */
   def compact(spark: SparkSession, dir: String,
-              bloomFpp: Double = KeyBloom.DefaultFpp): Unit = {
-    val (table, buckets) = Option(stores.get(key(spark, dir))).getOrElse(
-      throw new IllegalStateException(
-        s"GramHistory.compact: no store registered for $dir — create() first"))
-    MutationGuard.withGuard(spark, Bucketing.guardBase(spark, table)) {
-      Bucketing.compactDistinct(spark, table, GramCol, buckets)
-      // re-size the bloom sidecar to the compacted key count (this is
-      // also the upgrade path: a legacy, saturated or pre-per-bucket
-      // store gains a right-sized per-bucket sidecar at its next
-      // compaction; bloomFpp re-tunes the zero-read batch ceiling —
-      // see create())
-      rebuildBloom(spark, table, buckets, bloomFpp)
-    }
-  }
+              bloomFpp: Double = KeyBloom.DefaultFpp): Unit =
+    compactAt(spark, dir, bloomFpp)
 
-  /** LAZY consumer entry: the bucketed table scan when a producer step
-    * ran for this (application, dir), else the caller's derived plan.
-    */
-  def scanOrCompute(spark: SparkSession, dir: String)
-                   (compute: => DataFrame): DataFrame =
-    Option(stores.get(key(spark, dir))) match {
-      case Some((table, _)) => spark.table(table).select(col(GramCol))
-      case None => compute
-    }
+  protected def scan(spark: SparkSession, table: String): DataFrame =
+    spark.table(table).select(col(GramCol))
 
   /** PROBE consumer entry — the relation a batch probe should semi-join
     * instead of the raw store scan: the store's keys REDUCED to the
@@ -242,7 +113,7 @@ object GramHistory {
     */
   def probeHistory(spark: SparkSession, dir: String, batchKeys: DataFrame)
                   (compute: => DataFrame): DataFrame =
-    Option(stores.get(key(spark, dir))) match {
+    registered(spark, dir) match {
       case None =>
         // no producer step: the derived in-query history, reduced the
         // same way so the caller sees ONE contract (always probe-reduced)
@@ -260,26 +131,4 @@ object GramHistory {
   private[graft] def bloomBroadcast(spark: SparkSession, table: String)
       : Option[(Broadcast[Array[BloomFilter]], KeyBloom.Meta)] =
     ProbeReduce.bloomBroadcast(spark, table, blooms)
-
-  /** Sidecar-saturation trigger statistic (DEDUP_TUNING §5.1): the
-    * manifest-only stat that says WHEN to [[compact]] — appends fold keys
-    * into blooms sized at create(), so growth past capacity decays probe
-    * SELECTIVITY (never exactness) and collapses the novel-batch
-    * zero-read ceiling. None when no store is registered for `dir` or
-    * the store is legacy (no sidecar).
-    */
-  def bloomStat(spark: SparkSession,
-                dir: String): Option[KeyBloom.Saturation] =
-    registeredTable(spark, dir).flatMap(t =>
-      KeyBloom.saturationStat(spark, Bucketing.guardBase(spark, t)))
-
-  private[graft] def registeredTable(spark: SparkSession,
-                                     dir: String): Option[String] =
-    Option(stores.get(key(spark, dir))).map(_._1)
-
-  private[graft] def invalidate(spark: SparkSession, dir: String): Unit = {
-    Option(stores.get(key(spark, dir)))
-      .foreach(t => Option(blooms.remove(t._1)).foreach(_._2.unpersist()))
-    stores.remove(key(spark, dir)): Unit
-  }
 }

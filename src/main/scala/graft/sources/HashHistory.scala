@@ -1,8 +1,6 @@
 package graft.sources
 
-import java.util.concurrent.ConcurrentHashMap
-
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted content-hash HISTORY store for incremental dedup (x86) — the
@@ -24,43 +22,17 @@ import org.apache.spark.sql.functions._
   * PlanSpec gates exactly this shape.
   *
   * Appends: the store never rewrites — each increment's `kept` hashes are
-  * APPENDED as additional bucket-compatible files ([[append]] writes with
-  * the table's bucket spec; Spark refuses a mismatched spec loudly).
-  * Appends may re-add a hash an earlier batch already holds; the probe's
-  * distinct() absorbs that, so appends need no read-before-write.
-  * Mutations (append/compact) require a single writer — the
-  * [[Bucketing.compactDistinct]] contract.
-  *
-  * Session registry: like [[graft.operators.PairStore]], the store is
-  * keyed by (application, source dir) and building a query frame is
-  * side-effect-free — [[scanOrCompute]] returns the bucketed table scan
-  * when a producer step ([[create]]) ran in this application, else the
-  * caller's derived plan (standalone correctness, lazily). The table name
-  * is deterministic per source dir, so a long-lived application (or a
-  * shared metastore) re-attaches to an existing store via [[attach]].
+  * APPENDED as additional bucket-compatible files (Spark refuses a
+  * mismatched spec loudly). Appends may re-add a hash an earlier batch
+  * already holds; the probe's distinct() absorbs that, so appends need no
+  * read-before-write. Lifecycle, registry and sidecar contracts:
+  * [[BucketedStore]].
   */
-object HashHistory {
+object HashHistory extends BucketedStore[DataFrame]("hash", "th",
+    bloomKeys = Some(_.select(col("th"))), dedupeRows = false) {
 
   /** The stored schema: one BINARY(16) column `th` = unhex(md5(text)). */
   val HashCol = "th"
-
-  /** (appId|dir) -> (table, buckets), present after create/attach. */
-  private val stores = new ConcurrentHashMap[String, (String, Int)]()
-
-  // memoized sidecar-bloom broadcasts, generation-validated (the
-  // GramHistory device — see [[ProbeReduce]])
-  private val blooms: ProbeReduce.BloomMemo = new ConcurrentHashMap()
-
-  private def key(spark: SparkSession, dir: String): String =
-    spark.sparkContext.applicationId + "|" + new java.io.File(dir).getAbsolutePath
-
-  /** Deterministic table name for a source dir (valid catalog identifier). */
-  def tableFor(dir: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(new java.io.File(dir).getAbsolutePath.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    s"graft_hash_history_$hex"
-  }
 
   /** The PRODUCER step: persist `hashesBinary` (a single BINARY `th`
     * column) as the bucketed history table for `dir` and register it.
@@ -70,118 +42,19 @@ object HashHistory {
     */
   def create(spark: SparkSession, dir: String, hashesBinary: DataFrame,
              buckets: Int = 8,
-             bloomFpp: Double = KeyBloom.DefaultFpp): Unit = {
-    val table = tableFor(dir)
-    MutationGuard.withGuard(spark, Bucketing.guardBase(spark, table)) {
-      Bucketing.writeBucketed(
-        hashesBinary.select(col(HashCol)).distinct(), table, HashCol, buckets)
-      rebuildBloom(spark, table, buckets, bloomFpp)
-    }
-    // a recreated store is a NEW streaming lineage (the crawlTriage twin
-    // appends behind a persisted watermark): drop any stale mark or its
-    // appends are silently skipped
-    StreamMark.clear(spark, table)
-    stores.put(key(spark, dir), (table, buckets)): Unit
-  }
-
-  /** Re-attach to an already-created store (new application, shared
-    * metastore). Fails loudly if the table does not exist.
-    */
-  def attach(spark: SparkSession, dir: String, buckets: Int = 8): Unit = {
-    val table = tableFor(dir)
-    require(spark.catalog.tableExists(table),
-      s"HashHistory.attach: table $table does not exist — run create() first")
-    Bucketing.requireBuckets(spark, table, buckets, "HashHistory.attach")
-    stores.put(key(spark, dir), (table, buckets)): Unit
-  }
+             bloomFpp: Double = KeyBloom.DefaultFpp): Unit =
+    createRows(spark, dir, buckets, bloomFpp,
+      hashesBinary.select(col(HashCol)).distinct())
 
   /** Append an increment's hashes as bucket-compatible files. The probe's
     * distinct() absorbs cross-append repeats, so callers append their
     * whole batch's `kept` hashes without a read-before-write.
     */
-  def append(spark: SparkSession, dir: String, hashesBinary: DataFrame): Unit = {
-    val (table, buckets) = Option(stores.get(key(spark, dir))).getOrElse(
-      throw new IllegalStateException(
-        s"HashHistory.append: no store registered for $dir — create()/attach() first"))
-    MutationGuard.withGuard(spark, Bucketing.guardBase(spark, table)) {
-      // fold BEFORE the table append (the GramHistory ordering: crash
-      // residue is phantom bloom keys — harmless — never table keys the
-      // bloom misses); failures drop the sidecar, not the store
-      val base = Bucketing.guardBase(spark, table)
-      try {
-        if (KeyBloom.fold(spark, base,
-            hashesBinary.select(col(HashCol)), HashCol).exists(_ > 0L))
-          blooms.remove(table): Unit
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          KeyBloom.delete(spark, base)
-          blooms.remove(table): Unit
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"HashHistory: bloom sidecar update failed for $table — " +
-              s"sidecar dropped, probes fall back to the plain scan: " +
-              s"${e.getMessage}")
-      }
-      hashesBinary.select(col(HashCol))
-        .write.mode(SaveMode.Append)
-        .bucketBy(buckets, HashCol)
-        .sortBy(HashCol)
-        .format("parquet")
-        .saveAsTable(table)
-    }
-  }
+  def append(spark: SparkSession, dir: String, hashesBinary: DataFrame): Unit =
+    appendRows(spark, dir, hashesBinary.select(col(HashCol)))
 
-  /** (Re)build the [[KeyBloom]] sidecar — per-bucket task-local, failure
-    * degrades to the plain scan (the GramHistory contract).
-    */
-  private def rebuildBloom(spark: SparkSession, table: String,
-                           buckets: Int,
-                           fpp: Double = KeyBloom.DefaultFpp): Unit =
-    try {
-      KeyBloom.build(spark, Bucketing.guardBase(spark, table),
-        spark.table(table).select(col(HashCol)), HashCol, buckets, fpp)
-      blooms.remove(table): Unit
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        KeyBloom.delete(spark, Bucketing.guardBase(spark, table))
-        blooms.remove(table): Unit
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"HashHistory: bloom sidecar build failed for $table — probes " +
-            s"fall back to the plain store scan: ${e.getMessage}")
-    }
-
-  /** STORE-SIZED compaction — recrawl-heavy streams re-append hashes the
-    * store already holds (the probe's distinct() absorbs them, but bytes
-    * and file counts grow per batch): rewrite the table to its DISTINCT
-    * hashes as one bucketed segment via [[Bucketing.compactDistinct]]
-    * (sibling-table-then-rename; single-mutating-writer contract there);
-    * probes answer identically before and after and the bucket layout —
-    * and so the no-exchange probe plan — survives the rename (spec-gated).
-    */
-  def compact(spark: SparkSession, dir: String): Unit = {
-    val (table, buckets) = Option(stores.get(key(spark, dir))).getOrElse(
-      throw new IllegalStateException(
-        s"HashHistory.compact: no store registered for $dir — create() first"))
-    MutationGuard.withGuard(spark, Bucketing.guardBase(spark, table)) {
-      Bucketing.compactDistinct(spark, table, HashCol, buckets)
-      // re-size the sidecar to the compacted key count (also the legacy
-      // store's upgrade path)
-      rebuildBloom(spark, table, buckets)
-      // (compact keeps the default fpp; re-tune via create() — the
-      // compacted store's keys are identical, only bits/key change)
-    }
-  }
-
-  /** The consumer entry point — LAZY, side-effect-free: the bucketed table
-    * scan when a producer step ran for this (application, dir), else the
-    * caller's derived history plan (`compute`, untouched when the store is
-    * registered). Either way the relation is one BINARY `th` column.
-    */
-  def scanOrCompute(spark: SparkSession, dir: String)
-                   (compute: => DataFrame): DataFrame =
-    Option(stores.get(key(spark, dir))) match {
-      case Some((table, _)) => spark.table(table).select(col(HashCol))
-      case None => compute
-    }
+  protected def scan(spark: SparkSession, table: String): DataFrame =
+    spark.table(table).select(col(HashCol))
 
   /** PROBE consumer entry — the history relation REDUCED to the batch's
     * own key set (membership-transparent for the probe's left join: a
@@ -196,7 +69,7 @@ object HashHistory {
     */
   def probeHistory(spark: SparkSession, dir: String, batchKeys: DataFrame)
                   (compute: => DataFrame): DataFrame =
-    Option(stores.get(key(spark, dir))) match {
+    registered(spark, dir) match {
       case None =>
         broadcast(compute.select(col(HashCol))
           .join(broadcast(batchKeys.select(col(HashCol))), Seq(HashCol),
@@ -207,25 +80,4 @@ object HashHistory {
           "HashHistory.probeHistory",
           spark.range(0).select(lit(null).cast("binary").as(HashCol)))
     }
-
-  /** Sidecar-saturation trigger statistic (DEDUP_TUNING §5.1) — see
-    * [[GramHistory.bloomStat]]; manifest-only, None when unregistered or
-    * legacy.
-    */
-  def bloomStat(spark: SparkSession,
-                dir: String): Option[KeyBloom.Saturation] =
-    registeredTable(spark, dir).flatMap(t =>
-      KeyBloom.saturationStat(spark, Bucketing.guardBase(spark, t)))
-
-  /** The registered table name, if a producer step ran (spec hook). */
-  private[graft] def registeredTable(spark: SparkSession,
-                                     dir: String): Option[String] =
-    Option(stores.get(key(spark, dir))).map(_._1)
-
-  /** Drop the registration (spec isolation; the table itself remains). */
-  private[graft] def invalidate(spark: SparkSession, dir: String): Unit = {
-    Option(stores.get(key(spark, dir)))
-      .foreach(t => Option(blooms.remove(t._1)).foreach(_._2.unpersist()))
-    stores.remove(key(spark, dir)): Unit
-  }
 }

@@ -1,7 +1,6 @@
 package graft.sources
 
-import java.util.concurrent.ConcurrentHashMap
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted audio-LANDMARK history store — the audio member of the
@@ -22,30 +21,16 @@ import org.apache.spark.sql.functions._
   * real tracks carry more landmarks but the store is still orders below
   * the PCM itself.
   *
-  * Same session-registry + single-mutating-writer contract as the sibling
-  * stores: [[create]] is the explicit producer step, [[append]] adds
-  * bucket-compatible files (cross-append repeats are absorbed by vote
-  * counting over DISTINCT rows only if compacted — append the same batch
-  * twice and votes double, so the streaming twin batchId-guards appends
-  * like x102/x109's), [[compact]] rewrites to distinct rows preserving
-  * the bucket spec, all under [[MutationGuard]].
+  * Replay semantics: cross-append repeats are absorbed by vote counting
+  * over DISTINCT rows only if compacted — append the same batch twice and
+  * votes double, so the streaming twin batchId-guards appends like
+  * x102/x109's; [[compact]] rewrites to distinct rows. Lifecycle and
+  * registry: [[BucketedStore]].
   */
-object LandmarkHistory {
+object LandmarkHistory extends BucketedStore[DataFrame]("landmark", "lhash",
+    dedupeRows = true) {
 
   val KeyCol = "lhash"
-
-  private val stores = new ConcurrentHashMap[String, (String, Int)]()
-
-  private def key(spark: SparkSession, dir: String): String =
-    spark.sparkContext.applicationId + "|" + new java.io.File(dir).getAbsolutePath
-
-  /** Deterministic table name for a source dir. */
-  def tableFor(dir: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(new java.io.File(dir).getAbsolutePath.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    s"graft_landmark_history_$hex"
-  }
 
   private def storeRows(landmarks: DataFrame): DataFrame =
     landmarks.select(col(KeyCol), col("media_id").as("id"), col("t"))
@@ -74,60 +59,13 @@ object LandmarkHistory {
     * next [[compact]]-style rebuild (documented growth window).
     */
   def create(spark: SparkSession, dir: String, landmarks: DataFrame,
-             buckets: Int = 8, capPerHash: Int = 0): Unit = {
-    val table = tableFor(dir)
-    MutationGuard.withGuard(spark, Bucketing.guardBase(spark, table)) {
-      Bucketing.writeBucketed(capRows(storeRows(landmarks), capPerHash),
-        table, KeyCol, buckets)
-    }
-    // a recreated store is a NEW streaming lineage: drop any replay
-    // watermark a previous stream left or its appends are silently skipped
-    StreamMark.clear(spark, table)
-    stores.put(key(spark, dir), (table, buckets)): Unit
-  }
-
-
-  /** Re-attach to an already-created store (new application, shared
-    * metastore) — the restart path: at store scale a rebuild is exactly
-    * what the persisted table exists to avoid. `buckets` must match the
-    * created layout (appends write bucket-compatible segments). Fails
-    * loudly if the table does not exist.
-    */
-  def attach(spark: SparkSession, dir: String, buckets: Int = 8): Unit = {
-    val table = tableFor(dir)
-    require(spark.catalog.tableExists(table),
-      s"LandmarkHistory.attach: table $table does not exist - run create() first")
-    Bucketing.requireBuckets(spark, table, buckets, "LandmarkHistory.attach")
-    stores.put(key(spark, dir), (table, buckets)): Unit
-  }
+             buckets: Int = 8, capPerHash: Int = 0): Unit =
+    createRows(spark, dir, buckets, KeyBloom.DefaultFpp,
+      capRows(storeRows(landmarks), capPerHash))
 
   /** Append an increment's landmarks as bucket-compatible files. */
-  def append(spark: SparkSession, dir: String, landmarks: DataFrame): Unit = {
-    val (table, buckets) = Option(stores.get(key(spark, dir))).getOrElse(
-      throw new IllegalStateException(
-        s"LandmarkHistory.append: no store registered for $dir — create() first"))
-    MutationGuard.withGuard(spark, Bucketing.guardBase(spark, table)) {
-      storeRows(landmarks)
-        .write.mode(SaveMode.Append)
-        .bucketBy(buckets, KeyCol)
-        .sortBy(KeyCol)
-        .format("parquet")
-        .saveAsTable(table)
-    }
-  }
-
-  /** STORE-SIZED compaction to distinct (lhash, id, t) rows — probes answer
-    * identically before and after, bucket layout preserved (spec-gated).
-    */
-  def compact(spark: SparkSession, dir: String): Unit = {
-    val (table, buckets) = Option(stores.get(key(spark, dir))).getOrElse(
-      throw new IllegalStateException(
-        s"LandmarkHistory.compact: no store registered for $dir — create() first"))
-    MutationGuard.withGuard(spark, Bucketing.guardBase(spark, table)) {
-      Bucketing.compactDistinct(spark, table, KeyCol, buckets,
-        allColumns = true)
-    }
-  }
+  def append(spark: SparkSession, dir: String, landmarks: DataFrame): Unit =
+    appendRows(spark, dir, storeRows(landmarks))
 
   /** The store relation of a landmark frame: (lhash, id, t) — what
     * [[create]]/[[append]] persist and what a derived (store-less)
@@ -135,22 +73,6 @@ object LandmarkHistory {
     */
   def storeShape(landmarks: DataFrame): DataFrame = storeRows(landmarks)
 
-  /** LAZY consumer entry: the bucketed table scan when a producer step ran
-    * for this (application, dir), else the caller's derived plan (already
-    * in [[storeShape]]).
-    */
-  def scanOrCompute(spark: SparkSession, dir: String)
-                   (compute: => DataFrame): DataFrame =
-    Option(stores.get(key(spark, dir))) match {
-      case Some((table, _)) =>
-        spark.table(table).select(col(KeyCol), col("id"), col("t"))
-      case None => compute
-    }
-
-  private[graft] def registeredTable(spark: SparkSession,
-                                     dir: String): Option[String] =
-    Option(stores.get(key(spark, dir))).map(_._1)
-
-  private[graft] def invalidate(spark: SparkSession, dir: String): Unit =
-    stores.remove(key(spark, dir)): Unit
+  protected def scan(spark: SparkSession, table: String): DataFrame =
+    spark.table(table).select(col(KeyCol), col("id"), col("t"))
 }

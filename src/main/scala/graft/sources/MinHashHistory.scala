@@ -1,7 +1,6 @@
 package graft.sources
 
-import java.util.concurrent.ConcurrentHashMap
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted MinHash-LSH index — the text NEAR-DUP member of the
@@ -35,36 +34,20 @@ import org.apache.spark.sql.functions._
   *    rides the layout with NO history-side exchange. Corpus-token-scale
   *    like [[GramHistory]] — the documented store-as-state posture.
   *
-  * Contracts shared with the sibling stores: session registry keyed by
-  * (application, dir); [[create]]/[[append]]/[[compact]] under ONE
-  * [[MutationGuard]] marker (both relations mutate together); [[create]]
-  * clears the [[StreamMark]] replay watermark. Append semantics: one
-  * doc's rows arrive in ONE batch; re-appending a doc duplicates its
-  * band rows (candidate dups — absorbed by the probe's pair DISTINCT)
-  * AND its shingle rows (inflating BOTH the intersection and the
-  * denominator until [[compact]] rebuilds distinct rows) — the multiset
-  * replay caveat of the family.
+  * Lifecycle, registry and sidecar contracts: [[BucketedStore]] (both
+  * relations mutate under ONE marker; the band table keeps the sidecar,
+  * keyed on the DISTINCT band-bucket hashes — its rows repeat a bucket
+  * across docs). Append semantics: one doc's rows arrive in ONE batch;
+  * re-appending a doc duplicates its band rows (candidate dups — absorbed
+  * by the probe's pair DISTINCT) AND its shingle rows (inflating BOTH the
+  * intersection and the denominator until [[compact]] rebuilds distinct
+  * rows) — the multiset replay caveat of the family.
   */
-object MinHashHistory {
+object MinHashHistory extends BucketedStore[(DataFrame, DataFrame)](
+    "minhash", "bucket", sideTables = Seq("_sh" -> "id"),
+    bloomKeys = Some(_.select(col("bucket")).distinct()), dedupeRows = true) {
 
   val KeyCol = "bucket"
-
-  private val stores = new ConcurrentHashMap[String, (String, Int)]()
-
-  // memoized band-table sidecar-bloom broadcasts, generation-validated
-  // (the GramHistory device — see [[ProbeReduce]]/[[KeyBloom]])
-  private val blooms: ProbeReduce.BloomMemo = new ConcurrentHashMap()
-
-  private def key(spark: SparkSession, dir: String): String =
-    spark.sparkContext.applicationId + "|" + new java.io.File(dir).getAbsolutePath
-
-  /** Deterministic table name for a source dir. */
-  def tableFor(dir: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(new java.io.File(dir).getAbsolutePath.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    s"graft_minhash_history_$hex"
-  }
 
   def shTableFor(dir: String): String = tableFor(dir) + "_sh"
 
@@ -74,131 +57,29 @@ object MinHashHistory {
     */
   def create(spark: SparkSession, dir: String, bands: DataFrame,
              shingles: DataFrame, buckets: Int = 8,
-             bloomFpp: Double = KeyBloom.DefaultFpp): Unit = {
-    val table = tableFor(dir)
-    MutationGuard.withGuard(spark, Bucketing.guardBase(spark, table)) {
-      Bucketing.writeBucketed(bands, table, KeyCol, buckets)
-      Bucketing.writeBucketed(shingles, shTableFor(dir), "id", buckets)
-      rebuildBloom(spark, table, buckets, bloomFpp)
-    }
-    // a recreated store is a NEW streaming lineage: drop any replay
-    // watermark a previous stream left or its appends are silently skipped
-    StreamMark.clear(spark, table)
-    stores.put(key(spark, dir), (table, buckets)): Unit
-  }
-
-
-  /** Re-attach to an already-created store (new application, shared
-    * metastore) — the restart path: at store scale a rebuild is exactly
-    * what the persisted table exists to avoid. `buckets` must match the
-    * created layout (appends write bucket-compatible segments). Fails
-    * loudly if the table does not exist.
-    */
-  def attach(spark: SparkSession, dir: String, buckets: Int = 8): Unit = {
-    val table = tableFor(dir)
-    require(spark.catalog.tableExists(table),
-      s"MinHashHistory.attach: table $table does not exist - run create() first")
-    require(spark.catalog.tableExists(shTableFor(dir)),
-      s"MinHashHistory.attach: shingle table missing - run create() first")
-    Bucketing.requireBuckets(spark, table, buckets, "MinHashHistory.attach")
-    Bucketing.requireBuckets(spark, shTableFor(dir), buckets, "MinHashHistory.attach")
-    stores.put(key(spark, dir), (table, buckets)): Unit
-  }
+             bloomFpp: Double = KeyBloom.DefaultFpp): Unit =
+    createRows(spark, dir, buckets, bloomFpp, bands, shingles)
 
   /** Append an increment's band + shingle rows as bucket-compatible
     * files. One-batch-per-doc contract: see the object scaladoc.
     */
   def append(spark: SparkSession, dir: String, bands: DataFrame,
-             shingles: DataFrame): Unit = {
-    val (table, buckets) = Option(stores.get(key(spark, dir))).getOrElse(
-      throw new IllegalStateException(
-        s"MinHashHistory.append: no store registered for $dir — create() first"))
-    MutationGuard.withGuard(spark, Bucketing.guardBase(spark, table)) {
-      // fold BEFORE the table append (the GramHistory ordering: crash
-      // residue is phantom bloom keys — harmless — never band keys the
-      // bloom misses); failures drop the sidecar, not the store
-      val base = Bucketing.guardBase(spark, table)
-      try {
-        if (KeyBloom.fold(spark, base,
-            bands.select(col(KeyCol)).distinct(), KeyCol).exists(_ > 0L))
-          blooms.remove(table): Unit
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          KeyBloom.delete(spark, base)
-          blooms.remove(table): Unit
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"MinHashHistory: bloom sidecar update failed for $table — " +
-              s"sidecar dropped, probes fall back to the full band scan: " +
-              s"${e.getMessage}")
-      }
-      bands.write.mode(SaveMode.Append)
-        .bucketBy(buckets, KeyCol).sortBy(KeyCol)
-        .format("parquet").saveAsTable(table)
-      shingles.write.mode(SaveMode.Append)
-        .bucketBy(buckets, "id").sortBy("id")
-        .format("parquet").saveAsTable(shTableFor(dir))
-    }
-  }
+             shingles: DataFrame): Unit =
+    appendRows(spark, dir, bands, shingles)
 
-  /** (Re)build the band table's [[KeyBloom]] sidecar — per-bucket
-    * task-local; failure degrades to the full band scan (the family
-    * contract). Keyed on the DISTINCT band-bucket hashes (the band
-    * table's rows repeat a bucket across docs; membership is per key).
-    */
-  private def rebuildBloom(spark: SparkSession, table: String,
-                           buckets: Int,
-                           fpp: Double = KeyBloom.DefaultFpp): Unit =
-    try {
-      KeyBloom.build(spark, Bucketing.guardBase(spark, table),
-        spark.table(table).select(col(KeyCol)).distinct(), KeyCol, buckets,
-        fpp)
-      blooms.remove(table): Unit
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        KeyBloom.delete(spark, Bucketing.guardBase(spark, table))
-        blooms.remove(table): Unit
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"MinHashHistory: bloom sidecar build failed for $table — " +
-            s"probes fall back to the full band scan: ${e.getMessage}")
-    }
-
-  /** STORE-SIZED compaction to distinct rows in both relations — probes
-    * answer identically before and after on a clean store (and a replay
-    * double-append's inflation is undone), bucket layouts preserved.
-    */
-  def compact(spark: SparkSession, dir: String): Unit = {
-    val (table, buckets) = Option(stores.get(key(spark, dir))).getOrElse(
-      throw new IllegalStateException(
-        s"MinHashHistory.compact: no store registered for $dir — create() first"))
-    MutationGuard.withGuard(spark, Bucketing.guardBase(spark, table)) {
-      Bucketing.compactDistinct(spark, table, KeyCol, buckets,
-        allColumns = true)
-      Bucketing.compactDistinct(spark, shTableFor(dir), "id", buckets,
-        allColumns = true)
-      // re-size the band sidecar to the surviving distinct keys (also
-      // the legacy store's upgrade path)
-      rebuildBloom(spark, table, buckets)
-    }
-  }
-
-  /** LAZY consumer entry: (bands, shingles) store scans when a producer
-    * step ran for this (application, dir), else the caller's derived
-    * plans. The store scans read the tables' FILES as plain parquet
-    * ([[Bucketing.probeScan]]): the probe joins broadcast the batch side
+  /** The (bands, shingles) store scans [[scanOrCompute]] serves: the
+    * tables' FILES read as plain parquet ([[Bucketing.probeScan]]) — the
+    * probe joins broadcast the batch side
     * into map-only store scans, so bucket co-location buys nothing there
     * and the bucketed scan's one-partition-per-bucket split would cap a
     * grown store's read at `buckets`-way parallelism.
     */
-  def scanOrCompute(spark: SparkSession, dir: String)
-                   (compute: => (DataFrame, DataFrame)): (DataFrame, DataFrame) =
-    Option(stores.get(key(spark, dir))) match {
-      case Some((table, _)) =>
-        (Bucketing.probeScan(spark, table)
-          .select(col(KeyCol), col("id"), col("n_chars")),
-          Bucketing.probeScan(spark, shTableFor(dir))
-            .select(col("id"), col("shash")))
-      case None => compute
-    }
+  protected def scan(spark: SparkSession,
+                     table: String): (DataFrame, DataFrame) =
+    (Bucketing.probeScan(spark, table)
+      .select(col(KeyCol), col("id"), col("n_chars")),
+      Bucketing.probeScan(spark, table + "_sh")
+        .select(col("id"), col("shash")))
 
   /** Bloom-gated band-scan reducer for
     * [[graft.operators.Dedup.incrementalNearDups]] — PURE FILE PRUNING
@@ -216,7 +97,7 @@ object MinHashHistory {
     */
   def bandScanReducer(spark: SparkSession, dir: String)
       : Option[DataFrame => DataFrame] =
-    Option(stores.get(key(spark, dir))).map { case (table, _) => keys =>
+    registered(spark, dir).map { case (table, _) => keys =>
       val cols = Seq(col(KeyCol), col("id"), col("n_chars"))
       ProbeReduce.bloomCut(spark, table, KeyCol, keys, blooms) match {
         case None => Bucketing.probeScan(spark, table).select(cols: _*)
@@ -232,23 +113,4 @@ object MinHashHistory {
           Bucketing.probeScan(spark, table, Some(bids)).select(cols: _*)
       }
     }
-
-  /** Sidecar-saturation trigger statistic for the BAND sidecar
-    * (DEDUP_TUNING §5.1) — see [[GramHistory.bloomStat]]; manifest-only,
-    * None when unregistered or legacy.
-    */
-  def bloomStat(spark: SparkSession,
-                dir: String): Option[KeyBloom.Saturation] =
-    registeredTable(spark, dir).flatMap(t =>
-      KeyBloom.saturationStat(spark, Bucketing.guardBase(spark, t)))
-
-  private[graft] def registeredTable(spark: SparkSession,
-                                     dir: String): Option[String] =
-    Option(stores.get(key(spark, dir))).map(_._1)
-
-  private[graft] def invalidate(spark: SparkSession, dir: String): Unit = {
-    Option(stores.get(key(spark, dir)))
-      .foreach(t => Option(blooms.remove(t._1)).foreach(_._2.unpersist()))
-    stores.remove(key(spark, dir)): Unit
-  }
 }

@@ -1,7 +1,6 @@
 package graft.sources
 
-import java.util.concurrent.ConcurrentHashMap
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted payload-FINGERPRINT history store — the payload member of the
@@ -22,28 +21,13 @@ import org.apache.spark.sql.functions._
   * the plan) — the [[GramHistory]] contract. Sizing: 64 B/payload at any
   * corpus scale (4 rows × 16 B), orders below the payloads themselves.
   *
-  * Same session-registry + single-mutating-writer contract as the sibling
-  * stores: [[create]] is the explicit producer step, [[append]] adds
-  * bucket-compatible files (cross-append repeats are absorbed by the
-  * probe's DISTINCT), [[compact]] rewrites to distinct rows preserving the
-  * bucket spec, all under [[MutationGuard]].
+  * Cross-append repeats are absorbed by the probe's DISTINCT; [[compact]]
+  * rewrites to distinct rows. Lifecycle and registry: [[BucketedStore]].
   */
-object PhashHistory {
+object PhashHistory extends BucketedStore[DataFrame]("phash", "bk",
+    dedupeRows = true) {
 
   val KeyCol = "bk"
-
-  private val stores = new ConcurrentHashMap[String, (String, Int)]()
-
-  private def key(spark: SparkSession, dir: String): String =
-    spark.sparkContext.applicationId + "|" + new java.io.File(dir).getAbsolutePath
-
-  /** Deterministic table name for a source dir. */
-  def tableFor(dir: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(new java.io.File(dir).getAbsolutePath.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    s"graft_phash_history_$hex"
-  }
 
   /** The store relation of a fingerprint frame: (bk, id, fp) — one row per
     * 16-bit chunk of each 64-bit fingerprint. Also the probe-side explode.
@@ -60,75 +44,13 @@ object PhashHistory {
     * bucketed history table for `dir` and register it.
     */
   def create(spark: SparkSession, dir: String, fps: DataFrame,
-             buckets: Int = 8): Unit = {
-    val table = tableFor(dir)
-    MutationGuard.withGuard(spark, Bucketing.guardBase(spark, table)) {
-      Bucketing.writeBucketed(chunkKeys(fps), table, KeyCol, buckets)
-    }
-    // a recreated store is a NEW streaming lineage: drop any replay
-    // watermark a previous stream left or its appends are silently skipped
-    StreamMark.clear(spark, table)
-    stores.put(key(spark, dir), (table, buckets)): Unit
-  }
-
-
-  /** Re-attach to an already-created store (new application, shared
-    * metastore) — the restart path: at store scale a rebuild is exactly
-    * what the persisted table exists to avoid. `buckets` must match the
-    * created layout (appends write bucket-compatible segments). Fails
-    * loudly if the table does not exist.
-    */
-  def attach(spark: SparkSession, dir: String, buckets: Int = 8): Unit = {
-    val table = tableFor(dir)
-    require(spark.catalog.tableExists(table),
-      s"PhashHistory.attach: table $table does not exist - run create() first")
-    Bucketing.requireBuckets(spark, table, buckets, "PhashHistory.attach")
-    stores.put(key(spark, dir), (table, buckets)): Unit
-  }
+             buckets: Int = 8): Unit =
+    createRows(spark, dir, buckets, KeyBloom.DefaultFpp, chunkKeys(fps))
 
   /** Append an increment's fingerprints as bucket-compatible files. */
-  def append(spark: SparkSession, dir: String, fps: DataFrame): Unit = {
-    val (table, buckets) = Option(stores.get(key(spark, dir))).getOrElse(
-      throw new IllegalStateException(
-        s"PhashHistory.append: no store registered for $dir — create() first"))
-    MutationGuard.withGuard(spark, Bucketing.guardBase(spark, table)) {
-      chunkKeys(fps)
-        .write.mode(SaveMode.Append)
-        .bucketBy(buckets, KeyCol)
-        .sortBy(KeyCol)
-        .format("parquet")
-        .saveAsTable(table)
-    }
-  }
+  def append(spark: SparkSession, dir: String, fps: DataFrame): Unit =
+    appendRows(spark, dir, chunkKeys(fps))
 
-  /** STORE-SIZED compaction to distinct (bk, id, fp) rows — probes answer
-    * identically before and after, bucket layout preserved (spec-gated).
-    */
-  def compact(spark: SparkSession, dir: String): Unit = {
-    val (table, buckets) = Option(stores.get(key(spark, dir))).getOrElse(
-      throw new IllegalStateException(
-        s"PhashHistory.compact: no store registered for $dir — create() first"))
-    MutationGuard.withGuard(spark, Bucketing.guardBase(spark, table)) {
-      Bucketing.compactDistinct(spark, table, KeyCol, buckets,
-        allColumns = true)
-    }
-  }
-
-  /** LAZY consumer entry: the bucketed table scan when a producer step ran
-    * for this (application, dir), else the caller's derived plan.
-    */
-  def scanOrCompute(spark: SparkSession, dir: String)
-                   (compute: => DataFrame): DataFrame =
-    Option(stores.get(key(spark, dir))) match {
-      case Some((table, _)) =>
-        spark.table(table).select(col(KeyCol), col("id"), col("fp"))
-      case None => compute
-    }
-
-  private[graft] def registeredTable(spark: SparkSession,
-                                     dir: String): Option[String] =
-    Option(stores.get(key(spark, dir))).map(_._1)
-
-  private[graft] def invalidate(spark: SparkSession, dir: String): Unit =
-    stores.remove(key(spark, dir)): Unit
+  protected def scan(spark: SparkSession, table: String): DataFrame =
+    spark.table(table).select(col(KeyCol), col("id"), col("fp"))
 }

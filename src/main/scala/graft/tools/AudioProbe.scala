@@ -137,8 +137,7 @@ object AudioProbe {
       // the history grows 1× → 100× even on this clique-heavy corpus.
       if (!tune) {
         import graft.queries.VectorOps
-        graft.sources.MutationGuard.clear(spark, graft.sources.Bucketing
-          .guardBase(spark, graft.sources.LandmarkHistory.tableFor(d)))
+        graft.sources.LandmarkHistory.clearStaleMarker(spark, d)
         graft.sources.LandmarkHistory.create(spark, d,
           VectorOps.x113HistoryLms(spark, d), capPerHash = 128)
         val store = graft.sources.LandmarkHistory.scanOrCompute(spark, d)(

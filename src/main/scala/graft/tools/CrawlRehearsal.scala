@@ -113,11 +113,6 @@ object CrawlRehearsal {
         .select((col("vec_id") + 10000000L).as("batch_id"),
           col("vec_id").as("hist_id"), lit(1.0).as("cos_sim")))
 
-    def clearTable(t: String): Unit = {
-      MutationGuard.clear(spark, Bucketing.guardBase(spark, t))
-      StreamMark.clear(spark, t)
-    }
-
     def antiCount(eligible: DataFrame, idCol: String,
                   self: DataFrame): Long =
       eligible.select(col(idCol)).distinct()
@@ -126,7 +121,7 @@ object CrawlRehearsal {
 
     val members = Seq(
       Member("x86_hash",
-        build = { d => clearTable(HashHistory.tableFor(d))
+        build = { d => HashHistory.clearStaleMarker(spark, d)
           HashHistory.create(spark, d, TextOps.x86HistoryHashes(spark, d)) },
         probe = d => Dedup.incrementalStatusBinary(batchDocs,
           HashHistory.scanOrCompute(spark, d)(sys.error("unreachable"))),
@@ -143,7 +138,7 @@ object CrawlRehearsal {
         driftStat = Some(d => HashHistory.bloomStat(spark, d)
           .map(_.render).getOrElse("no-sidecar"))),
       Member("x102_gram",
-        build = { d => clearTable(GramHistory.tableFor(d))
+        build = { d => GramHistory.clearStaleMarker(spark, d)
           GramHistory.create(spark, d, TextOps.x86Split(spark, d)._1,
             TextOps.DupGramK) },
         probe = d => Dedup.incrementalDupGrams(batchDocs,
@@ -162,7 +157,7 @@ object CrawlRehearsal {
         driftStat = Some(d => GramHistory.bloomStat(spark, d)
           .map(_.render).getOrElse("no-sidecar"))),
       Member("x109_payload",
-        build = { d => clearTable(PhashHistory.tableFor(d))
+        build = { d => PhashHistory.clearStaleMarker(spark, d)
           PhashHistory.create(spark, d, VectorOps.x109HistoryFps(spark, d)) },
         probe = d => Multimodal.incrementalPayloadNearDups(batchMedia,
           PhashHistory.scanOrCompute(spark, d)(sys.error("unreachable"))),
@@ -176,7 +171,7 @@ object CrawlRehearsal {
             col("hamming") === 0)),
         exactAtScale = false),
       Member("x113_audio",
-        build = { d => clearTable(LandmarkHistory.tableFor(d))
+        build = { d => LandmarkHistory.clearStaleMarker(spark, d)
           LandmarkHistory.create(spark, d,
             VectorOps.x113HistoryLms(spark, d)) },
         probe = d => Multimodal.incrementalAudioNearDups(batchLms,
@@ -191,7 +186,7 @@ object CrawlRehearsal {
           "batch_id", re.filter(col("hist_id") === col("batch_id"))),
         exactAtScale = false),
       Member("x116_video",
-        build = { d => clearTable(FrameHistory.tableFor(d))
+        build = { d => FrameHistory.clearStaleMarker(spark, d)
           FrameHistory.create(spark, d,
             VectorOps.x116HistoryFrames(spark, d)) },
         probe = { d =>
@@ -210,7 +205,7 @@ object CrawlRehearsal {
             col("jaccard") === 1.0)),
         exactAtScale = false),
       Member("x123_minhash",
-        build = { d => clearTable(MinHashHistory.tableFor(d))
+        build = { d => MinHashHistory.clearStaleMarker(spark, d)
           MinHashHistory.create(spark, d,
             TextOps.x123HistoryBands(spark, d),
             TextOps.x123HistoryShingles(spark, d)) },

@@ -38,7 +38,7 @@ object NearDupProbe {
     println(s"[neardup-probe] loadavg $load0 base=$baseSf scaled=$scaled")
 
     import graft.queries.TextOps
-    import graft.sources.{Bucketing, MinHashHistory, MutationGuard}
+    import graft.sources.MinHashHistory
     // the FIXED probe batch: the base split's batch side, pinned so every
     // scale answers the same question
     val batch = TextOps.shingleArrays(TextOps.x123Split(spark, baseSf)._2)
@@ -47,8 +47,7 @@ object NearDupProbe {
     var baseline: Set[(Long, Long)] = null
     (baseSf +: scaled).foreach { dir =>
       val hist = TextOps.x123Split(spark, dir)._1
-      MutationGuard.clear(spark,
-        Bucketing.guardBase(spark, MinHashHistory.tableFor(dir)))
+      MinHashHistory.clearStaleMarker(spark, dir)
       val t0 = System.nanoTime()
       MinHashHistory.create(spark, dir,
         TextOps.minHashBandsOf(hist), TextOps.minHashShinglesOf(hist))

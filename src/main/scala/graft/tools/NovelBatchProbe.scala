@@ -66,11 +66,8 @@ object NovelBatchProbe {
     println(s"[novel-batch] loadavg $load0 store=$storeDir n=$nDocs")
 
     // the three stores over the grown corpus (TriageScaleProbe's build)
-    for (t <- Seq(HashHistory.tableFor(storeDir),
-        GramHistory.tableFor(storeDir), MinHashHistory.tableFor(storeDir))) {
-      MutationGuard.clear(spark, Bucketing.guardBase(spark, t))
-      StreamMark.clear(spark, t)
-    }
+    Seq(HashHistory, GramHistory, MinHashHistory)
+      .foreach(_.clearStaleMarker(spark, storeDir))
     // crawl-batch-sized fpp (the KeyBloom sizing law): the gram leg
     // probes ~100 keys/doc, so DETERMINISTIC zero-read on a 500-doc
     // novel batch needs expected fp ≪ 1 over ~50k keys — 1e-6 ≈ 29

@@ -55,9 +55,7 @@ object SaturationProbe {
 
     println(s"[saturation] loadavg $load0 dir=$dir nNovel=$nNovel")
 
-    val t = GramHistory.tableFor(dir)
-    MutationGuard.clear(spark, Bucketing.guardBase(spark, t))
-    StreamMark.clear(spark, t)
+    GramHistory.clearStaleMarker(spark, dir)
 
     val fpp = 1e-6
     val (hist, _) = TextOps.x86Split(spark, dir)

@@ -304,10 +304,8 @@ object ScaleProbe {
     spark.read.parquet(s"$baseSf/documents.parquet").count() // warm datasource
     // this run owns its warehouse: clear markers a previous killed run left
     for (d <- Seq(baseSf, outDir);
-         t <- Seq(graft.sources.HashHistory.tableFor(d),
-           graft.sources.GramHistory.tableFor(d)))
-      graft.sources.MutationGuard.clear(
-        spark, graft.sources.Bucketing.guardBase(spark, t))
+         s <- Seq(graft.sources.HashHistory, graft.sources.GramHistory))
+      s.clearStaleMarker(spark, d)
     if (queries.contains("x86_incremental_dedup")) {
       // steady-state accounting (as in Bench): the bucketed history store
       // is built once per corpus lifetime, amortized across batches — x86's
@@ -320,8 +318,7 @@ object ScaleProbe {
     if (queries.contains("x109_incremental_payload_neardup")) {
       // store amortization for the payload-fingerprint history, as above
       Seq(baseSf, outDir).foreach { d =>
-        graft.sources.MutationGuard.clear(spark, graft.sources.Bucketing
-          .guardBase(spark, graft.sources.PhashHistory.tableFor(d)))
+        graft.sources.PhashHistory.clearStaleMarker(spark, d)
         graft.sources.PhashHistory.create(spark, d,
           graft.queries.VectorOps.x109HistoryFps(spark, d))
       }
@@ -330,8 +327,7 @@ object ScaleProbe {
       // store amortization for the landmark index, with the index-side
       // hot-bucket cap (the bounded production form — see ProbeQueries)
       Seq(baseSf, outDir).foreach { d =>
-        graft.sources.MutationGuard.clear(spark, graft.sources.Bucketing
-          .guardBase(spark, graft.sources.LandmarkHistory.tableFor(d)))
+        graft.sources.LandmarkHistory.clearStaleMarker(spark, d)
         graft.sources.LandmarkHistory.create(spark, d,
           graft.queries.VectorOps.x113HistoryLms(spark, d),
           capPerHash = 128)

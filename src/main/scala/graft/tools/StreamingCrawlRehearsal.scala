@@ -54,7 +54,7 @@ object StreamingCrawlRehearsal {
     println(s"[streaming-crawl-rehearsal] loadavg $load0 base=$baseSf")
 
     import graft.operators.{Dedup, IvfStore, Multimodal}
-    import graft.queries.{TextOps, VectorOps}
+    import graft.queries.{HistoryStores, TextOps, VectorOps}
     import graft.sources._
     import graft.streaming.CurationStreams
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -78,23 +78,11 @@ object StreamingCrawlRehearsal {
       .localCheckpoint(true)
 
     // ---- stores from the split histories (the CrawlRehearsal builds) ----
-    def clearTable(t: String): Unit = {
-      MutationGuard.clear(spark, Bucketing.guardBase(spark, t))
-      StreamMark.clear(spark, t)
+    // (x86's twin is the bounded-state variant: no HashHistory here)
+    HistoryStores.all.filterNot(_.store eq HashHistory).foreach { b =>
+      b.store.clearStaleMarker(spark, baseSf)
+      b.build(spark, baseSf)
     }
-    clearTable(GramHistory.tableFor(baseSf))
-    GramHistory.create(spark, baseSf, TextOps.x86Split(spark, baseSf)._1,
-      TextOps.DupGramK)
-    clearTable(PhashHistory.tableFor(baseSf))
-    PhashHistory.create(spark, baseSf, VectorOps.x109HistoryFps(spark, baseSf))
-    clearTable(LandmarkHistory.tableFor(baseSf))
-    LandmarkHistory.create(spark, baseSf, VectorOps.x113HistoryLms(spark, baseSf))
-    clearTable(FrameHistory.tableFor(baseSf))
-    FrameHistory.create(spark, baseSf, VectorOps.x116HistoryFrames(spark, baseSf))
-    clearTable(MinHashHistory.tableFor(baseSf))
-    MinHashHistory.create(spark, baseSf,
-      TextOps.x123HistoryBands(spark, baseSf),
-      TextOps.x123HistoryShingles(spark, baseSf))
     val ivfDir = java.nio.file.Files.createTempDirectory("graft-streamreh")
       .toString + "/idx"
     IvfStore.create(spark, ivfDir,

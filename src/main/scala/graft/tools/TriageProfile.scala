@@ -77,33 +77,12 @@ object TriageProfile {
       jobLog.clear()
     }
 
-    // store builds, as Bench does (untimed)
-    phase("store: hash") {
-      graft.sources.HashHistory.create(spark, sfDir,
-        graft.queries.TextOps.x86HistoryHashes(spark, sfDir))
+    // store builds, as Bench does (untimed); the BM25 store and BPE table
+    // too, so probe/store consumers profile in their benched shape
+    graft.queries.HistoryStores.all.foreach { b =>
+      phase(s"store: ${b.name}")(b.build(spark, sfDir))
     }
-    phase("store: gram") {
-      graft.sources.GramHistory.create(spark, sfDir,
-        graft.queries.TextOps.x86Split(spark, sfDir)._1,
-        graft.queries.TextOps.DupGramK)
-    }
-    phase("store: minhash") {
-      graft.sources.MinHashHistory.create(spark, sfDir,
-        graft.queries.TextOps.x123HistoryBands(spark, sfDir),
-        graft.queries.TextOps.x123HistoryShingles(spark, sfDir))
-    }
-    // the remaining Bench store builds, so probe/store consumers profile in
-    // their benched shape (x109/x113/x116/x94b); best-effort like Bench
-    phase("store: phash/landmark/frame/bm25/bpe") {
-      try graft.sources.PhashHistory.create(spark, sfDir,
-        graft.queries.VectorOps.x109HistoryFps(spark, sfDir))
-      catch { case e: Throwable => System.err.println(s"[prof] phash: $e") }
-      try graft.sources.LandmarkHistory.create(spark, sfDir,
-        graft.queries.VectorOps.x113HistoryLms(spark, sfDir))
-      catch { case e: Throwable => System.err.println(s"[prof] landmark: $e") }
-      try graft.sources.FrameHistory.create(spark, sfDir,
-        graft.queries.VectorOps.x116HistoryFrames(spark, sfDir))
-      catch { case e: Throwable => System.err.println(s"[prof] frame: $e") }
+    phase("store: bm25/bpe") {
       try graft.operators.Bm25Store.createFor(spark, sfDir,
         graft.queries.Tables.documents(spark, sfDir)): Unit
       catch { case e: Throwable => System.err.println(s"[prof] bm25: $e") }

@@ -86,11 +86,8 @@ object TriageScaleProbe {
 
     var baseline: Set[Seq[Any]] = null
     (baseSf +: scaled).foreach { dir =>
-      for (t <- Seq(HashHistory.tableFor(dir), GramHistory.tableFor(dir),
-          MinHashHistory.tableFor(dir))) {
-        MutationGuard.clear(spark, Bucketing.guardBase(spark, t))
-        StreamMark.clear(spark, t)
-      }
+      Seq(HashHistory, GramHistory, MinHashHistory)
+        .foreach(_.clearStaleMarker(spark, dir))
       val t0 = System.nanoTime()
       HashHistory.create(spark, dir, TextOps.x86HistoryHashes(spark, dir))
       GramHistory.create(spark, dir, TextOps.x86Split(spark, dir)._1,

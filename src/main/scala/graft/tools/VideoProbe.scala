@@ -98,8 +98,7 @@ object VideoProbe {
       // should stay ~flat as the history grows 1× → 100×.
       {
         import graft.queries.VectorOps
-        graft.sources.MutationGuard.clear(spark, graft.sources.Bucketing
-          .guardBase(spark, graft.sources.FrameHistory.tableFor(d)))
+        graft.sources.FrameHistory.clearStaleMarker(spark, d)
         graft.sources.FrameHistory.create(spark, d,
           graft.operators.Multimodal.frameFingerprints(
             VectorOps.x109Media(spark, d)))

@@ -182,16 +182,32 @@ class AttachSpec extends SparkSpec {
   }
 
   test("attach with the wrong bucket count fails loudly (layout protection)") {
-    val dir = freshDir("buckets")
-    HashHistory.create(spark, dir,
-      docs(1L -> baseText).select(unhex(md5(col("text"))).as("th")),
-      buckets = 4)
-    HashHistory.invalidate(spark, dir)
-    val e = intercept[IllegalArgumentException](
-      HashHistory.attach(spark, dir, buckets = 8))
-    assert(e.getMessage.contains("corrupt"), e.getMessage)
-    HashHistory.attach(spark, dir, buckets = 4) // the matching count works
-    HashHistory.invalidate(spark, dir)
+    val hist = docs(1L -> baseText)
+    val media = Seq((1L, payload(1))).toDF("media_id", "content")
+    val creates: Seq[(BucketedStore[_], String => Unit)] = Seq(
+      HashHistory -> (HashHistory.create(spark, _,
+        hist.select(unhex(md5(col("text"))).as("th")), buckets = 4)),
+      GramHistory -> (GramHistory.create(spark, _, hist, TextOps.DupGramK,
+        buckets = 4)),
+      MinHashHistory -> (MinHashHistory.create(spark, _,
+        TextOps.minHashBandsOf(hist), TextOps.minHashShinglesOf(hist),
+        buckets = 4)),
+      PhashHistory -> (PhashHistory.create(spark, _,
+        Multimodal.payloadFingerprints(media), buckets = 4)),
+      FrameHistory -> (FrameHistory.create(spark, _, Multimodal.videoFrameRows(
+        media.withColumn("n_frames", lit(8))), buckets = 4)),
+      LandmarkHistory -> (LandmarkHistory.create(spark, _,
+        Multimodal.audioLandmarkRows(media), buckets = 4)))
+    for ((store, create) <- creates) {
+      val dir = freshDir("buckets")
+      create(dir)
+      store.invalidate(spark, dir)
+      val e = intercept[IllegalArgumentException](
+        store.attach(spark, dir, buckets = 8))
+      assert(e.getMessage.contains("corrupt"), e.getMessage)
+      store.attach(spark, dir, buckets = 4) // the matching count works
+      store.invalidate(spark, dir)
+    }
   }
 
   test("attach on a store that was never created fails loudly") {

@@ -1,7 +1,7 @@
 #!/bin/bash
-# Retry a subset bench until BOTH load_start and load_end read quiet
-# (< 0.7) — the box is co-tenant and spikes mid-run; a run whose start OR
-# end is loaded is discarded. Usage:
+# Retry a subset bench until its load_start reads quiet (< 0.7) — the box
+# is co-tenant and spikes mid-run; a run whose start is loaded is
+# discarded (load_end is reported but not gated, see below). Usage:
 #   GRAFT_BENCH_ONLY=... tools/quietretry.sh [max_attempts]
 set -uo pipefail
 MAX="${1:-6}"
