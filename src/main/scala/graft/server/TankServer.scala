@@ -3,6 +3,8 @@ package graft.server
 import java.net.InetSocketAddress
 import java.util.concurrent.{ConcurrentLinkedQueue, ExecutorService, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
+import scala.collection.mutable
+import com.fasterxml.jackson.core.JsonProcessingException
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -41,19 +43,33 @@ import graft.tiles.TileService.TileConfig
   * The tile/heatmap cache (A11/O5) invalidates by the Morton cells each
   * write touches.
   *
-  * Requests run on a fixed pool of one handler thread per driver core
-  * (`tank-http-<server>-<n>`). A cold tile runs small one-task Spark
-  * jobs, so a single handler thread left all but one core idle while
-  * viewers queued: on a 4-core box, four map viewers over a 10k-feature
-  * store (the perfbench `tile_viewer` workload, medians of 10 runs) read
-  * a 2×2 viewport p50 of 2.1 s and 7.0 tiles/s served one request at a
-  * time, and 0.67 s and 21.9 tiles/s with the pool and the per-snapshot
-  * relation reuse of [[FeatureStore.read]]. Reads run concurrently;
-  * writes are serialized in the server (one writer at a time, as the
-  * store's lease requires anyway), and a miss caches its bytes only if no
-  * write invalidated the cache while it rendered ([[TileCache.put]]).
-  * Every request's Spark jobs carry its route as the job description,
-  * e.g. `GET /tile/14/8793/5348`.
+  * Threads. Handler threads (`tank-http-<server>-<n>`, 16 per driver
+  * core) only parse, check the cache, wait and write, so no cache hit or
+  * queued miss waits for a thread. Spark work is bounded by a render gate
+  * of one slot per core. An unfiltered tile or heatmap miss joins the
+  * batch of its (kind, z) that is still waiting for a slot, or opens one;
+  * batches take free slots oldest first, and the request that finds its
+  * batch at the head renders every key in it with one
+  * [[TileService.panel]]/[[TileService.heatmapPanel]] call and caches each.
+  * There is no timer: batches form only from misses that queued while
+  * every slot was busy, so an idle server renders a lone miss at once. A
+  * request joins only a batch that has not yet resolved its snapshot,
+  * never a render already running, so it sees every write that returned
+  * before it arrived. Filtered tiles are uncached and render alone, under
+  * a slot. Writes are serialized in the server (one writer at a time, as
+  * the store's lease requires anyway), and a miss caches its bytes only if
+  * no write invalidated the cache while it rendered ([[TileCache.put]]).
+  *
+  * Measured on a 4-core box with the perfbench `tile_viewer` workload
+  * (four map viewers fetching 2×2 viewports over a 10k-feature store; 10
+  * paired 30 s runs): with one handler thread per core and one Spark job
+  * per miss, a viewport read a p50 of 668 ms and 22.7 tiles/s; with this
+  * model, 386 ms and 40.4 tiles/s. Spark jobs per viewport fell from 2.91
+  * to 1.35, and requests that ran no job went from a client p50 of 436 ms
+  * (queued behind other viewers' misses) to 49 ms. Every request's Spark
+  * jobs carry its route as the job description, e.g.
+  * `GET /tile/14/8793/5348`; a batch's jobs list every route they serve,
+  * `GET /tile/14/8793/5348, /tile/14/8794/5348`.
   */
 final class TankServer(spark: SparkSession, cfg: StoreConfig,
                        tileCfg: TileConfig = TileConfig(), port: Int = 0,
@@ -70,7 +86,7 @@ final class TankServer(spark: SparkSession, cfg: StoreConfig,
   private val handlerThreads = new ConcurrentLinkedQueue[Thread]()
   private val pool: ExecutorService = {
     val n = new AtomicInteger()
-    Executors.newFixedThreadPool(Runtime.getRuntime.availableProcessors(), r => {
+    Executors.newFixedThreadPool(TankServer.HandlersPerCore * TankServer.cores, r => {
       val t = new Thread(r, threadPrefix + n.incrementAndGet())
       t.setDaemon(true)
       handlerThreads.add(t)
@@ -78,6 +94,22 @@ final class TankServer(spark: SparkSession, cfg: StoreConfig,
     })
   }
   private val writeLock = new Object
+
+  /** A cold render waiting for, or holding, a render slot: the keys of one
+    * (kind, z) that requests registered before a slot holder took it, or
+    * one filtered tile, which is uncached and so never shared.
+    */
+  private final class Batch(val kind: String, val z: Int,
+                            val filter: Option[(String, Any)]) {
+    val keys = mutable.LinkedHashSet[(Int, Int)]()
+    var outcome: Either[Throwable, Map[(Int, Int), Array[Byte]]] = null
+  }
+
+  // the render gate; every field below is guarded by it
+  private val gate = new Object
+  private var freeSlots = TankServer.cores
+  private val queue = mutable.Queue[Batch]() // batches not yet taken, oldest first
+  private var stopping = false
 
   private def jsonStr(s: String): String = mapper.writeValueAsString(s)
 
@@ -90,16 +122,25 @@ final class TankServer(spark: SparkSession, cfg: StoreConfig,
     server.getAddress.getPort
   }
 
-  /** Stop listening, then wait up to 30 s for in-flight handlers to
-    * finish their Spark work (their responses may no longer reach the
-    * client) before interrupting them.
+  /** Fail every render still queued for a slot, stop listening, then wait
+    * for in-flight renders to finish their Spark work (their responses may
+    * no longer reach the client), interrupting them after 30 s. The whole
+    * wait, thread exits included, ends within 31 s.
     */
   def stop(): Unit = {
+    val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(31)
+    def left: Long = deadline - System.nanoTime()
+    gate.synchronized {
+      stopping = true
+      queue.foreach(_.outcome = Left(new IllegalStateException("server stopped")))
+      queue.clear()
+      gate.notifyAll()
+    }
     server.stop(0)
     pool.shutdown()
-    if (!pool.awaitTermination(30, TimeUnit.SECONDS))
+    if (!pool.awaitTermination(left - TimeUnit.SECONDS.toNanos(1), TimeUnit.NANOSECONDS))
       pool.shutdownNow()
-    handlerThreads.forEach(_.join(1000))
+    handlerThreads.forEach(t => if (left > 0) t.join(math.max(1L, left / 1000000)))
     // session-memo hygiene: a stopped server releases its trained-model
     // memos (UnigramLm/Bpe are keyed per application and otherwise live
     // for the JVM — the round-14 unbounded-session-state nit)
@@ -158,15 +199,12 @@ final class TankServer(spark: SparkSession, cfg: StoreConfig,
       case ("POST", List("_bulk")) => postBulk(ex, layer = "")
       case ("POST", List("_bulk", layer)) => postBulk(ex, layer)
       case ("GET", "static" :: rest) => serveStatic(ex, rest)
-      case ("GET", List("tile", z, x, y)) =>
+      case ("GET", List(kind @ ("tile" | "heatmap"), z, x, y)) =>
         val (zi, xi, yi) = tileCoords(z, x, y)
-        tile(ex, zi, xi, yi)
+        read(ex, kind, zi, xi, yi)
       case ("DELETE", List("tile", z, x, y)) =>
         val (zi, xi, yi) = tileCoords(z, x, y)
         deleteTile(ex, zi, xi, yi)
-      case ("GET", List("heatmap", z, x, y)) =>
-        val (zi, xi, yi) = tileCoords(z, x, y)
-        heatmap(ex, zi, xi, yi)
       case ("GET", List(uid)) => getFeature(ex, uid)
       case ("DELETE", List(uid)) => deleteFeature(ex, uid)
       case ("PUT", List(uid)) => putFeature(ex, uid)
@@ -176,7 +214,7 @@ final class TankServer(spark: SparkSession, cfg: StoreConfig,
   } catch { // structured error mapping (application.kt:620-649)
     case _: NoSuchElementException =>
       respond(ex, 404, """{"msg": "item not found"}""".getBytes, "application/json")
-    case e: IllegalArgumentException =>
+    case e @ (_: IllegalArgumentException | _: JsonProcessingException) =>
       respond(ex, 400,
         s"""{"msg": "illegal argument", "cause": ${jsonStr(String.valueOf(e.getMessage))}}""".getBytes,
         "application/json")
@@ -201,27 +239,66 @@ final class TankServer(spark: SparkSession, cfg: StoreConfig,
 
   // ------------------------------------------------------------- reads
 
-  private def tile(ex: HttpExchange, z: Int, x: Int, y: Int): Unit = {
-    val filter = parseFilter(ex)
-    val cacheable = filter.isEmpty
-    val cached = if (cacheable) cache.get("tile", z, x, y) else None
-    val bytes = cached.getOrElse {
-      val asOf = cache.generation
-      val b = TileService.tile(features, z, x, y, filter, tileCfg)
-      if (cacheable) cache.put("tile", z, x, y, b, asOf)
-      b
-    }
+  /** A tile or heatmap: from the cache when unfiltered, else rendered
+    * under the render gate. Heatmaps take no filter.
+    */
+  private def read(ex: HttpExchange, kind: String, z: Int, x: Int, y: Int): Unit = {
+    val filter = if (kind == "tile") parseFilter(ex) else None
+    val cached = if (filter.isEmpty) cache.get(kind, z, x, y) else None
+    val bytes = cached.getOrElse(render(kind, z, x, y, filter))
     respond(ex, 200, bytes, "application/x-protobuf")
   }
 
-  private def heatmap(ex: HttpExchange, z: Int, x: Int, y: Int): Unit = {
-    val bytes = cache.get("heatmap", z, x, y).getOrElse {
-      val asOf = cache.generation
-      val b = TileService.heatmap(features, z, x, y, tileCfg)
-      cache.put("heatmap", z, x, y, b, asOf)
-      b
+  /** Register (x, y) with the batch of its (kind, z) that no slot holder
+    * has taken yet — or open one — and wait. Batches take free render
+    * slots oldest first; whoever finds its batch at the head with a slot
+    * free renders all of its keys, and everyone else waits for the result.
+    */
+  private def render(kind: String, z: Int, x: Int, y: Int,
+                     filter: Option[(String, Any)]): Array[Byte] = {
+    val (b, lead) = gate.synchronized {
+      if (stopping) throw new IllegalStateException("server stopped")
+      val b = queue.find(q => filter.isEmpty && q.filter.isEmpty && q.kind == kind && q.z == z)
+        .getOrElse { val nb = new Batch(kind, z, filter); queue.enqueue(nb); nb }
+      b.keys += ((x, y))
+      while (b.outcome == null && (freeSlots == 0 || !queue.headOption.contains(b)))
+        gate.wait()
+      val lead = b.outcome == null
+      if (lead) {
+        queue.dequeue(); freeSlots -= 1
+        gate.notifyAll() // the next batch may have a slot too
+      }
+      (b, lead)
     }
-    respond(ex, 200, bytes, "application/x-protobuf")
+    if (lead) {
+      val outcome = try Right(renderBatch(b)) catch { case e: Throwable => Left(e) }
+      gate.synchronized {
+        b.outcome = outcome; freeSlots += 1
+        gate.notifyAll()
+      }
+    }
+    b.outcome.fold(e => throw e, _((x, y)))
+  }
+
+  /** One Spark job for a taken batch (its key set is final), described by
+    * every route it serves. The cache generation is read before the
+    * snapshot is resolved, so a write that lands meanwhile drops the puts.
+    */
+  private def renderBatch(b: Batch): Map[(Int, Int), Array[Byte]] = {
+    val keys = b.keys.toSeq
+    val sc = spark.sparkContext
+    val own = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(
+      keys.map { case (x, y) => s"/${b.kind}/${b.z}/$x/$y" }.mkString("GET ", ", ", ""))
+    try {
+      val asOf = cache.generation
+      val bytes =
+        if (b.kind == "tile") TileService.panel(features, b.z, keys, b.filter, tileCfg)
+        else TileService.heatmapPanel(features, b.z, keys, tileCfg)
+      if (b.filter.isEmpty)
+        bytes.foreach { case ((x, y), v) => cache.put(b.kind, b.z, x, y, v, asOf) }
+      bytes
+    } finally sc.setJobDescription(own)
   }
 
   private def getFeature(ex: HttpExchange, uid: String): Unit = {
@@ -508,4 +585,9 @@ final class TankServer(spark: SparkSession, cfg: StoreConfig,
 
 object TankServer {
   private val servers = new AtomicInteger()
+  private val cores = Runtime.getRuntime.availableProcessors()
+  /** Handler threads per core: enough that a cache hit or a queued miss
+    * never waits for a thread while the render slots are busy.
+    */
+  private val HandlersPerCore = 16
 }

@@ -19,6 +19,11 @@ import graft.core.ZRange
   *    position (exact), not by hash-cell membership — documented deviation
   *    D5: more accurate, same output shape.
   *
+  * Each product has one render path, the panel ([[panel]],
+  * [[heatmapPanel]]: N tiles at one zoom from one job); the single-tile
+  * reads are its one-tile case. [[tileDf]]/[[heatmapDf]] are the
+  * single-tile plans as DataFrames, for the query registry.
+  *
   * At 100 TB the feature table is laid out hash-sorted (bucketed/Z-ordered),
   * so the BETWEEN predicates prune to a handful of files/row-groups; each
   * tile read touches O(tile) data no matter the table size.
@@ -78,71 +83,64 @@ object TileService {
       .filter(col("tgeom").isNotNull)
   }
 
-  /** Full tile read: scan + clip distributed, MVT encode on the driver
-    * (per-tile results are bounded by the Z-range prune).
+  /** Full tile read: the one-tile case of [[panel]], so a tile served
+    * from a batched render is byte-identical to this answer.
     */
   def tile(features: DataFrame, z: Int, x: Int, y: Int,
            filter: Option[(String, Any)] = None,
-           cfg: TileConfig = TileConfig()): Array[Byte] = {
-    val rows = tileDf(features, z, x, y, filter, cfg).collect()
-    val feats = rows.toSeq.map { r =>
-      val (gt, rings, roles) = GeomUdfs.toMvtRingsRoles(r.getAs[String]("tgeom"))
-      val props = cfg.attributes.flatMap { a =>
-        Option(r.getAs[Any](a)).map(a -> _)
-      }
-      Mvt.Feature(None, gt, rings, props, exteriors = Some(roles))
-    }
-    Mvt.encode(feats, cfg.baseLayer, cfg.extent)
-  }
+           cfg: TileConfig = TileConfig()): Array[Byte] =
+    panel(features, z, Seq((x, y)), filter, cfg)((x, y))
 
   /** BATCH panel read — N tiles at one zoom from ONE Spark job (the
     * cold-panel fix: ServingLatencyProbe measured one job per cold tile
     * at ~490 ms p50, so a 64-tile viewer panel paid 64 sequential jobs
     * where a single pruned scan covering the panel's merged Z-ranges
     * serves them all). Pipeline: merged-range pruned scan → per-feature
-    * candidate-tile fan-out (buffered envelope vs the requested tile set —
-    * a feature clips into EVERY tile whose clip-buffer halo its envelope
-    * reaches, exactly [[tileDf]]'s membership) → per-(feature, tile) clip
-    * → driver-side group + MVT encode (driver rows are panel-bounded: the
-    * same rows the N single-tile reads would each collect). Returns bytes
-    * for EVERY requested tile — an empty tile encodes the empty layer,
-    * byte-identical to [[tile]]'s answer for it.
+    * candidate-tile fan-out → per-(feature, tile) clip → driver-side group
+    * + MVT encode (driver rows are panel-bounded: the same rows the N
+    * single-tile reads would each collect). A feature is a member of tile
+    * t exactly when [[tileDf]] would return it for t: its hash lies in t's
+    * buffered cover (not merely in the panel's merged one) and it clips
+    * into t; its buffered envelope only narrows the candidates. Features
+    * are encoded in uid order, so a tile's bytes do not depend on the
+    * other tiles of the panel or on scan order. Returns bytes for EVERY
+    * requested tile — an empty tile encodes the empty layer.
     */
   def panel(features: DataFrame, z: Int, tiles: Seq[(Int, Int)],
             filter: Option[(String, Any)] = None,
             cfg: TileConfig = TileConfig()): Map[(Int, Int), Array[Byte]] = {
     if (tiles.isEmpty) return Map.empty
-    val bufFrac = cfg.buffer.toDouble / cfg.extent.toDouble
-    val ranges = mergeRanges(tiles.flatMap { case (x, y) =>
-      ZRange.coverWithBuffer(z, x, y, cfg.hashLevel, bufFrac)
-    })
-    val pruned = features.filter(balancedOr(
-      ranges.map { case (lo, hi) => col("hash").between(lo, hi) }))
+    val cov = covers(z, tiles, cfg)
+    val pruned = prunedScan(features, cov)
     val filtered = filter match {
       case Some((attr, v)) => pruned.filter(col(attr) === lit(v))
       case None => pruned
     }
     // candidate tiles of a feature: envelope (in tile units at z, expanded
-    // by the clip-buffer halo) ∩ the requested set; packed (x << 32 | y)
-    val tileSet = tiles.toSet
-    val zz = z; val bf = bufFrac
-    val candU = udf((wkt: String) => {
+    // by the clip-buffer halo) ∩ the requested set, kept where the tile's
+    // own cover holds the feature's hash; packed (x << 32 | y)
+    val bf = cfg.buffer.toDouble / cfg.extent.toDouble
+    val (xLo, xHi) = (tiles.map(_._1).min, tiles.map(_._1).max)
+    val (yLo, yHi) = (tiles.map(_._2).min, tiles.map(_._2).max)
+    val candU = udf((hash: Int, wkt: String) => {
       val env = GeomUdfs.parse(wkt).getEnvelopeInternal
-      val scale = (1L << zz).toDouble
+      val scale = (1L << z).toDouble
       val x0 = math.floor(graft.core.WebMercator.projX(env.getMinX) * scale - bf).toInt
       val x1 = math.floor(graft.core.WebMercator.projX(env.getMaxX) * scale + bf).toInt
       val y0 = math.floor(graft.core.WebMercator.projY(env.getMaxY) * scale - bf).toInt
       val y1 = math.floor(graft.core.WebMercator.projY(env.getMinY) * scale + bf).toInt
       (for {
-        x <- x0 to x1; y <- y0 to y1; if tileSet((x, y))
+        x <- math.max(x0, xLo) to math.min(x1, xHi)
+        y <- math.max(y0, yLo) to math.min(y1, yHi)
+        c <- cov.get((x, y)) if inCover(c, hash)
       } yield (x.toLong << 32) | (y & 0xffffffffL)).toArray
     })
-    val zc = z; val ext = cfg.extent; val buf = cfg.buffer
+    val (ext, buf) = (cfg.extent, cfg.buffer)
     val clipU = udf((wkt: String, t: Long) =>
-      GeomUdfs.clipToTile(wkt, zc, (t >> 32).toInt, t.toInt, ext, buf))
+      GeomUdfs.clipToTile(wkt, z, (t >> 32).toInt, t.toInt, ext, buf))
     val rows = filtered
       .select((col("uid") +: cfg.attributes.map(col)) :+ col("geometry") :+
-        explode(candU(col("geometry"))).as("_t"): _*)
+        explode(candU(col("hash"), col("geometry"))).as("_t"): _*)
       .withColumn("tgeom", clipU(col("geometry"), col("_t")))
       .filter(col("tgeom").isNotNull)
       .drop("geometry")
@@ -151,16 +149,36 @@ object TileService {
       val t = r.getAs[Long]("_t"); ((t >> 32).toInt, t.toInt)
     }
     tiles.map { case (x, y) =>
-      val feats = byTile.getOrElse((x, y), Array.empty[Row]).toSeq.map { r =>
-        val (gt, rings, roles) = GeomUdfs.toMvtRingsRoles(r.getAs[String]("tgeom"))
-        val props = cfg.attributes.flatMap { a =>
-          Option(r.getAs[Any](a)).map(a -> _)
+      val feats = byTile.getOrElse((x, y), Array.empty[Row])
+        .sortBy(_.getAs[String]("uid")).toSeq.map { r =>
+          val (gt, rings, roles) = GeomUdfs.toMvtRingsRoles(r.getAs[String]("tgeom"))
+          val props = cfg.attributes.flatMap { a =>
+            Option(r.getAs[Any](a)).map(a -> _)
+          }
+          Mvt.Feature(None, gt, rings, props, exteriors = Some(roles))
         }
-        Mvt.Feature(None, gt, rings, props, exteriors = Some(roles))
-      }
       (x, y) -> Mvt.encode(feats, cfg.baseLayer, cfg.extent)
     }.toMap
   }
+
+  /** Each tile's buffered Morton cover (the ranges [[hashPredicate]] ORs
+    * together), merged.
+    */
+  private def covers(z: Int, tiles: Seq[(Int, Int)],
+                     cfg: TileConfig): Map[(Int, Int), Seq[(Int, Int)]] = {
+    val bufFrac = cfg.buffer.toDouble / cfg.extent.toDouble
+    tiles.distinct.map { case (x, y) =>
+      (x, y) -> mergeRanges(ZRange.coverWithBuffer(z, x, y, cfg.hashLevel, bufFrac))
+    }.toMap
+  }
+
+  private def inCover(cover: Seq[(Int, Int)], h: Int): Boolean =
+    cover.exists { case (lo, hi) => lo <= h && h <= hi }
+
+  /** The store pruned by the merged covers of a panel's tiles. */
+  private def prunedScan(features: DataFrame, cov: Map[(Int, Int), Seq[(Int, Int)]]): DataFrame =
+    features.filter(balancedOr(mergeRanges(cov.values.flatten.toSeq)
+      .map { case (lo, hi) => col("hash").between(lo, hi) }))
 
   /** Sorted, overlap-merged hash ranges — the panel predicate stays
     * O(perimeter) sized even when adjacent tiles' covers abut or overlap
@@ -195,20 +213,61 @@ object TileService {
   }
 
   /** Heatmap as an MVT of cell polygons carrying a `count` attribute
-    * (A9's output shape, application.kt:601-610).
+    * (A9's output shape, application.kt:601-610): the one-tile case of
+    * [[heatmapPanel]].
     */
   def heatmap(features: DataFrame, z: Int, x: Int, y: Int,
-              cfg: TileConfig = TileConfig()): Array[Byte] = {
+              cfg: TileConfig = TileConfig()): Array[Byte] =
+    heatmapPanel(features, z, Seq((x, y)), cfg)((x, y))
+
+  /** BATCH heatmap read — N heatmap tiles at one zoom from one pruned scan
+    * and one aggregate. A feature counts in cell (i, j) of tile t exactly
+    * when [[heatmapDf]] would count it there: its hash lies in t's buffered
+    * cover and floor((cx·2^z − x)·n), floor((cy·2^z − y)·n) fall in
+    * [0, n), computed with the same double arithmetic. Cells are encoded
+    * in (j, i) order, so a tile's bytes depend neither on the other tiles
+    * of the panel nor on the aggregate's output order. Returns bytes for
+    * EVERY requested tile — an empty tile encodes the empty layer.
+    */
+  def heatmapPanel(features: DataFrame, z: Int, tiles: Seq[(Int, Int)],
+                   cfg: TileConfig = TileConfig()): Map[(Int, Int), Array[Byte]] = {
+    if (tiles.isEmpty) return Map.empty
     val n = gridN(z)
+    val scale = (1L << z).toDouble
+    val cov = covers(z, tiles, cfg)
+    val index = cov.keys.toSeq.zipWithIndex.toMap
+    // (tile index, j, i) of each cell a feature counts in, packed so that
+    // sorting the keys orders them by tile, then row j, then column i
+    val cellsU = udf((hash: Int, wkt: String) => {
+      val c = GeomUdfs.parse(wkt).getCentroid
+      val (cx, cy) = (graft.core.WebMercator.projX(c.getX), graft.core.WebMercator.projY(c.getY))
+      val (fx, fy) = (math.floor(cx * scale).toInt, math.floor(cy * scale).toInt)
+      (for {
+        x <- fx - 1 to fx + 1
+        y <- fy - 1 to fy + 1
+        k <- index.get((x, y))
+        if inCover(cov((x, y)), hash)
+        i = math.floor((cx * scale - x) * n)
+        j = math.floor((cy * scale - y) * n)
+        if i >= 0 && i < n && j >= 0 && j < n
+      } yield (k.toLong << 16) | (j.toLong << 8) | i.toLong).toArray
+    })
+    val counts = prunedScan(features, cov)
+      .select(explode(cellsU(col("hash"), col("geometry"))).as("_c"))
+      .groupBy("_c").agg(count(lit(1)).as("n"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
+    val byTile = counts.groupBy(_._1 >> 16)
     val cellPx = cfg.extent.toDouble / n
-    val rows = heatmapDf(features, z, x, y, cfg).collect()
-    val feats = rows.toSeq.map { r =>
-      val i = r.getAs[Int]("cell_i"); val j = r.getAs[Int]("cell_j")
-      val (x0, y0) = ((i * cellPx).round.toInt, (j * cellPx).round.toInt)
-      val (x1, y1) = (((i + 1) * cellPx).round.toInt, ((j + 1) * cellPx).round.toInt)
-      val ring = Seq((x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0))
-      Mvt.Feature(None, 3, Seq(ring), Seq("count" -> r.getAs[Long]("n")))
+    index.map { case (t, k) =>
+      val feats = byTile.getOrElse(k.toLong, Array.empty[(Long, Long)]).toSeq.map {
+        case (c, cnt) =>
+          val (i, j) = ((c & 0xff).toInt, ((c >> 8) & 0xff).toInt)
+          val (x0, y0) = ((i * cellPx).round.toInt, (j * cellPx).round.toInt)
+          val (x1, y1) = (((i + 1) * cellPx).round.toInt, ((j + 1) * cellPx).round.toInt)
+          val ring = Seq((x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0))
+          Mvt.Feature(None, 3, Seq(ring), Seq("count" -> cnt))
+      }
+      t -> Mvt.encode(feats, cfg.baseLayer, cfg.extent)
     }
-    Mvt.encode(feats, cfg.baseLayer, cfg.extent)
   }
 }

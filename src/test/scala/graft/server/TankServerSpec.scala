@@ -57,6 +57,42 @@ class TankServerSpec extends SparkSpec {
     (code, bytes, respHeaders)
   }
 
+  /** Holds every render slot of the server at `at`: all Spark task threads
+    * wait on [[TankServerSpec.release]], and one filtered z0 tile per slot
+    * takes a slot and submits a job that cannot run. Returns once every
+    * slot is held; the returned function frees them and waits for the
+    * filtered requests.
+    */
+  private def holdSlots(at: Int): () => Unit = {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val sc = spark.sparkContext
+    val slots = Runtime.getRuntime.availableProcessors()
+    TankServerSpec.release = new CountDownLatch(1)
+    val submitted = new CountDownLatch(slots)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+            .contains("GET /tile/0/0/0")) submitted.countDown()
+    }
+    sc.addSparkListener(listener)
+    val n = sc.defaultParallelism
+    val hold = new Thread(() => sc.parallelize(0 until n, n)
+      .foreach(_ => TankServerSpec.release.await(120, TimeUnit.SECONDS)))
+    hold.start()
+    val blockers = (0 until slots).map { i =>
+      val t = new Thread(() => scala.util.Try(
+        http("GET", s"/tile/0/0/0?filter=%7B%22class%22%3A%22b$i%22%7D", at = at)))
+      t.start(); t
+    }
+    val held = try submitted.await(60, TimeUnit.SECONDS) finally sc.removeSparkListener(listener)
+    val free = () => {
+      TankServerSpec.release.countDown()
+      (blockers :+ hold).foreach(_.join(120000))
+    }
+    if (!held) { free(); fail("fixture broken: the filtered renders did not take every slot") }
+    free
+  }
+
   private def feature(id: String, lon: Double, lat: Double, cls: String): String =
     s"""{"type":"Feature","id":"$id","geometry":{"type":"Point","coordinates":[$lon,$lat]},"properties":{"class":"$cls","value":1.5}}"""
 
@@ -155,6 +191,16 @@ class TankServerSpec extends SparkSpec {
     val (_, westAfter) = http("GET", s"/tile/$z/${tx2 - 1}/$ty2")
     assert(nFeats(westAfter) == 0,
       "stale cached neighbor tile still renders the deleted halo feature")
+  }
+
+  test("malformed JSON in a filter, a PUT body or a FeatureCollection bulk is a 400") {
+    val answers = Seq(
+      http("GET", s"/tile/13/$tx/$ty?filter=%7Bclass"),
+      http("PUT", "/f1", Some("""{"properties": {"class": """)),
+      http("POST", "/_bulk?geojson=true", Some("""{"features": [""")))
+    answers.foreach { case (code, body) =>
+      assert(code == 400 && new String(body).contains("illegal argument"), new String(body))
+    }
   }
 
   test("unknown route is a 404") {
@@ -450,6 +496,101 @@ class TankServerSpec extends SparkSpec {
       s"no job described by the route: ${descs.mkString(", ")}")
   }
 
+  test("concurrent cold misses render as one batch per zoom, byte-identical to single renders") {
+    import spark.implicits._
+    val bcfg = StoreConfig(
+      path = java.nio.file.Files.createTempDirectory("graft-srv-batch").toString + "/store",
+      attrs = Seq(AttrField("class", "text"), AttrField("value", "double")))
+    // a 2x2 z14 viewport at the corner four z10 tiles share, and those tiles
+    val (x10, y10) = (WebMercator.tileX(20.0, 10), WebMercator.tileY(45.0, 10))
+    val (x14, y14) = (16 * x10 + 15, 16 * y10 + 15)
+    val viewport = for (dy <- 0 until 2; dx <- 0 until 2) yield (dx, dy)
+    val cold = viewport.map { case (dx, dy) => s"/tile/14/${x14 + dx}/${y14 + dy}" } ++
+      viewport.map { case (dx, dy) => s"/heatmap/10/${x10 + dx}/${y10 + dy}" }
+    val requests = cold :+ cold.head // one key twice
+    val (lon0, lat0) = (WebMercator.tileLon(x14, 14), WebMercator.tileLat(y14 + 2, 14))
+    val (dLon, dLat) = (WebMercator.tileLon(x14 + 2, 14) - lon0, WebMercator.tileLat(y14, 14) - lat0)
+    val r = new scala.util.Random(7)
+    val points = (0 until 60).map(j => feature(s"v$j", lon0 + r.nextDouble() * dLon,
+      lat0 + r.nextDouble() * dLat, s"c${j % 3}")) ++
+      (0 until 200).map(j => feature(s"h$j", WebMercator.tileLon(x10, 10) + r.nextDouble() * 2 *
+        (WebMercator.tileLon(x10 + 1, 10) - WebMercator.tileLon(x10, 10)),
+        WebMercator.tileLat(y10 + 2, 10) + r.nextDouble() * 2 *
+          (WebMercator.tileLat(y10 + 1, 10) - WebMercator.tileLat(y10 + 2, 10)), "h"))
+    // a line across all four viewport tiles
+    val line = s"""{"type":"Feature","id":"x1","geometry":{"type":"LineString","coordinates":[[$lon0,$lat0],[${lon0 + dLon},${lat0 + dLat}]]},"properties":{"class":"line","value":2.0}}"""
+    FeatureStore.write(FeatureStore.ingest((points :+ line).toDF("raw"), bcfg).good, bcfg)
+
+    val srv = new TankServer(spark, bcfg, tileCfg)
+    val p = srv.start()
+    val got = new java.util.concurrent.ConcurrentHashMap[Int, (Int, Array[Byte])]()
+    try {
+      val (_, descs) = jobProperties("spark.job.description") {
+        // with every slot held, all the cold requests queue, and a slot
+        // holder that takes a batch renders every key its (kind, z) queued
+        val free = holdSlots(p)
+        val readers = requests.indices.map { i =>
+          val t = new Thread(() => got.put(i, http("GET", requests(i), at = p)))
+          t.start(); t
+        }
+        Thread.sleep(1000) // let every cold request register before the slots free
+        free()
+        readers.foreach(_.join(120000))
+      }
+      val fin = FeatureStore.read(spark, bcfg)
+      requests.indices.foreach { i =>
+        val Array(kind, z, x, y) = requests(i).split("/").drop(1)
+        val fresh =
+          if (kind == "tile") TileService.tile(fin, z.toInt, x.toInt, y.toInt, None, tileCfg)
+          else TileService.heatmap(fin, z.toInt, x.toInt, y.toInt, tileCfg)
+        val (code, bytes) = got.get(i)
+        assert(code == 200 && bytes.sameElements(fresh), s"${requests(i)} != fresh render")
+      }
+      assert(Mvt.decode(got.get(0)._2).head.features.nonEmpty &&
+        Mvt.decode(got.get(4)._2).head.features.nonEmpty, "fixture broken: empty renders")
+      // the cold requests' jobs: each describes every route of its batch
+      val coldJobs = descs.filter(d => cold.exists(d.contains))
+      assert(coldJobs.size < requests.size,
+        s"${coldJobs.size} jobs for ${requests.size} cold requests: ${coldJobs.mkString("; ")}")
+      val listed = coldJobs.flatMap(_.stripPrefix("GET ").split(", "))
+      assert(cold.forall(listed.contains), s"a route missing from the job descriptions: $coldJobs")
+      assert(coldJobs.exists(_.split(", ").length > 1), s"no batched job: $coldJobs")
+    } finally {
+      TankServerSpec.release.countDown()
+      srv.stop()
+    }
+  }
+
+  test("stop() fails a request queued for a render slot: it ends with an error and never renders") {
+    import spark.implicits._
+    val scfg = StoreConfig(
+      path = java.nio.file.Files.createTempDirectory("graft-srv-stop").toString + "/store",
+      attrs = Seq(AttrField("class", "text"), AttrField("value", "double")))
+    FeatureStore.write(FeatureStore.ingest(Seq(feature("s1", lon, lat, "a")).toDF("raw"), scfg).good,
+      scfg)
+    val srv = new TankServer(spark, scfg, tileCfg)
+    val p = srv.start()
+    val route = "/heatmap/11/1000/700"
+    val answer = new java.util.concurrent.atomic.AtomicReference[scala.util.Try[Int]]()
+    val (_, descs) = jobProperties("spark.job.description") {
+      val free = holdSlots(p)
+      try {
+        val queued = new Thread(() => answer.set(scala.util.Try(http("GET", route, at = p)._1)))
+        queued.start()
+        Thread.sleep(500) // it queues behind the held slots
+        val stopper = new Thread(() => srv.stop())
+        stopper.start()
+        queued.join(20000)
+        assert(!queued.isAlive, "a request queued for a render slot hung through stop()")
+        free()
+        stopper.join(60000)
+        assert(!stopper.isAlive, "stop() did not return")
+      } finally TankServerSpec.release.countDown()
+    }
+    assert(answer.get.fold(_ => true, _ == 500), s"queued request answered ${answer.get}")
+    assert(!descs.exists(_.contains(route)), s"the queued render ran after stop(): $descs")
+  }
+
   test("stop() leaves no handler thread alive") {
     import scala.jdk.CollectionConverters._
     val srv = new TankServer(spark, cfg, tileCfg)
@@ -461,4 +602,9 @@ class TankServerSpec extends SparkSpec {
     srv.stop()
     assert(handlers.isEmpty, s"alive after stop(): ${handlers.map(_.getName)}")
   }
+}
+
+object TankServerSpec {
+  /** Opens the Spark tasks that hold the render slots busy. */
+  @volatile var release = new java.util.concurrent.CountDownLatch(0)
 }

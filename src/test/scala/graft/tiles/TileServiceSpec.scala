@@ -84,6 +84,8 @@ class TileServiceSpec extends SparkSpec {
       val single = tile(feats, 13, x, y)
       assert(GoldenTiles.canonical(got((x, y))) == GoldenTiles.canonical(single),
         s"panel tile ($x,$y) diverges from the single-tile read")
+      assert(got((x, y)).sameElements(single),
+        s"panel tile ($x,$y) is not byte-identical to the single-tile read")
     }
     // the filtered form matches too (panel is cacheable-unfiltered in the
     // server, but the service-level contract covers filters)
@@ -120,6 +122,48 @@ class TileServiceSpec extends SparkSpec {
     val mvt = Mvt.decode(heatmap(feats, z, tx, ty)).head
     assert(mvt.features.nonEmpty && mvt.features.forall(f =>
       f.geomType == 3 && f.props.get("count").exists(_.asInstanceOf[Long] > 0)))
+  }
+
+  test("heatmapPanel(): each tile equals its one-tile render and heatmapDf's cells") {
+    val z = 6
+    val cxy = TestFixtures.features(spark, Sf)
+      .withColumn("_cxy", GeomUdfs.centroidXY(col("geometry")))
+      .select(floor(col("_cxy")(0) * (1 << z)).cast("int"),
+        floor(col("_cxy")(1) * (1 << z)).cast("int"))
+      .collect().map(r => (r.getInt(0), r.getInt(1)))
+    val (tx, ty) = cxy.groupBy(identity).maxBy(g => (g._2.length, -g._1._1, -g._1._2))._1
+    // the densest tile, its neighbors and a tile no centroid falls in
+    val occupied = cxy.toSet
+    val empty = (0 until (1 << z)).map(x => (x, ty)).find(t => !occupied(t)).get
+    val tiles = (for { dx <- -1 to 1; dy <- -1 to 1 } yield (tx + dx, ty + dy)) :+ empty
+    val got = heatmapPanel(feats, z, tiles)
+    assert(got.keySet == tiles.toSet)
+    val n = gridN(z)
+    val cellPx = TileConfig().extent.toDouble / n
+    def unzig(v: Long): Int = ((v >>> 1) ^ -(v & 1)).toInt
+    // a cell square: MoveTo(1) dx dy, LineTo(3) 3×(dx dy), ClosePath;
+    // its minimum corner is cell (i, j) scaled by cellPx
+    def corner(cmds: Seq[Long]): (Int, Int) = {
+      val pts = (Seq(cmds.slice(1, 3)) ++ cmds.slice(4, 10).grouped(2))
+        .map(d => (unzig(d(0)), unzig(d(1))))
+        .scanLeft((0, 0)) { case ((px, py), (dx, dy)) => (px + dx, py + dy) }.tail
+      (math.round(pts.map(_._1).min / cellPx).toInt, math.round(pts.map(_._2).min / cellPx).toInt)
+    }
+    tiles.foreach { case (x, y) =>
+      assert(got((x, y)).sameElements(heatmap(feats, z, x, y)),
+        s"panel heatmap ($x,$y) is not byte-identical to the one-tile render")
+      val cells = Mvt.decode(got((x, y))).head.features.map { f =>
+        val (i, j) = corner(f.commands)
+        (j, i) -> f.props("count").asInstanceOf[Long]
+      }
+      assert(cells.map(_._1) == cells.map(_._1).sorted, s"($x,$y) cells out of (j, i) order")
+      val want = heatmapDf(feats, z, x, y).collect().map(r =>
+        (r.getAs[Int]("cell_j"), r.getAs[Int]("cell_i")) -> r.getAs[Long]("n")).toMap
+      assert(cells.toMap == want, s"($x,$y) cell counts differ from heatmapDf")
+    }
+    assert(got((tx, ty)).length > got(empty).length, "fixture broken: dense tile has no cells")
+    assert(got(empty).sameElements(Mvt.encode(Nil, TileConfig().baseLayer, TileConfig().extent)),
+      "an empty heatmap tile must encode the empty layer")
   }
 
   test("hash predicate prunes: anchor tile scan reads far fewer rows than the table") {
