@@ -350,16 +350,17 @@ final class TankServer(spark: SparkSession, cfg: StoreConfig,
     import spark.implicits._
     val r = FeatureStore.ingest(lines.toDF("raw"), cfg)
     val good = r.good.cache()
-    val n = good.count()
-    if (n > 0) {
-      FeatureStore.append(good, cfg) // manifest-committed (snapshot-atomic)
-      cache.invalidateTouched(
-        good.select("hash").distinct().collect().map(_.getInt(0)))
-    }
-    val rej = r.rejected
-    if (!rej.isEmpty) FeatureStore.writeRejected(rej, cfg)
-    good.unpersist()
-    n
+    try {
+      val n = good.count()
+      if (n > 0) {
+        FeatureStore.append(good, cfg) // manifest-committed (snapshot-atomic)
+        cache.invalidateTouched(
+          good.select("hash").distinct().collect().map(_.getInt(0)))
+      }
+      val rej = r.rejected
+      if (!rej.isEmpty) FeatureStore.writeRejected(rej, cfg)
+      n
+    } finally good.unpersist(): Unit
   }
 
   private def deleteFeature(ex: HttpExchange, uid: String): Unit = {

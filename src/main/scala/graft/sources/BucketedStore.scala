@@ -85,8 +85,11 @@ abstract class BucketedStore[S](prefix: String, keyCol: String,
                            dir: String): Option[(String, Int)] =
     Option(stores.get(key(spark, dir)))
 
-  private def registeredFor(spark: SparkSession, dir: String,
-                            verb: String): (String, Int) =
+  /** (table, buckets) of the registered store; throws naming `verb`
+    * when no producer step ran for `dir`.
+    */
+  private[graft] def registeredFor(spark: SparkSession, dir: String,
+                                   verb: String): (String, Int) =
     registered(spark, dir).getOrElse(throw new IllegalStateException(
       s"$name.$verb: no store registered for $dir — create()/attach() first"))
 

@@ -84,44 +84,46 @@ object FeatureStore {
   /** foreachBatch split-sink for an already-built raw feature stream.
     *
     * Replay semantics: a restarted query re-invokes the last uncommitted
-    * batchId; the per-batch marker file makes the re-run a no-op, so a
-    * replay after a completed batch never duplicates rows. The residual
-    * window is a crash BETWEEN the appends and the marker write (same
-    * at-least-once boundary as any non-transactional two-sink foreachBatch
-    * — full exactly-once across two sinks needs a table format).
+    * batchId; the store's [[StreamMark]] (the last committed batchId of
+    * THIS stream's lineage, one `<path>_stream_batch` file) makes the
+    * re-run a no-op, so a replay after a completed batch never duplicates
+    * rows, and a second stream with a fresh checkpoint over the same store
+    * ingests from its own batch 0. The residual window is a crash BETWEEN
+    * the appends and the mark write (same at-least-once boundary as any
+    * non-transactional two-sink foreachBatch — full exactly-once across
+    * two sinks needs a table format).
     *
     * `onTouched` fires after each committed batch with the batch's distinct
     * Morton cells (bounded: cells, not rows) — the hook a co-located
     * serving layer uses for precise tile-cache invalidation
     * ([[graft.server.TankServer.startIngestStream]]). It is skipped for
-    * marker-deduped replays: the only way to reach one is a restart, and
+    * mark-deduped replays: the only way to reach one is a restart, and
     * the in-memory cache the hook feeds died with the process anyway.
     */
   def ingestStream(raw: DataFrame, cfg: StoreConfig,
                    checkpoint: String,
                    onTouched: Iterable[Int] => Unit = _ => ())
-      : org.apache.spark.sql.streaming.StreamingQuery =
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val guard = new StreamMark.Guard
     raw.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val marker = new org.apache.hadoop.fs.Path(
-          s"${cfg.path}_batches/$batchId")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(marker)) {
-          val r = ingest(batch, cfg)
-          // manifest-committed append: concurrent tile readers see the batch
-          // atomically or not at all
-          val good = r.good.sortWithinPartitions("hash")
+        lazy val r = ingest(batch, cfg)
+        lazy val good = r.good.sortWithinPartitions("hash")
+        val committed = guard.commit(batch.sparkSession,
+            StreamMark.markPathAt(cfg.path), batchId) {
+          // manifest-committed append: concurrent tile readers see the
+          // batch atomically or not at all
           append(good, cfg)
           val rej = r.rejected
           if (!rej.isEmpty) writeRejected(rej, cfg)
-          fs.create(marker, true).close()
+        }
+        if (committed)
           onTouched(good.select(col("hash")).distinct().collect()
             .map(_.getInt(0)).toSeq)
-        }
       }
       .start()
+  }
 
   /** One whole FeatureCollection document (A3 `geojson=true`). The features
     * array is split with Jackson on the driver (the reference's own
@@ -782,6 +784,9 @@ object FeatureStore {
         .sortWithinPartitions("hash")
         .write.mode(SaveMode.Overwrite).parquet(cfg.path)
       Manifests.reset(fs, cfg, Some(token))
+      // a full overwrite starts a new store lineage: a stale ingest mark
+      // would skip a new stream's first batches
+      StreamMark.clearAt(df.sparkSession, cfg.path)
     }
   }
 

@@ -2,11 +2,13 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 
-/** Persisted replay watermark for the store-append streaming twins
-  * ([[graft.streaming.CurationStreams]]): the last batchId whose append
-  * committed to a history store, written BESIDE the store table's location
+/** Persisted replay watermark for the store-appending streams — the
+  * store-as-state twins of [[graft.streaming.CurationStreams]] and the
+  * feature-store ingest ([[FeatureStore.ingestStream]]): the last batchId
+  * whose append committed to a store, written BESIDE the store's location
   * (like the [[MutationGuard]] marker) so it survives compaction's
-  * drop+rename of the table dir.
+  * drop+rename of a table dir. One small file per store; a stream keeps
+  * one [[Guard]] per store it appends to.
   *
   * Streaming batchIds are monotonic only per CHECKPOINT LINEAGE — a
   * recreated store (or a fresh stream with a new checkpoint) must start
@@ -15,8 +17,9 @@ import org.apache.spark.sql.SparkSession
   * fully-committed-epoch fast path would also skip the probe and the SINK
   * for the new stream's first batches. Two guards pin the lifetime:
   *
-  *  - each store's `create()` calls [[clear]] (store lifetime and mark
-  *    lifetime tied at the one place a new STORE lineage begins), and
+  *  - each store's `create()` (and [[FeatureStore.write]]) calls [[clear]]
+  *    (store lifetime and mark lifetime tied at the one place a new STORE
+  *    lineage begins), and
   *  - the mark records the STREAMING QUERY ID that wrote it (stable
   *    across restarts of the same checkpoint — Spark persists it in the
   *    checkpoint's metadata and republishes it on the stream thread as
@@ -24,7 +27,7 @@ import org.apache.spark.sql.SparkSession
   *    DIFFERENT query id — a fresh checkpoint over a surviving store —
   *    reports -1 instead of the other lineage's high-water mark, so the
   *    new stream probes, sinks and appends from its own batch 0. The
-  *    first re-appends are the twins' documented replay semantics
+  *    first re-appends are the streams' documented replay semantics
   *    (membership stores absorb them; multiset stores inflate until
   *    compact()) — bounded noise, never lost batches.
   *
@@ -35,6 +38,41 @@ import org.apache.spark.sql.SparkSession
   */
 object StreamMark {
 
+  /** One store's replay guard inside one streaming query: the last batchId
+    * whose append to that store committed, recovered from the persisted
+    * mark at `at` on first use. `foreachBatch` bodies run serially, so the
+    * in-session value needs visibility, not atomicity.
+    */
+  final class Guard {
+    @volatile private var last = Long.MinValue
+
+    /** The in-session mark (Long.MinValue until first recovered). */
+    def get(): Long = last
+
+    /** The last committed batchId of the store whose mark is `at`. */
+    private[graft] def committed(spark: SparkSession,
+                                 at: org.apache.hadoop.fs.Path): Long = {
+      if (last == Long.MinValue) last = readMark(spark, at)
+      last
+    }
+
+    /** Run `append` iff `batchId` has not committed to this store, then
+      * persist the mark and advance. The mark moves only AFTER `append`
+      * returns, so an append that throws is retried on replay, never
+      * skipped. Returns whether `append` ran.
+      */
+    private[graft] def commit(spark: SparkSession,
+                              at: org.apache.hadoop.fs.Path,
+                              batchId: Long)(append: => Unit): Boolean =
+      if (committed(spark, at) >= batchId) false
+      else {
+        append
+        writeMark(spark, at, batchId)
+        last = batchId
+        true
+      }
+  }
+
   /** The stream thread's query-id local property (set by Spark's
     * StreamExecution for the duration of a run; stable per checkpoint).
     */
@@ -42,8 +80,9 @@ object StreamMark {
     Option(spark.sparkContext.getLocalProperty("sql.streaming.queryId"))
 
   /** Mark location for a store addressed by a raw base PATH (the
-    * [[graft.operators.IvfStore]] family — no catalog table): a
-    * `_stream_batch` sibling, like [[MutationGuard]]'s `_mutating`.
+    * [[graft.operators.IvfStore]] family and the feature store — no
+    * catalog table): a `_stream_batch` sibling, like [[MutationGuard]]'s
+    * `_mutating`.
     */
   def markPathAt(base: String): org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(base + "_stream_batch")
@@ -85,21 +124,18 @@ object StreamMark {
       }
     } catch { case _: java.io.IOException | _: NumberFormatException => -1L }
 
-  /** Best-effort persist (overwrite) of the last-committed append's
-    * batchId, stamped with the writing stream's query id; a failure
-    * degrades to the caller's in-session guard — the restart then replays
-    * that one append (see each streaming twin's replay contract for what
-    * a re-append means per store).
+  /** Persist (overwrite) a path-addressed store's mark, stamped with the
+    * writing stream's query id.
     */
-  def write(spark: SparkSession, table: String, batchId: Long): Unit =
-    writeMark(spark, markPath(spark, table), table, batchId)
-
-  /** [[write]] for a path-addressed store. */
   def writeAt(spark: SparkSession, base: String, batchId: Long): Unit =
-    writeMark(spark, markPathAt(base), base, batchId)
+    writeMark(spark, markPathAt(base), batchId)
 
+  /** Best-effort persist: a failure degrades to the in-session [[Guard]] —
+    * a restart then replays that one append (see each stream's replay
+    * contract for what a re-append means per store).
+    */
   private def writeMark(spark: SparkSession, p: org.apache.hadoop.fs.Path,
-                        label: String, batchId: Long): Unit =
+                        batchId: Long): Unit =
     try {
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val line = queryId(spark) match {
@@ -110,13 +146,12 @@ object StreamMark {
       try out.write(line.getBytes("UTF-8")) finally out.close()
     } catch { case e: java.io.IOException =>
       System.err.println(s"[store-stream] could not persist replay " +
-        s"watermark for $label (restart will re-append batch $batchId — " +
-        s"see the twin's replay contract for semantics): ${e.getMessage}")
+        s"watermark $p (restart will re-append batch $batchId — see the " +
+        s"stream's replay contract for semantics): ${e.getMessage}")
     }
 
-  /** Delete the mark — called by every store `create()` so a recreated
-    * store starts a fresh lineage at -1 (best-effort: an IOException here
-    * would also have failed the guarded table write that follows).
+  /** Delete the mark — called wherever a new store lineage begins, so a
+    * recreated store starts at -1 (best-effort, like the persist).
     */
   def clear(spark: SparkSession, table: String): Unit =
     clearMark(spark, markPath(spark, table))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.operators.{Kernels, TextAnalysis}
+import graft.sources.StreamMark
 
 /** Streaming twin of the batch curation surface (x41/x48/q31): documents
   * arrive as an unbounded stream and pass through quality gates, language
@@ -104,8 +105,8 @@ object CurationStreams {
     * a reference window — production re-derives periodically; a live
     * per-batch percentile would gate every batch against itself, exactly
     * the non-transfer the rehearsal shakedown pinned). The batch's own
-    * grams append behind the shared replay watermark so later batches
-    * also strip content this batch has SEEN.
+    * grams append under [[guardedBatch]]'s replay contract so later
+    * batches also strip content this batch has SEEN.
     *
     * Gram-store semantics are CRAWL-SEEN, deliberately matching the x102
     * audit twin: the append carries grams of the RAW batch text — docs
@@ -136,27 +137,26 @@ object CurationStreams {
                minTokens: Int = 5,
                maxPunctRatio: Double = 0.2)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val appended = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
+    val guard = new StreamMark.Guard
     docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      curateV3Batch(batch, batchId, dir, k, model, maxNll, sink, appended,
+      curateV3Batch(batch, batchId, dir, k, model, maxNll, sink, guard,
         growStore,
         inc => graft.sources.GramHistory.append(batch.sparkSession, dir, inc),
         minTokens, maxPunctRatio)
     }
   }
 
-  /** One micro-batch of [[curateV3]] (injectable append — the shared
-    * replay contract is already spec-gated on the sibling twins; the
-    * composition is what CurationStreamsSpec pins here).
+  /** One micro-batch of [[curateV3]] (append injectable, like
+    * [[gramAuditBatch]]).
     */
   private[graft] def curateV3Batch(batch: DataFrame, batchId: Long,
       dir: String, k: Int,
       model: graft.operators.UnigramLm.FrozenModel, maxNll: Double,
       sink: DataFrame => Unit,
-      appended: java.util.concurrent.atomic.AtomicLong, growStore: Boolean,
+      guard: StreamMark.Guard, growStore: Boolean,
       append: DataFrame => Unit,
       minTokens: Int = 5, maxPunctRatio: Double = 0.2): Unit =
-    gramStoreBatch(batch, batchId, dir, k, sink, appended, growStore, append,
+    gramStoreBatch(batch, batchId, dir, sink, guard, growStore, append,
       b => graft.operators.Dedup.batchGramPositions(b, k),
       (b, g, hist) => curateV3FrameFromGrams(b, g, hist, k, model, maxNll,
         minTokens, maxPunctRatio, broadcastProbe = false))
@@ -656,49 +656,28 @@ object CurationStreams {
     * bucket layout with no history-side exchange, append is
     * bucket-compatible files, and restarts resume from disk for free.
     *
-    * Delivery: scores materialize (persist + count) BEFORE the append, so
-    * a `sink` that consumes the rows INSIDE the batch body sees pre-append
-    * values; the cached frame is unpersisted when the batch ends, so a
-    * sink that defers the action (or loses cache blocks) recomputes from
-    * lineage against the grown store — write out synchronously. The append
-    * is guarded by batchId and the guard advances only after the append
-    * COMMITS: a replay of an epoch that failed mid-append re-runs the
-    * append (store growth stays bounded — membership semantics make a
-    * double append harmless), while a replay of an epoch that failed
-    * after its commit skips it. That replay rescored against its own
-    * grams (hist_frac inflated for that batch's docs only) — pair `sink`
-    * with a batchId-keyed idempotent write if that matters downstream.
-    * The watermark is PERSISTED beside the store table after each commit
-    * (best-effort; a failed persist degrades to the in-session guard), so
-    * a JVM RESTART replaying already-committed epochs also skips their
-    * appends — the same contract as in-session replay, not just the
-    * mid-append-crash case.
+    * Delivery and replay: [[guardedBatch]]. A re-append is harmless — the
+    * gram store has membership semantics.
     */
   def incrementalDupGrams(docs: DataFrame, dir: String, k: Int,
                           sink: DataFrame => Unit,
                           growStore: Boolean = true)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    // Long.MinValue = "not yet recovered": the first batch loads the
-    // persisted watermark (or -1 when none) before consulting the guard
-    val appended = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
+    val guard = new StreamMark.Guard
     docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      gramAuditBatch(batch, batchId, dir, k, sink, appended, growStore,
+      gramAuditBatch(batch, batchId, dir, k, sink, guard, growStore,
         inc => graft.sources.GramHistory.append(batch.sparkSession, dir, inc))
     }
   }
 
-  /** One micro-batch of [[incrementalDupGrams]] — score against the
-    * registered store, sink, then the batchId-guarded append. Extracted
-    * (with the store append injectable) so the replay contract — the
-    * guard advances only AFTER the append commits, so a batch whose
-    * append threw retries the append instead of skipping it — is
-    * directly spec-gated.
+  /** One micro-batch of [[incrementalDupGrams]] (the store append
+    * injectable, so the replay contract is directly spec-gated).
     */
   private[graft] def gramAuditBatch(batch: DataFrame, batchId: Long,
       dir: String, k: Int, sink: DataFrame => Unit,
-      appended: java.util.concurrent.atomic.AtomicLong, growStore: Boolean,
+      guard: StreamMark.Guard, growStore: Boolean,
       append: DataFrame => Unit): Unit =
-    gramStoreBatch(batch, batchId, dir, k, sink, appended, growStore, append,
+    gramStoreBatch(batch, batchId, dir, sink, guard, growStore, append,
       b => graft.operators.Dedup.batchGramCounts(b, k),
       (b, g, hist) => graft.operators.Dedup.incrementalDupGramsFromGrams(
         b, g, hist, k, broadcastProbe = false))
@@ -708,75 +687,117 @@ object CurationStreams {
     * corpus already holds (the streaming-crawl form of the Lee et al.
     * removal step), then the batch's own grams append so later batches
     * also strip content THIS batch introduced. Same store, same replay
-    * watermark, same one-batch ≡ batch-operator contract as the audit
+    * contract, same one-batch ≡ batch-operator contract as the audit
     * twin — only the per-batch scoring differs.
     */
   def incrementalRemoveSpans(docs: DataFrame, dir: String, k: Int,
                              sink: DataFrame => Unit,
                              growStore: Boolean = true)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val appended = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
+    val guard = new StreamMark.Guard
     docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      gramRemovalBatch(batch, batchId, dir, k, sink, appended, growStore,
+      gramRemovalBatch(batch, batchId, dir, k, sink, guard, growStore,
         inc => graft.sources.GramHistory.append(batch.sparkSession, dir, inc))
     }
   }
 
   private[graft] def gramRemovalBatch(batch: DataFrame, batchId: Long,
       dir: String, k: Int, sink: DataFrame => Unit,
-      appended: java.util.concurrent.atomic.AtomicLong, growStore: Boolean,
+      guard: StreamMark.Guard, growStore: Boolean,
       append: DataFrame => Unit): Unit =
-    gramStoreBatch(batch, batchId, dir, k, sink, appended, growStore, append,
+    gramStoreBatch(batch, batchId, dir, sink, guard, growStore, append,
       b => graft.operators.Dedup.batchGramPositions(b, k),
       (b, g, hist) => graft.operators.Dedup.incrementalRemoveSpansFromGrams(
         b, g, hist, k, broadcastProbe = false))
 
-  /** Shared body of the gram-store twins (audit x102 / removal x118):
-    * score the micro-batch against the registered store, sink, then the
-    * batchId-guarded append behind the persisted replay watermark. The
-    * append hashes the RAW batch text (crawl-seen store semantics —
-    * rejected/stripped content still suppresses future arrivals; see
-    * [[curateV3]]'s scaladoc for why that is deliberate).
+  /** Shared body of the gram-store twins (audit x102 / removal x118 /
+    * curateV3): score the micro-batch against the registered store under
+    * [[guardedBatch]]. The append hashes the RAW batch text (crawl-seen
+    * store semantics — rejected/stripped content still suppresses future
+    * arrivals; see [[curateV3]]'s scaladoc for why that is deliberate).
     */
   private def gramStoreBatch(batch: DataFrame, batchId: Long,
-      dir: String, k: Int, sink: DataFrame => Unit,
-      appended: java.util.concurrent.atomic.AtomicLong, growStore: Boolean,
+      dir: String, sink: DataFrame => Unit,
+      guard: StreamMark.Guard, growStore: Boolean,
       append: DataFrame => Unit,
       gramRel: DataFrame => DataFrame,
       score: (DataFrame, DataFrame, DataFrame) => DataFrame): Unit = {
     val spark = batch.sparkSession
-    val table = graft.sources.GramHistory.registeredTable(spark, dir)
-      .getOrElse(throw new IllegalStateException(
-        s"streaming gram-store twin: no gram store for $dir — " +
-          "GramHistory.create() first (an empty corpus is fine)"))
-    // restart recovery: resume the replay watermark persisted beside the
-    // store so re-delivered already-committed epochs skip their appends
-    if (appended.get() == Long.MinValue)
-      appended.compareAndSet(Long.MinValue, readBatchMark(spark, table)): Unit
     // round 19 (the x102/x118 batch fold, ported): ONE gram-kernel pass
     // per micro-batch — the materialized per-doc gram relation feeds the
     // probe keyset, the score tail AND the append increment; lazily the
     // per-doc gram UDF ran once for each (three batch-wide passes)
-    val g = graft.util.Materialize.eager(gramRel(batch))
-    val keys = g.select(col(graft.sources.GramHistory.GramCol)).distinct()
-    // the probe-reduced store relation (sidecar-bloom pre-cut + sort-free
-    // broadcast-semi verify — GramHistory.probeHistory's contract); the
-    // score functions pass broadcastProbe=false, the already-reduced form
-    val hist = graft.sources.GramHistory.probeHistory(spark, dir, keys)(
-      sys.error(s"unreachable: $table is registered"))
-    val scored = score(batch, g, hist).persist()
-    try {
-      scored.count(): Unit // pin pre-append values
-      sink(scored)
-      // Advance the replay watermark only AFTER the append commits: a
-      // batch whose append throws must replay the append, not skip it
-      // (foreachBatch bodies run serially, so get-then-set is safe).
-      if (growStore && appended.get() < batchId) {
-        append(keys)
-        writeBatchMark(spark, table, batchId)
-        appended.set(batchId)
-      }
-    } finally scored.unpersist(): Unit
+    lazy val g = graft.util.Materialize.eager(gramRel(batch))
+    lazy val keys = g.select(col(graft.sources.GramHistory.GramCol)).distinct()
+    guardedBatch(batch, batchId, sink, growStore,
+        storeLeg(spark, graft.sources.GramHistory, dir, guard)(append(keys))) {
+      // the probe-reduced store relation (sidecar-bloom pre-cut + sort-free
+      // broadcast-semi verify — GramHistory.probeHistory's contract); the
+      // score functions pass broadcastProbe=false, the already-reduced form
+      score(batch, g, graft.sources.GramHistory.probeHistory(spark, dir, keys)(
+        unreachable(dir)))
+    }
+  }
+
+  /** One store of a [[guardedBatch]]: its guard, its mark, its append. */
+  private final case class Leg(guard: StreamMark.Guard,
+                               mark: org.apache.hadoop.fs.Path,
+                               append: () => Unit)
+
+  /** The [[Leg]] of `store`'s history for `dir`; throws when no store is
+    * registered for `dir` (`create()` or `attach()` it first — an empty
+    * history is fine).
+    */
+  private def storeLeg(spark: SparkSession,
+                       store: graft.sources.BucketedStore[_], dir: String,
+                       guard: StreamMark.Guard)(append: => Unit): Leg =
+    Leg(guard, StreamMark.markPath(spark,
+      store.registeredFor(spark, dir, "stream")._1), () => append)
+
+  /** The fallback of a store scan whose registration [[storeLeg]] checked. */
+  private def unreachable(dir: String): Nothing =
+    sys.error(s"unreachable: the stores for $dir are registered")
+
+  /** The replay contract of every store-appending twin, run once per
+    * micro-batch. `foreachBatch` is at-least-once: Spark re-delivers an
+    * epoch after a failure or a restart. Each store the batch appends to
+    * has a [[StreamMark.Guard]] — the last batchId whose append to it
+    * committed, persisted beside the store and scoped to the streaming
+    * lineage (see [[StreamMark]]). Per micro-batch:
+    *
+    *  1. each guard recovers its persisted mark on first use;
+    *  2. when every store already committed `batchId`, the whole body is
+    *     skipped: the commits prove the original `sink` call returned, and
+    *     re-scoring against stores that now CONTAIN the batch would
+    *     re-emit changed rows (every row a self-hit) for a batchId the
+    *     sink already consumed;
+    *  3. otherwise `score` runs against the pre-append stores and is
+    *     pinned (persist + count) before `sink` sees it, so a sink that
+    *     consumes the rows inside the body sees pre-append values. The pin
+    *     is released when the batch ends: a sink that defers its action
+    *     recomputes against the grown stores — write out synchronously;
+    *  4. then, with `growStore`, each store whose mark is below `batchId`
+    *     appends, persists its mark and advances it. A mark moves only
+    *     after its append commits: an append that throws is retried on
+    *     replay, and a store that committed is never re-appended.
+    *
+    * A crash between an append and its mark persist (or a failed persist,
+    * which degrades to the in-session guard) re-appends that one batch on
+    * replay; each twin documents what a re-append means for its store.
+    */
+  private def guardedBatch(batch: DataFrame, batchId: Long,
+      sink: DataFrame => Unit, growStore: Boolean, legs: Leg*)(
+      score: => DataFrame): Unit = {
+    val spark = batch.sparkSession
+    if (legs.map(l => l.guard.committed(spark, l.mark)).exists(_ < batchId)) {
+      val scored = score.persist()
+      try {
+        scored.count(): Unit // pin pre-append values
+        sink(scored)
+        if (growStore)
+          legs.foreach(l => l.guard.commit(spark, l.mark, batchId)(l.append()))
+      } finally scored.unpersist(): Unit
+    }
   }
 
   /** Streaming incremental payload near-dup — x109's streaming twin, the
@@ -792,52 +813,34 @@ object CurationStreams {
     * Same store-as-state rationale as the gram twin (the chunk-exploded
     * fingerprint relation is 64 B/payload at corpus scale — cross-batch
     * state belongs in the bucketed on-disk store, probed with no
-    * history-side exchange), and the same batchId-guarded replay contract:
-    * the watermark advances only after the append COMMITS and is persisted
-    * beside the store table, so in-session replays and JVM restarts skip
-    * committed appends; a double append is absorbed by the probe's
-    * distinct (membership semantics).
+    * history-side exchange). Replay: [[guardedBatch]]; a re-append is
+    * absorbed by the probe's distinct (membership semantics).
     */
   def incrementalPayloadNearDups(media: DataFrame, dir: String,
                                  sink: DataFrame => Unit,
                                  growStore: Boolean = true)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val appended = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
+    val guard = new StreamMark.Guard
     media.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      payloadAuditBatch(batch, batchId, dir, sink, appended, growStore,
+      payloadAuditBatch(batch, batchId, dir, sink, guard, growStore,
         inc => graft.sources.PhashHistory.append(batch.sparkSession, dir, inc))
     }
   }
 
-  /** One micro-batch of [[incrementalPayloadNearDups]] — probe, sink, then
-    * the batchId-guarded append (injectable, like [[gramAuditBatch]], so
-    * the replay contract is directly spec-gated).
+  /** One micro-batch of [[incrementalPayloadNearDups]] (append injectable,
+    * like [[gramAuditBatch]]).
     */
   private[graft] def payloadAuditBatch(batch: DataFrame, batchId: Long,
       dir: String, sink: DataFrame => Unit,
-      appended: java.util.concurrent.atomic.AtomicLong, growStore: Boolean,
+      guard: StreamMark.Guard, growStore: Boolean,
       append: DataFrame => Unit): Unit = {
     val spark = batch.sparkSession
-    val table = graft.sources.PhashHistory.registeredTable(spark, dir)
-      .getOrElse(throw new IllegalStateException(
-        s"streaming incrementalPayloadNearDups: no phash store for $dir — " +
-          "PhashHistory.create() first (an empty history is fine)"))
-    if (appended.get() == Long.MinValue)
-      appended.compareAndSet(Long.MinValue, readBatchMark(spark, table)): Unit
-    val hist = spark.table(table).select(
-      col(graft.sources.PhashHistory.KeyCol), col("id"), col("fp"))
-    val scored = graft.operators.Multimodal
-      .incrementalPayloadNearDups(batch, hist)
-      .persist()
-    try {
-      scored.count(): Unit // pin pre-append values
-      sink(scored)
-      if (growStore && appended.get() < batchId) {
-        append(graft.operators.Multimodal.payloadFingerprints(batch))
-        writeBatchMark(spark, table, batchId)
-        appended.set(batchId)
-      }
-    } finally scored.unpersist(): Unit
+    guardedBatch(batch, batchId, sink, growStore,
+        storeLeg(spark, graft.sources.PhashHistory, dir, guard)(
+          append(graft.operators.Multimodal.payloadFingerprints(batch)))) {
+      graft.operators.Multimodal.incrementalPayloadNearDups(batch,
+        graft.sources.PhashHistory.scanOrCompute(spark, dir)(unreachable(dir)))
+    }
   }
 
   /** Streaming incremental text NEAR-DUP — x123's streaming twin, the
@@ -852,57 +855,42 @@ object CurationStreams {
     *
     * Same store-as-state rationale as the gram twin (the shingle-hash
     * relation is corpus-token-scale — cross-batch state belongs in the
-    * bucketed on-disk store), and the [[incrementalAudioProbe]] replay
-    * caveat applies: shingle rows are COUNTED evidence (intersections
-    * and denominators), not membership, so a crashed-epoch replay that
-    * re-appends inflates both until
-    * [[graft.sources.MinHashHistory.compact]] restores distinct rows;
-    * committed epochs skip their appends via the persisted watermark.
+    * bucketed on-disk store). Replay: [[guardedBatch]]; shingle rows are
+    * COUNTED evidence (intersections and denominators), not membership,
+    * so a re-append inflates both until
+    * [[graft.sources.MinHashHistory.compact]] restores distinct rows.
     * Input frame: (doc_id, text, lang, n_chars).
     */
   def incrementalNearDups(docs: DataFrame, dir: String,
                           sink: DataFrame => Unit,
                           growStore: Boolean = true)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val appended = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
+    val guard = new StreamMark.Guard
     docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      nearDupBatch(batch, batchId, dir, sink, appended, growStore,
+      nearDupBatch(batch, batchId, dir, sink, guard, growStore,
         b => graft.sources.MinHashHistory.append(b.sparkSession, dir,
           graft.queries.TextOps.minHashBandsOf(b),
           graft.queries.TextOps.minHashShinglesOf(b)))
     }
   }
 
-  /** One micro-batch of [[incrementalNearDups]] — probe, sink, then the
-    * batchId-guarded append (injectable, like [[gramAuditBatch]], so the
-    * replay contract is directly spec-gated).
+  /** One micro-batch of [[incrementalNearDups]] (append injectable, like
+    * [[gramAuditBatch]]).
     */
   private[graft] def nearDupBatch(batch: DataFrame, batchId: Long,
       dir: String, sink: DataFrame => Unit,
-      appended: java.util.concurrent.atomic.AtomicLong, growStore: Boolean,
+      guard: StreamMark.Guard, growStore: Boolean,
       append: DataFrame => Unit): Unit = {
     val spark = batch.sparkSession
-    val table = graft.sources.MinHashHistory.registeredTable(spark, dir)
-      .getOrElse(throw new IllegalStateException(
-        s"streaming incrementalNearDups: no minhash store for $dir — " +
-          "MinHashHistory.create() first (an empty history is fine)"))
-    if (appended.get() == Long.MinValue)
-      appended.compareAndSet(Long.MinValue, readBatchMark(spark, table)): Unit
-    val (bands, sh) = graft.sources.MinHashHistory.scanOrCompute(spark, dir)(
-      sys.error(s"unreachable: $table is registered"))
-    val scored = graft.operators.Dedup.incrementalNearDups(
-      graft.queries.TextOps.shingleArrays(batch), bands, sh,
-      bandReducer = graft.sources.MinHashHistory.bandScanReducer(spark, dir))
-      .persist()
-    try {
-      scored.count(): Unit // pin pre-append values
-      sink(scored)
-      if (growStore && appended.get() < batchId) {
-        append(batch)
-        writeBatchMark(spark, table, batchId)
-        appended.set(batchId)
-      }
-    } finally scored.unpersist(): Unit
+    guardedBatch(batch, batchId, sink, growStore,
+        storeLeg(spark, graft.sources.MinHashHistory, dir, guard)(
+          append(batch))) {
+      val (bands, sh) =
+        graft.sources.MinHashHistory.scanOrCompute(spark, dir)(unreachable(dir))
+      graft.operators.Dedup.incrementalNearDups(
+        graft.queries.TextOps.shingleArrays(batch), bands, sh,
+        bandReducer = graft.sources.MinHashHistory.bandScanReducer(spark, dir))
+    }
   }
 
   /** Streaming incremental EMBEDDING near-dup — x124's streaming twin,
@@ -913,22 +901,20 @@ object CurationStreams {
     * ([[graft.operators.IvfStore.create]] it first — an empty history is
     * fine), exactly the x124 batch contract — frozen coarse centroids,
     * exact cosine within `nprobe` probed cells, pairs at
-    * `cos_sim >= threshold` — then the batch's own vectors append behind
-    * the batchId-guarded persisted watermark so every LATER batch sees
-    * them. Within a micro-batch, vectors probe history only, so a
-    * one-micro-batch stream is bit-identical to the batch operator (the
-    * spec asserts it).
+    * `cos_sim >= threshold` — then the batch's own vectors append so every
+    * LATER batch sees them. Within a micro-batch, vectors probe history
+    * only, so a one-micro-batch stream is bit-identical to the batch
+    * operator (the spec asserts it).
     *
     * Store-as-state rationale as the family's: the vector corpus is
     * index-scale — cross-batch state belongs in the per-cell on-disk
-    * layout, not a state store. Replay contract: appended vector rows
-    * take top-k SEATS, so a crashed-epoch replay that re-appends leaves
-    * duplicate (vec_id, embedding) rows each holding a seat until
-    * [[graft.operators.IvfStore.compact]] restores distinct rows;
-    * committed epochs skip their appends via the persisted watermark
-    * (path-addressed [[graft.sources.StreamMark]] — the IvfStore family
-    * has no catalog table). Input frame: (vec_id, embedding); sink frame:
-    * (batch_id, hist_id, cos_sim) — x124's operator columns.
+    * layout, not a state store. Replay: [[guardedBatch]], with the mark
+    * path-addressed (the IvfStore family has no catalog table); appended
+    * vector rows take top-k SEATS, so a re-append leaves duplicate
+    * (vec_id, embedding) rows each holding a seat until
+    * [[graft.operators.IvfStore.compact]] restores distinct rows. Input
+    * frame: (vec_id, embedding); sink frame: (batch_id, hist_id, cos_sim)
+    * — x124's operator columns.
     */
   def incrementalEmbedProbe(vectors: DataFrame, path: String,
                             sink: DataFrame => Unit,
@@ -936,21 +922,20 @@ object CurationStreams {
                             k: Int = 4, nprobe: Int = 4,
                             threshold: Double = 0.999)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val appended = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
+    val guard = new StreamMark.Guard
     vectors.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      embedProbeBatch(batch, batchId, path, sink, appended, growStore,
+      embedProbeBatch(batch, batchId, path, sink, guard, growStore,
         inc => graft.operators.IvfStore.append(batch.sparkSession, path, inc),
         k, nprobe, threshold)
     }
   }
 
-  /** One micro-batch of [[incrementalEmbedProbe]] — probe, sink, then the
-    * batchId-guarded append (injectable, like [[gramAuditBatch]], so the
-    * replay contract is directly spec-gated).
+  /** One micro-batch of [[incrementalEmbedProbe]] (append injectable, like
+    * [[gramAuditBatch]]).
     */
   private[graft] def embedProbeBatch(batch: DataFrame, batchId: Long,
       path: String, sink: DataFrame => Unit,
-      appended: java.util.concurrent.atomic.AtomicLong, growStore: Boolean,
+      guard: StreamMark.Guard, growStore: Boolean,
       append: DataFrame => Unit, k: Int = 4, nprobe: Int = 4,
       threshold: Double = 0.999): Unit = {
     val spark = batch.sparkSession
@@ -960,30 +945,16 @@ object CurationStreams {
       throw new IllegalStateException(
         s"streaming incrementalEmbedProbe: no IvfStore at $path — " +
           "IvfStore.create() first (an empty history is fine)")
-    if (appended.get() == Long.MinValue)
-      appended.compareAndSet(Long.MinValue, readBatchMarkAt(spark, path)): Unit
-    // FULLY-committed epoch replay: the append committed, which only
-    // happens after the original sink() returned — re-probing now would
-    // score the batch against a store that already CONTAINS it (every
-    // batch vector self-pairs at cos 1.0) and re-emit changed rows for a
-    // batchId the sink already consumed. Skip the whole body instead.
-    if (appended.get() >= batchId) return
-    val scored = graft.operators.IvfStore.search(spark, path,
-        batch.select(col("vec_id").as("query_id"),
-          col("embedding").as("qe")), k, nprobe)
-      .filter(col("cos_sim") >= threshold)
-      .select(col("query_id").as("batch_id"), col("vec_id").as("hist_id"),
-        round(col("cos_sim"), 4).as("cos_sim"))
-      .persist()
-    try {
-      scored.count(): Unit // pin pre-append values
-      sink(scored)
-      if (growStore && appended.get() < batchId) {
-        append(batch.select(col("vec_id"), col("embedding")))
-        writeBatchMarkAt(spark, path, batchId)
-        appended.set(batchId)
-      }
-    } finally scored.unpersist(): Unit
+    guardedBatch(batch, batchId, sink, growStore,
+        Leg(guard, StreamMark.markPathAt(path),
+          () => append(batch.select(col("vec_id"), col("embedding"))))) {
+      graft.operators.IvfStore.search(spark, path,
+          batch.select(col("vec_id").as("query_id"),
+            col("embedding").as("qe")), k, nprobe)
+        .filter(col("cos_sim") >= threshold)
+        .select(col("query_id").as("batch_id"), col("vec_id").as("hist_id"),
+          round(col("cos_sim"), 4).as("cos_sim"))
+    }
   }
 
   /** Streaming crawl TRIAGE — x125's streaming twin, and the deployable
@@ -999,22 +970,18 @@ object CurationStreams {
     * [[graft.queries.TextOps.triageFrame]] the batch entry uses, so a
     * one-micro-batch stream is bit-identical to the batch operator (the
     * spec asserts it). Then the batch appends to all three stores, EACH
-    * behind its own batchId-guarded persisted watermark — the stores
-    * have independent lineages (the x86/x102/x123 twins share them), so
-    * a replay after a mid-sequence append failure retries ONLY the
-    * store whose append did not commit (spec-gated); re-appends carry
-    * each store's own replay semantics (membership for hash/gram,
-    * counted shingle evidence for minhash — compact() restores).
+    * behind its own guard under [[guardedBatch]] — the stores have
+    * independent lineages (the x86/x102/x123 twins share them), so a
+    * replay after a mid-sequence append failure retries ONLY the store
+    * whose append did not commit (spec-gated); re-appends carry each
+    * store's own semantics (membership for hash/gram, counted shingle
+    * evidence for minhash — compact() restores).
     *
-    * Replay EMISSION contract: a replay of a FULLY-committed epoch (all
-    * three watermarks ≥ batchId) skips probe, sink and appends outright —
-    * the commits prove the original sink() returned, and re-probing would
-    * re-emit the batchId with every verdict flipped to drop_exact (the
-    * stores now contain the batch itself). A PARTIAL replay still runs
-    * (the uncommitted appends need their retry) and therefore re-emits
-    * this batch's verdicts WITH the committed stores' self-hits visible —
-    * pair `sink` with a batchId-keyed idempotent write if downstream
-    * consumes verdicts transactionally.
+    * A PARTIAL replay (some stores committed, some not) still runs — the
+    * uncommitted appends need their retry — and therefore re-emits this
+    * batch's verdicts WITH the committed stores' self-hits visible: pair
+    * `sink` with a batchId-keyed idempotent write if downstream consumes
+    * verdicts transactionally.
     *
     * `cascade = true` runs each micro-batch through x126's steady-state
     * form instead ([[graft.queries.TextOps.triageCascade]]: exact status
@@ -1046,11 +1013,10 @@ object CurationStreams {
                   cascade: Boolean = false,
                   stripThrScaled: Option[Long] = None)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val aHash = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
-    val aGram = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
-    val aMh = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
+    val (gHash, gGram, gMh) =
+      (new StreamMark.Guard, new StreamMark.Guard, new StreamMark.Guard)
     docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      triageBatch(batch, batchId, dir, k, sink, aHash, aGram, aMh, growStore,
+      triageBatch(batch, batchId, dir, k, sink, gHash, gGram, gMh, growStore,
         b => graft.sources.HashHistory.append(b.sparkSession, dir,
           b.select(unhex(md5(col("text"))).as("th"))),
         b => graft.sources.GramHistory.append(b.sparkSession, dir,
@@ -1062,57 +1028,31 @@ object CurationStreams {
     }
   }
 
-  /** One micro-batch of [[crawlTriage]] — the three probes composed, the
-    * sink, then the three independently-guarded appends (injectable, so
-    * the per-store replay contract is directly spec-gated).
+  /** One micro-batch of [[crawlTriage]] — the three probes composed under
+    * three guards (appends injectable, so the per-store replay contract
+    * is directly spec-gated).
     */
   private[graft] def triageBatch(batch: DataFrame, batchId: Long,
       dir: String, k: Int, sink: DataFrame => Unit,
-      aHash: java.util.concurrent.atomic.AtomicLong,
-      aGram: java.util.concurrent.atomic.AtomicLong,
-      aMh: java.util.concurrent.atomic.AtomicLong, growStore: Boolean,
+      gHash: StreamMark.Guard, gGram: StreamMark.Guard,
+      gMh: StreamMark.Guard, growStore: Boolean,
       appendHash: DataFrame => Unit, appendGram: DataFrame => Unit,
       appendMh: DataFrame => Unit, cascade: Boolean = false,
       stripThrScaled: Option[Long] = None): Unit = {
     val spark = batch.sparkSession
-    def tableOf(name: String, t: Option[String]): String =
-      t.getOrElse(throw new IllegalStateException(
-        s"streaming crawlTriage: no $name store for $dir — create() " +
-          "all three stores first (empty histories are fine)"))
-    val hashT = tableOf("hash",
-      graft.sources.HashHistory.registeredTable(spark, dir))
-    val gramT = tableOf("gram",
-      graft.sources.GramHistory.registeredTable(spark, dir))
-    val mhT = tableOf("minhash",
-      graft.sources.MinHashHistory.registeredTable(spark, dir))
-    if (aHash.get() == Long.MinValue)
-      aHash.compareAndSet(Long.MinValue, readBatchMark(spark, hashT)): Unit
-    if (aGram.get() == Long.MinValue)
-      aGram.compareAndSet(Long.MinValue, readBatchMark(spark, gramT)): Unit
-    if (aMh.get() == Long.MinValue)
-      aMh.compareAndSet(Long.MinValue, readBatchMark(spark, mhT)): Unit
-    // FULLY-committed epoch replay: all three appends committed, which
-    // only happens after the original sink() returned — re-probing now
-    // would triage the batch against stores that already CONTAIN it
-    // (everything flips to drop_exact) and re-emit changed verdicts for a
-    // batchId the sink already consumed. Skip the whole body. A PARTIAL
-    // replay (some store committed, some not) must still run — the
-    // uncommitted appends need their retry — and re-emits this batch's
-    // verdicts with the committed stores' self-hits visible: pair `sink`
-    // with a batchId-keyed idempotent write if downstream cares.
-    if (aHash.get() >= batchId && aGram.get() >= batchId &&
-        aMh.get() >= batchId) return
-    // cascade = x126's steady-state form per micro-batch (exact status
-    // first, near-dup only on kept survivors, gram audit only on
-    // near-dup survivors — unprobed legs read 0); default = x125's
-    // explainable all-legs form. Same verdict relation either way (the
-    // cascade's legs are per-doc independent — TriageCascadeSpec), so
-    // the append/replay machinery below is shared untouched.
-    val scored0 =
+    guardedBatch(batch, batchId, sink, growStore,
+        storeLeg(spark, graft.sources.HashHistory, dir, gHash)(appendHash(batch)),
+        storeLeg(spark, graft.sources.GramHistory, dir, gGram)(appendGram(batch)),
+        storeLeg(spark, graft.sources.MinHashHistory, dir, gMh)(appendMh(batch))) {
+      // cascade = x126's steady-state form per micro-batch (exact status
+      // first, near-dup only on kept survivors, gram audit only on
+      // near-dup survivors — unprobed legs read 0); default = x125's
+      // explainable all-legs form. Same verdict relation either way (the
+      // cascade's legs are per-doc independent — TriageCascadeSpec), so
+      // the append/replay machinery is shared untouched.
       if (cascade)
         graft.queries.TextOps.triageCascade(spark, dir, batch,
-          graft.queries.TextOps.shingleArrays(batch),
-          sys.error(s"unreachable: $hashT/$gramT/$mhT are registered"),
+          graft.queries.TextOps.shingleArrays(batch), unreachable(dir),
           k = k, stripThrScaled = stripThrScaled)
       else {
         // round 19 (the x125Legs fold, ported): ONE md5 pass and ONE
@@ -1122,20 +1062,18 @@ object CurationStreams {
           batch.select(col("doc_id"), unhex(md5(col("text"))).as("th")))
         val status = graft.operators.Dedup.incrementalStatusFromHashes(bh,
           graft.sources.HashHistory.probeHistory(spark, dir,
-            bh.select(col("th")))(
-            sys.error(s"unreachable: $hashT is registered")))
+            bh.select(col("th")))(unreachable(dir)))
         val g = graft.util.Materialize.eager(
           graft.operators.Dedup.batchGramCounts(batch, k))
         val gramFrac = graft.operators.Dedup.incrementalDupGramsFromGrams(
             batch, g,
             graft.sources.GramHistory.probeHistory(spark, dir,
               g.select(col(graft.sources.GramHistory.GramCol)).distinct())(
-              sys.error(s"unreachable: $gramT is registered")),
+              unreachable(dir)),
             k = k, broadcastProbe = false)
           .select(col("doc_id"), col("hist_frac"))
         val (bands, sh) =
-          graft.sources.MinHashHistory.scanOrCompute(spark, dir)(
-            sys.error(s"unreachable: $mhT is registered"))
+          graft.sources.MinHashHistory.scanOrCompute(spark, dir)(unreachable(dir))
         val best = graft.operators.Dedup.incrementalNearDups(
             graft.queries.TextOps.shingleArrays(batch), bands, sh,
             bandReducer =
@@ -1145,28 +1083,7 @@ object CurationStreams {
         graft.queries.TextOps.triageFrame(status, best, gramFrac,
           stripThrScaled)
       }
-    val scored = scored0.persist()
-    try {
-      scored.count(): Unit // pin pre-append values
-      sink(scored)
-      if (growStore) {
-        if (aHash.get() < batchId) {
-          appendHash(batch)
-          writeBatchMark(spark, hashT, batchId)
-          aHash.set(batchId)
-        }
-        if (aGram.get() < batchId) {
-          appendGram(batch)
-          writeBatchMark(spark, gramT, batchId)
-          aGram.set(batchId)
-        }
-        if (aMh.get() < batchId) {
-          appendMh(batch)
-          writeBatchMark(spark, mhT, batchId)
-          aMh.set(batchId)
-        }
-      }
-    } finally scored.unpersist(): Unit
+    }
   }
 
   /** Streaming incremental audio probe — x113's streaming twin, the audio
@@ -1179,64 +1096,43 @@ object CurationStreams {
     * one-micro-batch stream is bit-identical to the batch operator (the
     * spec asserts it).
     *
-    * Same store-as-state rationale as the gram/payload twins, with ONE
-    * semantic difference the replay contract inherits: landmark rows are
-    * MULTISET evidence (votes count rows), not membership, so a replay of
-    * an epoch that crashed mid-append re-appends and INFLATES later
-    * votes for that batch's tracks until
-    * [[graft.sources.LandmarkHistory.compact]] restores distinct rows
-    * (exact re-appended rows dedupe away — LandmarkHistorySpec pins
-    * both directions). Committed epochs skip their appends on replay and
-    * across JVM restarts via the same persisted watermark device.
+    * Same store-as-state rationale as the gram/payload twins. Replay:
+    * [[guardedBatch]]; landmark rows are MULTISET evidence (votes count
+    * rows), not membership, so a re-append INFLATES later votes for that
+    * batch's tracks until [[graft.sources.LandmarkHistory.compact]]
+    * restores distinct rows (exact re-appended rows dedupe away —
+    * LandmarkHistorySpec pins both directions).
     */
   def incrementalAudioProbe(media: DataFrame, dir: String,
                             sink: DataFrame => Unit,
                             growStore: Boolean = true)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val appended = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
+    val guard = new StreamMark.Guard
     media.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      audioProbeBatch(batch, batchId, dir, sink, appended, growStore,
+      audioProbeBatch(batch, batchId, dir, sink, guard, growStore,
         inc => graft.sources.LandmarkHistory.append(batch.sparkSession, dir, inc))
     }
   }
 
-  /** One micro-batch of [[incrementalAudioProbe]] — landmark, probe, sink,
-    * then the batchId-guarded append (injectable, like [[gramAuditBatch]],
-    * so the replay contract is directly spec-gated).
+  /** One micro-batch of [[incrementalAudioProbe]] (append injectable, like
+    * [[gramAuditBatch]]).
     */
   private[graft] def audioProbeBatch(batch: DataFrame, batchId: Long,
       dir: String, sink: DataFrame => Unit,
-      appended: java.util.concurrent.atomic.AtomicLong, growStore: Boolean,
+      guard: StreamMark.Guard, growStore: Boolean,
       append: DataFrame => Unit): Unit = {
     val spark = batch.sparkSession
-    val table = graft.sources.LandmarkHistory.registeredTable(spark, dir)
-      .getOrElse(throw new IllegalStateException(
-        s"streaming incrementalAudioProbe: no landmark store for $dir — " +
-          "LandmarkHistory.create() first (an empty history is fine)"))
-    if (appended.get() == Long.MinValue)
-      appended.compareAndSet(Long.MinValue, readBatchMark(spark, table)): Unit
-    val hist = spark.table(table).select(
-      col(graft.sources.LandmarkHistory.KeyCol), col("id"), col("t"))
     // the landmark relation is consumed twice (probe votes + query-side
     // coverage denominators) and feeds the append — pin it so the kernel
     // runs once per payload
     val batchLms = graft.operators.Multimodal.audioLandmarkRows(batch)
       .persist()
-    val scored = graft.operators.Multimodal
-      .incrementalAudioNearDups(batchLms, hist)
-      .persist()
-    try {
-      scored.count(): Unit // pin pre-append values
-      sink(scored)
-      if (growStore && appended.get() < batchId) {
-        append(batchLms)
-        writeBatchMark(spark, table, batchId)
-        appended.set(batchId)
-      }
-    } finally {
-      scored.unpersist(): Unit
-      batchLms.unpersist(): Unit
-    }
+    try guardedBatch(batch, batchId, sink, growStore,
+        storeLeg(spark, graft.sources.LandmarkHistory, dir, guard)(
+          append(batchLms))) {
+      graft.operators.Multimodal.incrementalAudioNearDups(batchLms,
+        graft.sources.LandmarkHistory.scanOrCompute(spark, dir)(unreachable(dir)))
+    } finally batchLms.unpersist(): Unit
   }
 
   /** Streaming incremental video probe — x116's streaming twin, the video
@@ -1250,86 +1146,44 @@ object CurationStreams {
     * exactly the x116 batch contract, so a one-micro-batch stream is
     * bit-identical to the batch operator (the spec asserts it).
     *
-    * Replay contract: same batchId guard + persisted watermark as the
-    * sibling twins, with the LandmarkHistory-style multiset caveat — a
-    * crashed-epoch replay that re-appends duplicates frame rows and sizes
-    * rows, inflating n_match and fanning the sizes join for that batch's
-    * videos until [[graft.sources.FrameHistory.compact]] restores
-    * distinct rows and exact denominators.
+    * Replay: [[guardedBatch]], with the LandmarkHistory-style multiset
+    * caveat — a re-append duplicates frame rows and sizes rows, inflating
+    * n_match and fanning the sizes join for that batch's videos until
+    * [[graft.sources.FrameHistory.compact]] restores distinct rows and
+    * exact denominators.
     */
   def incrementalVideoNearDups(media: DataFrame, dir: String,
                                sink: DataFrame => Unit,
                                growStore: Boolean = true)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val appended = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
+    val guard = new StreamMark.Guard
     media.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      videoProbeBatch(batch, batchId, dir, sink, appended, growStore,
+      videoProbeBatch(batch, batchId, dir, sink, guard, growStore,
         inc => graft.sources.FrameHistory.append(batch.sparkSession, dir, inc))
     }
   }
 
-  /** One micro-batch of [[incrementalVideoNearDups]] — probe, sink, then
-    * the batchId-guarded append (injectable, like the sibling twins, so
-    * the replay contract is directly spec-gated).
+  /** One micro-batch of [[incrementalVideoNearDups]] (append injectable,
+    * like the sibling twins).
     */
   private[graft] def videoProbeBatch(batch: DataFrame, batchId: Long,
       dir: String, sink: DataFrame => Unit,
-      appended: java.util.concurrent.atomic.AtomicLong, growStore: Boolean,
+      guard: StreamMark.Guard, growStore: Boolean,
       append: DataFrame => Unit): Unit = {
     val spark = batch.sparkSession
-    val table = graft.sources.FrameHistory.registeredTable(spark, dir)
-      .getOrElse(throw new IllegalStateException(
-        s"streaming incrementalVideoNearDups: no frame store for $dir — " +
-          "FrameHistory.create() first (an empty history is fine)"))
-    if (appended.get() == Long.MinValue)
-      appended.compareAndSet(Long.MinValue, readBatchMark(spark, table)): Unit
-    val histFrames = spark.table(table)
-      .select(col(graft.sources.FrameHistory.KeyCol), col("id"))
-    val histSizes = spark.table(graft.sources.FrameHistory.sizesTableFor(dir))
-      .select(col("id"), col("n"))
     // the frame relation is consumed twice (match counts + batch set
     // sizes) and feeds the append — pin it so the kernel runs once
     val batchFrames = graft.operators.Multimodal.videoFrameRows(batch)
       .persist()
-    val scored = graft.operators.Multimodal
-      .incrementalVideoNearDups(batchFrames, histFrames, histSizes)
-      .persist()
-    try {
-      scored.count(): Unit // pin pre-append values
-      sink(scored)
-      if (growStore && appended.get() < batchId) {
-        append(batchFrames)
-        writeBatchMark(spark, table, batchId)
-        appended.set(batchId)
-      }
-    } finally {
-      scored.unpersist(): Unit
-      batchFrames.unpersist(): Unit
-    }
+    try guardedBatch(batch, batchId, sink, growStore,
+        storeLeg(spark, graft.sources.FrameHistory, dir, guard)(
+          append(batchFrames))) {
+      val (histFrames, histSizes) =
+        graft.sources.FrameHistory.scanOrCompute(spark, dir)(unreachable(dir))
+      graft.operators.Multimodal
+        .incrementalVideoNearDups(batchFrames, histFrames, histSizes)
+    } finally batchFrames.unpersist(): Unit
   }
-
-  /** Persisted replay watermark — see [[graft.sources.StreamMark]]: the
-    * mark lives beside the store table's location (survives compaction's
-    * drop+rename) and is CLEARED by each store's create() so a recreated
-    * store starts a fresh lineage at -1 rather than inheriting a stale
-    * high-water mark that would silently skip appends. On write failure a
-    * restart re-appends one batch: absorbed by membership semantics for
-    * the gram/payload stores but vote-INFLATING for the multiset landmark
-    * store until compact() — see each twin's replay contract.
-    */
-  private def readBatchMark(spark: SparkSession, table: String): Long =
-    graft.sources.StreamMark.read(spark, table)
-
-  private def writeBatchMark(spark: SparkSession, table: String,
-                             batchId: Long): Unit =
-    graft.sources.StreamMark.write(spark, table, batchId)
-
-  private def readBatchMarkAt(spark: SparkSession, base: String): Long =
-    graft.sources.StreamMark.readAt(spark, base)
-
-  private def writeBatchMarkAt(spark: SparkSession, base: String,
-                               batchId: Long): Unit =
-    graft.sources.StreamMark.writeAt(spark, base, batchId)
 
   // ------------------------------------------- streaming incremental dedup
 

@@ -66,7 +66,7 @@ object CurateV3Probe {
 
     val docs = graft.queries.Tables.documents(spark, corpusDir)
       .localCheckpoint(true)
-    val appended = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
+    val guard = new graft.sources.StreamMark.Guard
     var histGrams = Seq.empty[Long].toDF(graft.sources.GramHistory.GramCol)
       .localCheckpoint(true)
     val walls = Seq.newBuilder[Double]
@@ -78,7 +78,7 @@ object CurateV3Probe {
         batch, b.toLong, storeDir, k, model, maxNll,
         df => out ++= df.select(col("doc_id"), col("removed_chars"),
           col("nll")).as[(Long, Long, Double)].collect(),
-        appended, growStore = true,
+        guard, growStore = true,
         inc => graft.sources.GramHistory.append(spark, storeDir, inc))
       val wall = (System.nanoTime() - t0) / 1e9
       walls += wall

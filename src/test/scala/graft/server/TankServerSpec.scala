@@ -140,6 +140,26 @@ class TankServerSpec extends SparkSpec {
       "stale cache served after a write touching the tile")
   }
 
+  test("a bulk ingest whose dead-letter write fails releases the rows it cached") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-srv-fail").toString
+    val failCfg = cfg.copy(path = s"$dir/store")
+    // a plain file where the dead-letter directory belongs: writeRejected throws
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"${failCfg.path}_rejected"), "not a dir")
+    val failing = new TankServer(spark, failCfg, tileCfg)
+    val failingPort = failing.start()
+    try {
+      val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+      val bulk = Seq(feature("g1", lon, lat, "water"),
+        s"""{"type":"Feature","id":"bad","geometry":{"type":"Point","coordinates":[$lon,$lat]},"properties":{"value":"not-a-number"}}""")
+      val (code, _) = http("POST", "/_bulk", Some(bulk.mkString("\n")),
+        at = failingPort)
+      assert(code != 200, s"the failed dead-letter write answered $code")
+      assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore,
+        "the failed ingest left its rows cached")
+    } finally failing.stop()
+  }
+
   test("A9: heatmap returns count cells") {
     val (code, body) = http("GET", s"/heatmap/13/$tx/$ty")
     assert(code == 200)

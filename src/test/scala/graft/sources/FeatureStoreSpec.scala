@@ -152,6 +152,41 @@ class FeatureStoreSpec extends SparkSpec {
     assert(FeatureStore.read(spark, cfg).count() == 3)
   }
 
+  test("a second ingest stream with a fresh checkpoint over a surviving store ingests its own batch 0") {
+    val dir = tmpDir()
+    val cfg = cfg0.copy(path = s"$dir/store")
+    def ingestOne(name: String, line: String): Unit = {
+      val src = java.nio.file.Paths.get(s"$dir/in_$name")
+      Files.createDirectories(src)
+      Files.writeString(src.resolve("batch.ndjson"), line)
+      val q = FeatureStore.startIngestStream(spark, src.toString, cfg,
+        s"$dir/ckpt_$name")
+      try q.processAllAvailable() finally q.stop()
+    }
+    ingestOne("a", lines(0))
+    ingestOne("b", lines(1))
+    assert(FeatureStore.read(spark, cfg).count() == 2,
+      "the second stream's batch 0 was skipped as already ingested")
+  }
+
+  test("a full write clears the ingest stream mark; vacuum never sweeps it") {
+    val dir = tmpDir()
+    val cfg = cfg0.copy(path = s"$dir/store")
+    FeatureStore.write(ingestLines(lines.take(2)).good, cfg)
+    StreamMark.writeAt(spark, cfg.path, 5)
+    // an aged mark is not crash debris: a committing write's vacuum keeps it
+    Files.setLastModifiedTime(
+      java.nio.file.Paths.get(StreamMark.markPathAt(cfg.path).toString),
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis -
+        FeatureStore.Manifests.debrisGraceMillis(cfg) - 60000))
+    FeatureStore.delete(spark, cfg, "a")
+    assert(StreamMark.readAt(spark, cfg.path) == 5L)
+    // a full overwrite starts a new store lineage
+    FeatureStore.write(ingestLines(lines.take(2)).good, cfg)
+    assert(StreamMark.readAt(spark, cfg.path) == -1L,
+      "a stale ingest mark survived the full write")
+  }
+
   test("write/read roundtrip: hash-sorted layout, lookup, delete, update, tile delete") {
     val dir = tmpDir()
     val cfg = cfg0.copy(path = s"$dir/store")

@@ -967,7 +967,7 @@ class CurationStreamsSpec extends SparkSpec {
     graft.sources.GramHistory.create(spark, dir, corpus, k, buckets = 4)
     val batch = Seq((20L, "some brand new sentence nobody wrote before"))
       .toDF("doc_id", "text")
-    val appended = new java.util.concurrent.atomic.AtomicLong(-1L)
+    val appended = new graft.sources.StreamMark.Guard
     var appendCalls = 0
     var failNext = true
     val flaky: org.apache.spark.sql.DataFrame => Unit = { inc =>
@@ -995,7 +995,7 @@ class CurationStreamsSpec extends SparkSpec {
     assert(frac == 1.0, s"failed epoch's grams missing from the store: $frac")
     // RESTART recovery: a fresh guard (new JVM) recovers the persisted
     // watermark and still skips the committed epoch's append
-    val restarted = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
+    val restarted = new graft.sources.StreamMark.Guard
     CurationStreams.gramAuditBatch(
       batch, 0L, dir, k, _ => (), restarted, growStore = true, flaky)
     assert(appendCalls == 2, "committed epoch re-appended after restart")
@@ -1049,7 +1049,7 @@ class CurationStreamsSpec extends SparkSpec {
       .toDF("doc_id", "text")
     graft.sources.GramHistory.create(spark, dir, corpus, k, buckets = 4)
     // first lineage: three committed epochs advance the persisted mark to 2
-    val guard1 = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
+    val guard1 = new graft.sources.StreamMark.Guard
     for (b <- 0L to 2L)
       CurationStreams.gramAuditBatch(
         Seq((100L + b, s"first lineage text number $b entirely fresh"))
@@ -1066,7 +1066,7 @@ class CurationStreamsSpec extends SparkSpec {
     assert(graft.sources.StreamMark.read(spark, table) == -1L,
       "stale replay watermark survived store re-creation")
     var appends = 0
-    val guard2 = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
+    val guard2 = new graft.sources.StreamMark.Guard
     val newBatch = Seq((200L, "second lineage sentence nobody wrote before"))
       .toDF("doc_id", "text")
     CurationStreams.gramAuditBatch(
@@ -1097,7 +1097,7 @@ class CurationStreamsSpec extends SparkSpec {
     try {
       // lineage A (simulated stream thread): three committed epochs
       spark.sparkContext.setLocalProperty(QidKey, "lineage-A")
-      val guardA = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
+      val guardA = new graft.sources.StreamMark.Guard
       for (b <- 0L to 2L)
         CurationStreams.gramAuditBatch(
           Seq((100L + b, s"lineage A text number $b entirely fresh"))
@@ -1114,7 +1114,7 @@ class CurationStreamsSpec extends SparkSpec {
         "another lineage's watermark leaked across checkpoints")
       var sinks = 0
       var appends = 0
-      val guardB = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
+      val guardB = new graft.sources.StreamMark.Guard
       CurationStreams.gramAuditBatch(
         Seq((200L, "lineage B sentence nobody wrote before"))
           .toDF("doc_id", "text"),
@@ -1152,9 +1152,9 @@ class CurationStreamsSpec extends SparkSpec {
       buckets = 4)
     val batch = Seq((10L, "a wholly novel lineage-test document body here",
       "en", 46)).toDF("doc_id", "text", "lang", "n_chars")
-    def guards() = (new java.util.concurrent.atomic.AtomicLong(Long.MinValue),
-      new java.util.concurrent.atomic.AtomicLong(Long.MinValue),
-      new java.util.concurrent.atomic.AtomicLong(Long.MinValue))
+    def guards() = (new graft.sources.StreamMark.Guard,
+      new graft.sources.StreamMark.Guard,
+      new graft.sources.StreamMark.Guard)
     try {
       // lineage A commits epochs 0..3 (marks at 3 on all three stores)
       spark.sparkContext.setLocalProperty(QidKey, "lineage-A")
@@ -1247,7 +1247,7 @@ class CurationStreamsSpec extends SparkSpec {
       Multimodal.payloadFingerprints(
         Seq((1L, rampPayload)).toDF("media_id", "content")), buckets = 4)
     val batch = Seq((20L, novelPayload)).toDF("media_id", "content")
-    val appended = new java.util.concurrent.atomic.AtomicLong(-1L)
+    val appended = new graft.sources.StreamMark.Guard
     var appendCalls = 0
     var failNext = true
     val flaky: org.apache.spark.sql.DataFrame => Unit = { inc =>
@@ -1255,7 +1255,7 @@ class CurationStreamsSpec extends SparkSpec {
       if (failNext) { failNext = false; throw new java.io.IOException("injected") }
       graft.sources.PhashHistory.append(spark, dir, inc)
     }
-    def run(guard: java.util.concurrent.atomic.AtomicLong): Unit =
+    def run(guard: graft.sources.StreamMark.Guard): Unit =
       CurationStreams.payloadAuditBatch(
         batch, 0L, dir, _ => (), guard, growStore = true, flaky)
     intercept[java.io.IOException](run(appended))
@@ -1265,7 +1265,7 @@ class CurationStreamsSpec extends SparkSpec {
     run(appended)
     assert(appendCalls == 2, "committed epoch re-appended on replay")
     // restart recovery honors the persisted watermark
-    val restarted = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
+    val restarted = new graft.sources.StreamMark.Guard
     run(restarted)
     assert(appendCalls == 2, "committed epoch re-appended after restart")
     assert(restarted.get() == 0L, "persisted watermark not recovered")
@@ -1332,7 +1332,7 @@ class CurationStreamsSpec extends SparkSpec {
       Multimodal.audioLandmarkRows(
         Seq((1L, audioT1)).toDF("media_id", "content")), buckets = 4)
     val batch = Seq((20L, audioNovel)).toDF("media_id", "content")
-    val appended = new java.util.concurrent.atomic.AtomicLong(-1L)
+    val appended = new graft.sources.StreamMark.Guard
     var appendCalls = 0
     var failNext = true
     val flaky: org.apache.spark.sql.DataFrame => Unit = { inc =>
@@ -1340,7 +1340,7 @@ class CurationStreamsSpec extends SparkSpec {
       if (failNext) { failNext = false; throw new java.io.IOException("injected") }
       graft.sources.LandmarkHistory.append(spark, dir, inc)
     }
-    def run(guard: java.util.concurrent.atomic.AtomicLong): Unit =
+    def run(guard: graft.sources.StreamMark.Guard): Unit =
       CurationStreams.audioProbeBatch(
         batch, 0L, dir, _ => (), guard, growStore = true, flaky)
     intercept[java.io.IOException](run(appended))
@@ -1350,7 +1350,7 @@ class CurationStreamsSpec extends SparkSpec {
     run(appended)
     assert(appendCalls == 2, "committed epoch re-appended on replay")
     // restart recovery honors the persisted watermark
-    val restarted = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
+    val restarted = new graft.sources.StreamMark.Guard
     run(restarted)
     assert(appendCalls == 2, "committed epoch re-appended after restart")
     assert(restarted.get() == 0L, "persisted watermark not recovered")
@@ -1418,7 +1418,7 @@ class CurationStreamsSpec extends SparkSpec {
       TextOps.minHashBandsOf(hist), TextOps.minHashShinglesOf(hist),
       buckets = 4)
     val batch = Seq(ndDoc(20L, ndNovel)).toDF("doc_id", "text", "lang", "n_chars")
-    val appended = new java.util.concurrent.atomic.AtomicLong(-1L)
+    val appended = new graft.sources.StreamMark.Guard
     var appendCalls = 0
     var failNext = true
     val flaky: org.apache.spark.sql.DataFrame => Unit = { b =>
@@ -1427,7 +1427,7 @@ class CurationStreamsSpec extends SparkSpec {
       graft.sources.MinHashHistory.append(spark, dir,
         TextOps.minHashBandsOf(b), TextOps.minHashShinglesOf(b))
     }
-    def run(guard: java.util.concurrent.atomic.AtomicLong): Unit =
+    def run(guard: graft.sources.StreamMark.Guard): Unit =
       CurationStreams.nearDupBatch(
         batch, 0L, dir, _ => (), guard, growStore = true, flaky)
     intercept[java.io.IOException](run(appended))
@@ -1437,7 +1437,7 @@ class CurationStreamsSpec extends SparkSpec {
     run(appended)
     assert(appendCalls == 2, "committed epoch re-appended on replay")
     // restart recovery honors the persisted watermark
-    val restarted = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
+    val restarted = new graft.sources.StreamMark.Guard
     run(restarted)
     assert(appendCalls == 2, "committed epoch re-appended after restart")
     assert(restarted.get() == 0L, "persisted watermark not recovered")
@@ -1655,9 +1655,9 @@ class CurationStreamsSpec extends SparkSpec {
     val dir = s"/tmp/triage_replay_${System.nanoTime}"
     mkTriageStores(dir)
     val batch = Seq(ndDoc(20L, ndNovel)).toDF("doc_id", "text", "lang", "n_chars")
-    val (aH, aG, aM) = (new java.util.concurrent.atomic.AtomicLong(-1L),
-      new java.util.concurrent.atomic.AtomicLong(-1L),
-      new java.util.concurrent.atomic.AtomicLong(-1L))
+    val (aH, aG, aM) = (new graft.sources.StreamMark.Guard,
+      new graft.sources.StreamMark.Guard,
+      new graft.sources.StreamMark.Guard)
     var (nH, nG, nM) = (0, 0, 0)
     var nSink = 0
     var failGram = true
@@ -1689,9 +1689,9 @@ class CurationStreamsSpec extends SparkSpec {
     assert((nH, nG, nM) == (1, 2, 1), "committed epoch re-appended")
     assert(nSink == 2, s"committed-epoch replay re-emitted to the sink: $nSink")
     // restart recovery: fresh guards read all three persisted marks
-    val (rH, rG, rM) = (new java.util.concurrent.atomic.AtomicLong(Long.MinValue),
-      new java.util.concurrent.atomic.AtomicLong(Long.MinValue),
-      new java.util.concurrent.atomic.AtomicLong(Long.MinValue))
+    val (rH, rG, rM) = (new graft.sources.StreamMark.Guard,
+      new graft.sources.StreamMark.Guard,
+      new graft.sources.StreamMark.Guard)
     CurationStreams.triageBatch(batch, 0L, dir, TextOps.DupGramK, _ => (),
       rH, rG, rM, growStore = true,
       appendHash = _ => nH += 1, appendGram = _ => nG += 1,
@@ -1764,7 +1764,7 @@ class CurationStreamsSpec extends SparkSpec {
       Seq((1L, embVec(11))).toDF("vec_id", "embedding"),
       nlist = 1, kmeansIters = 1)
     val batch = Seq((20L, embVec(997))).toDF("vec_id", "embedding")
-    val appended = new java.util.concurrent.atomic.AtomicLong(-1L)
+    val appended = new graft.sources.StreamMark.Guard
     var appendCalls = 0
     var failNext = true
     val flaky: org.apache.spark.sql.DataFrame => Unit = { inc =>
@@ -1772,7 +1772,7 @@ class CurationStreamsSpec extends SparkSpec {
       if (failNext) { failNext = false; throw new java.io.IOException("injected") }
       IvfStore.append(spark, dir, inc)
     }
-    def run(guard: java.util.concurrent.atomic.AtomicLong): Unit =
+    def run(guard: graft.sources.StreamMark.Guard): Unit =
       CurationStreams.embedProbeBatch(
         batch, 0L, dir, _ => (), guard, growStore = true, flaky)
     intercept[java.io.IOException](run(appended))
@@ -1782,7 +1782,7 @@ class CurationStreamsSpec extends SparkSpec {
     run(appended)
     assert(appendCalls == 2, "committed epoch re-appended on replay")
     // restart recovery honors the persisted watermark
-    val restarted = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
+    val restarted = new graft.sources.StreamMark.Guard
     run(restarted)
     assert(appendCalls == 2, "committed epoch re-appended after restart")
     assert(restarted.get() == 0L, "persisted watermark not recovered")
@@ -1790,7 +1790,7 @@ class CurationStreamsSpec extends SparkSpec {
     IvfStore.create(spark, dir,
       Seq((1L, embVec(11))).toDF("vec_id", "embedding"),
       nlist = 1, kmeansIters = 1)
-    val fresh = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
+    val fresh = new graft.sources.StreamMark.Guard
     failNext = false
     run(fresh)
     assert(appendCalls == 3 && fresh.get() == 0L,
@@ -1867,7 +1867,7 @@ class CurationStreamsSpec extends SparkSpec {
       import spark.implicits._
       Seq((20L, videoNovel, 8)).toDF("media_id", "content", "n_frames")
     }
-    val appended = new java.util.concurrent.atomic.AtomicLong(-1L)
+    val appended = new graft.sources.StreamMark.Guard
     var appendCalls = 0
     var failNext = true
     val flaky: org.apache.spark.sql.DataFrame => Unit = { inc =>
@@ -1875,7 +1875,7 @@ class CurationStreamsSpec extends SparkSpec {
       if (failNext) { failNext = false; throw new java.io.IOException("injected") }
       graft.sources.FrameHistory.append(spark, dir, inc)
     }
-    def run(guard: java.util.concurrent.atomic.AtomicLong): Unit =
+    def run(guard: graft.sources.StreamMark.Guard): Unit =
       CurationStreams.videoProbeBatch(
         batch, 0L, dir, _ => (), guard, growStore = true, flaky)
     intercept[java.io.IOException](run(appended))
@@ -1885,11 +1885,120 @@ class CurationStreamsSpec extends SparkSpec {
     run(appended)
     assert(appendCalls == 2, "committed epoch re-appended on replay")
     // restart recovery honors the persisted watermark
-    val restarted = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
+    val restarted = new graft.sources.StreamMark.Guard
     run(restarted)
     assert(appendCalls == 2, "committed epoch re-appended after restart")
     assert(restarted.get() == 0L, "persisted watermark not recovered")
     graft.sources.FrameHistory.invalidate(spark, dir)
+  }
+
+  test("every store twin: a replay of a committed epoch calls neither the sink nor the append") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import graft.operators.{IvfStore, Multimodal, UnigramLm}
+    import graft.queries.TextOps
+    import graft.sources._
+    type Sink = DataFrame => Unit
+    val k = 8
+    val gramCorpus = Seq((1L, "alpha beta gamma delta epsilon zeta"))
+      .toDF("doc_id", "text")
+    val gramBatch = Seq((20L, "some brand new sentence nobody wrote before"))
+      .toDF("doc_id", "text")
+    val model = {
+      val (vocab, scalars) = UnigramLm.train(
+        gramBatch.select(col("doc_id"), lit("s").as("source"), col("text")))
+      UnigramLm.freeze(vocab, scalars)
+    }
+    val ndBatch = Seq(ndDoc(20L, ndNovel)).toDF("doc_id", "text", "lang", "n_chars")
+    // (twin, store setup for a dir returning the twin's batch-0 body)
+    val twins: Seq[(String, String => (Sink, Sink) => Unit)] = Seq(
+      "gram audit" -> { dir =>
+        GramHistory.create(spark, dir, gramCorpus, k, buckets = 4)
+        val g = new StreamMark.Guard
+        (sink, append) => CurationStreams.gramAuditBatch(
+          gramBatch, 0L, dir, k, sink, g, growStore = true, append)
+      },
+      "span removal" -> { dir =>
+        GramHistory.create(spark, dir, gramCorpus, k, buckets = 4)
+        val g = new StreamMark.Guard
+        (sink, append) => CurationStreams.gramRemovalBatch(
+          gramBatch, 0L, dir, k, sink, g, growStore = true, append)
+      },
+      "curateV3" -> { dir =>
+        GramHistory.create(spark, dir, gramCorpus, k, buckets = 4)
+        val g = new StreamMark.Guard
+        (sink, append) => CurationStreams.curateV3Batch(gramBatch, 0L, dir, k,
+          model, Double.MaxValue, sink, g, growStore = true, append)
+      },
+      "payload" -> { dir =>
+        PhashHistory.create(spark, dir, Multimodal.payloadFingerprints(
+          Seq((1L, rampPayload)).toDF("media_id", "content")), buckets = 4)
+        val batch = Seq((20L, novelPayload)).toDF("media_id", "content")
+        val g = new StreamMark.Guard
+        (sink, append) => CurationStreams.payloadAuditBatch(
+          batch, 0L, dir, sink, g, growStore = true, append)
+      },
+      "near-dup" -> { dir =>
+        val hist = Seq(ndDoc(1L, ndText("tail")))
+          .toDF("doc_id", "text", "lang", "n_chars")
+        MinHashHistory.create(spark, dir, TextOps.minHashBandsOf(hist),
+          TextOps.minHashShinglesOf(hist), buckets = 4)
+        val g = new StreamMark.Guard
+        (sink, append) => CurationStreams.nearDupBatch(
+          ndBatch, 0L, dir, sink, g, growStore = true, append)
+      },
+      "audio" -> { dir =>
+        LandmarkHistory.create(spark, dir, Multimodal.audioLandmarkRows(
+          Seq((1L, audioT1)).toDF("media_id", "content")), buckets = 4)
+        val batch = Seq((20L, audioNovel)).toDF("media_id", "content")
+        val g = new StreamMark.Guard
+        (sink, append) => CurationStreams.audioProbeBatch(
+          batch, 0L, dir, sink, g, growStore = true, append)
+      },
+      "video" -> { dir =>
+        FrameHistory.create(spark, dir,
+          Multimodal.frameFingerprints(videoDf(Seq((1L, videoC1, 8)))),
+          buckets = 4)
+        val batch = Seq((20L, videoNovel, 8))
+          .toDF("media_id", "content", "n_frames")
+        val g = new StreamMark.Guard
+        (sink, append) => CurationStreams.videoProbeBatch(
+          batch, 0L, dir, sink, g, growStore = true, append)
+      },
+      "embed" -> { dir =>
+        IvfStore.create(spark, dir,
+          Seq((1L, embVec(11))).toDF("vec_id", "embedding"),
+          nlist = 1, kmeansIters = 1)
+        val batch = Seq((20L, embVec(997))).toDF("vec_id", "embedding")
+        val g = new StreamMark.Guard
+        (sink, append) => CurationStreams.embedProbeBatch(
+          batch, 0L, dir, sink, g, growStore = true, append)
+      },
+      "triage" -> { dir =>
+        mkTriageStores(dir)
+        val (gH, gG, gM) =
+          (new StreamMark.Guard, new StreamMark.Guard, new StreamMark.Guard)
+        (sink, append) => CurationStreams.triageBatch(ndBatch, 0L, dir,
+          TextOps.DupGramK, sink, gH, gG, gM, growStore = true,
+          append, append, append)
+      })
+    val base = java.nio.file.Files.createTempDirectory("replay_skip").toString
+    twins.zipWithIndex.foreach { case ((name, twin), i) =>
+      val dir = s"$base/$i"
+      val run = twin(dir)
+      var (sinks, appends) = (0, 0)
+      val sink: Sink = _ => sinks += 1
+      val append: Sink = _ => appends += 1
+      run(sink, append)
+      assert(sinks == 1 && appends > 0, s"$name: batch 0 did not commit")
+      val committed = (sinks, appends)
+      run(sink, append)
+      assert((sinks, appends) == committed,
+        s"$name: the committed epoch's replay called the sink or the append")
+      Seq[BucketedStore[_]](GramHistory, PhashHistory, MinHashHistory,
+        LandmarkHistory, FrameHistory, HashHistory)
+        .foreach(_.invalidate(spark, dir))
+    }
   }
 
   test("streaming band buckets are bit-identical to the batch LSH buckets") {
