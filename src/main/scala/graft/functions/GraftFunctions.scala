@@ -69,6 +69,7 @@ object GraftFunctions {
         spark.experimental.extraOptimizations =
           spark.experimental.extraOptimizations :+ r
     }
+    HashRangePushdown.register(spark)
     spark.udf.register("haversine_km",
       (lat1: Double, lon1: Double, lat2: Double, lon2: Double) =>
         WebMercator.haversineKm(lat1, lon1, lat2, lon2))
@@ -95,8 +96,9 @@ object GraftFunctions {
   }
 }
 
-/** `spark.sql.extensions` entry point injecting the native expressions and
-  * the tile-predicate lowering rule.
+/** `spark.sql.extensions` entry point injecting the native expressions,
+  * the tile-predicate lowering rules and the [[HashInRanges]] scan
+  * pushdown.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -105,5 +107,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     ext.injectOptimizerRule(_ => TilePredicateRewrite)
     ext.injectOptimizerRule(_ => SpatialPredicateRewrite)
+    ext.injectPlannerStrategy(_ => HashRangePushdown)
   }
 }

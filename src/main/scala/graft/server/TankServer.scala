@@ -66,7 +66,13 @@ import graft.tiles.TileService.TileConfig
   * per miss, a viewport read a p50 of 668 ms and 22.7 tiles/s; with this
   * model, 386 ms and 40.4 tiles/s. Spark jobs per viewport fell from 2.91
   * to 1.35, and requests that ran no job went from a client p50 of 436 ms
-  * (queued behind other viewers' misses) to 49 ms. Every request's Spark
+  * (queued behind other viewers' misses) to 49 ms. Since each tile plan
+  * compiles once (the panel's hash ranges are a [[graft.functions
+  * .HashInRanges]] reference, not literals in the generated code), a
+  * viewport reads 264 ms at the p50 instead of 394 ms, and 60.7 tiles/s
+  * instead of 38.7 (10 more paired runs); a traced run kept ~1.3 Spark
+  * jobs per miss while driver time per viewport fell from 242 to 160 ms
+  * and in-job time from 126 to 57 ms. Every request's Spark
   * jobs carry its route as the job description, e.g.
   * `GET /tile/14/8793/5348`; a batch's jobs list every route they serve,
   * `GET /tile/14/8793/5348, /tile/14/8794/5348`.

@@ -3,6 +3,7 @@ package graft.tiles
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.core.ZRange
+import graft.functions.{HashInRanges, HashRangePushdown}
 
 /** The reference's two read products — vector tiles and count heatmaps — as
   * single pruned-scan DataFrame plans plus a driver-side MVT encode of the
@@ -25,8 +26,9 @@ import graft.core.ZRange
   * single-tile plans as DataFrames, for the query registry.
   *
   * At 100 TB the feature table is laid out hash-sorted (bucketed/Z-ordered),
-  * so the BETWEEN predicates prune to a handful of files/row-groups; each
-  * tile read touches O(tile) data no matter the table size.
+  * so the hash ranges, pushed to parquet as BETWEEN predicates, prune to a
+  * handful of files/row-groups; each tile read touches O(tile) data no
+  * matter the table size.
   */
 object TileService {
 
@@ -45,25 +47,14 @@ object TileService {
     * reach — so a feature whose centroid sits anywhere in the clip-buffer
     * zone is in the query and can render into the tile's buffer (a halved
     * halo silently dropped edge features from the outer half of the zone).
+    * The ranges are bound as a [[HashInRanges]] reference, not inlined.
     */
-  def hashPredicate(z: Int, x: Int, y: Int, cfg: TileConfig): Column = {
-    val bufFrac = cfg.buffer.toDouble / cfg.extent.toDouble
-    balancedOr(ZRange.coverWithBuffer(z, x, y, cfg.hashLevel, bufFrac)
-      .map { case (lo, hi) => col("hash").between(lo, hi) })
-  }
+  def hashPredicate(z: Int, x: Int, y: Int, cfg: TileConfig): Column =
+    HashInRanges.column(col("hash"), cover(z, x, y, cfg))
 
-  /** OR with a log-depth tree — a left-deep reduce over many ranges
-    * overflows Catalyst's column-conversion recursion. An empty cover (an
-    * out-of-range tile yields no Morton ranges) is simply an empty result,
-    * never a recursion.
-    */
-  private def balancedOr(cs: Seq[Column]): Column =
-    if (cs.isEmpty) lit(false)
-    else if (cs.size == 1) cs.head
-    else {
-      val (l, r) = cs.splitAt(cs.size / 2)
-      balancedOr(l) || balancedOr(r)
-    }
+  /** Tile (z,x,y)'s buffered Morton cover, sorted and merged. */
+  private def cover(z: Int, x: Int, y: Int, cfg: TileConfig): Seq[(Int, Int)] =
+    ZRange.coverWithBuffer(z, x, y, cfg.hashLevel, cfg.buffer.toDouble / cfg.extent.toDouble)
 
   /** The distributed tile query: pruned scan → attr filter → clip+transform.
     * Output: uid, <attributes...>, tgeom (WKT in integer tile coords).
@@ -71,7 +62,7 @@ object TileService {
   def tileDf(features: DataFrame, z: Int, x: Int, y: Int,
              filter: Option[(String, Any)] = None,
              cfg: TileConfig = TileConfig()): DataFrame = {
-    val pruned = features.filter(hashPredicate(z, x, y, cfg))
+    val pruned = prunedScan(features, hashPredicate(z, x, y, cfg))
     val filtered = filter match {
       case Some((attr, v)) => pruned.filter(col(attr) === lit(v))
       case None => pruned
@@ -105,13 +96,41 @@ object TileService {
     * are encoded in uid order, so a tile's bytes do not depend on the
     * other tiles of the panel or on scan order. Returns bytes for EVERY
     * requested tile — an empty tile encodes the empty layer.
+    *
+    * The plan compiles once: the panel's ranges are bound as a
+    * [[HashInRanges]] reference and the per-panel values ride in the UDF
+    * closures, so the generated code is the same for every tile set and
+    * zoom. A `filter` still inlines its equality literal, so each new
+    * filter value compiles anew.
     */
   def panel(features: DataFrame, z: Int, tiles: Seq[(Int, Int)],
             filter: Option[(String, Any)] = None,
             cfg: TileConfig = TileConfig()): Map[(Int, Int), Array[Byte]] = {
     if (tiles.isEmpty) return Map.empty
+    val byTile = panelPlan(features, z, tiles, filter, cfg).collect().groupBy { r =>
+      val t = r.getAs[Long]("_t"); ((t >> 32).toInt, t.toInt)
+    }
+    tiles.map { case (x, y) =>
+      val feats = byTile.getOrElse((x, y), Array.empty[Row])
+        .sortBy(_.getAs[String]("uid")).toSeq.map { r =>
+          val (gt, rings, roles) = GeomUdfs.toMvtRingsRoles(r.getAs[String]("tgeom"))
+          val props = cfg.attributes.flatMap { a =>
+            Option(r.getAs[Any](a)).map(a -> _)
+          }
+          Mvt.Feature(None, gt, rings, props, exteriors = Some(roles))
+        }
+      (x, y) -> Mvt.encode(feats, cfg.baseLayer, cfg.extent)
+    }.toMap
+  }
+
+  /** [[panel]]'s Spark plan: uid, <attributes...>, `_t` (the tile, packed
+    * x << 32 | y) and tgeom, one row per (feature, tile) it renders into.
+    */
+  private[tiles] def panelPlan(features: DataFrame, z: Int, tiles: Seq[(Int, Int)],
+                               filter: Option[(String, Any)],
+                               cfg: TileConfig): DataFrame = {
     val cov = covers(z, tiles, cfg)
-    val pruned = prunedScan(features, cov)
+    val pruned = prunedScan(features, HashInRanges.column(col("hash"), cov.values.flatten.toSeq))
     val filtered = filter match {
       case Some((attr, v)) => pruned.filter(col(attr) === lit(v))
       case None => pruned
@@ -138,58 +157,34 @@ object TileService {
     val (ext, buf) = (cfg.extent, cfg.buffer)
     val clipU = udf((wkt: String, t: Long) =>
       GeomUdfs.clipToTile(wkt, z, (t >> 32).toInt, t.toInt, ext, buf))
-    val rows = filtered
+    filtered
       .select((col("uid") +: cfg.attributes.map(col)) :+ col("geometry") :+
         explode(candU(col("hash"), col("geometry"))).as("_t"): _*)
       .withColumn("tgeom", clipU(col("geometry"), col("_t")))
       .filter(col("tgeom").isNotNull)
       .drop("geometry")
-      .collect()
-    val byTile = rows.groupBy { r =>
-      val t = r.getAs[Long]("_t"); ((t >> 32).toInt, t.toInt)
-    }
-    tiles.map { case (x, y) =>
-      val feats = byTile.getOrElse((x, y), Array.empty[Row])
-        .sortBy(_.getAs[String]("uid")).toSeq.map { r =>
-          val (gt, rings, roles) = GeomUdfs.toMvtRingsRoles(r.getAs[String]("tgeom"))
-          val props = cfg.attributes.flatMap { a =>
-            Option(r.getAs[Any](a)).map(a -> _)
-          }
-          Mvt.Feature(None, gt, rings, props, exteriors = Some(roles))
-        }
-      (x, y) -> Mvt.encode(feats, cfg.baseLayer, cfg.extent)
-    }.toMap
   }
 
-  /** Each tile's buffered Morton cover (the ranges [[hashPredicate]] ORs
-    * together), merged.
+  /** Each tile's buffered Morton cover (the ranges [[hashPredicate]]
+    * holds).
     */
   private def covers(z: Int, tiles: Seq[(Int, Int)],
-                     cfg: TileConfig): Map[(Int, Int), Seq[(Int, Int)]] = {
-    val bufFrac = cfg.buffer.toDouble / cfg.extent.toDouble
-    tiles.distinct.map { case (x, y) =>
-      (x, y) -> mergeRanges(ZRange.coverWithBuffer(z, x, y, cfg.hashLevel, bufFrac))
-    }.toMap
-  }
+                     cfg: TileConfig): Map[(Int, Int), Seq[(Int, Int)]] =
+    tiles.distinct.map { case (x, y) => (x, y) -> cover(z, x, y, cfg) }.toMap
 
   private def inCover(cover: Seq[(Int, Int)], h: Int): Boolean =
     cover.exists { case (lo, hi) => lo <= h && h <= hi }
 
-  /** The store pruned by the merged covers of a panel's tiles. */
-  private def prunedScan(features: DataFrame, cov: Map[(Int, Int), Seq[(Int, Int)]]): DataFrame =
-    features.filter(balancedOr(mergeRanges(cov.values.flatten.toSeq)
-      .map { case (lo, hi) => col("hash").between(lo, hi) }))
-
-  /** Sorted, overlap-merged hash ranges — the panel predicate stays
-    * O(perimeter) sized even when adjacent tiles' covers abut or overlap
-    * (their buffered halos always do).
+  /** The store filtered by a [[HashInRanges]] predicate (a panel's is
+    * merged over its tiles' covers, so it stays O(perimeter) sized even
+    * where their buffered covers overlap). Registers [[HashRangePushdown]]
+    * on the store's session, so the ranges reach the parquet reader in
+    * sessions that never called [[graft.functions.GraftFunctions.register]].
     */
-  private def mergeRanges(rs: Seq[(Int, Int)]): Seq[(Int, Int)] =
-    rs.sorted.foldLeft(List.empty[(Int, Int)]) {
-      case ((plo, phi) :: t, (lo, hi)) if lo <= phi + 1 =>
-        (plo, math.max(phi, hi)) :: t
-      case (acc, r) => r :: acc
-    }.reverse
+  private def prunedScan(features: DataFrame, pred: Column): DataFrame = {
+    HashRangePushdown.register(features.sparkSession)
+    features.filter(pred)
+  }
 
   /** Heatmap grid size: 24 for z in 1..9 else 16 (application.kt:549-553). */
   def gridN(z: Int): Int = if (z >= 1 && z <= 9) 24 else 16
@@ -202,7 +197,7 @@ object TileService {
     val n = gridN(z)
     val scale = (1L << z).toDouble
     val cxy = GeomUdfs.centroidXY(col("geometry"))
-    features.filter(hashPredicate(z, x, y, cfg))
+    prunedScan(features, hashPredicate(z, x, y, cfg))
       .withColumn("_cxy", cxy)
       .withColumn("cell_i", floor((col("_cxy")(0) * scale - x) * n).cast("int"))
       .withColumn("cell_j", floor((col("_cxy")(1) * scale - y) * n).cast("int"))
@@ -227,17 +222,40 @@ object TileService {
     * [0, n), computed with the same double arithmetic. Cells are encoded
     * in (j, i) order, so a tile's bytes depend neither on the other tiles
     * of the panel nor on the aggregate's output order. Returns bytes for
-    * EVERY requested tile — an empty tile encodes the empty layer.
+    * EVERY requested tile — an empty tile encodes the empty layer. Like
+    * [[panel]]'s, its plan compiles once for every tile set and zoom.
     */
   def heatmapPanel(features: DataFrame, z: Int, tiles: Seq[(Int, Int)],
                    cfg: TileConfig = TileConfig()): Map[(Int, Int), Array[Byte]] = {
     if (tiles.isEmpty) return Map.empty
     val n = gridN(z)
+    val counts = heatmapPanelPlan(features, z, tiles, cfg)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
+    val byTile = counts.groupBy(_._1 >> 16)
+    val cellPx = cfg.extent.toDouble / n
+    tileIndex(tiles).map { case (t, k) =>
+      val feats = byTile.getOrElse(k.toLong, Array.empty[(Long, Long)]).toSeq.map {
+        case (c, cnt) =>
+          val (i, j) = ((c & 0xff).toInt, ((c >> 8) & 0xff).toInt)
+          val (x0, y0) = ((i * cellPx).round.toInt, (j * cellPx).round.toInt)
+          val (x1, y1) = (((i + 1) * cellPx).round.toInt, ((j + 1) * cellPx).round.toInt)
+          val ring = Seq((x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0))
+          Mvt.Feature(None, 3, Seq(ring), Seq("count" -> cnt))
+      }
+      t -> Mvt.encode(feats, cfg.baseLayer, cfg.extent)
+    }
+  }
+
+  /** [[heatmapPanel]]'s Spark plan: (`_c`, n) per non-empty cell, `_c`
+    * packing ([[tileIndex]], j, i) so that sorting the keys orders them by
+    * tile, then row j, then column i.
+    */
+  private[tiles] def heatmapPanelPlan(features: DataFrame, z: Int, tiles: Seq[(Int, Int)],
+                                      cfg: TileConfig): DataFrame = {
+    val n = gridN(z)
     val scale = (1L << z).toDouble
     val cov = covers(z, tiles, cfg)
-    val index = cov.keys.toSeq.zipWithIndex.toMap
-    // (tile index, j, i) of each cell a feature counts in, packed so that
-    // sorting the keys orders them by tile, then row j, then column i
+    val index = tileIndex(tiles)
     val cellsU = udf((hash: Int, wkt: String) => {
       val c = GeomUdfs.parse(wkt).getCentroid
       val (cx, cy) = (graft.core.WebMercator.projX(c.getX), graft.core.WebMercator.projY(c.getY))
@@ -252,22 +270,11 @@ object TileService {
         if i >= 0 && i < n && j >= 0 && j < n
       } yield (k.toLong << 16) | (j.toLong << 8) | i.toLong).toArray
     })
-    val counts = prunedScan(features, cov)
+    prunedScan(features, HashInRanges.column(col("hash"), cov.values.flatten.toSeq))
       .select(explode(cellsU(col("hash"), col("geometry"))).as("_c"))
       .groupBy("_c").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
-    val byTile = counts.groupBy(_._1 >> 16)
-    val cellPx = cfg.extent.toDouble / n
-    index.map { case (t, k) =>
-      val feats = byTile.getOrElse(k.toLong, Array.empty[(Long, Long)]).toSeq.map {
-        case (c, cnt) =>
-          val (i, j) = ((c & 0xff).toInt, ((c >> 8) & 0xff).toInt)
-          val (x0, y0) = ((i * cellPx).round.toInt, (j * cellPx).round.toInt)
-          val (x1, y1) = (((i + 1) * cellPx).round.toInt, ((j + 1) * cellPx).round.toInt)
-          val ring = Seq((x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0))
-          Mvt.Feature(None, 3, Seq(ring), Seq("count" -> cnt))
-      }
-      t -> Mvt.encode(feats, cfg.baseLayer, cfg.extent)
-    }
   }
+
+  private def tileIndex(tiles: Seq[(Int, Int)]): Map[(Int, Int), Int] =
+    tiles.distinct.zipWithIndex.toMap
 }

@@ -263,7 +263,7 @@ object StreamingCrawlRehearsal {
       }
       val batch1Counts = twins.map(t => t.name -> t.out.size).toMap
       println(f"STREAMING-CRAWL batch1 wall=$wall1%.1f s " +
-        s"rows=$batch1Counts gateA=identical×${twins.size}")
+        s"rows=$batch1Counts gateA=identicalx${twins.size}")
 
       // ---- micro-batch 2: verbatim copies, then gate B -------------------
       val marks1 = twins.map(_.out.asScala.toSeq) // batch-1 rows per twin
@@ -279,7 +279,7 @@ object StreamingCrawlRehearsal {
           "not visible to the next micro-batch)")
       }
       println(f"STREAMING-CRAWL batch2 wall=$wall2%.1f s " +
-        s"gateB=all-copies-recognized×${twins.size} " +
+        s"gateB=all-copies-recognizedx${twins.size} " +
         f"load=${graft.Bench.loadAvg()}%.2f")
       // post-run saturation loudness (DEDUP_TUNING §5.1) for the two
       // bloom-sidecar stores THIS rehearsal's twins append to (gram

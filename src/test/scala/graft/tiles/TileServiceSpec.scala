@@ -1,8 +1,11 @@
 package graft.tiles
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec}
 import org.apache.spark.sql.functions._
 import graft.{SparkSpec, TestFixtures}
 import graft.core.WebMercator
+import graft.functions.{HashInRanges, HashRangePushdown}
 
 class TileServiceSpec extends SparkSpec {
 
@@ -170,5 +173,76 @@ class TileServiceSpec extends SparkSpec {
     val total = feats.count()
     val scanned = feats.filter(hashPredicate(13, ax, ay, TileConfig())).count()
     assert(scanned < total / 10, s"no pruning: $scanned of $total rows")
+  }
+
+  private lazy val storeRoot = java.nio.file.Files.createTempDirectory("graft-tilestore")
+
+  private lazy val storeDir: String = {
+    val dir = storeRoot.resolve("f").toString
+    TestFixtures.features(spark, Sf).repartitionByRange(4, col("hash"))
+      .sortWithinPartitions("hash").write.parquet(dir)
+    dir
+  }
+
+  override def afterAll(): Unit =
+    try {
+      val files = java.nio.file.Files.walk(storeRoot)
+      try files.sorted(java.util.Comparator.reverseOrder()).forEach(f => java.nio.file.Files.delete(f))
+      finally files.close()
+    } finally super.afterAll()
+
+  /** The fixture features as a parquet store, read by a new session that
+    * never called `GraftFunctions.register`.
+    */
+  private def stored(): DataFrame = spark.newSession().read.parquet(storeDir)
+
+  private def generatedCode(df: DataFrame): Seq[String] = {
+    df.collect() // run it, so adaptive stages hold their final code
+    df.queryExecution.debug.codegenToSeq().map(_._2)
+  }
+
+  test("panel and heatmapPanel plans compile once: the same generated code for any tiles and zoom") {
+    val cfg = TileConfig()
+    val z13 = for { dx <- -1 to 1; dy <- -1 to 1 } yield (ax + dx, ay + dy)
+    val z14 = Seq((2 * ax + 5, 2 * ay), (2 * ax + 6, 2 * ay + 1))
+    val store = stored()
+    val p13 = generatedCode(panelPlan(store, 13, z13, None, cfg))
+    val p14 = generatedCode(panelPlan(store, 14, z14, None, cfg))
+    assert(p13.nonEmpty && p13 == p14,
+      "panel plans over different tiles generate different code")
+    val h6 = generatedCode(heatmapPanelPlan(store, 6, Seq((ax >> 7, ay >> 7)), cfg))
+    val h11 = generatedCode(heatmapPanelPlan(store, 11, Seq((ax >> 2, ay >> 2),
+      ((ax >> 2) + 1, ay >> 2), (ax >> 2, (ay >> 2) + 1)), cfg))
+    assert(h6.nonEmpty && h6 == h11,
+      "heatmap panel plans over different tiles generate different code")
+  }
+
+  test("the tile path keeps the hash ranges pushed into the parquet scan on its own") {
+    val store = stored()
+    assert(!store.sparkSession.experimental.extraStrategies.contains(HashRangePushdown),
+      "fixture broken: the session already has the strategy")
+    val tiles = for { dx <- 0 to 1; dy <- 0 to 1 } yield (ax + dx, ay + dy)
+    val df = panelPlan(store, 13, tiles, None, TileConfig())
+    val plan = df.queryExecution.sparkPlan
+    val scan = plan.collectFirst { case s: FileSourceScanExec => s }.get
+    val ranges = HashInRanges.merge(tiles.flatMap { case (x, y) =>
+      graft.core.ZRange.coverWithBuffer(13, x, y, 13, 64.0 / 4096) })
+    val pushed = scan.metadata("PushedFilters")
+    assert(ranges.size > 1 && pushed.startsWith("[Or("), pushed)
+    ranges.foreach { case (lo, hi) =>
+      assert(pushed.contains(s"GreaterThanOrEqual(hash,$lo)") &&
+        pushed.contains(s"LessThanOrEqual(hash,$hi)"), s"[$lo, $hi] not pushed: $pushed")
+    }
+    assert(!scan.dataFilters.exists(_.exists(_.isInstanceOf[HashInRanges])))
+    val post = plan.collectFirst { case f: FilterExec if f.child eq scan => f.condition }
+    assert(post.exists(c => c.isInstanceOf[HashInRanges] &&
+      !c.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.Or])),
+      s"post-scan filter: $post")
+    assert(plan.toString.contains("Filter hashinranges(hash#"), plan.toString)
+    // and the rows equal the literal BETWEEN form's
+    val between = ranges.map { case (lo, hi) => col("hash").between(lo, hi) }.reduce(_ || _)
+    assert(store.filter(HashInRanges.column(col("hash"), ranges)).select("uid")
+      .collect().map(_.getString(0)).sorted.toSeq ==
+      store.filter(between).select("uid").collect().map(_.getString(0)).sorted.toSeq)
   }
 }
