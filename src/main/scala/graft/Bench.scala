@@ -41,22 +41,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.util.LocalSession.cpus
     val loadStart = loadAvg()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE coalescing sized by the advisory partition target instead of
-      // max parallelism (the Spark tuning guide's own recommendation for
-      // this flag): shuffle.partitions stays the scale knob above, but
-      // post-shuffle reads collapse to data-sized partition counts — at
-      // bench scale that turns 32 near-empty reduce tasks per exchange
-      // into 1-2, at cluster scale it is the guide §2.2 "fewer, larger
-      // reduce partitions" posture with the same 64 MB advisory target.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession()
     spark.range(1000).selectExpr("sum(id)").collect() // session/JIT warmup
     // first parquet query pays datasource classloading + codegen init
     // (~2s); warm it on the smallest table so no timed query absorbs it

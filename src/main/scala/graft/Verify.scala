@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -15,18 +14,7 @@ object Verify {
       System.err.println(f"[verify] WARNING: 1-min loadavg $load0%.2f at " +
         "start — correctness is unaffected, but do not read this run's " +
         "wall-clock as performance signal")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // advisory-sized AQE coalescing (the Bench session's setting — see
-      // the rationale there; kept identical so Verify executes the same
-      // physical plans the bench times)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession()
     new java.io.File(outDir).mkdirs()
     def rmTree(path: String): Unit = {
       def rm(f: java.io.File): Unit = {

@@ -825,7 +825,8 @@ object Dedup {
   /** Shared tail of the removal twins: duplicated-gram set → per-doc
     * sorted hit positions → map-only rewrite over ALL docs.
     *
-    * COST SHAPE, measured (DupDensityProbe, BASELINE round-14): the gram
+    * COST SHAPE, measured (BASELINE round-14 dup-density rows; retired
+    * DupDensityProbe, runnable at `7779ac1`): the gram
     * relation `g` is derived twice — once for the dup set, once for the
     * hits branch — so the removal's premium over the x99-shaped audit is
     * ≈ one extra gram pass + the map-only rewrite, and is DUP-DENSITY-

@@ -66,7 +66,8 @@ object EmbedHistory {
     * KNOBS (nlist=16, kmeansIters=2) are the registry DEMO config for the
     * narrow-margin synthetic corpus — NOT the production derivation. At
     * production scale derive `nlist = ceil(n/targetCellSize)` and size
-    * probes per DEDUP_TUNING.md §5 (the CellPairTune-measured table: on
+    * probes per DEDUP_TUNING.md §5 (the measured table — retired
+    * CellPairTune, runnable at `7779ac1`: on
     * a wide-margin corpus probes=2 suffices at any nlist; on a
     * narrow-margin corpus recall decays with nlist, which is why the
     * demo pins it low). The x42c scaladoc carries the same

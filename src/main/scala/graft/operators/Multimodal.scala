@@ -206,7 +206,8 @@ object Multimodal {
       * frame(s), so with k distinct sampled frames the pair's Jaccard is
       * ~(k−1)/(k+1) — under the 0.5 cut for k < 3. Measured at sf0.1:
       * every missed variant's original has ≤ 2 distinct frames, every
-      * k ≥ 3 video pairs (VideoProbe gates recall above this floor).
+      * k ≥ 3 video pairs (BASELINE.md round-12 video rows; the retired
+      * VideoProbe that gated recall above this floor runs at `7779ac1`).
       */
     val MinMatchableFrames = 3
 

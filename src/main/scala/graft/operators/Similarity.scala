@@ -191,7 +191,7 @@ object Similarity {
 
   /** Deterministic spherical k-means centroids for IVF:
     * farthest-point (k-means++-style, greedy max-min) seeding over a bounded
-    * lowest-id sample, then `iters` Lloyd passes computed DISTRIBUTED — one
+    * hash-ordered sample, then `iters` Lloyd passes computed DISTRIBUTED — one
     * corpus scan per pass accumulating per-partition (sum, count) arrays,
     * merged on the driver in partition order so float summation is
     * reproducible. Driver traffic is O(numPartitions * nlist * dim), never
@@ -199,7 +199,6 @@ object Similarity {
     */
   def kmeansCentroids(corpus: DataFrame, nlist: Int, iters: Int = 2,
                       sampleSize: Int = 256,
-                      hashOrderedSample: Boolean = true,
                       greedySeeding: Boolean = true,
                       lloydOverSample: Boolean = false,
                       dim: Int = 0): Array[Array[Double]] = {
@@ -218,17 +217,13 @@ object Similarity {
     // correlate with ingest order/content (a lowest-id sample would then
     // seed all centroids in one corner of the space); same cost, same
     // reproducibility (xxhash64 is stable across runs/cluster sizes).
-    // hashOrderedSample=false restores the lowest-id sample — kept for
-    // A/B recall measurement in graft.tools.IvfTune, not for production.
-    val order =
-      if (hashOrderedSample) Seq(xxhash64(col("vec_id")).asc, col("vec_id").asc)
-      else Seq(col("vec_id").asc)
+    val order = Seq(xxhash64(col("vec_id")).asc, col("vec_id").asc)
     // `lloydOverSample` bounds the Lloyd passes to this same hash-ordered
     // sample instead of the full corpus: a full-corpus pass is
     // O(n·nlist·dim) per iteration, which turns QUADRATIC when the caller
     // derives nlist ∝ n (the cell-bounded auto form) — training on the
     // bounded sample (FAISS-style) keeps index fitting O(sample·nlist·dim)
-    // while the recall gates (CellLinearProbe, ScaleProbe) hold the
+    // while the recall gates (SimilaritySpec, ScaleProbe) hold the
     // quality bar. Default false: the serving IVF (x43b) trains tiny
     // nlists where the exact full-corpus pass is cheap and its recall
     // numbers are pinned.
@@ -388,9 +383,7 @@ object Similarity {
     ivfTopKWithCentroids(corpus, queries, k,
       kmeansCentroids(corpus, nlist, kmeansIters), nprobe)
 
-  /** [[ivfTopK]] with a precomputed/offline-fit centroid set (also the
-    * A/B-measurement entry for [[graft.tools.IvfTune]]).
-    */
+  /** [[ivfTopK]] with a precomputed/offline-fit centroid set. */
   def ivfTopKWithCentroids(corpus: DataFrame, queries: DataFrame, k: Int,
                            cents: Array[Array[Double]],
                            nprobe: Int = 4,
@@ -708,7 +701,7 @@ object Similarity {
     // score g coarse groups, keep the best `coarseProbes`, score only their
     // member cells. Exactly like IVF's own coarse/fine split; a true
     // nearest cell in an unprobed group is the new miss mode, which the
-    // CellLinearProbe/ScaleProbe recall gates measure (identical vectors
+    // SimilaritySpec/ScaleProbe recall gates measure (identical vectors
     // still assign identically, so exact-dup recall is unaffected).
     // Below the threshold (every registry config) the scan stays exact.
     val coarseOpt: Option[(Array[Array[Double]], Array[Array[Int]])] =
@@ -763,7 +756,9 @@ object Similarity {
     * The k×d broadcast and the one count+sample driver pull are the only
     * non-distributed pieces, both O(nlist·dim).
     *
-    * Recall honesty (measured, [[graft.tools.CellPairTune]]): bounded work
+    * Recall honesty (measured, DEDUP_TUNING.md §5; the CellPairTune tool
+    * behind that table is retired, runnable at `7779ac1` — BASELINE.md
+    * "Retired tools"): bounded work
     * buys recall only when near-dup pairs are much closer than background
     * pairs — the SemDeDup regime (real embedding corpora: dup pairs at
     * cos ≥ ~0.95 land in one cell at any nlist). On the synthetic
@@ -775,7 +770,8 @@ object Similarity {
     * and gate recall on a held-out pair sample when deploying.
     *
     * In the regime this form is FOR — a real dup margin
-    * ([[graft.tools.CellLinearProbe]]'s corpus: planted pairs at
+    * (BASELINE.md round-9 linear-regime panel, retired CellLinearProbe
+    * at `7779ac1`: planted pairs at
     * cos ≈ 0.995 over isotropic background) — the linear claim is
     * measured: at 30× (94.5k vectors, derived nlist 739) the auto form's
     * wall ratio is 6.5 vs the exact search's 19.3. Even there, cell-split

@@ -709,9 +709,9 @@ object TextOps {
     * at each stage. The cascade emits the same verdicts; only the
     * non-verdict columns differ (unprobed legs read 0). That form is
     * x126 (batch) and `CurationStreams.crawlTriage(cascade = true)`
-    * (streaming). Round-18 cost regime (BASELINE NovelBatchProbe/
-    * TriageScaleProbe rows): fully-novel batches short-circuit BOTH
-    * forms to zero store reads through the bloom-gated probes; on
+    * (streaming). Round-18 cost regime (BASELINE NovelBatchProbe rows —
+    * retired tool, runnable at `7779ac1` — and TriageScaleProbe rows):
+    * fully-novel batches short-circuit BOTH forms to zero store reads through the bloom-gated probes; on
     * store-scale dup-heavy batches the cascade wins 2.3×; on small
     * dup-heavy batches the forms tie (the all-legs form got cheap on
     * exactly the slices the cascade used to skip).

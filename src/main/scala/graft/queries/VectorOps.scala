@@ -703,7 +703,8 @@ object VectorOps {
 
   /** ANN top-10 via IVF coarse quantization (rows-only, same spec gate).
     *
-    * Config is the IvfTune-measured sweet spot on the near-isotropic
+    * Config is the measured sweet spot (retired IvfTune at `7779ac1`,
+    * gated in SimilaritySpec at >= 0.78) on the near-isotropic
     * synthetic embeddings (mean recall@10 0.80 over the 8 tune queries,
     * vs 0.46 at the raw defaults): 3 Lloyd passes over a 512-vector
     * hash-ordered sample, 8 of 16 cells probed. Synthetic isotropy is the
@@ -944,7 +945,8 @@ object VectorOps {
     * corpus. Rows-only: the candidate set is approximate; recall@20 vs the
     * exact x42 answer is asserted in SimilaritySpec (registry demo config
     * nlist=8/probes=3 measures 1.0 at sf0.001, 0.95 at sf0.1, 1.0 at the
-    * 10× probe corpus — CellPairTune table; the near-isotropic synthetic
+    * 10× probe corpus — DEDUP_TUNING.md §5 table, from the retired
+    * CellPairTune at `7779ac1`; the near-isotropic synthetic
     * corpus is LSH/cell quantization's worst case, so these hold with the
     * coarse demo nlist).
     */
@@ -972,7 +974,8 @@ object VectorOps {
     * sf0.1; the probe corpora derive 188/563 cells at 10×/30×, crossing
     * the two-level assignment threshold). The regime bounds per-vector
     * work at probes²·targetCellSize dots — linear in n, measured at 30×
-    * in [[graft.tools.CellLinearProbe]] (auto 7.2 s vs exact 19.1 s).
+    * in the BASELINE.md round-9 linear-regime panel (auto 7.2 s vs exact
+    * 19.1 s; retired CellLinearProbe, runnable at `7779ac1`).
     * An earlier draft pinned targetCellSize = 32 to force a large nlist
     * at the tiny registry SFs; at probe scale that drowned the search in
     * per-bucket fixed costs (22,500 buckets × ~13 rows — 25 s at 30×,
@@ -994,7 +997,7 @@ object VectorOps {
     * broadcast centroids), so recall 1.0 is deterministic by
     * construction, which is what a hash-matched CORRECTNESS row demands;
     * the NEAR-dup (cos ≈ 0.995, perturbed) recall gates stay in
-    * SimilaritySpec/CellLinearProbe where a measured threshold is the
+    * SimilaritySpec/ScaleProbe where a measured threshold is the
     * right contract. k = 128 bounds the per-task heap safely above the
     * worst per-label planted count (45 at sf0.1) even if a whole label
     * collapses into one cell.

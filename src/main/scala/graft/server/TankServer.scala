@@ -354,19 +354,9 @@ final class TankServer(spark: SparkSession, cfg: StoreConfig,
 
   private def ingestRaw(lines: Seq[String]): Long = writeLock.synchronized {
     import spark.implicits._
-    val r = FeatureStore.ingest(lines.toDF("raw"), cfg)
-    val good = r.good.cache()
-    try {
-      val n = good.count()
-      if (n > 0) {
-        FeatureStore.append(good, cfg) // manifest-committed (snapshot-atomic)
-        cache.invalidateTouched(
-          good.select("hash").distinct().collect().map(_.getInt(0)))
-      }
-      val rej = r.rejected
-      if (!rej.isEmpty) FeatureStore.writeRejected(rej, cfg)
-      n
-    } finally good.unpersist(): Unit
+    val (n, touched) = FeatureStore.appendRaw(lines.toDF("raw"), cfg)
+    cache.invalidateTouched(touched)
+    n
   }
 
   private def deleteFeature(ex: HttpExchange, uid: String): Unit = {

@@ -108,21 +108,44 @@ object FeatureStore {
     raw.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        lazy val r = ingest(batch, cfg)
-        lazy val good = r.good.sortWithinPartitions("hash")
+        var touched = Array.empty[Int]
         val committed = guard.commit(batch.sparkSession,
             StreamMark.markPathAt(cfg.path), batchId) {
-          // manifest-committed append: concurrent tile readers see the
-          // batch atomically or not at all
-          append(good, cfg)
-          val rej = r.rejected
-          if (!rej.isEmpty) writeRejected(rej, cfg)
+          touched = appendRaw(batch, cfg)._2
         }
-        if (committed)
-          onTouched(good.select(col("hash")).distinct().collect()
-            .map(_.getInt(0)).toSeq)
+        if (committed) onTouched(touched.toSeq)
       }
       .start()
+  }
+
+  /** Parse `raw` ONCE and commit it: the good rows are appended
+    * (hash-sorted within partitions, manifest-committed, so concurrent
+    * tile readers see them atomically or not at all) when there are any,
+    * the rejected rows go to the dead-letter sink. Both outputs read one
+    * pin of the flagged rows, so however many actions follow (count,
+    * append, touched-cell collect, dead-letter check and write) each raw
+    * line is parsed once; the pin is released on return or throw.
+    * Returns the good-row count and the good rows' distinct Morton cells
+    * (bounded: cells, not rows) — the shared body of the REST ingest
+    * ([[graft.server.TankServer]]) and the streaming sink above.
+    */
+  def appendRaw(raw: DataFrame, cfg: StoreConfig): (Long, Array[Int]) = {
+    val pin = flagged(raw, cfg)
+      .select((Seq("raw", "_id", "geometry", "hash", "_rejected") ++
+        cfg.attrs.map(_.name)).map(col): _*)
+      .persist()
+    try {
+      val r = split(pin, cfg)
+      val n = r.good.count()
+      val touched =
+        if (n == 0) Array.empty[Int]
+        else {
+          append(r.good.sortWithinPartitions("hash"), cfg)
+          r.good.select(col("hash")).distinct().collect().map(_.getInt(0))
+        }
+      if (!r.rejected.isEmpty) writeRejected(r.rejected, cfg)
+      (n, touched)
+    } finally pin.unpersist(): Unit
   }
 
   /** One whole FeatureCollection document (A3 `geojson=true`). The features
@@ -213,7 +236,14 @@ object FeatureStore {
   final case class Ingested(good: DataFrame, rejected: DataFrame)
 
   /** The coercion matrix over raw feature-JSON rows (column `raw`). */
-  def ingest(raw: DataFrame, cfg: StoreConfig): Ingested = {
+  def ingest(raw: DataFrame, cfg: StoreConfig): Ingested =
+    split(flagged(raw, cfg), cfg)
+
+  /** `raw` with every coerced attr, `geometry`, its Morton `hash` (null on
+    * rejected rows) and the `_rejected` flag: the one parse of each line
+    * that [[split]] and [[appendRaw]]'s pin read.
+    */
+  private def flagged(raw: DataFrame, cfg: StoreConfig): DataFrame = {
     val geomWkt = udf((g: String) => GeoJson.toWkt(g))
     val hashUdf = udf((wkt: String) => GeomUdfs.centroidHash(wkt, cfg.hashLevel))
 
@@ -261,8 +291,12 @@ object FeatureStore {
 
     val anyBad = (col("geometry").isNull +: attrChecks.map(_._2))
       .reduce(_ || _)
-    val withFlags = df.withColumn("_rejected", anyBad)
+    df.withColumn("_rejected", anyBad)
+      .withColumn("hash", when(!col("_rejected"), hashUdf(col("geometry"))))
+  }
 
+  /** Good and dead-letter rows of a [[flagged]] frame. */
+  private def split(withFlags: DataFrame, cfg: StoreConfig): Ingested = {
     val good = withFlags.filter(!col("_rejected"))
       .withColumn("uid",
         coalesce(col("_id"),
@@ -271,7 +305,6 @@ object FeatureStore {
             substring(md5(col("raw")), 1, 8), substring(md5(col("raw")), 9, 4),
             substring(md5(col("raw")), 13, 4), substring(md5(col("raw")), 17, 4),
             substring(md5(col("raw")), 21, 12))))
-      .withColumn("hash", hashUdf(col("geometry")))
       .withColumn("timestamp", to_timestamp(lit(cfg.ingestTime)))
       .select((Reserved.map(col) ++ cfg.attrs.map(a => col(a.name))): _*)
 

@@ -64,10 +64,12 @@ object KeyBloom {
     * sidecar totals ~107 MB across buckets (broadcast-viable at this
     * tier), and an fpp miss only adds a verified-and-discarded candidate.
     *
-    * SIZING LAW for the store `bloomFpp` knob (NovelBatchProbe measures
-    * it): a fully-novel batch short-circuits to ZERO store reads only
-    * while its distinct probe keys number ≲ 1/fpp (expected false
-    * positives < 1); past that, it reads the fp candidates' buckets —
+    * SIZING LAW for the store `bloomFpp` knob (measured: BASELINE.md
+    * round-18 NovelBatchProbe rows, DEDUP_TUNING.md §4.1; the retired
+    * probe runs at `7779ac1`): a fully-novel batch short-circuits to
+    * ZERO store reads only while its distinct probe keys number ≲ 1/fpp
+    * (expected false positives < 1); past that, it reads the fp
+    * candidates' buckets —
     * a fraction ≈ min(1, keys × fpp / buckets) of the store. At the
     * default 0.02 that ceiling is ~50 keys — right for the 1-key/doc
     * HASH store at micro-batch cadence, far too low for the ~100-keys/

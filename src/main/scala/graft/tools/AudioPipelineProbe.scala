@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.util.LocalSession
 import org.apache.spark.sql.functions._
 
 /** Measures the documented audio PRODUCTION POSTURE as a COMPOSED
@@ -34,12 +34,7 @@ object AudioPipelineProbe {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.1", "/tmp/graft_scale10",
         "/tmp/graft_scale100")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .appName("audio-pipeline-probe").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     println(s"[audio-pipeline-probe] loadavg ${graft.Bench.loadAvg()}")
     import graft.operators.{Components, Multimodal}
     for (d <- dirs) {

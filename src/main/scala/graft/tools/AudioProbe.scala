@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.util.LocalSession
 import org.apache.spark.sql.functions._
 
 /** Cross-scale probe for the audio constellation axis (x111/x112):
@@ -51,12 +51,7 @@ object AudioProbe {
       if (tune) Seq((0, 64), (0, 96), (0, 128), (0, 192), (0, 256))
       else Seq((sys.env.getOrElse("AUDIO_MAX_DF", "0").toInt,
         sys.env.getOrElse("AUDIO_MAX_PER_HASH", "128").toInt))
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .appName("audio-probe").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     println(s"[audio-probe] loadavg ${graft.Bench.loadAvg()}")
     for (d <- dirs) {
       val media = graft.operators.Multimodal.withReencodedVariants(

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.util.LocalSession
 import org.apache.spark.sql.functions._
 
 /** Wall-clock evidence for curateV3 (the streaming removal-first
@@ -32,12 +32,7 @@ object CurateV3Probe {
     val refDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val corpusDir = if (args.length > 1) args(1) else "/tmp/graft_scale10"
     val nBatches = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .appName("curatev3-probe").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     import spark.implicits._
     println(s"[curatev3-probe] loadavg ${graft.Bench.loadAvg()} " +
       s"ref=$refDir corpus=$corpusDir batches=$nBatches")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.util.LocalSession
 
 /** x123 scale probe: a FIXED batch (the sf0.1 split's batch side) probed
   * against the MinHashHistory index of 1×/10×/100× histories — the x113
@@ -28,13 +28,7 @@ object NearDupProbe {
     val scaled =
       if (args.length > 1) args.drop(1).toSeq
       else Seq("/tmp/graft_scale10", "/tmp/graft_scale100")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     println(s"[neardup-probe] loadavg $load0 base=$baseSf scaled=$scaled")
 
     import graft.queries.TextOps

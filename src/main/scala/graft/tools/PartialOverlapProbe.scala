@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.util.LocalSession
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -492,12 +493,7 @@ object PartialOverlapProbe {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.1", "/tmp/graft_scale10",
         "/tmp/graft_scale100")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .appName("partial-overlap-probe").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     println(s"[partial-overlap-probe] loadavg ${graft.Bench.loadAvg()}")
     // GRAFT_PO_KIND=audio|video narrows a re-run to one axis
     val kind = sys.env.getOrElse("GRAFT_PO_KIND", "both")

@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.util.LocalSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** End-to-end production rehearsal: the composed training-data pipeline —
@@ -140,13 +141,7 @@ object PipelineRehearsal {
     val scaled = if (args.length > 1) args(1) else "/tmp/graft_scale100"
     val factor = if (args.length > 2) args(2).toInt else 100
     val work = if (args.length > 3) args(3) else "/tmp/graft_rehearsal"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     if (!new java.io.File(s"$scaled/embeddings.parquet/_SUCCESS").exists()) {
       println(s"[rehearsal] generating ${factor}x corpus at $scaled")
       ScaleProbe.generate(spark, baseSf, scaled, factor)

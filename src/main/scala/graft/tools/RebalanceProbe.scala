@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.util.LocalSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew-growth accounting for [[graft.operators.IvfStore.rebalance]] — the
@@ -37,16 +38,12 @@ object RebalanceProbe {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val growFactor = if (args.length > 1) args(1).toInt else 2
     val cellSize = if (args.length > 2) args(2).toInt else 256
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("rebalance-probe").getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
     import graft.operators.{IvfStore, Similarity}
 
-    // task-level input-bytes accounting (the StoreBench device): the
+    // task-level input-bytes accounting (BASELINE.md round-11 index rows
+    // used the same device in the retired StoreBench, at `7779ac1`): the
     // before/after comparison is only honest with the bytes each probe
     // actually reads — "files-not-read" undersells a hot cell whose ONE
     // file holds a third of the store

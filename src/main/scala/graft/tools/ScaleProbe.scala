@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.util.LocalSession
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -209,7 +210,7 @@ object ScaleProbe {
     * nlist=8, probes=3) vs the exact x42 blocked search on `dir`'s
     * embeddings — the pair-producer twin of [[annRecall]]: a cell config
     * whose wall time scales must ALSO keep finding the same pairs as the
-    * corpus grows (CellPairTune measures 1.0 at sf0.001/10×/30× with the
+    * corpus grows (DEDUP_TUNING.md §5: 1.0 at sf0.001/10×/30× with the
     * registry config; a drop below the gate means cells/probes must grow).
     */
   def pairRecall(spark: SparkSession, dir: String): Double = {
@@ -288,13 +289,7 @@ object ScaleProbe {
             s"(valid: ${ProbeQueries.mkString(",")})")
         asked
       } else ProbeQueries
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     val marker = new java.io.File(s"$outDir/embeddings.parquet/_SUCCESS")
     if (!marker.exists()) {
       println(s"[scaleprobe] generating ${factor}x corpus at $outDir")

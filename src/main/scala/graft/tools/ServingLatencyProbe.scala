@@ -3,7 +3,7 @@ package graft.tools
 import java.net.{HttpURLConnection, URI}
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
 
-import org.apache.spark.sql.SparkSession
+import graft.util.LocalSession
 
 /** Concurrent tile-read latency for the serving shim — the ops row the
   * engine-side evidence never covered: [[graft.server.TankServer]] has
@@ -53,12 +53,7 @@ object ServingLatencyProbe {
     val load0 = graft.Bench.loadAvg()
     val nFeatures = if (args.length > 0) args(0).toInt else 40000
     val panel = if (args.length > 1) args(1).toInt else 64
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     println(s"[serving-latency] loadavg $load0 features=$nFeatures panel=$panel")
 
     import graft.sources.FeatureStore.{AttrField, StoreConfig}

@@ -2,6 +2,7 @@ package graft.tools
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import graft.util.LocalSession
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -40,15 +41,8 @@ object StreamingCrawlRehearsal {
   def main(args: Array[String]): Unit = {
     val load0 = graft.Bench.loadAvg()
     val baseSf = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val spark: SparkSession = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft_streamreh_wh_${System.nanoTime}")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark: SparkSession = LocalSession(
+      "spark.sql.warehouse.dir" -> s"/tmp/graft_streamreh_wh_${System.nanoTime}")
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     println(s"[streaming-crawl-rehearsal] loadavg $load0 base=$baseSf")

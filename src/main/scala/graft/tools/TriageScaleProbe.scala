@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.util.LocalSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** x125 at crawl cadence vs history growth — the composed-triage analog
@@ -31,15 +32,8 @@ object TriageScaleProbe {
     val scaled =
       if (args.length > 1) args.drop(1).toSeq
       else Seq("/tmp/graft_scale10", "/tmp/graft_scale100")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft_triagesp_wh_${System.nanoTime}")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(
+      "spark.sql.warehouse.dir" -> s"/tmp/graft_triagesp_wh_${System.nanoTime}")
     println(s"[triage-scale] loadavg $load0 base=$baseSf scaled=$scaled")
 
     import graft.operators.Dedup

@@ -125,7 +125,8 @@ class SimilaritySpec extends SparkSpec {
 
   test("x43b's tuned IVF config holds recall@10 >= 0.78 (IvfTune sweet spot)") {
     // the registry entry's config (3 Lloyd passes over a 512-vector
-    // hash-ordered sample, nprobe 8/16) measured 0.80 in IvfTune; gate a
+    // hash-ordered sample, nprobe 8/16) measured 0.80 in IvfTune (retired;
+    // runnable at 7779ac1, BASELINE.md "Retired tools"); gate a
     // hair below so the tuning can't silently regress (e.g. a seeding or
     // assignment change re-baking a worse golden, the round-3 escape)
     val (emb, q) = queriesDf(ivfQids)
@@ -271,7 +272,7 @@ class SimilaritySpec extends SparkSpec {
     val approx = pairSet(Similarity.cellBoundedTopPairs(
       embTyped, 20, cents, probes = 3, targetChunk = 256))
     val recall = (approx & exact).size.toDouble / exact.size
-    // CellPairTune measures 1.0 here and 0.95 at sf0.1 — deterministic
+    // 1.0 here and 0.95 at sf0.1 (DEDUP_TUNING.md §5) — deterministic
     // (hash-ordered sample + greedy seeding + fixed Lloyd passes), so a
     // drop means the assignment or banding REGRESSED, not noise
     assert(recall >= 0.9, s"cell-bounded pair recall@20 $recall < 0.9")

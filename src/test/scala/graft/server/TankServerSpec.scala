@@ -339,7 +339,7 @@ class TankServerSpec extends SparkSpec {
   }
 
   test("streaming serving loop: file-source ingest surfaces in HTTP tile reads (cache invalidated per batch)") {
-    // the end-to-end loop EntrySmoke closes for queries, closed for serving:
+    // the end-to-end streaming loop, closed for serving:
     // a co-located Structured Streaming ingest appends to the server's
     // store AND invalidates its tile cache per committed micro-batch — an
     // HTTP reader must see streamed features without ever being served a

@@ -152,6 +152,49 @@ class FeatureStoreSpec extends SparkSpec {
     assert(FeatureStore.read(spark, cfg).count() == 3)
   }
 
+  /** A raw-line source that counts how often each line is read: every
+    * re-run of the ingest parse over the raw lineage reads it again.
+    */
+  private def countingRaw(raw: org.apache.spark.sql.DataFrame)
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.util.LongAccumulator) = {
+    val reads = spark.sparkContext.longAccumulator("raw line reads")
+    val counted = udf { (s: String) => reads.add(1); s }.asNondeterministic()
+    (raw.select(counted(col("value")).as("raw")), reads)
+  }
+
+  test("streaming ingest parses each raw line once per batch, rejected lines included") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    val dir = tmpDir()
+    val cfg = cfg0.copy(path = s"$dir/store")
+    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[String]
+    val (raw, reads) = countingRaw(mem.toDF())
+    val q = FeatureStore.ingestStream(raw, cfg, s"$dir/ckpt")
+    try {
+      mem.addData(lines)
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(FeatureStore.read(spark, cfg).count() == 4)
+    assert(spark.read.parquet(s"${cfg.path}_rejected").count() == 4)
+    assert(reads.value == lines.size,
+      s"${reads.value} raw-line reads for one batch of ${lines.size} lines")
+  }
+
+  test("appendRaw parses each raw line once: good rows appended, rejected dead-lettered, touched cells returned") {
+    import spark.implicits._
+    val dir = tmpDir()
+    val cfg = cfg0.copy(path = s"$dir/store")
+    Files.writeString(java.nio.file.Paths.get(s"$dir/in.ndjson"), lines.mkString("\n"))
+    val (raw, reads) = countingRaw(spark.read.text(s"$dir/in.ndjson"))
+    val (n, touched) = FeatureStore.appendRaw(raw, cfg)
+    assert(reads.value == lines.size,
+      s"${reads.value} raw-line reads for ${lines.size} lines")
+    val stored = FeatureStore.read(spark, cfg)
+    assert(n == 4 && stored.count() == 4)
+    assert(touched.toSet == stored.select("hash").as[Int].collect().toSet)
+    assert(spark.read.parquet(s"${cfg.path}_rejected").count() == 4)
+  }
+
   test("a second ingest stream with a fresh checkpoint over a surviving store ingests its own batch 0") {
     val dir = tmpDir()
     val cfg = cfg0.copy(path = s"$dir/store")
