@@ -28,13 +28,13 @@ object ZRange {
   }
 
   /** Hash ranges of all hashLevel cells whose extent intersects tile
-    * (z, x, y) expanded by `bufferFrac` of the tile size on every side
-    * (default 1/128 ~= the reference's buffer=64/extent=4096 * 0.5 margin,
-    * application.kt:63-67). Returned ranges are merged where contiguous and
-    * sorted. Works for any z (fixes D1 for z > hashLevel).
+    * (z, x, y) expanded by `bufferFrac` of the tile size on every side (the
+    * tile reads pass the clip buffer's buffer/extent, the reference's
+    * 64/4096, application.kt:63-67). Returned ranges are merged where
+    * contiguous and sorted. Works for any z (fixes D1 for z > hashLevel).
     */
   def coverWithBuffer(z: Int, x: Int, y: Int, hashLevel: Int,
-                      bufferFrac: Double = 1.0 / 128.0): Seq[(Int, Int)] = {
+                      bufferFrac: Double): Seq[(Int, Int)] = {
     val max = (1 << hashLevel) - 1
     // tile extent in hash-level cell units
     val scale = math.pow(2.0, (hashLevel - z).toDouble)
@@ -80,7 +80,9 @@ object ZRange {
     mergeRanges(out.toSeq)
   }
 
-  /** Merge sorted-or-unsorted inclusive ranges that touch or overlap. */
+  /** Merge sorted-or-unsorted inclusive ranges that touch or overlap; the
+    * engine's one range merge (safe for a range ending at `Int.MaxValue`).
+    */
   def mergeRanges(rs: Seq[(Int, Int)]): Seq[(Int, Int)] = {
     if (rs.isEmpty) return Nil
     val sorted = rs.sortBy(_._1)

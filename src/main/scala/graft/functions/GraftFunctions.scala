@@ -97,8 +97,10 @@ object GraftFunctions {
 }
 
 /** `spark.sql.extensions` entry point injecting the native expressions,
-  * the tile-predicate lowering rules and the [[HashInRanges]] scan
-  * pushdown.
+  * the two spatial lowering rules ([[TilePredicateRewrite]],
+  * [[SpatialPredicateRewrite]]), which emit a [[HashInRanges]], and the
+  * [[HashRangePushdown]] strategy that hands its hash ranges to the
+  * parquet scan.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

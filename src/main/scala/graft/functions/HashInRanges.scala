@@ -2,30 +2,35 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{And, Expression, GreaterThanOrEqual, LessThanOrEqual, Literal, Or, Predicate, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{And, Cast, Expression, GreaterThanOrEqual, LessThanOrEqual, Literal, Or, Predicate, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.planning.ScanOperation
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.datasources.{FileSourceStrategy, HadoopFsRelation, LogicalRelationWithTable}
-import org.apache.spark.sql.functions.lit
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.types.{IntegerType, LongType}
 import org.apache.spark.sql.GraftBridge
+import graft.core.ZRange
 
-/** `hash` lies in one of a fixed set of inclusive hash ranges — the tile
-  * read's Z-range prune ([[graft.tiles.TileService]]).
+/** `hash` lies in one of a fixed set of inclusive hash ranges — the
+  * engine's one Morton-range predicate. Every hash-range filter is one:
+  * the tile reads ([[graft.tiles.TileService]]), the SQL `in_tile` and
+  * `st_centroid_in_bbox` rewrites ([[TilePredicateRewrite]],
+  * [[SpatialPredicateRewrite]]) and the feature store's tile delete
+  * ([[graft.sources.FeatureStore.deleteTile]]).
   *
   * `ranges` holds sorted, merged `lo, hi` pairs flattened into one array.
   * The generated code reads it through a codegen reference and calls one
   * static binary search (the [[QuantileBinExpr]] idiom), so the generated
-  * Java is the same for every range set and a new tile set compiles no new
-  * class. An OR of BETWEEN literals, the form this replaces, is inlined
-  * into the generated source, so every new tile set was new source text
-  * and a new Janino compile. The parquet pushdown of that OR is kept by
+  * Java is the same for every range set and a new tile or bbox compiles no
+  * new class. An OR of BETWEEN literals would be inlined into the
+  * generated source, so every new range set would be new source text and
+  * a new Janino compile. The parquet pushdown of that OR is kept by
   * [[HashRangePushdown]], which hands the scan the lowered form.
   *
-  * A null hash gives null, so a filter drops the row, as BETWEEN does. Not
-  * null-intolerant on purpose: the OR it replaces inferred no
+  * The hash is INT or BIGINT; a BIGINT outside the int range is in no
+  * range. A null hash gives null, so a filter drops the row, as BETWEEN
+  * does. Not null-intolerant on purpose: the OR it replaces inferred no
   * `IsNotNull(hash)`, and the pushed filters stay the same.
   */
 case class HashInRanges(child: Expression, ranges: Array[Int])
@@ -34,28 +39,40 @@ case class HashInRanges(child: Expression, ranges: Array[Int])
   override def prettyName: String = "hashinranges"
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == IntegerType) TypeCheckResult.TypeCheckSuccess
+    if (child.dataType == IntegerType || child.dataType == LongType)
+      TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires INT, got ${child.dataType.simpleString}")
+      s"$prettyName requires INT or BIGINT, got ${child.dataType.simpleString}")
 
-  override protected def nullSafeEval(h: Any): Any =
-    HashInRanges.contains(ranges, h.asInstanceOf[Int])
+  override protected def nullSafeEval(h: Any): Any = h match {
+    case i: Int => HashInRanges.contains(ranges, i)
+    case l: Long => HashInRanges.contains(ranges, l)
+  }
 
+  // Java picks the int or long overload by the child's type
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("ranges", ranges, "int[]")
     defineCodeGen(ctx, ev, h => s"graft.functions.HashInRanges.contains($ref, $h)")
   }
 
   /** The pushable form: a log-depth OR of `lo <= hash AND hash <= hi` (a
-    * left-deep OR over many ranges overflows Catalyst's recursion); no
-    * ranges is `false`.
+    * left-deep OR over many ranges overflows Catalyst's recursion), the
+    * literals typed to the hash (a cast would block the pushdown). An int
+    * hash widened to BIGINT is compared as the int column itself, as
+    * Spark's cast unwrapping does for literal comparisons.
     */
   def lowered: Expression = {
+    val hash = child match {
+      case Cast(c, LongType, _, _) if c.dataType == IntegerType => c
+      case c => c
+    }
+    val lit: Int => Literal =
+      if (hash.dataType == LongType) v => Literal(v.toLong) else v => Literal(v)
     def or(ps: Seq[(Int, Int)]): Expression =
       if (ps.isEmpty) Literal(false)
       else if (ps.size == 1)
-        And(GreaterThanOrEqual(child, Literal(ps.head._1)),
-          LessThanOrEqual(child, Literal(ps.head._2)))
+        And(GreaterThanOrEqual(hash, lit(ps.head._1)),
+          LessThanOrEqual(hash, lit(ps.head._2)))
       else {
         val (l, r) = ps.splitAt(ps.size / 2)
         Or(or(l), or(r))
@@ -81,32 +98,35 @@ case class HashInRanges(child: Expression, ranges: Array[Int])
 object HashInRanges {
 
   /** The predicate over `hash` for inclusive ranges in any order, possibly
-    * overlapping or abutting. No ranges is `lit(false)`, which the
-    * optimizer turns into an empty relation with no scan at all.
+    * overlapping or abutting. No ranges is `false`, which the optimizer
+    * turns into an empty relation with no scan at all.
     */
-  def column(hash: Column, ranges: Seq[(Int, Int)]): Column = {
-    val merged = merge(ranges)
-    if (merged.isEmpty) lit(false)
-    else GraftBridge.column(HashInRanges(GraftBridge.expression(hash),
-      merged.flatMap { case (lo, hi) => Seq(lo, hi) }.toArray))
+  def of(hash: Expression, ranges: Seq[(Int, Int)]): Expression = {
+    val r = flat(ranges)
+    if (r.isEmpty) Literal(false) else HashInRanges(hash, r)
   }
 
-  /** Sorted, overlap- and adjacency-merged ranges. */
-  def merge(rs: Seq[(Int, Int)]): Seq[(Int, Int)] =
-    rs.sorted.foldLeft(List.empty[(Int, Int)]) {
-      case ((plo, phi) :: t, (lo, hi)) if phi == Int.MaxValue || lo <= phi + 1 =>
-        (plo, math.max(phi, hi)) :: t
-      case (acc, r) => r :: acc
-    }.reverse
+  /** [[of]] as a Column. */
+  def column(hash: Column, ranges: Seq[(Int, Int)]): Column =
+    GraftBridge.column(of(GraftBridge.expression(hash), ranges))
 
-  /** `h` in one of the flattened sorted, merged `ranges`: a binary search
-    * over the range bounds. `h` is inside exactly when it hits a bound or
-    * its insertion point follows a `lo` (an odd index).
+  /** Ranges sorted, merged and flattened to the `lo, hi` array that
+    * [[contains]] searches.
+    */
+  def flat(ranges: Seq[(Int, Int)]): Array[Int] =
+    ZRange.mergeRanges(ranges).flatMap { case (lo, hi) => Seq(lo, hi) }.toArray
+
+  /** `h` in one of the [[flat]] `ranges`: a binary search over the range
+    * bounds. `h` is inside exactly when it hits a bound or its insertion
+    * point follows a `lo` (an odd index).
     */
   def contains(ranges: Array[Int], h: Int): Boolean = {
     val i = java.util.Arrays.binarySearch(ranges, h)
     i >= 0 || ((-i - 1) & 1) == 1
   }
+
+  def contains(ranges: Array[Int], h: Long): Boolean =
+    h >= Int.MinValue && h <= Int.MaxValue && contains(ranges, h.toInt)
 }
 
 /** Planner strategy keeping the parquet pushdown of [[HashInRanges]]. A

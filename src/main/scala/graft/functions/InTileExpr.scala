@@ -1,20 +1,22 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{And, Expression, GreaterThanOrEqual, LessThanOrEqual, Literal, Or}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{BooleanType, DataType, IntegerType, LongType}
-import graft.core.ZRange
+import graft.tiles.TileService
 
 /** `in_tile(hash, z, x, y)` — true iff a Morton hash falls inside the
-  * Z-range cover of slippy tile (z, x, y) at hash level 13. The declarative
-  * spatial predicate of the engine: users write the *intent* ("rows of this
-  * tile") and [[TilePredicateRewrite]] lowers it to plain hash-range
-  * comparisons that Catalyst pushes into the parquet scan — the optimizer-
-  * rule equivalent of the reference's hand-coded Z-range enumeration
-  * (`application.kt:371-400`).
+  * buffered Z-range cover of slippy tile (z, x, y) at hash level 13: the
+  * cover the tile read itself scans ([[graft.tiles.TileService]] with the
+  * default config, clip buffer 64/4096). The declarative spatial predicate
+  * of the engine: users write the *intent* ("rows of this tile") and
+  * [[TilePredicateRewrite]] lowers it to a [[HashInRanges]], which
+  * [[HashRangePushdown]] pushes into the parquet scan as hash-range
+  * comparisons — the optimizer-rule equivalent of the reference's
+  * hand-coded Z-range enumeration (`application.kt:371-400`).
   *
   * Evaluation (interpreted fallback, for non-literal tile coords) computes
   * the cover per call; the rewrite is the hot path.
@@ -35,23 +37,12 @@ case class InTileExpr(children: Seq[Expression])
       s"$prettyName requires (INT|BIGINT hash, INT z, INT x, INT y)")
 
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val h = children(0).eval(input)
-    if (h == null) return null
     // null z/x/y must null-propagate: a bare asInstanceOf[Int] on null
     // yields 0 and would silently test tile (z, x, 0)
-    val zv = children(1).eval(input)
-    val xv = children(2).eval(input)
-    val yv = children(3).eval(input)
-    if (zv == null || xv == null || yv == null) return null
-    val z = zv.asInstanceOf[Int]
-    val x = xv.asInstanceOf[Int]
-    val y = yv.asInstanceOf[Int]
-    val hv = h match {
-      case i: Int => i.toLong
-      case l: Long => l
-    }
-    ZRange.coverWithBuffer(z, x, y, InTileExpr.HashLevel)
-      .exists { case (lo, hi) => hv >= lo && hv <= hi }
+    val zxy = children.tail.map(_.eval(input))
+    if (zxy.contains(null)) return null
+    val Seq(z, x, y) = zxy.map(_.asInstanceOf[Int])
+    InTileExpr.toRangePredicate(children.head, z, x, y).eval(input)
   }
 
   override protected def withNewChildrenInternal(
@@ -61,28 +52,15 @@ case class InTileExpr(children: Seq[Expression])
 object InTileExpr {
   val HashLevel = 13
 
-  /** The pushable form: OR of BETWEENs over the tile's Morton cover.
-    * Range literals take the hash column's own type so the comparison stays
-    * cast-free (a cast would block parquet filter pushdown).
-    */
-  def toRangePredicate(hash: Expression, z: Int, x: Int, y: Int): Expression = {
-    val lit: Int => Literal = hash.dataType match {
-      case LongType => v => Literal(v.toLong)
-      case _ => v => Literal(v)
-    }
-    ZRange.coverWithBuffer(z, x, y, HashLevel)
-      .map { case (lo, hi) =>
-        And(
-          GreaterThanOrEqual(hash, lit(lo)),
-          LessThanOrEqual(hash, lit(hi))): Expression
-      }
-      .reduceLeft(Or(_, _))
-  }
+  /** The tile's range predicate over `hash`. */
+  def toRangePredicate(hash: Expression, z: Int, x: Int, y: Int): Expression =
+    HashInRanges.of(hash,
+      TileService.cover(z, x, y, TileService.TileConfig(hashLevel = HashLevel)))
 }
 
 /** Optimizer rule lowering literal-coordinate [[InTileExpr]] predicates to
-  * range comparisons (injected via [[GraftExtensions]]); non-literal coords
-  * keep the interpreted form.
+  * a [[HashInRanges]] (injected via [[GraftExtensions]]); non-literal
+  * coords keep the interpreted form.
   */
 object TilePredicateRewrite extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{And, Expression, GreaterThanOrEqual, ImplicitCastInputTypes, LessThanOrEqual, Literal, Or}
+import org.apache.spark.sql.catalyst.expressions.{And, Expression, ImplicitCastInputTypes, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -16,7 +16,8 @@ import graft.core.{WebMercator, ZRange}
   * This is the engine's declarative ST-style spatial predicate (SURVEY §4's
   * stretch optimizer rule, §7): the caller states geometric INTENT against
   * the features table and [[SpatialPredicateRewrite]] derives the Z-range
-  * scan form — the pruning the reference hand-codes per request
+  * scan form, a [[HashInRanges]] that [[HashRangePushdown]] pushes to the
+  * parquet reader — the pruning the reference hand-codes per request
   * (`/root/reference/src/main/kotlin/io/marauder/tank/application.kt:371-400`)
   * — with no ZRange/hash knowledge at the call site.
   *
@@ -101,35 +102,19 @@ object StCentroidInBbox {
     ZRange.decompose(x0, x1, y0, y1, HashLevel, stop)
   }
 
-  /** The pushable form: OR of BETWEENs over the bbox's Morton cover, typed
-    * to the hash column (a cast would block parquet filter pushdown) and
-    * reduced as a balanced tree (a left-deep Or over hundreds of ranges
-    * recurses deep in later plan transforms).
+  /** The bbox's range predicate over `hash`: a [[HashInRanges]] over its
+    * cell cover, `false` for an inverted bbox.
     */
   def rangePredicate(hash: Expression, minLon: Double, minLat: Double,
-                     maxLon: Double, maxLat: Double): Expression = {
-    val mk: Int => Literal = hash.dataType match {
-      case LongType => v => Literal(v.toLong)
-      case _ => v => Literal(v)
-    }
-    val ranges = cellCover(minLon, minLat, maxLon, maxLat)
-    if (ranges.isEmpty) return Literal(false)
-    def balance(cs: Seq[Expression]): Expression =
-      if (cs.size == 1) cs.head
-      else {
-        val (l, r) = cs.splitAt(cs.size / 2)
-        Or(balance(l), balance(r))
-      }
-    balance(ranges.map { case (lo, hi) =>
-      And(GreaterThanOrEqual(hash, mk(lo)), LessThanOrEqual(hash, mk(hi))): Expression
-    })
-  }
+                     maxLon: Double, maxLat: Double): Expression =
+    HashInRanges.of(hash, cellCover(minLon, minLat, maxLon, maxLat))
 }
 
 /** Optimizer rule lowering a literal-bbox [[StCentroidInBbox]] filter over a
   * relation that carries the store's `hash` column into
-  * `(hash-range cover) AND st_centroid_in_bbox(...)`: the injected ranges
-  * are plain comparisons Catalyst pushes into the parquet scan (file- and
+  * `hashinranges(hash, cover) AND st_centroid_in_bbox(...)`: the
+  * [[HashInRanges]] over the bbox's cell cover, which [[HashRangePushdown]]
+  * pushes into the parquet scan as hash-range comparisons (file- and
   * row-group-level min/max pruning on the hash-sorted layout), while the
   * retained exact conjunct discards the cover's over-scan — so the rewrite
   * is an optimization only, never a semantics change.

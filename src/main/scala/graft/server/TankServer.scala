@@ -218,6 +218,9 @@ final class TankServer(spark: SparkSession, cfg: StoreConfig,
       case _ => respond(ex, 404, """{"msg": "not found"}""".getBytes, "application/json")
     }
   } catch { // structured error mapping (application.kt:620-649)
+    case _: TankServer.BodyTooLarge =>
+      respond(ex, 413, s"""{"msg": "body over ${TankServer.MaxBodyBytes} bytes"}""".getBytes,
+        "application/json")
     case _: NoSuchElementException =>
       respond(ex, 404, """{"msg": "item not found"}""".getBytes, "application/json")
     case e @ (_: IllegalArgumentException | _: JsonProcessingException) =>
@@ -327,9 +330,18 @@ final class TankServer(spark: SparkSession, cfg: StoreConfig,
 
   // ------------------------------------------------------------- writes
 
+  /** The request body as UTF-8, read up to [[TankServer.MaxBodyBytes]]; a
+    * longer body answers 413 before anything is parsed or ingested.
+    */
+  private def readBody(ex: HttpExchange): String = {
+    val b = ex.getRequestBody.readNBytes(TankServer.MaxBodyBytes + 1)
+    if (b.length > TankServer.MaxBodyBytes) throw new TankServer.BodyTooLarge
+    new String(b, "UTF-8")
+  }
+
   private def postFeature(ex: HttpExchange, layer: String): Unit = {
     requireLayer(layer)
-    val body = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
+    val body = readBody(ex)
     val n = ingestRaw(Seq(body))
     respond(ex, if (n == 1) 200 else 400,
       s"""{"ingested":$n}""".getBytes, "application/json")
@@ -340,7 +352,7 @@ final class TankServer(spark: SparkSession, cfg: StoreConfig,
     */
   private def postBulk(ex: HttpExchange, layer: String): Unit = {
     requireLayer(layer)
-    val body = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
+    val body = readBody(ex)
     val lines =
       if (queryParam(ex, "geojson").contains("true")) {
         val root = mapper.readTree(body)
@@ -370,7 +382,7 @@ final class TankServer(spark: SparkSession, cfg: StoreConfig,
   }
 
   private def putFeature(ex: HttpExchange, uid: String): Unit = {
-    val body = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
+    val body = readBody(ex)
     val node = mapper.readTree(body)
     val geomWkt = Option(node.get("geometry")).map(g => GeoJson.toWkt(g.toString))
     val props = Option(node.get("properties")).map { p =>
@@ -587,4 +599,9 @@ object TankServer {
     * never waits for a thread while the render slots are busy.
     */
   private val HandlersPerCore = 16
+  /** Largest request body read: ~14× the biggest `/_bulk` chunk the
+    * serving probe posts (10,000 features, ~2.3 MB).
+    */
+  val MaxBodyBytes: Int = 32 << 20
+  private final class BodyTooLarge extends RuntimeException
 }

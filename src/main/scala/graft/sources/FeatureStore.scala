@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.{HashInRanges, HashRangePushdown}
 import graft.tiles.GeomUdfs
 
 /** Feature ingest + storage: the Spark-native reproduction of the reference's
@@ -1030,15 +1031,17 @@ object FeatureStore {
     })
   }
 
-  /** A8: bulk delete of every feature in a tile's Z-range. The hash-range
-    * predicate prunes the touched-file probe via parquet min/max stats, so
-    * only the O(tile) files overlapping the tile's Morton ranges are read
-    * or rewritten.
+  /** A8: bulk delete of every feature in a tile's Z-range. The range
+    * predicate is a [[HashInRanges]], and [[HashRangePushdown]] (registered
+    * here, so a session that never called `GraftFunctions.register` keeps
+    * it) pushes its ranges to parquet: the touched-file probe prunes on
+    * min/max stats, so only the O(tile) files overlapping the tile's Morton
+    * ranges are read or rewritten.
     */
   def deleteTile(spark: SparkSession, cfg: StoreConfig, z: Int, x: Int, y: Int): Unit = {
-    val ranges = graft.core.ZRange.coverWithBuffer(z, x, y, cfg.hashLevel, 0.0)
-    val inTile = ranges.map { case (lo, hi) => col("hash").between(lo, hi) }
-      .reduce(_ || _)
+    HashRangePushdown.register(spark)
+    val inTile = HashInRanges.column(col("hash"),
+      graft.core.ZRange.coverWithBuffer(z, x, y, cfg.hashLevel, 0.0))
     rewriteTouched(spark, cfg, inTile, _.filter(!inTile))
   }
 

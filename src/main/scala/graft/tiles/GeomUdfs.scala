@@ -138,11 +138,6 @@ object GeomUdfs extends Serializable {
     (c: Column) => f(c)
   }
 
-  def clipToTileUdf(z: Int, x: Int, y: Int, extent: Int, buffer: Int): Column => Column = {
-    val f = udf((wkt: String) => clipToTile(wkt, z, x, y, extent, buffer))
-    (c: Column) => f(c)
-  }
-
   /** Centroid world-fraction coords (for heatmap cell assignment). */
   val centroidXY: Column => Column = {
     val f = udf((wkt: String) => {

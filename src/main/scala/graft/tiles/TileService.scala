@@ -22,11 +22,13 @@ import graft.functions.{HashInRanges, HashRangePushdown}
   *
   * Each product has one render path, the panel ([[panel]],
   * [[heatmapPanel]]: N tiles at one zoom from one job); the single-tile
-  * reads are its one-tile case. [[tileDf]]/[[heatmapDf]] are the
-  * single-tile plans as DataFrames, for the query registry.
+  * reads are its one-tile case. For the query registry, [[tileDf]] is the
+  * one-tile panel plan as a DataFrame; [[heatmapDf]] is an independent
+  * column-arithmetic plan, kept as the reference the heatmap panel's
+  * cells are tested against.
   *
   * At 100 TB the feature table is laid out hash-sorted (bucketed/Z-ordered),
-  * so the hash ranges, pushed to parquet as BETWEEN predicates, prune to a
+  * so the hash ranges, pushed to parquet as range comparisons, prune to a
   * handful of files/row-groups; each tile read touches O(tile) data no
   * matter the table size.
   */
@@ -52,27 +54,20 @@ object TileService {
   def hashPredicate(z: Int, x: Int, y: Int, cfg: TileConfig): Column =
     HashInRanges.column(col("hash"), cover(z, x, y, cfg))
 
-  /** Tile (z,x,y)'s buffered Morton cover, sorted and merged. */
-  private def cover(z: Int, x: Int, y: Int, cfg: TileConfig): Seq[(Int, Int)] =
+  /** Tile (z,x,y)'s buffered Morton cover, sorted and merged; the SQL
+    * `in_tile` tests the default config's ([[graft.functions.InTileExpr]]).
+    */
+  private[graft] def cover(z: Int, x: Int, y: Int, cfg: TileConfig): Seq[(Int, Int)] =
     ZRange.coverWithBuffer(z, x, y, cfg.hashLevel, cfg.buffer.toDouble / cfg.extent.toDouble)
 
-  /** The distributed tile query: pruned scan → attr filter → clip+transform.
-    * Output: uid, <attributes...>, tgeom (WKT in integer tile coords).
+  /** The distributed tile query: the one-tile [[panelPlan]], the plan that
+    * serves tiles. Output: uid, <attributes...>, tgeom (WKT in integer
+    * tile coords).
     */
   def tileDf(features: DataFrame, z: Int, x: Int, y: Int,
              filter: Option[(String, Any)] = None,
-             cfg: TileConfig = TileConfig()): DataFrame = {
-    val pruned = prunedScan(features, hashPredicate(z, x, y, cfg))
-    val filtered = filter match {
-      case Some((attr, v)) => pruned.filter(col(attr) === lit(v))
-      case None => pruned
-    }
-    val clip = GeomUdfs.clipToTileUdf(z, x, y, cfg.extent, cfg.buffer)
-    filtered
-      .select((col("uid") +: cfg.attributes.map(col)) :+
-        clip(col("geometry")).as("tgeom"): _*)
-      .filter(col("tgeom").isNotNull)
-  }
+             cfg: TileConfig = TileConfig()): DataFrame =
+    panelPlan(features, z, Seq((x, y)), filter, cfg).drop("_t")
 
   /** Full tile read: the one-tile case of [[panel]], so a tile served
     * from a batched render is byte-identical to this answer.
@@ -90,9 +85,9 @@ object TileService {
     * candidate-tile fan-out → per-(feature, tile) clip → driver-side group
     * + MVT encode (driver rows are panel-bounded: the same rows the N
     * single-tile reads would each collect). A feature is a member of tile
-    * t exactly when [[tileDf]] would return it for t: its hash lies in t's
-    * buffered cover (not merely in the panel's merged one) and it clips
-    * into t; its buffered envelope only narrows the candidates. Features
+    * t exactly when its hash lies in t's buffered cover (not merely in the
+    * panel's merged one) and it clips into t; its buffered envelope only
+    * narrows the candidates. Features
     * are encoded in uid order, so a tile's bytes do not depend on the
     * other tiles of the panel or on scan order. Returns bytes for EVERY
     * requested tile — an empty tile encodes the empty layer.
@@ -100,8 +95,9 @@ object TileService {
     * The plan compiles once: the panel's ranges are bound as a
     * [[HashInRanges]] reference and the per-panel values ride in the UDF
     * closures, so the generated code is the same for every tile set and
-    * zoom. A `filter` still inlines its equality literal, so each new
-    * filter value compiles anew.
+    * zoom. A `filter` on a text attribute binds its literal as a
+    * reference too; on a numeric one it inlines the literal, so each new
+    * value compiles the plan anew (2 compiles on a one-tile panel).
     */
   def panel(features: DataFrame, z: Int, tiles: Seq[(Int, Int)],
             filter: Option[(String, Any)] = None,
@@ -130,6 +126,7 @@ object TileService {
                                filter: Option[(String, Any)],
                                cfg: TileConfig): DataFrame = {
     val cov = covers(z, tiles, cfg)
+    val member = cov.map { case (t, c) => t -> HashInRanges.flat(c) }
     val pruned = prunedScan(features, HashInRanges.column(col("hash"), cov.values.flatten.toSeq))
     val filtered = filter match {
       case Some((attr, v)) => pruned.filter(col(attr) === lit(v))
@@ -151,7 +148,7 @@ object TileService {
       (for {
         x <- math.max(x0, xLo) to math.min(x1, xHi)
         y <- math.max(y0, yLo) to math.min(y1, yHi)
-        c <- cov.get((x, y)) if inCover(c, hash)
+        c <- member.get((x, y)) if HashInRanges.contains(c, hash)
       } yield (x.toLong << 32) | (y & 0xffffffffL)).toArray
     })
     val (ext, buf) = (cfg.extent, cfg.buffer)
@@ -171,9 +168,6 @@ object TileService {
   private def covers(z: Int, tiles: Seq[(Int, Int)],
                      cfg: TileConfig): Map[(Int, Int), Seq[(Int, Int)]] =
     tiles.distinct.map { case (x, y) => (x, y) -> cover(z, x, y, cfg) }.toMap
-
-  private def inCover(cover: Seq[(Int, Int)], h: Int): Boolean =
-    cover.exists { case (lo, hi) => lo <= h && h <= hi }
 
   /** The store filtered by a [[HashInRanges]] predicate (a panel's is
     * merged over its tiles' covers, so it stays O(perimeter) sized even
@@ -255,6 +249,7 @@ object TileService {
     val n = gridN(z)
     val scale = (1L << z).toDouble
     val cov = covers(z, tiles, cfg)
+    val member = cov.map { case (t, c) => t -> HashInRanges.flat(c) }
     val index = tileIndex(tiles)
     val cellsU = udf((hash: Int, wkt: String) => {
       val c = GeomUdfs.parse(wkt).getCentroid
@@ -264,7 +259,7 @@ object TileService {
         x <- fx - 1 to fx + 1
         y <- fy - 1 to fy + 1
         k <- index.get((x, y))
-        if inCover(cov((x, y)), hash)
+        if HashInRanges.contains(member((x, y)), hash)
         i = math.floor((cx * scale - x) * n)
         j = math.floor((cy * scale - y) * n)
         if i >= 0 && i < n && j >= 0 && j < n

@@ -139,29 +139,70 @@ class GraftFunctionsSpec extends SparkSpec {
     assert(k.isNullAt(0) && k.isNullAt(1) && k.isNullAt(2))
   }
 
+  /** The tile at zoom `z` holding customer 100's point (q28/x46's tile at z9). */
+  private def pointTile(z: Int): (Int, Int) = {
+    val lon = ((100L * 37) % 36000) / 100.0 - 180.0
+    val lat = ((100L * 53) % 17000) / 100.0 - 85.0
+    (WebMercator.tileX(lon, z), WebMercator.tileY(lat, z))
+  }
+
   test("in_tile predicate is rewritten to pushed-down hash ranges") {
     import graft.queries.Spatial
     val stored = Spatial.featuresStored(spark, Sf)
     stored.createOrReplaceTempView("features_stored")
-    // the z=9 tile containing customer 100's point (same as q28/x46)
-    val lon = ((100L * 37) % 36000) / 100.0 - 180.0
-    val lat = ((100L * 53) % 17000) / 100.0 - 85.0
-    val (tx, ty) = (WebMercator.tileX(lon, 9), WebMercator.tileY(lat, 9))
-    val df = spark.sql(
-      s"SELECT uid FROM features_stored WHERE in_tile(hash, 9, $tx, $ty)")
-    val viaRule = df.collect().map(_.getString(0)).sorted
-    // equals the hand-built range predicate of TileService
-    val direct = stored.filter(
-        graft.tiles.TileService.hashPredicate(9, tx, ty,
-          graft.tiles.TileService.TileConfig()))
-      .select("uid").collect().map(_.getString(0)).sorted
-    assert(viaRule.nonEmpty && viaRule.toSeq == direct.toSeq)
-    // and the ranges reached the parquet scan as pushed filters (the plan
-    // display truncates the filter list, so match the leading Or tree)
-    val plan = df.queryExecution.executedPlan.toString
+    // the point's tile at z9 (q28/x46's), at zooms whose covers the z+5
+    // granularity cap shapes differently, at the hash level and below it
+    Seq(9, 4, 6, 13, 16).foreach { z =>
+      val (tx, ty) = pointTile(z)
+      val df = spark.sql(
+        s"SELECT uid FROM features_stored WHERE in_tile(hash, $z, $tx, $ty)")
+      val viaRule = df.collect().map(_.getString(0)).sorted
+      // equals the hand-built range predicate of TileService
+      val direct = stored.filter(
+          graft.tiles.TileService.hashPredicate(z, tx, ty,
+            graft.tiles.TileService.TileConfig()))
+        .select("uid").collect().map(_.getString(0)).sorted
+      assert(viaRule.nonEmpty && viaRule.toSeq == direct.toSeq, s"z$z tile ($tx, $ty)")
+      // and the ranges reached the parquet scan as pushed filters (the plan
+      // display truncates the filter list, so match the leading Or tree)
+      val plan = df.queryExecution.executedPlan.toString
+      if (z == 9) assert(plan.contains("PushedFilters: [Or("), plan.take(2000))
+      assert(plan.contains("PushedFilters: [") && plan.contains("Equal(hash,"), plan.take(2000))
+      // the rewrite happened: no in_tile call survives in the physical plan
+      assert(!plan.contains("in_tile"), plan.take(2000))
+    }
+  }
+
+  test("in_tile over a BIGINT hash returns the INT form's rows and keeps the pushdown") {
+    import graft.queries.Spatial
+    Spatial.featuresStored(spark, Sf).createOrReplaceTempView("features_bigint")
+    val (tx, ty) = pointTile(9)
+    def uids(hash: String) = spark.sql(
+      s"SELECT uid FROM features_bigint WHERE in_tile($hash, 9, $tx, $ty)")
+    val wide = uids("CAST(hash AS BIGINT)")
+    val got = wide.collect().map(_.getString(0)).sorted.toSeq
+    assert(got.nonEmpty && got == uids("hash").collect().map(_.getString(0)).sorted.toSeq)
+    val plan = wide.queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters: [Or("), plan.take(2000))
-    // the rewrite happened: no in_tile call survives in the physical plan
-    assert(!plan.contains("in_tile"), plan.take(2000))
+  }
+
+  test("in_tile and st_centroid_in_bbox compile once: the same generated code for any tile or bbox") {
+    import graft.queries.Spatial
+    Spatial.featuresStored(spark, Sf).createOrReplaceTempView("features_codegen")
+    def code(where: String): Seq[String] = {
+      val df = spark.sql(s"SELECT uid FROM features_codegen WHERE $where")
+      df.collect()
+      df.queryExecution.debug.codegenToSeq().map(_._2)
+    }
+    val (t9, t13) = (pointTile(9), pointTile(13))
+    val tile9 = code(s"in_tile(hash, 9, ${t9._1}, ${t9._2})")
+    val tile13 = code(s"in_tile(hash, 13, ${t13._1 + 1}, ${t13._2})")
+    assert(tile9.nonEmpty && tile9 == tile13,
+      "in_tile queries over different tiles generate different code")
+    val bbox1 = code("st_centroid_in_bbox(geometry, -170.005, -80.005, -140.005, -40.005)")
+    val bbox2 = code("st_centroid_in_bbox(geometry, 10.0, 40.0, 12.5, 52.0)")
+    assert(bbox1.nonEmpty && bbox1 == bbox2,
+      "st_centroid_in_bbox queries over different bboxes generate different code")
   }
 
   test("wrong arity on SQL vector/zcurve functions raises an analysis error, not IOOBE") {

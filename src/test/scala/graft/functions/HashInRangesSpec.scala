@@ -5,8 +5,9 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, GeneratePredicate, GenerateUnsafeProjection}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import graft.SparkSpec
+import graft.core.ZRange
 
 class HashInRangesSpec extends SparkSpec {
 
@@ -45,7 +46,7 @@ class HashInRangesSpec extends SparkSpec {
       }
     }
     (edgeCases ++ random).foreach { case (name, rs) =>
-      val merged = HashInRanges.merge(rs)
+      val merged = ZRange.mergeRanges(rs)
       assert(merged == merged.sorted, s"$name: merge is not sorted")
       merged.zip(merged.drop(1)).foreach { case ((_, phi), (lo, _)) =>
         assert(phi.toLong + 1 < lo.toLong, s"$name: $merged not merged")
@@ -76,7 +77,7 @@ class HashInRangesSpec extends SparkSpec {
     val rows = (Seq[Any](null, Int.MinValue, Int.MaxValue, 0) ++
       Seq.fill(300)(rnd.nextInt(300) - 150)).map(v => InternalRow(v))
     edgeCases.filter(_._2.nonEmpty).foreach { case (name, rs) =>
-      val e = HashInRanges(hash, flat(HashInRanges.merge(rs)))
+      val e = HashInRanges(hash, flat(ZRange.mergeRanges(rs)))
       // the generators compile without the interpreted fallback, so a
       // codegen error fails here instead of silently evaluating
       val pred = GeneratePredicate.generate(e)
@@ -96,5 +97,28 @@ class HashInRangesSpec extends SparkSpec {
     }
     assert(code(Seq((1, 5))) == code(Seq((-9, -2), (40, 60), (99, 99))),
       "range literals reached the generated code")
+  }
+
+  test("a BIGINT hash: codegen and interpreted agree with membership; beyond the int range is false") {
+    val rnd = new scala.util.Random(13)
+    val hash = BoundReference(0, LongType, nullable = true)
+    edgeCases.filter(_._2.nonEmpty).foreach { case (name, rs) =>
+      val e = HashInRanges(hash, flat(ZRange.mergeRanges(rs)))
+      val pred = GeneratePredicate.generate(e)
+      val proj = GenerateUnsafeProjection.generate(Seq(e))
+      val values = probes(rs, rnd).map(_.toLong) ++ Seq(Long.MinValue, Long.MaxValue,
+        Int.MinValue.toLong - 1, Int.MaxValue.toLong + 1, 1L << 32, (1L << 32) + 12)
+      (InternalRow(null) +: values.map(v => InternalRow(v))).foreach { r =>
+        val want = if (r.isNullAt(0)) null else {
+          val v = r.getLong(0)
+          v.isValidInt && brute(rs, v.toInt)
+        }
+        assert(e.eval(r) == want, s"$name at ${r.get(0, LongType)}")
+        val row = proj(r)
+        assert((if (row.isNullAt(0)) null else row.getBoolean(0)) == want,
+          s"$name at ${r.get(0, LongType)}")
+        assert(pred.eval(r) == (want == true), s"$name at ${r.get(0, LongType)}")
+      }
+    }
   }
 }

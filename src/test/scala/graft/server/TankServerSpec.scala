@@ -622,6 +622,30 @@ class TankServerSpec extends SparkSpec {
     srv.stop()
     assert(handlers.isEmpty, s"alive after stop(): ${handlers.map(_.getName)}")
   }
+
+  test("a /_bulk body over the size cap is a 413 and ingests nothing") {
+    assert(http("POST", "/_bulk", Some(feature("cap0", lon, lat, "water")))._1 == 200)
+    val before = FeatureStore.read(spark, cfg).count()
+    // valid NDJSON lines, one byte past the cap in all
+    val line = (feature("cap1", lon, lat, "water") + "\n").getBytes("UTF-8")
+    val size = TankServer.MaxBodyBytes + 1
+    val conn = new URI(s"http://localhost:$port/_bulk").toURL
+      .openConnection().asInstanceOf[HttpURLConnection]
+    conn.setRequestMethod("POST")
+    conn.setDoOutput(true)
+    conn.setFixedLengthStreamingMode(size)
+    val os = conn.getOutputStream
+    var left = size
+    while (left > 0) {
+      val k = math.min(left, line.length)
+      os.write(line, 0, k); left -= k
+    }
+    os.close()
+    val code = conn.getResponseCode
+    conn.disconnect()
+    assert(code == 413)
+    assert(FeatureStore.read(spark, cfg).count() == before, "an over-cap body ingested rows")
+  }
 }
 
 object TankServerSpec {

@@ -907,4 +907,47 @@ class FeatureStoreSpec extends SparkSpec {
       s"compaction not visible: $compacted")
     assert(rows() == afterTile)
   }
+
+  test("deleteTile pushes its hash ranges into the touched-file probe in a session that never registered the strategy") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.functions.HashRangePushdown
+    val fresh = spark.newSession()
+    assert(!fresh.experimental.extraStrategies.contains(HashRangePushdown),
+      "fixture broken: the session already has the strategy")
+    val cfg = StoreConfig(path = s"${tmpDir()}/store", attrs = Seq(AttrField("v", "int")))
+    // a 9×5 grid around (10, 50): some points in the z9 tile, some around it
+    val pts = for { i <- 0 until 9; j <- 0 until 5 } yield (9.0 + i * 0.25, 49.5 + j * 0.25)
+    FeatureStore.write(FeatureStore.ingest(pts.zipWithIndex.map { case ((lon, lat), k) =>
+      featureJson(s"u$k", lon, lat, s"""{"v":$k}""") }.toDF("raw"), cfg).good, cfg, partitions = 4)
+    val (z, tx, ty) = (9, graft.core.WebMercator.tileX(10.2, 9), graft.core.WebMercator.tileY(50.2, 9))
+    val ranges = graft.core.ZRange.coverWithBuffer(z, tx, ty, cfg.hashLevel, 0.0)
+    val before = FeatureStore.read(fresh, cfg).select("uid", "hash").as[(String, Int)].collect()
+    val (inTile, outside) = before.partition { case (_, h) =>
+      ranges.exists { case (lo, hi) => lo <= h && h <= hi } }
+    assert(inTile.nonEmpty && outside.nonEmpty, "fixture broken: the tile must split the grid")
+
+    val probes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.toString.contains("file_path")) probes.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    fresh.listenerManager.register(listener)
+    try {
+      FeatureStore.deleteTile(fresh, cfg, z, tx, ty)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (probes.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+    } finally fresh.listenerManager.unregister(listener)
+    assert(!probes.isEmpty, "the touched-file probe never ran")
+    val scan = probes.peek().sparkPlan.collectFirst { case s: FileSourceScanExec => s }.get
+    val pushed = scan.metadata("PushedFilters")
+    ranges.foreach { case (lo, hi) =>
+      assert(pushed.contains(s"GreaterThanOrEqual(hash,$lo)") &&
+        pushed.contains(s"LessThanOrEqual(hash,$hi)"), s"[$lo, $hi] not pushed: $pushed")
+    }
+    val left = FeatureStore.read(fresh, cfg).select("uid").as[String].collect().sorted.toSeq
+    assert(left == outside.map(_._1).sorted.toSeq)
+  }
 }

@@ -225,7 +225,7 @@ class TileServiceSpec extends SparkSpec {
     val df = panelPlan(store, 13, tiles, None, TileConfig())
     val plan = df.queryExecution.sparkPlan
     val scan = plan.collectFirst { case s: FileSourceScanExec => s }.get
-    val ranges = HashInRanges.merge(tiles.flatMap { case (x, y) =>
+    val ranges = graft.core.ZRange.mergeRanges(tiles.flatMap { case (x, y) =>
       graft.core.ZRange.coverWithBuffer(13, x, y, 13, 64.0 / 4096) })
     val pushed = scan.metadata("PushedFilters")
     assert(ranges.size > 1 && pushed.startsWith("[Or("), pushed)

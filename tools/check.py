@@ -4,9 +4,13 @@ dir, then run each oracle_sql.json query in DuckDB over the same parquet
 tables and compare row-by-row after sorting columns by name.
 
 Usage: python3 tools/check.py [sfdir] [--skip-spark] [query ...]
+
+Builds and verifies the checkout this script sits in, so a copy of the repo
+checks its own sources.
 """
 import json, math, os, subprocess, sys
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF = sys.argv[1] if len(sys.argv) > 1 and not sys.argv[1].startswith("-") else "/root/testdata/sf0.01"
 OUT = "/tmp/verify_out"
 ARGS = [a for a in sys.argv[2:] if not a.startswith("-")]
@@ -15,7 +19,7 @@ SKIP_SPARK = "--skip-spark" in sys.argv
 if not SKIP_SPARK:
     r = subprocess.run(
         ["sbt", f'runMain graft.Verify {SF} {OUT}'],
-        cwd="/root/repo", capture_output=True, text=True, timeout=1800)
+        cwd=ROOT, capture_output=True, text=True, timeout=1800)
     tail = "\n".join((r.stdout + r.stderr).splitlines()[-30:])
     if r.returncode != 0:
         print("VERIFY FAILED\n", tail)
