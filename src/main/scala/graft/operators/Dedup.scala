@@ -357,7 +357,7 @@ object Dedup {
     // empty pair relation without ever constructing the shingle-store
     // verify (with a bloom-gated bandReducer the band store read zero
     // files too — the near-dup leg's zero-read short-circuit)
-    if (nCands.contains(0L) || (nCands.isEmpty && cands.isEmpty))
+    if (nCands == 0L)
       return cands.sparkSession.createDataFrame(
         cands.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType(Seq(

@@ -368,23 +368,15 @@ object TextOps {
     * batch docs (bucket % 11 = 0, id + 20M — `dup_in_batch`). The oracle
     * replays the derivation and the classification exactly.
     */
-  /** x86's deterministic md5-bucket split of `documents` (shared with the
-    * HashHistory specs): (history docs, batch docs) — see the QueryDef
-    * scaladoc for the derivation.
+  /** x86's md5-bucket split of `documents` (shared with the HashHistory
+    * specs): (history docs, batch docs) as (doc_id, text) — the
+    * [[x123Split]] derivation projected to the exact-dedup columns; see
+    * the QueryDef scaladoc for the derivation.
     */
   private[graft] def x86Split(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val bucket = (conv(substring(md5(col("doc_id").cast(StringType)), 1, 8),
-      16, 10).cast(LongType) % 100).cast(IntegerType)
-    val bkt = Tables.documents(s, d)
-      .select(col("doc_id"), col("text")).withColumn("bucket", bucket)
-    val history = bkt.filter(col("bucket") < 60)
-    val base = bkt.filter(col("bucket") >= 60)
-    val batch = base.select(col("doc_id"), col("text"))
-      .unionAll(history.filter(col("bucket") % 7 === 0)
-        .select((col("doc_id") + 10000000L).as("doc_id"), col("text")))
-      .unionAll(base.filter(col("bucket") % 11 === 0)
-        .select((col("doc_id") + 20000000L).as("doc_id"), col("text")))
-    (history, batch)
+    val (history, batch) = x123Split(s, d)
+    (history.select(col("doc_id"), col("text")),
+      batch.select(col("doc_id"), col("text")))
   }
 
   /** x86's history as the [[graft.sources.HashHistory]] layout: one BINARY
@@ -415,17 +407,7 @@ object TextOps {
         |       ELSE 'kept' END AS status
         |FROM b LEFT JOIN h ON b.th = h.th JOIN k ON b.th = k.th""".stripMargin,
       Seq("doc_id", "status"))) { (s, d) =>
-    val bucket = (conv(substring(md5(col("doc_id").cast(StringType)), 1, 8),
-      16, 10).cast(LongType) % 100).cast(IntegerType)
-    val bkt = Tables.documents(s, d)
-      .select(col("doc_id"), col("text")).withColumn("bucket", bucket)
-    val history = bkt.filter(col("bucket") < 60)
-    val base = bkt.filter(col("bucket") >= 60)
-    val batch = base.select(col("doc_id"), col("text"))
-      .unionAll(history.filter(col("bucket") % 7 === 0)
-        .select((col("doc_id") + 10000000L).as("doc_id"), col("text")))
-      .unionAll(base.filter(col("bucket") % 11 === 0)
-        .select((col("doc_id") + 20000000L).as("doc_id"), col("text")))
+    val (history, batch) = x86Split(s, d)
     // history via the session store device ([[graft.sources.HashHistory]]):
     // when a producer step persisted the bucketed hash store for this dir,
     // the probe scans it co-located (no history-side exchange); else the
@@ -437,13 +419,13 @@ object TextOps {
   }
 
   // ---------------------------------------------------------------- x123
-  /** x86's md5-bucket split carrying the near-dup restriction columns:
-    * (history, batch) with (doc_id, text, lang, n_chars). Same bucket
-    * arithmetic and the same recrawl/second-copy injections, so the two
-    * incremental text entries describe ONE crawl scenario — the +10M
-    * recrawls are verbatim copies of history docs and must surface here
-    * as Jaccard-1.0 near-dup pairs against their originals (the planted
-    * truth the oracle reconstructs).
+  /** The ONE md5-bucket crawl split (x86's scaladoc has the derivation):
+    * (history, batch) with (doc_id, text, lang, n_chars), the near-dup
+    * restriction columns included. Every incremental text entry derives
+    * from it ([[x86Split]] is its (doc_id, text) projection), so they
+    * describe ONE crawl scenario — the +10M recrawls are verbatim copies
+    * of history docs and must surface here as Jaccard-1.0 near-dup pairs
+    * against their originals (the planted truth the oracle reconstructs).
     */
   private[graft] def x123Split(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val bucket = (conv(substring(md5(col("doc_id").cast(StringType)), 1, 8),
@@ -552,15 +534,7 @@ object TextOps {
          |WHERE CAST(inter AS DOUBLE) / (ca.n + cb2.n - inter) >= 0.8""".stripMargin,
       Seq("doc_a", "doc_b", "jaccard"))) { (s, d) =>
     val (history, batch) = x123Split(s, d)
-    // history via the session store device: when a producer step persisted
-    // the bucketed LSH index for this dir, the probe rides its layouts
-    // (no history-side exchange); else the derived in-query plans —
-    // lazily, same values either way (the oracle replays the derivation)
-    val (bands, sh) = graft.sources.MinHashHistory.scanOrCompute(s, d)(
-      (x123HistoryBands(s, d), x123HistoryShingles(s, d)))
-    Canon(graft.operators.Dedup.incrementalNearDups(
-      shingleArrays(batch), bands, sh,
-      bandReducer = graft.sources.MinHashHistory.bandScanReducer(s, d)))
+    Canon(nearDupLeg(s, d, shingleArrays(batch), history))
   }
 
   // ------------------------------------------- shared triage oracle SQL
@@ -692,13 +666,17 @@ object TextOps {
     *                   span removal instead of ingesting verbatim;
     *   `keep`        — novel content.
     *
-    * Each leg rides its persisted store when a producer ran (no
-    * history-side exchange — the per-store plan gates) and falls back to
-    * the derived in-query history otherwise; the oracle replays all three
-    * derivations and the verdict CASE in one SQL. Thresholds are the
-    * registry pins (x40's 0.8; 0.3 for the strip route) — the
-    * quantile-DERIVED strip cut is x127 (the x115 device; the near-dup
-    * cut stays pinned by banding design, see x127's scaladoc).
+    * The legs are the ONE builder each of [[statusLeg]], [[nearDupLeg]]
+    * and [[gramLeg]] (the x123 and x102 bodies call the same builders),
+    * composed by [[triageAll]] — the form the streaming twin's default
+    * branch and TriageScaleProbe run too. Each leg rides its persisted
+    * store when a producer ran (no history-side exchange — the per-store
+    * plan gates) and falls back to the derived in-query history
+    * otherwise; the oracle replays all three derivations and the verdict
+    * CASE in one SQL. Thresholds are the registry pins (x40's 0.8; 0.3
+    * for the strip route) — the quantile-DERIVED strip cut is x127 (the
+    * x115 device; the near-dup cut stays pinned by banding design, see
+    * x127's scaladoc).
     *
     * COST SHAPE, deliberate: this is the x90-style EXPLAINABLE audit —
     * all three measures for EVERY batch doc (threshold tuning and "why
@@ -725,75 +703,109 @@ object TextOps {
          |$triageJaccardSql
          |$triageVerdictSql""".stripMargin,
       Seq("doc_id", "status", "best_jaccard", "hist_frac", "verdict"))) { (s, d) =>
-    val (status, best, gramFrac) = x125Legs(s, d)
-    Canon(triageFrame(status, best, gramFrac))
+    Canon(withVerdict(crawlTriageMeasures(s, d)))
   }
 
-  /** The three x125 probe legs over the shared crawl split — exact status
-    * (x86's hash store), best history near-dup Jaccard (x123's LSH index),
-    * duplicated-gram fraction (x102's gram store) — each riding its
-    * persisted store when a producer ran. Shared by the explainable (x125)
-    * and derived-threshold (x127) triage forms.
+  /** x125/x127's all-legs measure matrix over the crawl split. The
+    * history is a split derivation of its own, built even when the stores
+    * serve it: one extra `documents` schema read (one job) that taking it
+    * from the batch's split would save — a job-count change left to be
+    * measured on its own.
     */
-  private[graft] def x125Legs(s: SparkSession, d: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    // ONE materialization of the crawl batch (round 18, guide §2.4/§5:
-    // don't recompute, truncate lineage): the md5-bucket split union is
-    // consumed by all three legs — and inside every broadcast-build job
-    // of every probe — so lazily it re-scanned documents and re-derived
-    // the split ~a dozen times per build (profiled as most of the
-    // triage's fixed cost). The batch is batch-bounded by the family
-    // contract; `history` stays LAZY (corpus-scale, and never evaluated
-    // when the persisted stores serve). x123Split's batch projected to
-    // (doc_id, text) is row-identical to x86Split's batch.
-    val batchFull = graft.util.Materialize.eager(x123Split(s, d)._2)
-    val history = x86Split(s, d)._1
-    val batch = batchFull.select(col("doc_id"), col("text"))
-    // The three legs OVERLAP (round 18, guide §2.6 "overlap independent
-    // jobs"): each leg's construction runs its own chain of small eager
-    // store-probe jobs (bloom-cut checkpoint, bucket collect, broadcast
-    // builds) that individually leave most of local[N]/the cluster idle —
-    // profiled at sf0.1 as ~40 sequential sub-0.5 s jobs per triage.
-    // The legs are independent per-doc probes over the ONE materialized
-    // batch (shared input, probed stores disjoint), so submitting them
-    // from three driver threads interleaves the chains (FIFO back-fill)
-    // without changing any leg's plan or answer.
-    // probe-reduced like the gram leg (round 18): bloom-gated +
-    // bucket-pruned, so a novel-heavy batch reads a fraction of the hash
-    // store instead of co-located-scanning all of it per triage
+  private def crawlTriageMeasures(s: SparkSession, d: String): DataFrame = {
+    val batch = x123Split(s, d)._2
+    val history = x123Split(s, d)._1
+    triageAll(s, d, batch, history)
+  }
+
+  // ------------------------------------------------- the three triage legs
+  // One builder per store probe. Each takes a batch and a BY-NAME history
+  // docs frame (doc_id, text[, lang, n_chars]): the history is evaluated
+  // only when no producer step registered the store for `d` — the
+  // streaming twin and the probes pass a throwing fallback. Each returns
+  // a lazy relation; the eager jobs a leg needs (batch hash/gram pins,
+  // the store probes' bloom cuts and broadcast builds) run when it is
+  // built, so callers overlap or gate legs by building them.
+
+  /** Exact-status leg (x86's hash store): (doc_id, status) for a
+    * (doc_id, text) batch. ONE md5 pass — the driver-local (doc_id, th)
+    * relation feeds the probe keyset AND the status join/keeper election
+    * (lazily the hash projection ran once per consumer); batch-bounded,
+    * so a LocalTableScan within the cap. The probe is bloom-gated and
+    * bucket-pruned, so a fully-novel batch reads zero hash-store files.
+    */
+  private[graft] def statusLeg(s: SparkSession, d: String, batch: DataFrame,
+                               history: => DataFrame): DataFrame = {
+    val (bh, _) = graft.util.Materialize.localOrEager(
+      batch.select(col("doc_id"), unhex(md5(col("text"))).as("th")))
+    Dedup.incrementalStatusFromHashes(bh,
+      graft.sources.HashHistory.probeHistory(s, d, bh.select(col("th")))(
+        history.select(unhex(md5(col("text"))).as("th"))))
+  }
+
+  /** Near-dup leg (x123's LSH index): (doc_a = batch id, doc_b = history
+    * id, jaccard ≥ 0.8) for a [[shingleArrays]] batch; the history needs
+    * the lang and n_chars columns.
+    */
+  private[graft] def nearDupLeg(s: SparkSession, d: String,
+                                batchArrs: DataFrame,
+                                history: => DataFrame): DataFrame = {
+    val (bands, sh) = graft.sources.MinHashHistory.scanOrCompute(s, d)(
+      (minHashBandsOf(history), minHashShinglesOf(history)))
+    Dedup.incrementalNearDups(batchArrs, bands, sh,
+      bandReducer = graft.sources.MinHashHistory.bandScanReducer(s, d))
+  }
+
+  /** Gram leg (x102's gram store): the x102 frame (doc_id, total_pos,
+    * hist_pos, hist_frac) for a (doc_id, text) batch. ONE gram-kernel
+    * pass — the materialized (doc_id, gh, pc) relation feeds the probe
+    * keyset AND the audit tail (lazily the per-doc gram UDF ran once
+    * inside the probe's bloom cut and again for the hits join);
+    * batch-gram-sized, bounded by the batch ≪ store contract.
+    */
+  private[graft] def gramLeg(s: SparkSession, d: String, batch: DataFrame,
+                             history: => DataFrame,
+                             k: Int = DupGramK): DataFrame = {
+    val g = graft.util.Materialize.eager(Dedup.batchGramCounts(batch, k))
+    Dedup.incrementalDupGramsFromGrams(batch, g,
+      graft.sources.GramHistory.probeHistory(s, d,
+        g.select(col(graft.sources.GramHistory.GramCol)).distinct())(
+        graft.sources.GramHistory.gramHashes(history, k)),
+      k = k, broadcastProbe = false)
+  }
+
+  /** A near-dup leg's pairs as (doc_id, best_jaccard). */
+  private def bestJaccard(pairs: DataFrame): DataFrame =
+    pairs.groupBy(col("doc_a").as("doc_id"))
+      .agg(max(col("jaccard")).as("best_jaccard"))
+
+  /** The all-legs measure matrix ([[triageMeasures]]' shape) of a raw
+    * (doc_id, text, lang, n_chars) batch — x125, x127, the streaming
+    * twin's default branch and TriageScaleProbe.
+    *
+    * ONE materialization of the batch: it is consumed by all three legs
+    * and inside every broadcast-build job of every probe, so lazily the
+    * batch lineage (for the registry, the split union over `documents`)
+    * re-ran ~a dozen times per build. The three legs OVERLAP under
+    * [[graft.util.Par.all]]: each leg's construction runs its own chain
+    * of small eager store-probe jobs that individually leave most of
+    * local[N] idle; the legs are independent per-doc probes over the one
+    * materialized batch (probed stores disjoint), so submitting them from
+    * three driver threads interleaves the chains without changing any
+    * leg's plan or answer. The first leg to throw cancels its siblings
+    * and its exception is rethrown as is.
+    */
+  private[graft] def triageAll(s: SparkSession, d: String, batch: DataFrame,
+                               history: => DataFrame,
+                               k: Int = DupGramK): DataFrame = {
+    val docs = graft.util.Materialize.eager(batch)
+    val text = docs.select(col("doc_id"), col("text"))
     val Seq(status, gramFrac, best) = graft.util.Par.all(
-      () => {
-        // round 19: ONE md5 pass over the batch — the driver-local
-        // (doc_id, th) relation feeds the probe keyset AND the status
-        // join/keeper election (lazily the hash projection ran once per
-        // consumer); batch-bounded, so LocalTableScan within the cap
-        val (bh, _) = graft.util.Materialize.localOrEager(
-          batch.select(col("doc_id"), unhex(md5(col("text"))).as("th")))
-        Dedup.incrementalStatusFromHashes(bh,
-          graft.sources.HashHistory.probeHistory(s, d, bh.select(col("th")))(
-            history.select(unhex(md5(col("text"))).as("th"))))
-      },
-      () => {
-        // round 19: ONE gram-kernel pass shared by keyset + hits join
-        val g = graft.util.Materialize.eager(
-          Dedup.batchGramCounts(batch, DupGramK))
-        Dedup.incrementalDupGramsFromGrams(batch, g,
-            graft.sources.GramHistory.probeHistory(s, d,
-              g.select(col(graft.sources.GramHistory.GramCol)).distinct())(
-              graft.sources.GramHistory.gramHashes(history, DupGramK)),
-            k = DupGramK, broadcastProbe = false)
-          .select(col("doc_id"), col("hist_frac"))
-      },
-      () => {
-        val (bands, sh) = graft.sources.MinHashHistory.scanOrCompute(s, d)(
-          (x123HistoryBands(s, d), x123HistoryShingles(s, d)))
-        graft.operators.Dedup.incrementalNearDups(
-            shingleArrays(batchFull), bands, sh,
-            bandReducer = graft.sources.MinHashHistory.bandScanReducer(s, d))
-          .groupBy(col("doc_a").as("doc_id"))
-          .agg(max(col("jaccard")).as("best_jaccard"))
-      })
-    (status, best, gramFrac)
+      () => statusLeg(s, d, text, history),
+      () => gramLeg(s, d, text, history, k)
+        .select(col("doc_id"), col("hist_frac")),
+      () => bestJaccard(nearDupLeg(s, d, shingleArrays(docs), history)))
+    triageMeasures(status, best, gramFrac)
   }
 
   // ---------------------------------------------------------------- x126
@@ -810,7 +822,9 @@ object TextOps {
     * EXPLAINABLE form (all measures for every doc — threshold tuning and
     * audits); this is the steady-state form, where most arrivals resolve
     * at the cheap exact leg and the expensive shingle/gram legs see
-    * shrinking slices. The oracle replays the same gating in SQL.
+    * shrinking slices. It runs x125's three leg builders ([[statusLeg]],
+    * [[nearDupLeg]], [[gramLeg]]) on gated inputs ([[triageCascade]]).
+    * The oracle replays the same gating in SQL.
     */
   val x126_crawl_triage_cascade: QueryDef = QueryDef(
     "x126_crawl_triage_cascade",
@@ -840,70 +854,49 @@ object TextOps {
       Seq("doc_id", "status", "best_jaccard", "hist_frac", "verdict"))) { (s, d) =>
     // ONE materialization of the crawl batch, shared by the exact-status
     // leg (text projection) and the near-dup leg (shingle arrays) — the
-    // x125Legs rationale; `history` stays lazy (store-served in
+    // triageAll rationale; `history` stays lazy (store-served in
     // production, corpus-scale as a derived plan)
-    val batchFull = graft.util.Materialize.eager(x123Split(s, d)._2)
+    val (history, batch) = x123Split(s, d)
+    val docs = graft.util.Materialize.eager(batch)
     Canon(triageCascade(s, d,
-      batchFull.select(col("doc_id"), col("text")), shingleArrays(batchFull),
-      x86Split(s, d)._1))
+      docs.select(col("doc_id"), col("text")), shingleArrays(docs), history))
   }
 
-  /** The cascade composition itself, from leg INPUTS — shared by the
-    * registry builder and the measurement probes (which pass
-    * checkpointed batch frames and rely on the store fallbacks never
-    * firing). Each history relation resolves through the session store
-    * device: persisted stores when a producer ran, else the `history`
-    * derivations (by-name — never evaluated when stores serve).
+  /** The cascade composition over the three legs, from leg INPUTS —
+    * shared by the registry builder, the streaming twin's cascade branch
+    * and the measurement probes (which pass checkpointed batch frames and
+    * rely on the store fallbacks never firing). `history` is the by-name
+    * history docs frame every leg takes (never evaluated when the stores
+    * serve).
     */
   private[graft] def triageCascade(s: SparkSession, d: String,
       batchDocs: DataFrame, batchArrs: DataFrame,
       history: => DataFrame, k: Int = DupGramK,
       stripThrScaled: Option[Long] = None): DataFrame = {
     // each stage's output is batch-bounded-small (ids + a verdict/measure
-    // column) and feeds SEVERAL downstream stages — materialize them, or
-    // lazy evaluation re-runs every earlier leg inside every later one
-    // (measured: the lazy cascade cost MORE than the all-legs x125)
-    // the cascade's FIRST leg is where the bloom-gated hash probe pays
-    // most: in steady state most arrivals are novel, and a fully-novel
-    // micro-batch now resolves its exact status with ZERO hash-store
-    // files read (round-17 verdict optional #8)
-    // round 19: the stage outputs are batch-bounded id+measure rows —
-    // driver-local materialization (one limited-collect job each) makes
-    // every downstream gate (keptIds/survivors broadcasts, the final
-    // verdict joins) build from LocalTableScan instead of re-reading a
-    // checkpoint, cutting the cascade's per-stage job count
-    // round 19: ONE md5 pass over the batch (the x125Legs fold) — the
-    // driver-local (doc_id, th) relation feeds keyset + status join
-    val (bh, _) = graft.util.Materialize.localOrEager(
-      batchDocs.select(col("doc_id"), unhex(md5(col("text"))).as("th")))
+    // column) and feeds SEVERAL downstream stages — materialize them
+    // driver-local (one job each), or lazy evaluation re-runs every
+    // earlier leg inside every later one (measured: the lazy cascade cost
+    // MORE than the all-legs x125); every downstream gate (keptIds/
+    // survivors broadcasts, the final verdict joins) then builds from a
+    // LocalTableScan. The FIRST leg is where the bloom-gated hash probe
+    // pays most: in steady state most arrivals are novel, and a
+    // fully-novel micro-batch resolves its exact status with ZERO
+    // hash-store files read.
     val (status, _) = graft.util.Materialize.localOrEager(
-      Dedup.incrementalStatusFromHashes(bh,
-        graft.sources.HashHistory.probeHistory(s, d, bh.select(col("th")))(
-          history.select(unhex(md5(col("text"))).as("th")))))
+      statusLeg(s, d, batchDocs, history))
     val keptIds = status.filter(col("status") === "kept").select(col("doc_id"))
     // near-dup probe: kept survivors only
-    val (bands, sh) = graft.sources.MinHashHistory.scanOrCompute(s, d)(
-      (x123HistoryBands(s, d), x123HistoryShingles(s, d)))
-    val (best, _) = graft.util.Materialize.localOrEager(
-      graft.operators.Dedup.incrementalNearDups(
-          batchArrs.join(broadcast(keptIds), Seq("doc_id"), "left_semi"),
-          bands, sh,
-          bandReducer = graft.sources.MinHashHistory.bandScanReducer(s, d))
-        .groupBy(col("doc_a").as("doc_id"))
-        .agg(max(col("jaccard")).as("best_jaccard")))
+    val (best, _) = graft.util.Materialize.localOrEager(bestJaccard(
+      nearDupLeg(s, d,
+        batchArrs.join(broadcast(keptIds), Seq("doc_id"), "left_semi"),
+        history)))
     // gram audit: near-dup survivors only
     val survivors = keptIds.join(best.select(col("doc_id")),
       Seq("doc_id"), "left_anti")
-    val gramBatch = batchDocs.join(broadcast(survivors), Seq("doc_id"),
-      "left_semi")
-    // round 19: ONE gram-kernel pass over the survivor slice, shared by
-    // the probe keyset and the audit tail (the x102 fold)
-    val g = graft.util.Materialize.eager(Dedup.batchGramCounts(gramBatch, k))
-    val gramFrac = Dedup.incrementalDupGramsFromGrams(gramBatch, g,
-        graft.sources.GramHistory.probeHistory(s, d,
-          g.select(col(graft.sources.GramHistory.GramCol)).distinct())(
-          graft.sources.GramHistory.gramHashes(history, k)),
-        k = k, broadcastProbe = false)
+    val gramFrac = gramLeg(s, d,
+        batchDocs.join(broadcast(survivors), Seq("doc_id"), "left_semi"),
+        history, k)
       .select(col("doc_id"), col("hist_frac"))
     triageFrame(status, best, gramFrac, stripThrScaled)
   }
@@ -977,52 +970,35 @@ object TextOps {
          |FROM m CROSS JOIN thr t""".stripMargin,
       Seq("doc_id", "status", "best_jaccard", "hist_frac", "verdict",
         "strip_thr"))) { (s, d) =>
-    val (status, best, gramFrac) = x125Legs(s, d)
-    // persisted for the BUILD only (the x115 convention): the measure
-    // matrix feeds the threshold derivation's two jobs AND the final
-    // verdict frame; without the pin all three legs re-probe per
-    // consumer. Released in finally — composing callers accumulate no
-    // cached relations.
-    // round 19: the measure matrix is batch-bounded (id + 3 measures) —
-    // DRIVER-LOCAL within the cap, so the threshold derivation's rank
-    // jobs and the final verdict projection all run over a
-    // LocalTableScan instead of re-planning the persisted 3-leg join
-    // per consumer (the round-18 persist/finally form is the over-cap
-    // fallback, answers unchanged; localOrEager releases its own cache,
-    // so the finally dance disappears within the cap).
-    val (m, _) = graft.util.Materialize.localOrEager(
-      triageMeasures(status, best, gramFrac))
+    // the measure matrix feeds the threshold derivation's rank jobs AND
+    // the final verdict frame; without a pin all three legs re-probe per
+    // consumer. It is batch-bounded (id + 3 measures), so DRIVER-LOCAL
+    // within the cap: every consumer runs over a LocalTableScan, and
+    // localOrEager releases its own cache (over the cap: a checkpoint,
+    // answers unchanged).
+    val (m, _) = graft.util.Materialize.localOrEager(crawlTriageMeasures(s, d))
     val thr = deriveStripThrScaled(m).getOrElse(Long.MaxValue)
-    Canon.materialize(Canon(m
-      .withColumn("verdict",
-        when(col("status") =!= "kept", lit("drop_exact"))
-          .when(col("best_jaccard") >= 0.8, lit("drop_near"))
-          .when(round(col("hist_frac") * FracScale.toDouble)
-            .cast(LongType) > thr, lit("strip_spans"))
-          .otherwise(lit("keep")))
+    Canon.materialize(Canon(withVerdict(m, Some(thr))
       .withColumn("strip_thr",
         lit(thr).cast(DoubleType) / FracScale.toDouble)))
   }
 
-  /** The x125 verdict frame from the three probe legs — shared verbatim
-    * by the registry builder and the streaming twin
-    * ([[graft.streaming.CurationStreams.crawlTriage]]), so the
-    * one-micro-batch ≡ batch contract holds structurally. `status` =
-    * (doc_id, status); `best` = (doc_id, best_jaccard); `gramFrac` =
-    * (doc_id, hist_frac).
+  /** The triage verdict over a measure matrix ([[triageMeasures]]'
+    * shape) — the ONE verdict CASE of x125, x126, x127 and the streaming
+    * twin ([[graft.streaming.CurationStreams.crawlTriage]]), so the
+    * one-micro-batch ≡ batch contract holds structurally.
     *
     * `stripThrScaled`: None = the registry-pinned 0.3 strip cut (x125's
-    * gate, `hist_frac >= 0.3`); Some(t) = an OFFLINE-DERIVED scaled-
-    * integer cut compared exactly as x127 compares it
-    * (`round(hist_frac × 10^6) > t` — scaled integers, so batch and
-    * stream gate bit-identically regardless of double formatting). The
+    * gate, `hist_frac >= 0.3`); Some(t) = a DERIVED scaled-integer cut
+    * compared exactly as x127 compares it (`round(hist_frac × 10^6) > t`
+    * — scaled integers, so batch and stream gate bit-identically
+    * regardless of double formatting; `Long.MaxValue` never trips). The
     * production posture (x118's curateV3 precedent): derive t
     * periodically offline ([[deriveStripThrScaled]]) and feed the scalar
     * to the stream; a live per-batch percentile would gate every batch
     * against itself.
     */
-  private[graft] def triageFrame(status: DataFrame, best: DataFrame,
-                                 gramFrac: DataFrame,
+  private[graft] def withVerdict(measures: DataFrame,
                                  stripThrScaled: Option[Long] = None)
       : DataFrame = {
     val stripGate = stripThrScaled match {
@@ -1030,13 +1006,22 @@ object TextOps {
       case Some(t) =>
         round(col("hist_frac") * FracScale.toDouble).cast(LongType) > t
     }
-    triageMeasures(status, best, gramFrac)
-      .withColumn("verdict",
-        when(col("status") =!= "kept", lit("drop_exact"))
-          .when(col("best_jaccard") >= 0.8, lit("drop_near"))
-          .when(stripGate, lit("strip_spans"))
-          .otherwise(lit("keep")))
+    measures.withColumn("verdict",
+      when(col("status") =!= "kept", lit("drop_exact"))
+        .when(col("best_jaccard") >= 0.8, lit("drop_near"))
+        .when(stripGate, lit("strip_spans"))
+        .otherwise(lit("keep")))
   }
+
+  /** [[withVerdict]] over the three legs' outputs: `status` =
+    * (doc_id, status); `best` = (doc_id, best_jaccard); `gramFrac` =
+    * (doc_id, hist_frac).
+    */
+  private[graft] def triageFrame(status: DataFrame, best: DataFrame,
+                                 gramFrac: DataFrame,
+                                 stripThrScaled: Option[Long] = None)
+      : DataFrame =
+    withVerdict(triageMeasures(status, best, gramFrac), stripThrScaled)
 
   /** x127's threshold derivation as a standalone verb — the exact p90 of
     * the integer-scaled positive `hist_frac` over the strip-ELIGIBLE
@@ -1057,9 +1042,9 @@ object TextOps {
       "v", StripPercentileNum, StripPercentileDen)
 
   /** The pre-verdict measure matrix — (doc_id, status, best_jaccard,
-    * hist_frac) with absent legs coalesced to 0 — shared by the pinned
-    * verdict ([[triageFrame]]) and the derived-threshold form (x127),
-    * which must see the measures BEFORE a cut is chosen.
+    * hist_frac) with absent legs coalesced to 0 — what [[withVerdict]]
+    * reads, and what the derived-threshold form (x127) must see BEFORE a
+    * cut is chosen.
     */
   private[graft] def triageMeasures(status: DataFrame, best: DataFrame,
                                     gramFrac: DataFrame): DataFrame =
@@ -1634,19 +1619,8 @@ object TextOps {
     // the batch side is consumed three times (probe keyset, the gram
     // relation g, the total_pos frame) — materialize the split union once
     // (batch-bounded by the family contract); history stays lazy
-    val (history, batch0) = x86Split(s, d)
-    val batch = graft.util.Materialize.eager(batch0)
-    // round 19: ONE batch gram-kernel pass — the materialized
-    // (doc_id, gh, pc) relation feeds the probe keyset AND the audit
-    // tail (lazily the per-doc gram UDF ran once inside the probe's
-    // bloom cut and again for the hits join). Batch-gram-sized, bounded
-    // by the same batch ≪ store contract as the batch checkpoint above.
-    val g = graft.util.Materialize.eager(Dedup.batchGramCounts(batch, DupGramK))
-    Canon(Dedup.incrementalDupGramsFromGrams(batch, g,
-      graft.sources.GramHistory.probeHistory(s, d,
-        g.select(col(graft.sources.GramHistory.GramCol)).distinct())(
-        graft.sources.GramHistory.gramHashes(history, DupGramK)),
-      k = DupGramK, broadcastProbe = false))
+    val (history, batch) = x86Split(s, d)
+    Canon(gramLeg(s, d, graft.util.Materialize.eager(batch), history))
   }
 
   // ---------------------------------------------------------------- x118

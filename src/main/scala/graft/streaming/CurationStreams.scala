@@ -885,11 +885,8 @@ object CurationStreams {
     guardedBatch(batch, batchId, sink, growStore,
         storeLeg(spark, graft.sources.MinHashHistory, dir, guard)(
           append(batch))) {
-      val (bands, sh) =
-        graft.sources.MinHashHistory.scanOrCompute(spark, dir)(unreachable(dir))
-      graft.operators.Dedup.incrementalNearDups(
-        graft.queries.TextOps.shingleArrays(batch), bands, sh,
-        bandReducer = graft.sources.MinHashHistory.bandScanReducer(spark, dir))
+      graft.queries.TextOps.nearDupLeg(spark, dir,
+        graft.queries.TextOps.shingleArrays(batch), unreachable(dir))
     }
   }
 
@@ -966,16 +963,22 @@ object CurationStreams {
     * duplicated-substring fraction against [[graft.sources.GramHistory]]
     * (create all three for `dir` first; empty histories are fine) —
     * resolved to the x125 verdict
-    * (drop_exact / drop_near / strip_spans / keep) by the SAME
-    * [[graft.queries.TextOps.triageFrame]] the batch entry uses, so a
-    * one-micro-batch stream is bit-identical to the batch operator (the
-    * spec asserts it). Then the batch appends to all three stores, EACH
-    * behind its own guard under [[guardedBatch]] — the stores have
+    * (drop_exact / drop_near / strip_spans / keep). The micro-batch runs
+    * the SAME code as the batch entry: x125's all-legs composition
+    * ([[graft.queries.TextOps.triageAll]] — the batch materialized once,
+    * the three leg builders overlapped) and its verdict
+    * ([[graft.queries.TextOps.withVerdict]]), so a one-micro-batch
+    * stream is bit-identical to the batch operator (the spec asserts
+    * it). Then the batch appends to all three stores, EACH behind its
+    * own guard under [[guardedBatch]] — the stores have
     * independent lineages (the x86/x102/x123 twins share them), so a
     * replay after a mid-sequence append failure retries ONLY the store
     * whose append did not commit (spec-gated); re-appends carry each
     * store's own semantics (membership for hash/gram, counted shingle
-    * evidence for minhash — compact() restores).
+    * evidence for minhash — compact() restores). A leg that throws
+    * fails the micro-batch with that leg's own exception before the sink
+    * or any append runs, so no mark moves and the replay re-scores the
+    * batch (spec-gated).
     *
     * A PARTIAL replay (some stores committed, some not) still runs — the
     * uncommitted appends need their retry — and therefore re-emits this
@@ -1028,7 +1031,7 @@ object CurationStreams {
     }
   }
 
-  /** One micro-batch of [[crawlTriage]] — the three probes composed under
+  /** One micro-batch of [[crawlTriage]] — the triage composed under
     * three guards (appends injectable, so the per-store replay contract
     * is directly spec-gated).
     */
@@ -1054,35 +1057,9 @@ object CurationStreams {
         graft.queries.TextOps.triageCascade(spark, dir, batch,
           graft.queries.TextOps.shingleArrays(batch), unreachable(dir),
           k = k, stripThrScaled = stripThrScaled)
-      else {
-        // round 19 (the x125Legs fold, ported): ONE md5 pass and ONE
-        // gram-kernel pass per micro-batch — each materialized relation
-        // feeds its probe keyset AND its score tail
-        val (bh, _) = graft.util.Materialize.localOrEager(
-          batch.select(col("doc_id"), unhex(md5(col("text"))).as("th")))
-        val status = graft.operators.Dedup.incrementalStatusFromHashes(bh,
-          graft.sources.HashHistory.probeHistory(spark, dir,
-            bh.select(col("th")))(unreachable(dir)))
-        val g = graft.util.Materialize.eager(
-          graft.operators.Dedup.batchGramCounts(batch, k))
-        val gramFrac = graft.operators.Dedup.incrementalDupGramsFromGrams(
-            batch, g,
-            graft.sources.GramHistory.probeHistory(spark, dir,
-              g.select(col(graft.sources.GramHistory.GramCol)).distinct())(
-              unreachable(dir)),
-            k = k, broadcastProbe = false)
-          .select(col("doc_id"), col("hist_frac"))
-        val (bands, sh) =
-          graft.sources.MinHashHistory.scanOrCompute(spark, dir)(unreachable(dir))
-        val best = graft.operators.Dedup.incrementalNearDups(
-            graft.queries.TextOps.shingleArrays(batch), bands, sh,
-            bandReducer =
-              graft.sources.MinHashHistory.bandScanReducer(spark, dir))
-          .groupBy(col("doc_a").as("doc_id"))
-          .agg(max(col("jaccard")).as("best_jaccard"))
-        graft.queries.TextOps.triageFrame(status, best, gramFrac,
-          stripThrScaled)
-      }
+      else
+        graft.queries.TextOps.withVerdict(graft.queries.TextOps.triageAll(
+          spark, dir, batch, unreachable(dir), k), stripThrScaled)
     }
   }
 

@@ -135,11 +135,8 @@ object CrawlRehearsal {
         build = { d => GramHistory.clearStaleMarker(spark, d)
           GramHistory.create(spark, d, TextOps.x86Split(spark, d)._1,
             TextOps.DupGramK) },
-        probe = d => Dedup.incrementalDupGrams(batchDocs,
-          GramHistory.probeHistory(spark, d,
-            GramHistory.gramHashes(batchDocs, TextOps.DupGramK))(
-            sys.error("unreachable")),
-          k = TextOps.DupGramK, broadcastProbe = false),
+        probe = d => TextOps.gramLeg(spark, d, batchDocs,
+          sys.error("unreachable")),
         derived = d => Dedup.incrementalDupGrams(batchDocs,
           GramHistory.gramHashes(TextOps.x86Split(spark, d)._1,
             TextOps.DupGramK), k = TextOps.DupGramK),
@@ -203,11 +200,8 @@ object CrawlRehearsal {
           MinHashHistory.create(spark, d,
             TextOps.x123HistoryBands(spark, d),
             TextOps.x123HistoryShingles(spark, d)) },
-        probe = { d =>
-          val (bands, sh) = MinHashHistory.scanOrCompute(spark, d)(
-            sys.error("unreachable"))
-          Dedup.incrementalNearDups(batchArrs, bands, sh,
-            bandReducer = MinHashHistory.bandScanReducer(spark, d)) },
+        probe = d => TextOps.nearDupLeg(spark, d, batchArrs,
+          sys.error("unreachable")),
         derived = { d =>
           val hist = TextOps.x123Split(spark, d)._1
           Dedup.incrementalNearDups(batchArrs,

@@ -7,11 +7,16 @@ import org.apache.spark.sql.functions._
 /** x125 at crawl cadence vs history growth — the composed-triage analog
   * of [[NearDupProbe]]: the FIXED base batch (the shared md5-bucket
   * split's batch side, pinned from the base dir) triaged against the
-  * three text-side stores built from 1×/10×/100× histories. Claims
-  * measured:
+  * three text-side stores built from 1×/10×/100× histories. It runs the
+  * registry's own code — x125's all-legs composition
+  * ([[graft.queries.TextOps.triageAll]]), x126's cascade and, for the
+  * per-leg breakdown, the three leg builders — so its rows measure what
+  * the entries run (rows before this form, BASELINE rounds 17–19, timed
+  * older leg shapes and do not compare). Claims measured:
   *
-  *  - COST: the composed wall ≈ the three probe legs' sum at every
-  *    scale; each leg's history contribution is its store's sequential
+  *  - COST: the composed wall against the three legs' walls at every
+  *    scale (the legs overlap, so it sits between their maximum and
+  *    their sum); each leg's history contribution is its store's sequential
   *    columnar scan (no history-side exchange — PlanSpec gates the
   *    composed plan), so growth is flat-to-sublinear in store size.
   *  - DETERMINISM: the scaled corpora's replicas are md5-/gram-/
@@ -36,42 +41,18 @@ object TriageScaleProbe {
       "spark.sql.warehouse.dir" -> s"/tmp/graft_triagesp_wh_${System.nanoTime}")
     println(s"[triage-scale] loadavg $load0 base=$baseSf scaled=$scaled")
 
-    import graft.operators.Dedup
     import graft.queries.TextOps
     import graft.sources._
 
-    val batchDocs = TextOps.x86Split(spark, baseSf)._2.localCheckpoint(true)
-    val batchArrs = TextOps.shingleArrays(TextOps.x123Split(spark, baseSf)._2)
-      .localCheckpoint(true)
+    val batch = TextOps.x123Split(spark, baseSf)._2.localCheckpoint(true)
+    val batchDocs = batch.select(col("doc_id"), col("text"))
+    val batchArrs = TextOps.shingleArrays(batch).localCheckpoint(true)
+    def unreachable: Nothing = sys.error("unreachable: the stores are built")
 
-    def statusLeg(dir: String): DataFrame =
-      // the round-18 registry shape: bloom-gated + bucket-pruned hash
-      // probe (x125Legs' status leg), not the co-located full scan
-      Dedup.incrementalStatusBinary(batchDocs,
-        HashHistory.probeHistory(spark, dir,
-          batchDocs.select(unhex(md5(col("text"))).as("th")))(
-          sys.error("unreachable")))
-    def gramLeg(dir: String, docs: DataFrame): DataFrame =
-      Dedup.incrementalDupGrams(docs,
-          GramHistory.probeHistory(spark, dir,
-            GramHistory.gramHashes(docs, TextOps.DupGramK))(
-            sys.error("unreachable")),
-          k = TextOps.DupGramK, broadcastProbe = false)
-        .select(col("doc_id"), col("hist_frac"))
-    def nearDupLeg(dir: String, arrs: DataFrame): DataFrame = {
-      val (bands, sh) = MinHashHistory.scanOrCompute(spark, dir)(
-        sys.error("unreachable"))
-      Dedup.incrementalNearDups(arrs, bands, sh,
-          bandReducer = MinHashHistory.bandScanReducer(spark, dir))
-        .groupBy(col("doc_a").as("doc_id"))
-        .agg(max(col("jaccard")).as("best_jaccard"))
-    }
     def triage(dir: String): DataFrame =
-      TextOps.triageFrame(statusLeg(dir), nearDupLeg(dir, batchArrs),
-        gramLeg(dir, batchDocs))
+      TextOps.withVerdict(TextOps.triageAll(spark, dir, batch, unreachable))
     def cascade(dir: String): DataFrame =
-      TextOps.triageCascade(spark, dir, batchDocs, batchArrs,
-        sys.error("unreachable"))
+      TextOps.triageCascade(spark, dir, batchDocs, batchArrs, unreachable)
     def wall(df: => DataFrame): Double = {
       val t = System.nanoTime()
       df.collect().length: Unit
@@ -98,9 +79,10 @@ object TriageScaleProbe {
       // eliminate the distinct-keyed left joins and skip two legs
       val walls = (1 to 2).map(_ => wall(triage(dir)))
       // per-leg steady-state breakdown (each leg warmed by the runs above)
-      val legStatus = wall(statusLeg(dir))
-      val legNear = wall(nearDupLeg(dir, batchArrs))
-      val legGram = wall(gramLeg(dir, batchDocs))
+      val legStatus =
+        wall(TextOps.statusLeg(spark, dir, batchDocs, unreachable))
+      val legNear = wall(TextOps.nearDupLeg(spark, dir, batchArrs, unreachable))
+      val legGram = wall(TextOps.gramLeg(spark, dir, batchDocs, unreachable))
       // the x126 production fast path: same verdicts, shrinking legs
       val cascWalls = (1 to 2).map(_ => wall(cascade(dir)))
       val rows = triage(dir).collect().map(_.toSeq).toSet

@@ -39,16 +39,16 @@ object Materialize {
     * released before returning. The returned frame is a LocalTableScan
     * (no checkpoint write, no lingering executor-storage pin, and every
     * downstream broadcast build reads local rows instead of re-running
-    * lineage); the known row count rides along so emptiness checks cost
+    * lineage); the exact row count rides along so emptiness checks cost
     * no extra job. Relations past the cap — the violated boundedness
     * contract — fall back to [[eager]], answers unchanged.
     */
   def localOrEager(df: DataFrame,
-                   maxRows: Long = 1L << 22): (DataFrame, Option[Long]) =
+                   maxRows: Long = 1L << 22): (DataFrame, Long) =
     boundedRows(df, maxRows) match {
       case (Some(rows), n) => (df.sparkSession.createDataFrame(
-        java.util.Arrays.asList(rows: _*), df.schema), Some(n))
-      case (None, n) => (eager(df), Some(n))
+        java.util.Arrays.asList(rows: _*), df.schema), n)
+      case (None, n) => (eager(df), n)
     }
 
   /** The row-level form of [[localOrEager]]: (rows within the cap — None

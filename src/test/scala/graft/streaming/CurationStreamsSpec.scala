@@ -1702,6 +1702,57 @@ class CurationStreamsSpec extends SparkSpec {
     triageInvalidate(dir)
   }
 
+  test("streaming crawl triage: a leg that throws inside the parallel score " +
+      "rethrows its own exception, sinks and appends nothing, and replays") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{md5 => smd5, unhex}
+    import graft.queries.TextOps
+    import graft.sources.{GramHistory, HashHistory, MinHashHistory, StreamMark}
+    val dir = s"/tmp/triage_legfail_${System.nanoTime}"
+    mkTriageStores(dir)
+    val batch = Seq(ndDoc(10L, ndText("edited")), ndDoc(11L, ndNovel))
+      .toDF("doc_id", "text", "lang", "n_chars")
+    val (gH, gG, gM) =
+      (new StreamMark.Guard, new StreamMark.Guard, new StreamMark.Guard)
+    var sinks = 0
+    var appends = 0
+    var sunk = Map.empty[Long, String]
+    def run(): Unit = CurationStreams.triageBatch(batch, 0L, dir,
+      TextOps.DupGramK, df => { sinks += 1
+        sunk = df.select("doc_id", "verdict").as[(Long, String)].collect().toMap },
+      gH, gG, gM, growStore = true,
+      appendHash = b => { appends += 1
+        HashHistory.append(spark, dir, b.select(unhex(smd5(col("text"))).as("th"))) },
+      appendGram = b => { appends += 1
+        GramHistory.append(spark, dir, GramHistory.gramHashes(b, TextOps.DupGramK)) },
+      appendMh = b => { appends += 1
+        MinHashHistory.append(spark, dir,
+          TextOps.minHashBandsOf(b), TextOps.minHashShinglesOf(b)) })
+    def marks(): Seq[Long] = Seq(HashHistory.tableFor(dir),
+      GramHistory.tableFor(dir), MinHashHistory.tableFor(dir))
+      .map(StreamMark.read(spark, _))
+    // the near-dup store stays registered while its shingle table is
+    // gone, so the near-dup leg throws while its siblings are running
+    val sh = MinHashHistory.shTableFor(dir)
+    spark.sql(s"ALTER TABLE $sh RENAME TO ${sh}_away")
+    val e =
+      try intercept[org.apache.spark.sql.AnalysisException](run())
+      finally spark.sql(s"ALTER TABLE ${sh}_away RENAME TO $sh")
+    assert(e.getMessage.contains(sh), s"not the leg's own exception: $e")
+    assert(sinks == 0 && appends == 0,
+      s"a failed score reached the sink ($sinks) or an append ($appends)")
+    assert(marks() == Seq(-1L, -1L, -1L) &&
+      Seq(gH, gG, gM).forall(_.get() == -1L),
+      s"a failed score moved a mark: ${marks()}")
+    // the replay, with the store back, scores and appends as a first
+    // delivery does
+    run()
+    assert(sinks == 1 && appends == 3, s"replay: $sinks sinks, $appends appends")
+    assert(sunk == Map(10L -> "drop_near", 11L -> "keep"), s"got $sunk")
+    assert(marks() == Seq(0L, 0L, 0L) && Seq(gH, gG, gM).forall(_.get() == 0L))
+    triageInvalidate(dir)
+  }
+
   // ------------------------------------- streaming incremental embedding
 
   private def embVec(seed: Int): Array[Float] = {
