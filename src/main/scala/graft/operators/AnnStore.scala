@@ -107,7 +107,7 @@ object AnnStore {
     * swapped in with ONE rename ([[graft.sources.SwapDir]] over the whole
     * store dir). Crash residue is a missing store dir — loud, rebuildable
     * — never a torn pair. Runs under [[graft.sources.MutationGuard]]
-    * (marker lives beside the store dir and survives the swap).
+    * (its lease lives beside the store dir and survives the swap).
     *
     * Answers: search() after retrain is bit-identical to the transient
     * [[Pq.pqTopKRefined]] run with the retrained parameters over the same

@@ -141,7 +141,7 @@ object IvfStore {
     * BEFORE the vector swap, so a crash between the two leaves new
     * centroids over old assignments — a pure recall degradation (the
     * approximate index's benign failure direction, never wrong scores)
-    * plus the held [[graft.sources.MutationGuard]] marker making the
+    * plus the held [[graft.sources.MutationGuard]] lease making the
     * half-rebalance loud; rerun to finish.
     *
     * Frame lifetime: the vector swap replaces the store's files, so any

@@ -41,7 +41,7 @@ object HistoryStores {
       "x123 falls back to derived history"))
 
   /** Build every store for `dir` in a run that owns its warehouse: a
-    * marker a killed run left is cleared first, and a failed build is
+    * lease a killed run left is cleared first, and a failed build is
     * reported (prefixed `[tag]`) instead of failing the run.
     */
   def buildAll(spark: SparkSession, dir: String, tag: String): Unit =

@@ -706,15 +706,13 @@ object TextOps {
     Canon(withVerdict(crawlTriageMeasures(s, d)))
   }
 
-  /** x125/x127's all-legs measure matrix over the crawl split. The
-    * history is a split derivation of its own, built even when the stores
-    * serve it: one extra `documents` schema read (one job) that taking it
-    * from the batch's split would save — a job-count change left to be
-    * measured on its own.
+  /** x125/x127's all-legs measure matrix over the crawl split. Batch and
+    * history come from ONE split call, so `documents` is read (and its
+    * schema inferred, one job) once; the history frame is only evaluated
+    * when no producer step registered the stores.
     */
   private def crawlTriageMeasures(s: SparkSession, d: String): DataFrame = {
-    val batch = x123Split(s, d)._2
-    val history = x123Split(s, d)._1
+    val (history, batch) = x123Split(s, d)
     triageAll(s, d, batch, history)
   }
 

@@ -25,7 +25,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * shared metastore) re-attaches to an existing store via [[attach]].
   *
   * Mutations (create/append/compact) run under ONE [[MutationGuard]]
-  * marker anchored at the main table's [[Bucketing.guardBase]] — all
+  * lease anchored at the main table's [[Bucketing.guardBase]] — all
   * relations of a store mutate together, single writer (the
   * [[Bucketing.compactDistinct]] contract). `create` clears the
   * [[StreamMark]] replay watermark: a recreated store is a NEW streaming
@@ -241,7 +241,7 @@ abstract class BucketedStore[S](prefix: String, keyCol: String,
 
   /** Break a killed run's mutation lock on `dir`'s store — for harnesses
     * that own their warehouse and rebuild from scratch, where a leftover
-    * marker would stall the rebuild for the acquire wait. Never call this
+    * lease would stall the rebuild for the acquire wait. Never call this
     * where another writer might genuinely be live.
     */
   def clearStaleMarker(spark: SparkSession, dir: String): Unit =

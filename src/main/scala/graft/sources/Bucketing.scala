@@ -81,8 +81,8 @@ object Bucketing {
 
   /** The [[MutationGuard]] anchor for a table's mutating verbs: the
     * resolved table location string — a warehouse path derived from the
-    * table NAME, so the `<base>_mutating` marker lives beside the table
-    * dir and survives the drop/rename inside [[compactDistinct]].
+    * table NAME, so the `<base>_lease_e<epoch>` files live beside the
+    * table dir and survive the drop/rename inside [[compactDistinct]].
     */
   def guardBase(spark: SparkSession, table: String): String =
     new org.apache.hadoop.fs.Path(

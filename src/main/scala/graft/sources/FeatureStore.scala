@@ -344,295 +344,17 @@ object FeatureStore {
 
   // ------------------------------------------------------------- storage
 
-  /** Writer lease — enforces the store's single-writer contract instead of
-    * merely documenting it. Every mutating path (append / write / compact /
-    * CRUD rewrite) holds the lease from its first probe to its manifest
-    * commit, so two writers can no longer interleave probe→rewrite work and
-    * then race the commit: the second writer fails LOUDLY at acquire (after
-    * a bounded wait), not with a confusing mid-write FileNotFound.
-    *
-    * Mechanics: epoch-NAMED lease files, `<path>_lease_e<epoch>`, the same
-    * scheme as the `m_<n>` manifests. The CURRENT lease is the highest
-    * epoch; its content (`holder expiresAt`) says who holds it and until
-    * when. Acquiring epoch e+1 is ONE `create(overwrite=false)` — atomic
-    * winner, no delete-then-create window, so two concurrent stealers of an
-    * expired lease can never both win (the loser's create throws and it
-    * re-reads e+1 as the new valid lease). A lease past its TTL — or one
-    * whose content is torn/unreadable (a creator that crashed mid-write;
-    * the epoch still reads from the NAME, so a torn file can never wedge
-    * the store) — is considered abandoned and stealable at the next epoch.
-    * A slow writer that outlives its TTL and gets stolen from fails loudly
-    * at commit time: [[Manifests.commit]] re-reads the current lease and
-    * requires (epoch, holder) unchanged before any destructive step,
-    * leaving the store on the thief's snapshot, never on a torn one.
-    * Stale epoch files below the current one are dead by construction and
-    * swept on acquire.
+  /** The store's [[WriterLease]] at `<path>_lease_e<epoch>`: every
+    * mutating path (append / write / compact / CRUD rewrite) holds it from
+    * its first probe to its manifest commit, so two writers can no longer
+    * interleave probe→rewrite work and then race the commit, and
+    * [[Manifests.commit]] re-verifies it before any destructive step — a
+    * writer stolen from after its TTL fails loudly, leaving the store on
+    * the thief's snapshot, never on a torn one.
     */
-  private[sources] object Lease {
-    final case class Token(epoch: Long, holder: String)
-
-    private def leaseDirGlob(cfg: StoreConfig) =
-      new org.apache.hadoop.fs.Path(cfg.path + "_lease_e*")
-
-    private def path(cfg: StoreConfig, epoch: Long) =
-      new org.apache.hadoop.fs.Path(cfg.path + s"_lease_e$epoch")
-
-    private def epochOf(p: org.apache.hadoop.fs.Path): Long =
-      p.getName.substring(p.getName.lastIndexOf("_e") + 2).toLong
-
-    /** All lease files, ascending epoch. */
-    private def listLeases(fs: org.apache.hadoop.fs.FileSystem,
-                           cfg: StoreConfig): Seq[org.apache.hadoop.fs.Path] =
-      Option(fs.globStatus(leaseDirGlob(cfg))).getOrElse(Array.empty)
-        .map(_.getPath).filter(_.getName.matches(".*_e\\d+$"))
-        .sortBy(epochOf).toIndexedSeq
-
-    /** Release marker for an epoch: EXISTENCE is the signal (content
-      * irrelevant), so releasing is one atomic create — no truncate-rewrite
-      * window that could leave the current lease file torn mid-release.
-      * The name deliberately fails [[listLeases]]' `_e\d+$` filter.
-      */
-    private def releasedMarker(cfg: StoreConfig, epoch: Long) =
-      new org.apache.hadoop.fs.Path(cfg.path + s"_lease_e${epoch}_released")
-
-    private final case class LeaseFile(epoch: Long, mtime: Long,
-                                       released: Boolean,
-                                       content: Option[(String, Long)])
-
-    /** The highest-epoch lease; `content` is None when torn (crashed or
-      * in-flight creator) — the epoch always reads from the file NAME.
-      */
-    private def current(fs: org.apache.hadoop.fs.FileSystem,
-                        cfg: StoreConfig): Option[LeaseFile] =
-      listLeases(fs, cfg).lastOption.map { p =>
-        val content =
-          try {
-            val in = fs.open(p)
-            val line =
-              try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-                .find(_.nonEmpty).getOrElse("")
-              finally in.close()
-            line.split("\\s+") match {
-              case Array(h, x) => Some((h, x.toLong))
-              case _ => None // torn: empty or partial content
-            }
-          } catch {
-            case _: java.io.IOException | _: NumberFormatException => None
-          }
-        // unreadable mtime reads as FRESH (now), not ancient: the fallback
-        // decides whether a torn lease is instantly stealable, and the safe
-        // error is delaying a steal by the grace, not re-opening the
-        // instant-steal race on an in-flight creator
-        val mtime =
-          try fs.getFileStatus(p).getModificationTime
-          catch { case _: java.io.IOException => System.currentTimeMillis }
-        val released =
-          try fs.exists(releasedMarker(cfg, epochOf(p)))
-          catch { case _: java.io.IOException => false }
-        LeaseFile(epochOf(p), mtime, released, content)
-      }
-
-    /** STRICT fencing predicate ([[verify]] / commit-time): (epoch, holder)
-      * must be the current lease, content readable, not released.
-      */
-    private def holds(fs: org.apache.hadoop.fs.FileSystem, cfg: StoreConfig,
-                      epoch: Long, holder: String): Boolean =
-      current(fs, cfg).exists(l =>
-        l.epoch == epoch && !l.released && l.content.exists(_._1 == holder))
-
-    /** TOLERANT ownership predicate for acquire-time self-checks: an epoch
-      * file can only ever be created ONCE (create-no-overwrite; tombstoned
-      * epochs are never reused), so if the current epoch is the one WE just
-      * created, the file is ours even when its content reads torn — a
-      * transient content-read failure must not make a winner delete its own
-      * valid lease and churn epochs. (If our content write genuinely tore,
-      * we hold a torn lease: others grace-wait on it and our own commit
-      * fence will fail loudly — degraded, never silent.)
-      */
-    private def ownsEpoch(fs: org.apache.hadoop.fs.FileSystem, cfg: StoreConfig,
-                          epoch: Long, holder: String): Boolean =
-      current(fs, cfg).exists(l =>
-        l.epoch == epoch && l.content.forall(_._1 == holder))
-
-    /** Verify-time torn-read fallback: epoch identity AND not released.
-      * Unlike [[ownsEpoch]] (acquire-time, where the creator has not
-      * released yet by construction), verify must honor the `_released`
-      * marker — a holder that already released keeps epoch identity until
-      * a successor acquires, so without this check a use-after-release
-      * commit would silently succeed and race the next acquirer (release
-      * makes the lease immediately stealable). The marker is a separate
-      * atomic create, unaffected by torn lease-file content, so checking
-      * it here costs nothing in torn-read tolerance.
-      */
-    private def ownsLiveEpoch(fs: org.apache.hadoop.fs.FileSystem,
-                              cfg: StoreConfig,
-                              epoch: Long, holder: String): Boolean =
-      current(fs, cfg).exists(l =>
-        l.epoch == epoch && !l.released && l.content.forall(_._1 == holder))
-
-    /** Take the lease, waiting up to `cfg.leaseWaitMillis` for the current
-      * holder; released, expired — and torn-past-grace — leases are stolen
-      * at the next epoch.
-      */
-    def acquire(fs: org.apache.hadoop.fs.FileSystem, cfg: StoreConfig): Token = {
-      val deadline = System.currentTimeMillis + math.max(cfg.leaseWaitMillis, 0L)
-      var blocker = "none" // what the last attempt saw, for the error message
-      while (true) {
-        val now = System.currentTimeMillis
-        val cur = current(fs, cfg)
-        val takeable = cur match {
-          case None => true
-          case Some(l) if l.released => true // holder finished; marker is atomic
-          case Some(LeaseFile(epoch, _, _, Some((holder, expiresAt)))) =>
-            if (expiresAt >= now) { blocker = s"holder $holder (epoch $epoch)"; false }
-            else true // expired: crashed holder, stealable
-          case Some(LeaseFile(epoch, mtime, _, None)) =>
-            // torn content: only steal once the grace says it is a CRASHED
-            // creator, not one mid-write — instant stealing would let the
-            // creator's own post-create confirmation and the thief both win
-            if (now - mtime <= cfg.leaseTornGraceMillis) {
-              blocker = s"epoch $epoch mid-creation (torn, within grace)"; false
-            } else true
-        }
-        if (takeable) {
-          // race to CREATE the next epoch — exactly one concurrent
-          // acquirer wins; nothing is deleted on this path, so a loser can
-          // never remove a winner's valid lease
-          val epoch = cur.map(_.epoch).getOrElse(0L) + 1
-          val holder = java.util.UUID.randomUUID().toString
-          var created = false
-          try {
-            val out = fs.create(path(cfg, epoch), false)
-            try out.write(
-              s"$holder ${now + cfg.leaseTtlMillis}".getBytes("UTF-8"))
-            finally out.close()
-            created = true
-          } catch {
-            case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-                 _: java.nio.file.FileAlreadyExistsException =>
-              // a racing creator won this epoch — unambiguous loss, and we
-              // must NOT touch the file (it is the winner's live lease)
-              blocker = s"epoch $epoch taken by a racing writer"
-            case e: java.io.IOException =>
-              // ambiguous: the CREATE may have succeeded with the failure
-              // landing on write/close. Claim the epoch ONLY on STRICT
-              // affirmative evidence — our holder readable in the current
-              // epoch's content. The tolerant torn-counts-as-ours predicate
-              // is WRONG here: on an FS signalling create-exists as a plain
-              // IOException, a torn file at this epoch may be a RACER
-              // mid-write, and claiming it would later delete their live
-              // lease and reuse the epoch. Failing strict, do no cleanup
-              // either (our possible torn debris is stolen past the
-              // bounded grace; deleting a racer's lease is far worse).
-              if (try holds(fs, cfg, epoch, holder)
-                  catch { case _: java.io.IOException => false }) {
-                created = true
-              } else {
-                blocker = s"lease-file create failing (${e.getMessage})"
-              }
-          }
-          // post-create work runs OUTSIDE the create try-block: a transient
-          // failure here must not read as "create failed" and abandon a
-          // valid on-disk lease (which would block every writer for a TTL)
-          if (created) {
-            // tolerant self-check: our epoch number proves ownership even
-            // when the content read is transiently unreadable — never
-            // delete our own possibly-valid lease over a read hiccup
-            val won =
-              try ownsEpoch(fs, cfg, epoch, holder)
-              catch { case _: java.io.IOException => true } // ours unless proven stolen
-            if (won) {
-              // best-effort sweep of EVERYTHING below the current epoch —
-              // lease files AND release markers, including orphan markers
-              // whose lease file a previous sweep already removed (a
-              // fenced holder's late release creates one per steal; left
-              // alone they accumulate and inflate every acquire's glob) —
-              // plus any pre-epoch-scheme `<path>_lease` single file
-              try {
-                // anchored to the LEASE suffix: a store basename that itself
-                // contains `_e<digits>` (e.g. `corpus_e2`) must not parse as
-                // the epoch, or the sweep would read every file — including
-                // the winner's just-created lease — as below-current and
-                // delete it
-                val eRe = "_lease_e(\\d+)(_released)?$".r
-                Option(fs.globStatus(leaseDirGlob(cfg))).getOrElse(Array.empty)
-                  .map(_.getPath)
-                  .filter(p => eRe.findFirstMatchIn(p.getName)
-                    .exists(_.group(1).toLong < epoch))
-                  .foreach(fs.delete(_, false))
-                fs.delete(new org.apache.hadoop.fs.Path(cfg.path + "_lease"), false)
-              } catch { case _: java.io.IOException => () }
-              return Token(epoch, holder)
-            }
-            try fs.delete(path(cfg, epoch), false) // dead below the thief's
-            catch { case _: java.io.IOException => () }
-            blocker = s"epoch $epoch stolen during creation"
-          }
-        }
-        if (System.currentTimeMillis >= deadline)
-          throw new IllegalStateException(
-            s"writer lease for ${cfg.path} not acquired after " +
-              s"${cfg.leaseWaitMillis} ms: $blocker — concurrent writer? " +
-              "(single-writer contract; stale leases steal after " +
-              s"${cfg.leaseTtlMillis} ms)")
-        Thread.sleep(50)
-      }
-      throw new IllegalStateException("unreachable")
-    }
-
-    /** Fencing check: the token's epoch must still be the CURRENT lease and
-      * carry the token's holder.
-      *
-      * A torn lease-file CONTENT read must not abort a legitimate holder:
-      * unlike the ambiguous-create path in [[acquire]], at verify time we
-      * KNOW this process created `token.epoch` (its acquire returned), the
-      * epoch file is create-no-overwrite, and a thief always advances to
-      * epoch+1 — so epoch identity plus an unreleased marker
-      * ([[ownsLiveEpoch]]) proves the lease is still ours even when its
-      * bytes read torn under IO load. The strict content check runs first,
-      * gets one re-read (torn reads are transient), then falls back to
-      * live epoch identity; a genuinely advanced/vanished epoch — or our
-      * own `_released` marker (use-after-release) — aborts.
-      */
-    def verify(fs: org.apache.hadoop.fs.FileSystem, cfg: StoreConfig,
-               token: Token): Unit = {
-      def strict = try holds(fs, cfg, token.epoch, token.holder)
-        catch { case _: java.io.IOException => false }
-      val ok = strict || strict ||
-        (try ownsLiveEpoch(fs, cfg, token.epoch, token.holder)
-         catch { case _: java.io.IOException => false })
-      require(ok,
-        s"writer lease for ${cfg.path} lost (epoch ${token.epoch} stolen " +
-          "after TTL expiry?) — aborting; the store remains on the " +
-          "current holder's snapshot")
-    }
-
-    /** Release = CREATE the epoch's `_released` marker, never a delete and
-      * never a rewrite of the lease file itself. Marker existence is the
-      * whole signal, so the release is one atomic create (a truncate-
-      * rewrite of the lease file would have a torn window that grace-stalls
-      * the next writer). The lease file + marker persist until a successor
-      * sweeps them from above, keeping epochs MONOTONE for the store's
-      * lifetime — a slow stolen-from writer's late release can never remove
-      * a successor's live lease (epoch names are never reused while their
-      * files exist). The next acquirer reads the marker and steals epoch+1
-      * immediately.
-      */
-    def release(fs: org.apache.hadoop.fs.FileSystem, cfg: StoreConfig,
-                token: Token): Unit =
-      try fs.create(releasedMarker(cfg, token.epoch), true).close()
-      catch {
-        case _: java.io.IOException => () // best-effort; TTL is the backstop
-      }
-  }
-
-  /** Run `body` holding the store's writer lease; always released on exit. */
-  private def withLease[A](fs: org.apache.hadoop.fs.FileSystem,
-                           cfg: StoreConfig)(body: Lease.Token => A): A = {
-    val token = Lease.acquire(fs, cfg)
-    try body(token)
-    finally Lease.release(fs, cfg, token)
-  }
+  private[sources] def lease(cfg: StoreConfig): WriterLease =
+    WriterLease(cfg.path, cfg.leaseWaitMillis, cfg.leaseTtlMillis,
+      cfg.leaseTornGraceMillis)
 
   /** Snapshot manifests — the store's committed file sets (the plain-parquet
     * core of a table format's commit log). Manifest `m_<n>` in the
@@ -644,7 +366,7 @@ object FeatureStore {
     * out of the newest `RetainManifests` snapshots ([[vacuum]]), so a reader
     * one commit behind still finds every file it resolved. Single-writer by
     * contract (like the reference's single Tank server), ENFORCED by the
-    * [[Lease]]: mutators hold the lease across probe→rewrite→commit, and the
+    * [[lease]]: mutators hold the lease across probe→rewrite→commit, and the
     * commit re-verifies it before the rename; true multi-writer concurrency
     * still needs a real table format.
     */
@@ -698,10 +420,10 @@ object FeatureStore {
       */
     def commit(fs: org.apache.hadoop.fs.FileSystem, cfg: StoreConfig,
                update: Seq[String] => Seq[String],
-               lease: Option[Lease.Token] = None): Unit = {
+               lease: Option[WriterLease.Token] = None): Unit = {
       // fencing: a writer whose lease was stolen (TTL outlived) must not
       // commit — verify ownership as late as possible, just before the rename
-      lease.foreach(Lease.verify(fs, cfg, _))
+      lease.foreach(FeatureStore.lease(cfg).verify(fs, _))
       val cur = latest(fs, cfg)
       val base = cur.map(_._2).getOrElse(storeListing(fs, cfg))
       val next = update(base).distinct.sorted
@@ -738,13 +460,13 @@ object FeatureStore {
       * overwrite path — the store dir was just rewritten in place).
       */
     def reset(fs: org.apache.hadoop.fs.FileSystem, cfg: StoreConfig,
-              lease: Option[Lease.Token] = None): Unit = {
+              lease: Option[WriterLease.Token] = None): Unit = {
       // fence BEFORE the destructive delete: check-then-act, so a steal
       // landing in the instant between this verify and the delete can still
       // slip through — but it moves the common stolen-lease case (TTL
       // outlived long ago) from "wipe the thief's manifest history, then
       // fail" to "fail before touching anything"
-      lease.foreach(Lease.verify(fs, cfg, _))
+      lease.foreach(FeatureStore.lease(cfg).verify(fs, _))
       fs.delete(dir(cfg), true)
       commit(fs, cfg, identity, lease)
     }
@@ -804,7 +526,7 @@ object FeatureStore {
     */
   def write(df: DataFrame, cfg: StoreConfig, partitions: Int = 0): Unit = {
     val fs = storeFs(df.sparkSession, cfg)
-    withLease(fs, cfg) { token =>
+    lease(cfg).hold(fs) { token =>
       val n = if (partitions > 0) partitions
         else math.max(1, (df.count() / cfg.targetFileRows).toInt)
       // the in-place Overwrite is destructive BEFORE any commit (the
@@ -813,7 +535,7 @@ object FeatureStore {
       // instead of clobbering the thief's store (check-then-act: a steal
       // landing after this line can still interleave; write() remains the
       // one path without full snapshot isolation)
-      Lease.verify(fs, cfg, token)
+      lease(cfg).verify(fs, token)
       df.repartitionByRange(n, col("hash"), col("uid"))
         .sortWithinPartitions("hash")
         .write.mode(SaveMode.Overwrite).parquet(cfg.path)
@@ -907,7 +629,7 @@ object FeatureStore {
   def append(df: DataFrame, cfg: StoreConfig): Unit = {
     val spark = df.sparkSession
     val fs = storeFs(spark, cfg)
-    withLease(fs, cfg) { token =>
+    lease(cfg).hold(fs) { token =>
       val tmp = new org.apache.hadoop.fs.Path(
         cfg.path + s"_ap_tmp_${java.util.UUID.randomUUID().toString.take(8)}")
       df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
@@ -1070,7 +792,7 @@ object FeatureStore {
     // resolve the filesystem FROM the store path — FileSystem.get(default)
     // throws "Wrong FS" whenever cfg.path lives on s3a://, hdfs://, …
     val fs = storeFs(spark, cfg)
-    withLease(fs, cfg) { token =>
+    lease(cfg).hold(fs) { token =>
       // the probe runs INSIDE the lease: the touched-file set must be from
       // the snapshot this writer will commit against
       val touched = read(spark, cfg)
@@ -1100,7 +822,7 @@ object FeatureStore {
   private def rewrite(spark: SparkSession, cfg: StoreConfig,
                       f: DataFrame => DataFrame): Unit = {
     val fs = storeFs(spark, cfg)
-    withLease(fs, cfg) { token =>
+    lease(cfg).hold(fs) { token =>
       val tmp = new org.apache.hadoop.fs.Path(
         cfg.path + s"_tmp_${java.util.UUID.randomUUID().toString.take(8)}")
       val next = f(read(spark, cfg)).cache()

@@ -3,238 +3,67 @@ package graft.sources
 import org.apache.spark.sql.SparkSession
 
 /** Enforced single-mutating-writer guard for the derived-index stores
-  * (Bm25Store / IvfStore / AnnStore / HashHistory / GramHistory) — upgrades
-  * the [[SwapDir]] / [[Bucketing.compactDistinct]] concurrency contract
-  * from documentation to a LOUD failure: every mutating verb (create /
-  * append / compact) runs under an exclusive marker file, so an append
-  * racing a compact fails at acquire instead of silently losing its files.
-  *
-  * Mechanics: acquire is ONE `create(overwrite = false)` of
-  * `<base>_mutating` holding `holder ttlMillis`; release deletes it (on
-  * success AND on body failure). Staleness is judged as
-  * `now - marker mtime > the holder's DECLARED TTL` — the holder states a
-  * duration, the filesystem stamps the start, so a long-running compact
-  * that raised its own TTL is protected from an appender running the
-  * default, and there is no holder-clock-vs-stealer-clock comparison (the
-  * one cross-clock baseline is FS mtime vs the stealer's now — the same
-  * baseline every mtime-lease scheme has). Torn content (a creator that
-  * crashed mid-write) falls back to mtime + this session's TTL. A writer
-  * that created the marker but failed to write its content deletes its
-  * own torn marker before propagating, so an I/O hiccup cannot wedge the
-  * store for a TTL.
-  *
-  * Stated limits, deliberately accepted: `create(overwrite = false)` is
-  * atomic on HDFS, but check-then-create on the local filesystem and most
-  * object stores (S3A) — there the guard is best-effort and a true lock
-  * must come from the job scheduler; the steal path has a delete/create
-  * window in which two stealers can interleave (the epoch-NAMED scheme in
-  * FeatureStore's Lease closes it at the cost of epoch bookkeeping —
-  * these stores are manifest-free derived artifacts, rebuildable from the
-  * corpus, so the cheap guard that makes the COMMON race loud is the
-  * right bill). A writer that outlives its declared TTL can be stolen
-  * from mid-write; release detects that (ownership check) and fails
-  * LOUDLY so the overlap is investigated, never silent. Readers are
-  * unaffected: the guard serializes mutations only.
+  * (Bm25Store / IvfStore / AnnStore and the [[BucketedStore]] histories) —
+  * upgrades the [[SwapDir]] / [[Bucketing.compactDistinct]] concurrency
+  * contract from documentation to a LOUD failure: every mutating verb
+  * (create / append / compact) runs holding the base's [[WriterLease]], so
+  * an append racing a compact fails at acquire instead of silently losing
+  * its files. A writer that outlives its declared TTL can be stolen from
+  * mid-write; the post-verb check detects that and fails LOUDLY so the
+  * overlap is investigated, never silent. Readers are unaffected: the
+  * guard serializes mutations only.
   */
 object MutationGuard {
 
-  /** Run `body` holding the exclusive mutation marker for `base`
-    * (the store root for dir stores; the table location for table
-    * stores — a path whose PARENT outlives the mutation). Throws
-    * IllegalStateException if the marker is held and unexpired after
-    * `waitMillis` of bounded retry, or if this writer's own marker was
-    * stolen during `body` (TTL outlived — another writer may have
-    * overlapped). Session confs `spark.graft.store.guardWaitMillis` /
+  /** Run `body` holding the writer lease for `base` (the store root for
+    * dir stores; the table location for table stores — a path whose
+    * PARENT outlives the mutation). Throws IllegalStateException if the
+    * lease is held and unexpired after `waitMillis` of bounded retry, or
+    * if this writer's lease was stolen during `body` (TTL outlived —
+    * another writer may have overlapped; the thief's lease is left
+    * alone). Session confs `spark.graft.store.guardWaitMillis` /
     * `guardTtlMillis` override the defaults for all store verbs at once
     * (ops knob — size the TTL above the longest verb).
     */
   def withGuard[A](spark: SparkSession, base: String,
                    waitMillis: Long = 30 * 1000L,
                    ttlMillis: Long = 10 * 60 * 1000L)(body: => A): A = {
-    val wait = spark.conf
-      .get("spark.graft.store.guardWaitMillis", waitMillis.toString).toLong
-    val ttl = spark.conf
-      .get("spark.graft.store.guardTtlMillis", ttlMillis.toString).toLong
-    val marker = new org.apache.hadoop.fs.Path(base + "_mutating")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // unique per ACQUISITION (not just per thread): the release-time
-    // ownership check must distinguish our marker from a thief's
-    val holder = spark.sparkContext.applicationId + "/" +
-      Thread.currentThread().getId + "/" + java.util.UUID.randomUUID()
-    acquire(fs, marker, holder, wait, ttl)
+    val lease = WriterLease(base,
+      spark.conf.get("spark.graft.store.guardWaitMillis", waitMillis.toString)
+        .toLong,
+      spark.conf.get("spark.graft.store.guardTtlMillis", ttlMillis.toString)
+        .toLong)
+    val fs = new org.apache.hadoop.fs.Path(base)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val token = lease.acquire(fs)
+    def stolen = lease.lost(fs, token).map(why => new IllegalStateException(
+      s"MutationGuard: the lease on $base was stolen during the mutation " +
+        s"($why) — this writer outlived its TTL and another mutation may " +
+        "have overlapped. Verify the store (derived stores are " +
+        "rebuildable) and raise spark.graft.store.guardTtlMillis above the " +
+        "longest verb"))
     val result =
       try body
       catch { case e: Throwable =>
-        // body failed: best-effort owned release; never mask `e`, but a
-        // detected steal is the likely ROOT CAUSE of the body's failure
-        // (files swapped under us) — surface it as suppressed
-        ownership(fs, marker, holder) match {
-          case Owned =>
-            try { fs.delete(marker, false): Unit }
-            catch { case _: java.io.IOException => () }
-          case Stolen =>
-            e.addSuppressed(new IllegalStateException(
-              s"MutationGuard: marker $marker was stolen during the " +
-                "failed mutation — a second writer overlapped (TTL outlived?)"))
-          case Unreadable => () // transient: leave it; it is stealable later
-        }
+        // never mask `e`, but a detected steal is the likely ROOT CAUSE of
+        // the body's failure (files swapped under us) — surface it too
+        stolen.foreach(e.addSuppressed)
+        lease.release(fs, token)
         throw e
       }
-    // body succeeded: a stolen marker means another writer may have
-    // overlapped our mutation — loud, and leave the thief's marker alone
-    ownership(fs, marker, holder) match {
-      case Owned =>
-        try { fs.delete(marker, false): Unit }
-        catch { case e: java.io.IOException =>
-          // the verb DID succeed; a failed unlock only delays the next
-          // writer until steal — warn, don't fail the mutation
-          System.err.println(s"[MutationGuard] release of $marker failed " +
-            s"(next writer steals after the TTL): ${e.getMessage}")
-        }
-      case Unreadable =>
-        // Unreadable-but-present is PROBABLY ours (transient read failure)
-        // but COULD be a live thief's marker. Deleting a thief's marker
-        // would let a third writer acquire while the thief still mutates,
-        // widening an active overlap; leaving our own marker merely delays
-        // the next writer until the TTL-steal. The bounded wedge is the
-        // cheaper failure — leave it and warn.
-        System.err.println(s"[MutationGuard] marker $marker unreadable at " +
-          "release — leaving it in place (stealable after its TTL) rather " +
-          "than risk deleting a live second writer's marker")
-      case Stolen =>
-        throw new IllegalStateException(
-          s"MutationGuard: marker $marker was stolen during the mutation — " +
-            "this writer outlived its TTL and another mutation may have " +
-            "overlapped. Verify the store (derived stores are rebuildable) " +
-            "and raise spark.graft.store.guardTtlMillis above the longest verb")
-    }
+    try stolen.foreach(e => throw e)
+    finally lease.release(fs, token)
     result
   }
 
-  /** Unconditionally remove the marker for `base` — for single-tenant
-    * harnesses (Verify/Bench/ScaleProbe) that OWN their warehouse and
-    * rebuild stores from scratch: a previous killed run's leftover marker
-    * would otherwise stall the rebuild for the acquire wait and force the
-    * derived-history fallback. Never call this where another writer might
-    * genuinely be live.
+  /** Unconditionally remove the lease files for `base` — for
+    * single-tenant harnesses (Verify/Bench/ScaleProbe) that OWN their
+    * warehouse and rebuild stores from scratch: a previous killed run's
+    * lease would otherwise stall the rebuild for the acquire wait and force
+    * the derived-history fallback. Never call this where another writer
+    * might genuinely be live.
     */
-  def clear(spark: SparkSession, base: String): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(base + "_mutating")
-    try {
-      marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(marker, false): Unit
-    } catch { case _: java.io.IOException => () }
-  }
-
-  private sealed trait Ownership
-  private case object Owned extends Ownership
-  private case object Stolen extends Ownership
-  private case object Unreadable extends Ownership
-
-  /** Whose marker is at `marker` relative to `holder`: [[Stolen]] when a
-    * DIFFERENT holder's content is readable or the marker is gone
-    * entirely (someone removed ours); [[Unreadable]] when it exists but
-    * its content cannot be read right now (retried — transient I/O must
-    * not masquerade as theft).
-    */
-  private def ownership(fs: org.apache.hadoop.fs.FileSystem,
-                        marker: org.apache.hadoop.fs.Path,
-                        holder: String): Ownership = {
-    var attempt = 0
-    while (attempt < 3) {
-      content(fs, marker) match {
-        case Some((h, _)) => return if (h == holder) Owned else Stolen
-        case None =>
-          val exists =
-            try fs.exists(marker)
-            catch { case _: java.io.IOException => true } // assume present
-          if (!exists) return Stolen // ours was removed
-          attempt += 1
-          if (attempt < 3) Thread.sleep(100)
-      }
-    }
-    Unreadable
-  }
-
-  private def acquire(fs: org.apache.hadoop.fs.FileSystem,
-                      marker: org.apache.hadoop.fs.Path, holder: String,
-                      wait: Long, ttl: Long): Unit = {
-    val deadline = System.currentTimeMillis + wait
-    var acquired = false
-    // the last create() failure: a persistent NON-contention IOException
-    // (ACL denial, parent path is a file) also loops here, and without it
-    // the timeout below would misreport FS misconfiguration as contention
-    var lastCreateFailure: Option[java.io.IOException] = None
-    while (!acquired) {
-      val out =
-        try Some(fs.create(marker, false))
-        catch { case e: java.io.IOException =>
-          lastCreateFailure = Some(e); None } // held (or FS refusal)
-      out match {
-        case Some(o) =>
-          try {
-            try o.write(s"$holder $ttl\n".getBytes("UTF-8"))
-            finally o.close()
-            acquired = true
-          } catch { case e: java.io.IOException =>
-            // WE created it but could not write content — remove our own
-            // torn marker rather than wedging every writer for a TTL
-            try { fs.delete(marker, false): Unit }
-            catch { case _: java.io.IOException => () }
-            throw e
-          }
-        case None =>
-          // staleness = marker age vs the holder's DECLARED TTL duration
-          // (content read first — mtime only needed on the torn fallback);
-          // "vanished" reads as fresh so the loop retries the create
-          val stale =
-            try {
-              val declaredTtl = content(fs, marker).map(_._2)
-              val age = System.currentTimeMillis -
-                fs.getFileStatus(marker).getModificationTime
-              age > declaredTtl.getOrElse(ttl)
-            } catch { case _: java.io.IOException => false }
-          if (System.currentTimeMillis > deadline) {
-            val cause = lastCreateFailure
-              .map(e => s" (last create failure: ${e.getMessage} — if this " +
-                "is not a FileAlreadyExists-style refusal, the path may be " +
-                "misconfigured rather than contended)")
-              .getOrElse("")
-            val ex = new IllegalStateException(
-              s"MutationGuard: $marker held by another writer after " +
-                s"${wait}ms — index-store mutations are single-writer " +
-                "(concurrent append/compact would lose files); serialize " +
-                s"them or raise spark.graft.store.guardWaitMillis$cause")
-            lastCreateFailure.foreach(ex.addSuppressed)
-            throw ex
-          }
-          else if (stale) {
-            // best-effort steal; failures (ACL-denied, transient RPC) are
-            // swallowed so the deadline above stays the loop's bound
-            try { fs.delete(marker, false): Unit }
-            catch { case _: java.io.IOException => () }
-            Thread.sleep(50)
-          } else Thread.sleep(200)
-      }
-    }
-  }
-
-  /** (holder, declared TTL millis) from the marker, None when absent or
-    * torn.
-    */
-  private def content(fs: org.apache.hadoop.fs.FileSystem,
-                      marker: org.apache.hadoop.fs.Path): Option[(String, Long)] =
-    try {
-      val in = fs.open(marker)
-      val line =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-          .find(_.nonEmpty).getOrElse("")
-        finally in.close()
-      line.split("\\s+") match {
-        case Array(h, x) => Some((h, x.toLong))
-        case _ => None
-      }
-    } catch {
-      case _: java.io.IOException | _: NumberFormatException => None
-    }
+  def clear(spark: SparkSession, base: String): Unit =
+    WriterLease.clear(new org.apache.hadoop.fs.Path(base)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration), base)
 }

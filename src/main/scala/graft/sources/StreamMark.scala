@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * store-as-state twins of [[graft.streaming.CurationStreams]] and the
   * feature-store ingest ([[FeatureStore.ingestStream]]): the last batchId
   * whose append committed to a store, written BESIDE the store's location
-  * (like the [[MutationGuard]] marker) so it survives compaction's
+  * (like the [[WriterLease]] files) so it survives compaction's
   * drop+rename of a table dir. One small file per store; a stream keeps
   * one [[Guard]] per store it appends to.
   *
@@ -81,8 +81,8 @@ object StreamMark {
 
   /** Mark location for a store addressed by a raw base PATH (the
     * [[graft.operators.IvfStore]] family and the feature store — no
-    * catalog table): a `_stream_batch` sibling, like [[MutationGuard]]'s
-    * `_mutating`.
+    * catalog table): a `_stream_batch` sibling, like the
+    * [[WriterLease]]'s `_lease_e<epoch>` files.
     */
   def markPathAt(base: String): org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(base + "_stream_batch")

@@ -133,14 +133,12 @@ object CurationStreams {
                model: graft.operators.UnigramLm.FrozenModel,
                maxNll: Double,
                sink: DataFrame => Unit,
-               growStore: Boolean = true,
                minTokens: Int = 5,
                maxPunctRatio: Double = 0.2)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val guard = new StreamMark.Guard
     docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       curateV3Batch(batch, batchId, dir, k, model, maxNll, sink, guard,
-        growStore,
         inc => graft.sources.GramHistory.append(batch.sparkSession, dir, inc),
         minTokens, maxPunctRatio)
     }
@@ -153,10 +151,10 @@ object CurationStreams {
       dir: String, k: Int,
       model: graft.operators.UnigramLm.FrozenModel, maxNll: Double,
       sink: DataFrame => Unit,
-      guard: StreamMark.Guard, growStore: Boolean,
+      guard: StreamMark.Guard,
       append: DataFrame => Unit,
       minTokens: Int = 5, maxPunctRatio: Double = 0.2): Unit =
-    gramStoreBatch(batch, batchId, dir, sink, guard, growStore, append,
+    gramStoreBatch(batch, batchId, dir, sink, guard, append,
       b => graft.operators.Dedup.batchGramPositions(b, k),
       (b, g, hist) => curateV3FrameFromGrams(b, g, hist, k, model, maxNll,
         minTokens, maxPunctRatio, broadcastProbe = false))
@@ -660,12 +658,11 @@ object CurationStreams {
     * gram store has membership semantics.
     */
   def incrementalDupGrams(docs: DataFrame, dir: String, k: Int,
-                          sink: DataFrame => Unit,
-                          growStore: Boolean = true)
+                          sink: DataFrame => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val guard = new StreamMark.Guard
     docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      gramAuditBatch(batch, batchId, dir, k, sink, guard, growStore,
+      gramAuditBatch(batch, batchId, dir, k, sink, guard,
         inc => graft.sources.GramHistory.append(batch.sparkSession, dir, inc))
     }
   }
@@ -675,9 +672,9 @@ object CurationStreams {
     */
   private[graft] def gramAuditBatch(batch: DataFrame, batchId: Long,
       dir: String, k: Int, sink: DataFrame => Unit,
-      guard: StreamMark.Guard, growStore: Boolean,
+      guard: StreamMark.Guard,
       append: DataFrame => Unit): Unit =
-    gramStoreBatch(batch, batchId, dir, sink, guard, growStore, append,
+    gramStoreBatch(batch, batchId, dir, sink, guard, append,
       b => graft.operators.Dedup.batchGramCounts(b, k),
       (b, g, hist) => graft.operators.Dedup.incrementalDupGramsFromGrams(
         b, g, hist, k, broadcastProbe = false))
@@ -691,21 +688,20 @@ object CurationStreams {
     * twin — only the per-batch scoring differs.
     */
   def incrementalRemoveSpans(docs: DataFrame, dir: String, k: Int,
-                             sink: DataFrame => Unit,
-                             growStore: Boolean = true)
+                             sink: DataFrame => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val guard = new StreamMark.Guard
     docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      gramRemovalBatch(batch, batchId, dir, k, sink, guard, growStore,
+      gramRemovalBatch(batch, batchId, dir, k, sink, guard,
         inc => graft.sources.GramHistory.append(batch.sparkSession, dir, inc))
     }
   }
 
   private[graft] def gramRemovalBatch(batch: DataFrame, batchId: Long,
       dir: String, k: Int, sink: DataFrame => Unit,
-      guard: StreamMark.Guard, growStore: Boolean,
+      guard: StreamMark.Guard,
       append: DataFrame => Unit): Unit =
-    gramStoreBatch(batch, batchId, dir, sink, guard, growStore, append,
+    gramStoreBatch(batch, batchId, dir, sink, guard, append,
       b => graft.operators.Dedup.batchGramPositions(b, k),
       (b, g, hist) => graft.operators.Dedup.incrementalRemoveSpansFromGrams(
         b, g, hist, k, broadcastProbe = false))
@@ -718,7 +714,7 @@ object CurationStreams {
     */
   private def gramStoreBatch(batch: DataFrame, batchId: Long,
       dir: String, sink: DataFrame => Unit,
-      guard: StreamMark.Guard, growStore: Boolean,
+      guard: StreamMark.Guard,
       append: DataFrame => Unit,
       gramRel: DataFrame => DataFrame,
       score: (DataFrame, DataFrame, DataFrame) => DataFrame): Unit = {
@@ -729,7 +725,7 @@ object CurationStreams {
     // per-doc gram UDF ran once for each (three batch-wide passes)
     lazy val g = graft.util.Materialize.eager(gramRel(batch))
     lazy val keys = g.select(col(graft.sources.GramHistory.GramCol)).distinct()
-    guardedBatch(batch, batchId, sink, growStore,
+    guardedBatch(batch, batchId, sink,
         storeLeg(spark, graft.sources.GramHistory, dir, guard)(append(keys))) {
       // the probe-reduced store relation (sidecar-bloom pre-cut + sort-free
       // broadcast-semi verify — GramHistory.probeHistory's contract); the
@@ -776,17 +772,17 @@ object CurationStreams {
     *     consumes the rows inside the body sees pre-append values. The pin
     *     is released when the batch ends: a sink that defers its action
     *     recomputes against the grown stores — write out synchronously;
-    *  4. then, with `growStore`, each store whose mark is below `batchId`
-    *     appends, persists its mark and advances it. A mark moves only
-    *     after its append commits: an append that throws is retried on
-    *     replay, and a store that committed is never re-appended.
+    *  4. then each store whose mark is below `batchId` appends, persists
+    *     its mark and advances it. A mark moves only after its append
+    *     commits: an append that throws is retried on replay, and a store
+    *     that committed is never re-appended.
     *
     * A crash between an append and its mark persist (or a failed persist,
     * which degrades to the in-session guard) re-appends that one batch on
     * replay; each twin documents what a re-append means for its store.
     */
   private def guardedBatch(batch: DataFrame, batchId: Long,
-      sink: DataFrame => Unit, growStore: Boolean, legs: Leg*)(
+      sink: DataFrame => Unit, legs: Leg*)(
       score: => DataFrame): Unit = {
     val spark = batch.sparkSession
     if (legs.map(l => l.guard.committed(spark, l.mark)).exists(_ < batchId)) {
@@ -794,8 +790,7 @@ object CurationStreams {
       try {
         scored.count(): Unit // pin pre-append values
         sink(scored)
-        if (growStore)
-          legs.foreach(l => l.guard.commit(spark, l.mark, batchId)(l.append()))
+        legs.foreach(l => l.guard.commit(spark, l.mark, batchId)(l.append()))
       } finally scored.unpersist(): Unit
     }
   }
@@ -817,12 +812,11 @@ object CurationStreams {
     * absorbed by the probe's distinct (membership semantics).
     */
   def incrementalPayloadNearDups(media: DataFrame, dir: String,
-                                 sink: DataFrame => Unit,
-                                 growStore: Boolean = true)
+                                 sink: DataFrame => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val guard = new StreamMark.Guard
     media.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      payloadAuditBatch(batch, batchId, dir, sink, guard, growStore,
+      payloadAuditBatch(batch, batchId, dir, sink, guard,
         inc => graft.sources.PhashHistory.append(batch.sparkSession, dir, inc))
     }
   }
@@ -832,10 +826,10 @@ object CurationStreams {
     */
   private[graft] def payloadAuditBatch(batch: DataFrame, batchId: Long,
       dir: String, sink: DataFrame => Unit,
-      guard: StreamMark.Guard, growStore: Boolean,
+      guard: StreamMark.Guard,
       append: DataFrame => Unit): Unit = {
     val spark = batch.sparkSession
-    guardedBatch(batch, batchId, sink, growStore,
+    guardedBatch(batch, batchId, sink,
         storeLeg(spark, graft.sources.PhashHistory, dir, guard)(
           append(graft.operators.Multimodal.payloadFingerprints(batch)))) {
       graft.operators.Multimodal.incrementalPayloadNearDups(batch,
@@ -862,12 +856,11 @@ object CurationStreams {
     * Input frame: (doc_id, text, lang, n_chars).
     */
   def incrementalNearDups(docs: DataFrame, dir: String,
-                          sink: DataFrame => Unit,
-                          growStore: Boolean = true)
+                          sink: DataFrame => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val guard = new StreamMark.Guard
     docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      nearDupBatch(batch, batchId, dir, sink, guard, growStore,
+      nearDupBatch(batch, batchId, dir, sink, guard,
         b => graft.sources.MinHashHistory.append(b.sparkSession, dir,
           graft.queries.TextOps.minHashBandsOf(b),
           graft.queries.TextOps.minHashShinglesOf(b)))
@@ -879,10 +872,10 @@ object CurationStreams {
     */
   private[graft] def nearDupBatch(batch: DataFrame, batchId: Long,
       dir: String, sink: DataFrame => Unit,
-      guard: StreamMark.Guard, growStore: Boolean,
+      guard: StreamMark.Guard,
       append: DataFrame => Unit): Unit = {
     val spark = batch.sparkSession
-    guardedBatch(batch, batchId, sink, growStore,
+    guardedBatch(batch, batchId, sink,
         storeLeg(spark, graft.sources.MinHashHistory, dir, guard)(
           append(batch))) {
       graft.queries.TextOps.nearDupLeg(spark, dir,
@@ -915,13 +908,12 @@ object CurationStreams {
     */
   def incrementalEmbedProbe(vectors: DataFrame, path: String,
                             sink: DataFrame => Unit,
-                            growStore: Boolean = true,
                             k: Int = 4, nprobe: Int = 4,
                             threshold: Double = 0.999)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val guard = new StreamMark.Guard
     vectors.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      embedProbeBatch(batch, batchId, path, sink, guard, growStore,
+      embedProbeBatch(batch, batchId, path, sink, guard,
         inc => graft.operators.IvfStore.append(batch.sparkSession, path, inc),
         k, nprobe, threshold)
     }
@@ -932,7 +924,7 @@ object CurationStreams {
     */
   private[graft] def embedProbeBatch(batch: DataFrame, batchId: Long,
       path: String, sink: DataFrame => Unit,
-      guard: StreamMark.Guard, growStore: Boolean,
+      guard: StreamMark.Guard,
       append: DataFrame => Unit, k: Int = 4, nprobe: Int = 4,
       threshold: Double = 0.999): Unit = {
     val spark = batch.sparkSession
@@ -942,7 +934,7 @@ object CurationStreams {
       throw new IllegalStateException(
         s"streaming incrementalEmbedProbe: no IvfStore at $path — " +
           "IvfStore.create() first (an empty history is fine)")
-    guardedBatch(batch, batchId, sink, growStore,
+    guardedBatch(batch, batchId, sink,
         Leg(guard, StreamMark.markPathAt(path),
           () => append(batch.select(col("vec_id"), col("embedding"))))) {
       graft.operators.IvfStore.search(spark, path,
@@ -1012,14 +1004,13 @@ object CurationStreams {
   def crawlTriage(docs: DataFrame, dir: String,
                   k: Int = graft.queries.TextOps.DupGramK,
                   sink: DataFrame => Unit,
-                  growStore: Boolean = true,
                   cascade: Boolean = false,
                   stripThrScaled: Option[Long] = None)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val (gHash, gGram, gMh) =
       (new StreamMark.Guard, new StreamMark.Guard, new StreamMark.Guard)
     docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      triageBatch(batch, batchId, dir, k, sink, gHash, gGram, gMh, growStore,
+      triageBatch(batch, batchId, dir, k, sink, gHash, gGram, gMh,
         b => graft.sources.HashHistory.append(b.sparkSession, dir,
           b.select(unhex(md5(col("text"))).as("th"))),
         b => graft.sources.GramHistory.append(b.sparkSession, dir,
@@ -1038,12 +1029,12 @@ object CurationStreams {
   private[graft] def triageBatch(batch: DataFrame, batchId: Long,
       dir: String, k: Int, sink: DataFrame => Unit,
       gHash: StreamMark.Guard, gGram: StreamMark.Guard,
-      gMh: StreamMark.Guard, growStore: Boolean,
+      gMh: StreamMark.Guard,
       appendHash: DataFrame => Unit, appendGram: DataFrame => Unit,
       appendMh: DataFrame => Unit, cascade: Boolean = false,
       stripThrScaled: Option[Long] = None): Unit = {
     val spark = batch.sparkSession
-    guardedBatch(batch, batchId, sink, growStore,
+    guardedBatch(batch, batchId, sink,
         storeLeg(spark, graft.sources.HashHistory, dir, gHash)(appendHash(batch)),
         storeLeg(spark, graft.sources.GramHistory, dir, gGram)(appendGram(batch)),
         storeLeg(spark, graft.sources.MinHashHistory, dir, gMh)(appendMh(batch))) {
@@ -1081,12 +1072,11 @@ object CurationStreams {
     * LandmarkHistorySpec pins both directions).
     */
   def incrementalAudioProbe(media: DataFrame, dir: String,
-                            sink: DataFrame => Unit,
-                            growStore: Boolean = true)
+                            sink: DataFrame => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val guard = new StreamMark.Guard
     media.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      audioProbeBatch(batch, batchId, dir, sink, guard, growStore,
+      audioProbeBatch(batch, batchId, dir, sink, guard,
         inc => graft.sources.LandmarkHistory.append(batch.sparkSession, dir, inc))
     }
   }
@@ -1096,7 +1086,7 @@ object CurationStreams {
     */
   private[graft] def audioProbeBatch(batch: DataFrame, batchId: Long,
       dir: String, sink: DataFrame => Unit,
-      guard: StreamMark.Guard, growStore: Boolean,
+      guard: StreamMark.Guard,
       append: DataFrame => Unit): Unit = {
     val spark = batch.sparkSession
     // the landmark relation is consumed twice (probe votes + query-side
@@ -1104,7 +1094,7 @@ object CurationStreams {
     // runs once per payload
     val batchLms = graft.operators.Multimodal.audioLandmarkRows(batch)
       .persist()
-    try guardedBatch(batch, batchId, sink, growStore,
+    try guardedBatch(batch, batchId, sink,
         storeLeg(spark, graft.sources.LandmarkHistory, dir, guard)(
           append(batchLms))) {
       graft.operators.Multimodal.incrementalAudioNearDups(batchLms,
@@ -1130,12 +1120,11 @@ object CurationStreams {
     * exact denominators.
     */
   def incrementalVideoNearDups(media: DataFrame, dir: String,
-                               sink: DataFrame => Unit,
-                               growStore: Boolean = true)
+                               sink: DataFrame => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val guard = new StreamMark.Guard
     media.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      videoProbeBatch(batch, batchId, dir, sink, guard, growStore,
+      videoProbeBatch(batch, batchId, dir, sink, guard,
         inc => graft.sources.FrameHistory.append(batch.sparkSession, dir, inc))
     }
   }
@@ -1145,14 +1134,14 @@ object CurationStreams {
     */
   private[graft] def videoProbeBatch(batch: DataFrame, batchId: Long,
       dir: String, sink: DataFrame => Unit,
-      guard: StreamMark.Guard, growStore: Boolean,
+      guard: StreamMark.Guard,
       append: DataFrame => Unit): Unit = {
     val spark = batch.sparkSession
     // the frame relation is consumed twice (match counts + batch set
     // sizes) and feeds the append — pin it so the kernel runs once
     val batchFrames = graft.operators.Multimodal.videoFrameRows(batch)
       .persist()
-    try guardedBatch(batch, batchId, sink, growStore,
+    try guardedBatch(batch, batchId, sink,
         storeLeg(spark, graft.sources.FrameHistory, dir, guard)(
           append(batchFrames))) {
       val (histFrames, histSizes) =

@@ -73,8 +73,7 @@ object CurateV3Probe {
         batch, b.toLong, storeDir, k, model, maxNll,
         df => out ++= df.select(col("doc_id"), col("removed_chars"),
           col("nll")).as[(Long, Long, Double)].collect(),
-        guard, growStore = true,
-        inc => graft.sources.GramHistory.append(spark, storeDir, inc))
+        guard, inc => graft.sources.GramHistory.append(spark, storeDir, inc))
       val wall = (System.nanoTime() - t0) / 1e9
       walls += wall
       // storeless twin on the SAME batch against the in-memory gram union

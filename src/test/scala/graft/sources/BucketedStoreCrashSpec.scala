@@ -173,10 +173,10 @@ class BucketedStoreCrashSpec extends SparkSpec {
           s"a different failure surfaced: $e")
         assert(tableRows(fx.store, dir) == rows, "rows changed")
         assert(fx.probe(dir) == fx.before, "answers changed")
-        val marker = new org.apache.hadoop.fs.Path(Bucketing.guardBase(
-          spark, fx.store.tableFor(dir)) + "_mutating")
-        assert(!marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .exists(marker), "guard marker left behind")
+        val base = Bucketing.guardBase(spark, fx.store.tableFor(dir))
+        assert(!WriterLease(base).held(new org.apache.hadoop.fs.Path(base)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)),
+          "guard marker left behind")
         // a sidecar that may miss keys after a failed fold is dropped
         assert(fx.store.bloomStat(spark, dir).isEmpty)
 

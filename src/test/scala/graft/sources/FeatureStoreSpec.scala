@@ -409,7 +409,7 @@ class FeatureStoreSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(cfg.path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // writer A holds the lease (mid-operation)
-    val tokenA = FeatureStore.Lease.acquire(fs, cfg)
+    val tokenA = FeatureStore.lease(cfg).acquire(fs)
     // writer B: every mutating path must fail loudly after the bounded wait
     val e = intercept[IllegalStateException] {
       FeatureStore.delete(spark, cfg, "u3")
@@ -418,7 +418,7 @@ class FeatureStoreSpec extends SparkSpec {
     // the store is untouched by the failed writer
     assert(FeatureStore.read(spark, cfg).count() == 8)
     // A releases; the same mutation now succeeds
-    FeatureStore.Lease.release(fs, cfg, tokenA)
+    FeatureStore.lease(cfg).release(fs, tokenA)
     FeatureStore.delete(spark, cfg, "u3")
     assert(FeatureStore.read(spark, cfg).count() == 7)
   }
@@ -436,10 +436,10 @@ class FeatureStoreSpec extends SparkSpec {
     // writer A holds the lease briefly; B's mutation must SERIALIZE behind
     // it (acquire retries within the wait) — this is how concurrent REST
     // mutations queue instead of failing, as long as waits cover op length
-    val tokenA = FeatureStore.Lease.acquire(fs, cfg)
+    val tokenA = FeatureStore.lease(cfg).acquire(fs)
     val releaser = new Thread(() => {
       Thread.sleep(700)
-      FeatureStore.Lease.release(fs, cfg, tokenA)
+      FeatureStore.lease(cfg).release(fs, tokenA)
     })
     releaser.start()
     val t0 = System.nanoTime()
@@ -460,10 +460,10 @@ class FeatureStoreSpec extends SparkSpec {
     FeatureStore.write(FeatureStore.ingest(ls.toDF("raw"), cfg).good, cfg, partitions = 2)
     val fs = new org.apache.hadoop.fs.Path(cfg.path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val crashed = FeatureStore.Lease.acquire(fs, cfg)
+    val crashed = FeatureStore.lease(cfg).acquire(fs)
     Thread.sleep(5) // the crashed writer's lease expires
     // a new writer steals the stale lease at the next epoch...
-    val thief = FeatureStore.Lease.acquire(fs, cfg)
+    val thief = FeatureStore.lease(cfg).acquire(fs)
     assert(thief.epoch == crashed.epoch + 1)
     // ...and the stale holder can no longer commit: the fence trips
     val e = intercept[IllegalArgumentException] {
@@ -472,7 +472,7 @@ class FeatureStoreSpec extends SparkSpec {
     assert(e.getMessage.contains("lease"), e.getMessage)
     // the store still reads fine on the committed snapshot
     assert(FeatureStore.read(spark, cfg).count() == 8)
-    FeatureStore.Lease.release(fs, cfg, thief)
+    FeatureStore.lease(cfg).release(fs, thief)
   }
 
   test("writer lease: a torn lease file (crashed creator) is stolen, never wedges the store") {
@@ -613,7 +613,7 @@ class FeatureStoreSpec extends SparkSpec {
         (0 until opsPerThread).foreach { i =>
           val name = s"part-t$t-o$i.parquet"
           try {
-            val token = FeatureStore.Lease.acquire(fs, cfg)
+            val token = FeatureStore.lease(cfg).acquire(fs)
             if (rnd.nextDouble() < 0.25) {
               crashed.add(name) // crashed holder: successors steal after TTL
             } else {
@@ -624,7 +624,7 @@ class FeatureStoreSpec extends SparkSpec {
                 // stolen mid-commit: the fence (verify) or the m_<n> rename
                 // refuses — loud, and the name must NOT reach the manifest
                 case e: IllegalArgumentException => fenced.add(name)
-              } finally FeatureStore.Lease.release(fs, cfg, token)
+              } finally FeatureStore.lease(cfg).release(fs, token)
             }
           } catch {
             case e: Exception =>
@@ -656,9 +656,9 @@ class FeatureStoreSpec extends SparkSpec {
     // TTL here still steals crashed holders while keeping a load-stalled
     // health commit from running outside its own lease window
     val calmCfg = cfg.copy(leaseTtlMillis = 30000, leaseTornGraceMillis = 1000)
-    val after = FeatureStore.Lease.acquire(fs, calmCfg)
+    val after = FeatureStore.lease(calmCfg).acquire(fs)
     FeatureStore.Manifests.commit(fs, calmCfg, _ :+ "part-post.parquet", Some(after))
-    FeatureStore.Lease.release(fs, calmCfg, after)
+    FeatureStore.lease(calmCfg).release(fs, after)
     assert(FeatureStore.Manifests.latest(fs, calmCfg).get._2.contains("part-post.parquet"))
   }
 
@@ -678,9 +678,9 @@ class FeatureStoreSpec extends SparkSpec {
       leaseTornGraceMillis = 100)
     val fs = new org.apache.hadoop.fs.Path(cfg.path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val crashed = FeatureStore.Lease.acquire(fs, cfg) // never released: stall
+    val crashed = FeatureStore.lease(cfg).acquire(fs) // never released: stall
     val t0 = System.currentTimeMillis
-    val thief = FeatureStore.Lease.acquire(fs, cfg) // must steal, not wedge
+    val thief = FeatureStore.lease(cfg).acquire(fs) // must steal, not wedge
     val waited = System.currentTimeMillis - t0
     assert(thief.epoch > crashed.epoch,
       s"successor did not advance the epoch (${thief.epoch} vs ${crashed.epoch})")
@@ -698,7 +698,7 @@ class FeatureStoreSpec extends SparkSpec {
     assert(!FeatureStore.Manifests.latest(fs, cfg).exists(_._2.contains("part-stale.parquet")),
       "a fenced stalled writer's commit reached the manifest")
     FeatureStore.Manifests.commit(fs, cfg, _ :+ "part-thief.parquet", Some(thief))
-    FeatureStore.Lease.release(fs, cfg, thief)
+    FeatureStore.lease(cfg).release(fs, thief)
     assert(FeatureStore.Manifests.latest(fs, cfg).get._2 == Seq("part-thief.parquet"))
   }
 
@@ -711,7 +711,7 @@ class FeatureStoreSpec extends SparkSpec {
       leaseWaitMillis = 30000, leaseTtlMillis = 60000, leaseTornGraceMillis = 100)
     val fs = new org.apache.hadoop.fs.Path(cfg.path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val token = FeatureStore.Lease.acquire(fs, cfg)
+    val token = FeatureStore.lease(cfg).acquire(fs)
     // tear the content in place: epoch file identity unchanged, bytes
     // unparseable (what an in-flight read observes under IO load)
     val leaseFile = new java.io.File(dir).listFiles()
@@ -723,12 +723,12 @@ class FeatureStoreSpec extends SparkSpec {
     assert(FeatureStore.Manifests.latest(fs, cfg).get._2.contains("part-torn.parquet"))
     // but a STOLEN lease still aborts: a successor steals (torn past grace)
     Thread.sleep(150) // age the torn file past leaseTornGraceMillis
-    val thief = FeatureStore.Lease.acquire(fs, cfg)
+    val thief = FeatureStore.lease(cfg).acquire(fs)
     assert(thief.epoch > token.epoch)
     intercept[IllegalArgumentException] {
       FeatureStore.Manifests.commit(fs, cfg, _ :+ "part-late.parquet", Some(token))
     }
-    FeatureStore.Lease.release(fs, cfg, thief)
+    FeatureStore.lease(cfg).release(fs, thief)
   }
 
   test("verify's torn-read fallback still aborts a use-after-release commit") {
@@ -743,9 +743,9 @@ class FeatureStoreSpec extends SparkSpec {
       leaseWaitMillis = 30000, leaseTtlMillis = 60000, leaseTornGraceMillis = 100)
     val fs = new org.apache.hadoop.fs.Path(cfg.path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val token = FeatureStore.Lease.acquire(fs, cfg)
+    val token = FeatureStore.lease(cfg).acquire(fs)
     FeatureStore.Manifests.commit(fs, cfg, _ :+ "part-live.parquet", Some(token))
-    FeatureStore.Lease.release(fs, cfg, token)
+    FeatureStore.lease(cfg).release(fs, token)
     // tear the lease content so strict holds() fails and verify reaches
     // the fallback — which must now see the release marker and refuse
     val leaseFile = new java.io.File(dir).listFiles()
@@ -757,9 +757,9 @@ class FeatureStoreSpec extends SparkSpec {
     assert(!FeatureStore.Manifests.latest(fs, cfg).get._2.contains("part-after-release.parquet"),
       "a released holder's commit reached the manifest via the torn-read fallback")
     // the store remains consistent for the next legitimate writer
-    val next = FeatureStore.Lease.acquire(fs, cfg)
+    val next = FeatureStore.lease(cfg).acquire(fs)
     FeatureStore.Manifests.commit(fs, cfg, _ :+ "part-next.parquet", Some(next))
-    FeatureStore.Lease.release(fs, cfg, next)
+    FeatureStore.lease(cfg).release(fs, next)
     assert(FeatureStore.Manifests.latest(fs, cfg).get._2 ==
       Seq("part-live.parquet", "part-next.parquet"))
   }
@@ -776,18 +776,18 @@ class FeatureStoreSpec extends SparkSpec {
     // STEALABLE, not void, so the still-current holder's commit completes
     // (on a quiet store an over-TTL stall is harmless; fencing only bites
     // when someone actually took the lease away)
-    val slow = FeatureStore.Lease.acquire(fs, cfg)
+    val slow = FeatureStore.lease(cfg).acquire(fs)
     Thread.sleep(2 * ttl + 100)
     FeatureStore.Manifests.commit(fs, cfg, _ :+ "part-slow.parquet", Some(slow))
-    FeatureStore.Lease.release(fs, cfg, slow)
+    FeatureStore.lease(cfg).release(fs, slow)
     assert(FeatureStore.Manifests.latest(fs, cfg).get._2.contains("part-slow.parquet"))
 
     // case B — stalled past TTL and STOLEN: the commit must abort loudly
     // (IllegalArgumentException from the fence) and leave no trace in the
     // manifest; the thief's own commit proceeds normally
-    val victim = FeatureStore.Lease.acquire(fs, cfg)
+    val victim = FeatureStore.lease(cfg).acquire(fs)
     Thread.sleep(ttl + 50) // expire
-    val thief = FeatureStore.Lease.acquire(fs, cfg) // steals deterministically
+    val thief = FeatureStore.lease(cfg).acquire(fs) // steals deterministically
     assert(thief.epoch > victim.epoch)
     intercept[IllegalArgumentException] {
       FeatureStore.Manifests.commit(fs, cfg, _ :+ "part-victim.parquet", Some(victim))
@@ -795,7 +795,7 @@ class FeatureStoreSpec extends SparkSpec {
     assert(!FeatureStore.Manifests.latest(fs, cfg).get._2.contains("part-victim.parquet"),
       "a stolen-from writer's commit reached the manifest")
     FeatureStore.Manifests.commit(fs, cfg, _ :+ "part-thief2.parquet", Some(thief))
-    FeatureStore.Lease.release(fs, cfg, thief)
+    FeatureStore.lease(cfg).release(fs, thief)
     assert(FeatureStore.Manifests.latest(fs, cfg).get._2.contains("part-thief2.parquet"))
   }
 

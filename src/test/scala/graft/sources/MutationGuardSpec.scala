@@ -11,6 +11,12 @@ class MutationGuardSpec extends SparkSpec {
 
   private def base = s"/tmp/mutguard_spec_${System.nanoTime}/store"
 
+  private def fsOf(b: String) = new org.apache.hadoop.fs.Path(b)
+    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Whether `b`'s writer lease is live: a second writer would wait. */
+  private def held(b: String): Boolean = WriterLease(b).held(fsOf(b))
+
   test("a held guard makes a second writer fail loudly, not lose files") {
     val b = base
     val ex = intercept[IllegalStateException] {
@@ -34,27 +40,21 @@ class MutationGuardSpec extends SparkSpec {
 
   test("a crashed writer's stale marker is stolen after the TTL") {
     val b = base
-    val marker = new org.apache.hadoop.fs.Path(b + "_mutating")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(marker, false) // a writer that died holding it
-    try out.write("dead 0\n".getBytes("UTF-8")) finally out.close()
+    // a writer that died holding it
+    WriterLease(b, ttlMillis = 1L).acquire(fsOf(b))
     var ran = false
     MutationGuard.withGuard(spark, b, waitMillis = 2000L, ttlMillis = 1L) {
       ran = true
     }
     assert(ran, "stale marker not stolen")
-    assert(!fs.exists(marker), "marker left behind after release")
+    assert(!held(b), "marker left behind after release")
   }
 
   test("staleness honors the HOLDER's declared TTL, not the stealer's") {
     val b = base
-    val marker = new org.apache.hadoop.fs.Path(b + "_mutating")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // a holder that declared a long TTL: NOT stealable even by a
     // session running a tiny TTL — it must wait and fail loudly
-    val out = fs.create(marker, false)
-    try out.write(s"longjob ${3600 * 1000L}\n".getBytes("UTF-8"))
-    finally out.close()
+    WriterLease(b, ttlMillis = 3600 * 1000L).acquire(fsOf(b))
     intercept[IllegalStateException] {
       MutationGuard.withGuard(spark, b, waitMillis = 800L, ttlMillis = 1L) {
         fail("stole an unexpired marker")
@@ -62,9 +62,8 @@ class MutationGuardSpec extends SparkSpec {
     }
     // once the marker outlives the DECLARED TTL, it is stolen promptly
     // even under a long session TTL
-    fs.delete(marker, false)
-    val out2 = fs.create(marker, false)
-    try out2.write("crashed 5\n".getBytes("UTF-8")) finally out2.close()
+    MutationGuard.clear(spark, b)
+    WriterLease(b, ttlMillis = 5L).acquire(fsOf(b))
     var ran = false
     MutationGuard.withGuard(spark, b, waitMillis = 2000L,
         ttlMillis = 3600 * 1000L) { ran = true }
@@ -73,21 +72,45 @@ class MutationGuardSpec extends SparkSpec {
 
   test("a stolen marker makes the overlapped writer fail loudly at release") {
     val b = base
-    val marker = new org.apache.hadoop.fs.Path(b + "_mutating")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val ex = intercept[IllegalStateException] {
-      MutationGuard.withGuard(spark, b) {
-        // simulate a thief that stole after our TTL lapsed
-        fs.delete(marker, false)
-        val out = fs.create(marker, false)
-        try out.write("thief 60000\n".getBytes("UTF-8"))
-        finally out.close()
+      MutationGuard.withGuard(spark, b, ttlMillis = 1L) {
+        // a thief that stole after our TTL lapsed
+        WriterLease(b, ttlMillis = 60000L).acquire(fsOf(b))
       }
     }
     assert(ex.getMessage.contains("stolen"))
     // and the thief's marker is left alone
-    assert(fs.exists(marker), "overlapped writer deleted the thief's marker")
-    fs.delete(marker, false): Unit
+    assert(held(b), "overlapped writer deleted the thief's marker")
+    MutationGuard.clear(spark, b)
+  }
+
+  test("clear releases a killed run's lock: the next create succeeds at once") {
+    import spark.implicits._
+    val dir = s"/tmp/mutguard_spec_clear_${System.nanoTime}"
+    val docs = Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text")
+    GramHistory.create(spark, dir, docs, k = 4, buckets = 2)
+    // one bucketed store (the table-location base) and one path store
+    val bm25 = graft.operators.Bm25Store.pathFor(dir)
+    val creates: Seq[(String, () => Unit, () => Unit)] = Seq(
+      (Bucketing.guardBase(spark, GramHistory.tableFor(dir)),
+        () => GramHistory.create(spark, dir, docs, k = 4, buckets = 2),
+        () => GramHistory.clearStaleMarker(spark, dir)),
+      (bm25, () => graft.operators.Bm25Store.create(spark, bm25, docs),
+        () => MutationGuard.clear(spark, bm25)))
+    spark.conf.set("spark.graft.store.guardWaitMillis", "0")
+    try creates.foreach { case (b, create, clear) =>
+      // a holder killed mid-verb (kill -9): its lease is never released
+      WriterLease(b).acquire(fsOf(b))
+      intercept[IllegalStateException](create())
+      clear()
+      create()
+      assert(!held(b), s"the rebuild left $b locked")
+    } finally {
+      spark.conf.unset("spark.graft.store.guardWaitMillis")
+      GramHistory.invalidate(spark, dir)
+      MutationGuard.clear(spark, bm25)
+      fsOf(bm25).delete(new org.apache.hadoop.fs.Path(bm25), true): Unit
+    }
   }
 
   test("store verbs run under the guard (a held marker blocks an append)") {

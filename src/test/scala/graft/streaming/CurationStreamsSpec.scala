@@ -976,7 +976,7 @@ class CurationStreamsSpec extends SparkSpec {
       graft.sources.GramHistory.append(spark, dir, inc)
     }
     def run(): Unit = CurationStreams.gramAuditBatch(
-      batch, 0L, dir, k, _ => (), appended, growStore = true, flaky)
+      batch, 0L, dir, k, _ => (), appended, flaky)
     // epoch fails mid-append: the guard must NOT have advanced
     intercept[java.io.IOException](run())
     assert(appended.get() == -1L, "guard advanced before the append committed")
@@ -997,7 +997,7 @@ class CurationStreamsSpec extends SparkSpec {
     // watermark and still skips the committed epoch's append
     val restarted = new graft.sources.StreamMark.Guard
     CurationStreams.gramAuditBatch(
-      batch, 0L, dir, k, _ => (), restarted, growStore = true, flaky)
+      batch, 0L, dir, k, _ => (), restarted, flaky)
     assert(appendCalls == 2, "committed epoch re-appended after restart")
     assert(restarted.get() == 0L, "persisted watermark not recovered")
     graft.sources.GramHistory.invalidate(spark, dir)
@@ -1054,8 +1054,7 @@ class CurationStreamsSpec extends SparkSpec {
       CurationStreams.gramAuditBatch(
         Seq((100L + b, s"first lineage text number $b entirely fresh"))
           .toDF("doc_id", "text"),
-        b, dir, k, _ => (), guard1, growStore = true,
-        inc => graft.sources.GramHistory.append(spark, dir, inc))
+        b, dir, k, _ => (), guard1, inc => graft.sources.GramHistory.append(spark, dir, inc))
     assert(guard1.get() == 2L)
     val table = graft.sources.GramHistory.registeredTable(spark, dir).get
     assert(graft.sources.StreamMark.read(spark, table) == 2L)
@@ -1070,8 +1069,7 @@ class CurationStreamsSpec extends SparkSpec {
     val newBatch = Seq((200L, "second lineage sentence nobody wrote before"))
       .toDF("doc_id", "text")
     CurationStreams.gramAuditBatch(
-      newBatch, 0L, dir, k, _ => (), guard2, growStore = true,
-      inc => { appends += 1; graft.sources.GramHistory.append(spark, dir, inc) })
+      newBatch, 0L, dir, k, _ => (), guard2, inc => { appends += 1; graft.sources.GramHistory.append(spark, dir, inc) })
     assert(appends == 1, "new lineage's batch 0 append was skipped")
     assert(guard2.get() == 0L)
     val hist = graft.sources.GramHistory.scanOrCompute(spark, dir)(
@@ -1102,8 +1100,7 @@ class CurationStreamsSpec extends SparkSpec {
         CurationStreams.gramAuditBatch(
           Seq((100L + b, s"lineage A text number $b entirely fresh"))
             .toDF("doc_id", "text"),
-          b, dir, k, _ => (), guardA, growStore = true,
-          inc => graft.sources.GramHistory.append(spark, dir, inc))
+          b, dir, k, _ => (), guardA, inc => graft.sources.GramHistory.append(spark, dir, inc))
       assert(graft.sources.StreamMark.read(spark, table) == 2L,
         "same-lineage read must see its own high-water mark")
       // lineage B: a FRESH checkpoint's batchIds restart at 0 — the old
@@ -1118,8 +1115,7 @@ class CurationStreamsSpec extends SparkSpec {
       CurationStreams.gramAuditBatch(
         Seq((200L, "lineage B sentence nobody wrote before"))
           .toDF("doc_id", "text"),
-        0L, dir, k, _ => sinks += 1, guardB, growStore = true,
-        inc => { appends += 1
+        0L, dir, k, _ => sinks += 1, guardB, inc => { appends += 1
           graft.sources.GramHistory.append(spark, dir, inc) })
       assert(sinks == 1, "fresh lineage's batch 0 sink was skipped")
       assert(appends == 1, "fresh lineage's batch 0 append was skipped")
@@ -1163,8 +1159,7 @@ class CurationStreamsSpec extends SparkSpec {
         CurationStreams.triageBatch(
           Seq((20L + b, s"lineage A novel body number $b", "en", 27))
             .toDF("doc_id", "text", "lang", "n_chars"),
-          b, dir, TextOps.DupGramK, _ => (), h1, g1, m1, growStore = true,
-          bh => graft.sources.HashHistory.append(spark, dir,
+          b, dir, TextOps.DupGramK, _ => (), h1, g1, m1, bh => graft.sources.HashHistory.append(spark, dir,
             bh.select(unhex(md5(col("text"))).as("th"))),
           bg => graft.sources.GramHistory.append(spark, dir,
             graft.sources.GramHistory.gramHashes(bg, TextOps.DupGramK)),
@@ -1177,8 +1172,7 @@ class CurationStreamsSpec extends SparkSpec {
       var appends = 0
       val (h2, g2, m2) = guards()
       CurationStreams.triageBatch(batch, 0L, dir, TextOps.DupGramK,
-        _ => sinks += 1, h2, g2, m2, growStore = true,
-        _ => appends += 1, _ => appends += 1, _ => appends += 1)
+        _ => sinks += 1, h2, g2, m2, _ => appends += 1, _ => appends += 1, _ => appends += 1)
       assert(sinks == 1, "fresh lineage's triage batch 0 was fully skipped")
       assert(appends == 3,
         s"fresh lineage's triage appends skipped: $appends of 3 ran")
@@ -1257,7 +1251,7 @@ class CurationStreamsSpec extends SparkSpec {
     }
     def run(guard: graft.sources.StreamMark.Guard): Unit =
       CurationStreams.payloadAuditBatch(
-        batch, 0L, dir, _ => (), guard, growStore = true, flaky)
+        batch, 0L, dir, _ => (), guard, flaky)
     intercept[java.io.IOException](run(appended))
     assert(appended.get() == -1L, "guard advanced before the append committed")
     run(appended)
@@ -1342,7 +1336,7 @@ class CurationStreamsSpec extends SparkSpec {
     }
     def run(guard: graft.sources.StreamMark.Guard): Unit =
       CurationStreams.audioProbeBatch(
-        batch, 0L, dir, _ => (), guard, growStore = true, flaky)
+        batch, 0L, dir, _ => (), guard, flaky)
     intercept[java.io.IOException](run(appended))
     assert(appended.get() == -1L, "guard advanced before the append committed")
     run(appended)
@@ -1429,7 +1423,7 @@ class CurationStreamsSpec extends SparkSpec {
     }
     def run(guard: graft.sources.StreamMark.Guard): Unit =
       CurationStreams.nearDupBatch(
-        batch, 0L, dir, _ => (), guard, growStore = true, flaky)
+        batch, 0L, dir, _ => (), guard, flaky)
     intercept[java.io.IOException](run(appended))
     assert(appended.get() == -1L, "guard advanced before the append committed")
     run(appended)
@@ -1593,7 +1587,6 @@ class CurationStreamsSpec extends SparkSpec {
     import spark.implicits._
     import graft.queries.TextOps
     val dir = s"/tmp/triage_derived_${System.nanoTime}"
-    mkTriageStores(dir)
     val stripText = ndText("tail") + " " +
       (1 to 30).map(i => s"zfresh$i").mkString(" ")
     val b1 = Seq(ndDoc(10L, ndText("edited")), ndDoc(11L, ndNovel),
@@ -1612,12 +1605,14 @@ class CurationStreamsSpec extends SparkSpec {
     def drive(thr: Long): Map[Long, String] = {
       val out = scala.collection.mutable.ListBuffer[(Long, String)]()
       val mem = MemoryStream[(Long, String, String, Long)]
-      // growStore = false: both drives must see the SAME store state
+      // both drives must see the SAME store state: each starts from
+      // freshly built stores (a drive's appends grow them)
+      mkTriageStores(dir)
       val q = CurationStreams.crawlTriage(
           mem.toDF().toDF("doc_id", "text", "lang", "n_chars"), dir,
           sink = df => out ++= df.select("doc_id", "verdict")
             .as[(Long, String)].collect(),
-          growStore = false, cascade = true, stripThrScaled = Some(thr))
+          cascade = true, stripThrScaled = Some(thr))
         .start()
       try {
         mem.addData(b1); q.processAllAvailable()
@@ -1634,7 +1629,9 @@ class CurationStreamsSpec extends SparkSpec {
     val at = drive(v13)
     assert(at(13L) == "keep",
       s"scaled-integer gate is not strict-greater: $at")
-    // full-tuple equality with the batch cascade fed the same scalar
+    // full-tuple equality with the batch cascade fed the same scalar,
+    // over the same pre-append stores
+    mkTriageStores(dir)
     val want = TextOps.triageCascade(spark, dir, batchDf,
         TextOps.shingleArrays(batchDf),
         sys.error("unreachable: stores registered"),
@@ -1662,8 +1659,7 @@ class CurationStreamsSpec extends SparkSpec {
     var nSink = 0
     var failGram = true
     def run(): Unit = CurationStreams.triageBatch(batch, 0L, dir,
-      TextOps.DupGramK, _ => nSink += 1, aH, aG, aM, growStore = true,
-      appendHash = b => { nH += 1
+      TextOps.DupGramK, _ => nSink += 1, aH, aG, aM, appendHash = b => { nH += 1
         graft.sources.HashHistory.append(spark, dir,
           b.select(org.apache.spark.sql.functions.unhex(
             org.apache.spark.sql.functions.md5(col("text"))).as("th"))) },
@@ -1693,8 +1689,7 @@ class CurationStreamsSpec extends SparkSpec {
       new graft.sources.StreamMark.Guard,
       new graft.sources.StreamMark.Guard)
     CurationStreams.triageBatch(batch, 0L, dir, TextOps.DupGramK, _ => (),
-      rH, rG, rM, growStore = true,
-      appendHash = _ => nH += 1, appendGram = _ => nG += 1,
+      rH, rG, rM, appendHash = _ => nH += 1, appendGram = _ => nG += 1,
       appendMh = _ => nM += 1)
     assert((nH, nG, nM) == (1, 2, 1), "committed epoch re-appended after restart")
     assert(rH.get() == 0L && rG.get() == 0L && rM.get() == 0L,
@@ -1720,8 +1715,7 @@ class CurationStreamsSpec extends SparkSpec {
     def run(): Unit = CurationStreams.triageBatch(batch, 0L, dir,
       TextOps.DupGramK, df => { sinks += 1
         sunk = df.select("doc_id", "verdict").as[(Long, String)].collect().toMap },
-      gH, gG, gM, growStore = true,
-      appendHash = b => { appends += 1
+      gH, gG, gM, appendHash = b => { appends += 1
         HashHistory.append(spark, dir, b.select(unhex(smd5(col("text"))).as("th"))) },
       appendGram = b => { appends += 1
         GramHistory.append(spark, dir, GramHistory.gramHashes(b, TextOps.DupGramK)) },
@@ -1825,7 +1819,7 @@ class CurationStreamsSpec extends SparkSpec {
     }
     def run(guard: graft.sources.StreamMark.Guard): Unit =
       CurationStreams.embedProbeBatch(
-        batch, 0L, dir, _ => (), guard, growStore = true, flaky)
+        batch, 0L, dir, _ => (), guard, flaky)
     intercept[java.io.IOException](run(appended))
     assert(appended.get() == -1L, "guard advanced before the append committed")
     run(appended)
@@ -1928,7 +1922,7 @@ class CurationStreamsSpec extends SparkSpec {
     }
     def run(guard: graft.sources.StreamMark.Guard): Unit =
       CurationStreams.videoProbeBatch(
-        batch, 0L, dir, _ => (), guard, growStore = true, flaky)
+        batch, 0L, dir, _ => (), guard, flaky)
     intercept[java.io.IOException](run(appended))
     assert(appended.get() == -1L, "guard advanced before the append committed")
     run(appended)
@@ -1967,19 +1961,19 @@ class CurationStreamsSpec extends SparkSpec {
         GramHistory.create(spark, dir, gramCorpus, k, buckets = 4)
         val g = new StreamMark.Guard
         (sink, append) => CurationStreams.gramAuditBatch(
-          gramBatch, 0L, dir, k, sink, g, growStore = true, append)
+          gramBatch, 0L, dir, k, sink, g, append)
       },
       "span removal" -> { dir =>
         GramHistory.create(spark, dir, gramCorpus, k, buckets = 4)
         val g = new StreamMark.Guard
         (sink, append) => CurationStreams.gramRemovalBatch(
-          gramBatch, 0L, dir, k, sink, g, growStore = true, append)
+          gramBatch, 0L, dir, k, sink, g, append)
       },
       "curateV3" -> { dir =>
         GramHistory.create(spark, dir, gramCorpus, k, buckets = 4)
         val g = new StreamMark.Guard
         (sink, append) => CurationStreams.curateV3Batch(gramBatch, 0L, dir, k,
-          model, Double.MaxValue, sink, g, growStore = true, append)
+          model, Double.MaxValue, sink, g, append)
       },
       "payload" -> { dir =>
         PhashHistory.create(spark, dir, Multimodal.payloadFingerprints(
@@ -1987,7 +1981,7 @@ class CurationStreamsSpec extends SparkSpec {
         val batch = Seq((20L, novelPayload)).toDF("media_id", "content")
         val g = new StreamMark.Guard
         (sink, append) => CurationStreams.payloadAuditBatch(
-          batch, 0L, dir, sink, g, growStore = true, append)
+          batch, 0L, dir, sink, g, append)
       },
       "near-dup" -> { dir =>
         val hist = Seq(ndDoc(1L, ndText("tail")))
@@ -1996,7 +1990,7 @@ class CurationStreamsSpec extends SparkSpec {
           TextOps.minHashShinglesOf(hist), buckets = 4)
         val g = new StreamMark.Guard
         (sink, append) => CurationStreams.nearDupBatch(
-          ndBatch, 0L, dir, sink, g, growStore = true, append)
+          ndBatch, 0L, dir, sink, g, append)
       },
       "audio" -> { dir =>
         LandmarkHistory.create(spark, dir, Multimodal.audioLandmarkRows(
@@ -2004,7 +1998,7 @@ class CurationStreamsSpec extends SparkSpec {
         val batch = Seq((20L, audioNovel)).toDF("media_id", "content")
         val g = new StreamMark.Guard
         (sink, append) => CurationStreams.audioProbeBatch(
-          batch, 0L, dir, sink, g, growStore = true, append)
+          batch, 0L, dir, sink, g, append)
       },
       "video" -> { dir =>
         FrameHistory.create(spark, dir,
@@ -2014,7 +2008,7 @@ class CurationStreamsSpec extends SparkSpec {
           .toDF("media_id", "content", "n_frames")
         val g = new StreamMark.Guard
         (sink, append) => CurationStreams.videoProbeBatch(
-          batch, 0L, dir, sink, g, growStore = true, append)
+          batch, 0L, dir, sink, g, append)
       },
       "embed" -> { dir =>
         IvfStore.create(spark, dir,
@@ -2023,15 +2017,14 @@ class CurationStreamsSpec extends SparkSpec {
         val batch = Seq((20L, embVec(997))).toDF("vec_id", "embedding")
         val g = new StreamMark.Guard
         (sink, append) => CurationStreams.embedProbeBatch(
-          batch, 0L, dir, sink, g, growStore = true, append)
+          batch, 0L, dir, sink, g, append)
       },
       "triage" -> { dir =>
         mkTriageStores(dir)
         val (gH, gG, gM) =
           (new StreamMark.Guard, new StreamMark.Guard, new StreamMark.Guard)
         (sink, append) => CurationStreams.triageBatch(ndBatch, 0L, dir,
-          TextOps.DupGramK, sink, gH, gG, gM, growStore = true,
-          append, append, append)
+          TextOps.DupGramK, sink, gH, gG, gM, append, append, append)
       })
     val base = java.nio.file.Files.createTempDirectory("replay_skip").toString
     twins.zipWithIndex.foreach { case ((name, twin), i) =>
